@@ -35,6 +35,7 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
+from dlt_salesforce_iceberg_rest_demo_spark.operators.materialize import scope  # noqa: E402
 from dlt_salesforce_iceberg_rest_demo_spark.plans import query_fns  # noqa: E402
 from dlt_salesforce_iceberg_rest_demo_spark.session import get_spark  # noqa: E402
 
@@ -188,31 +189,20 @@ def main() -> None:
     fns = query_fns()
     names = [n for n in HEADLINE + EXTENSION_HEADLINE if n in fns]
 
-    def _drop_leaked_blocks() -> None:
-        """Unpersist every cached RDD between queries: operators that
-        localCheckpoint (graph loops, prefix joins) leave blocks behind
-        until driver GC, and the accumulated block-manager pressure
-        measurably degrades LATER queries (observed 6x on ANN after the
-        graph headliners joined the set). Queries run isolated in the
-        driver contract, so cross-query state carries no benefit."""
-        try:
-            jmap = spark.sparkContext._jsc.getPersistentRDDs()
-            for rdd in jmap.values():
-                rdd.unpersist()
-        except Exception:
-            pass
+    def timed(name: str) -> float:
+        # The bench owns each result: its scope frees the blocks the
+        # result read as soon as it has run, not when the driver GCs it.
+        with scope():
+            t0 = time.perf_counter()
+            _execute(fns[name](spark, sf_dir))
+            return time.perf_counter() - t0
 
     timings: dict[str, float] = {}
     mins: dict[str, float] = {}
     total = 0.0
     for name in names:
-        _execute(fns[name](spark, sf_dir))  # warm: codegen/JIT/footers
-        runs = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            _execute(fns[name](spark, sf_dir))
-            runs.append(time.perf_counter() - t0)
-        _drop_leaked_blocks()
+        timed(name)  # warm: codegen/JIT/footers
+        runs = [timed(name) for _ in range(3)]
         dt = sorted(runs)[1]  # median of 3
         timings[name] = round(dt, 4)
         mins[name] = round(min(runs), 4)

@@ -18,4 +18,6 @@ extension surface, designed for 100 TB.
 - ``sketches``   : Misra-Gries heavy hitters, count-min tables
 - ``profiling``  : one-pass per-column table profiles
 - ``layout``     : Z-order clustering keys and layout rewrites
+- ``materialize``: eager checkpoints and the per-query scope that
+                   frees the ones a query's result does not read
 """

@@ -26,87 +26,13 @@ import random
 
 import numpy as np
 
-from pyspark.sql import Column, DataFrame, Observation, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .materialize import full_width, materialize, release, spread
 from .text import tokens
 
 MERSENNE_31 = (1 << 31) - 1
-
-
-def _free_checkpoint(df: DataFrame) -> None:
-    """Unpersist a superseded localCheckpoint's cached blocks NOW
-    rather than at GC time.
-
-    The iterative operators below checkpoint per round; without
-    explicit cleanup every round's blocks stay in the block manager
-    until the driver GCs the DataFrame, and the accumulated memory
-    pressure showed up as 2x run-to-run bench variance. The analyzed
-    plan of a checkpointed DataFrame is a LogicalRDD wrapping exactly
-    the persisted RDD, so this frees precisely our own blocks (no
-    registry diffing that could race with concurrent queries).
-    """
-    try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:
-        pass  # plan shape changed or non-JVM backend: let GC handle it
-
-
-def _checkpoint_observed(df: DataFrame, *metrics) -> tuple[DataFrame, dict]:
-    """``localCheckpoint(eager=True)`` with aggregate metrics computed
-    BY the materialization job itself (``Dataset.observe``), so the
-    per-round count / convergence signature of an iterative operator
-    costs zero extra jobs (round-11; guide §1.2 — the checkpoint job
-    already touches every row, a separate count/agg job re-scans the
-    blocks it just wrote plus one driver round-trip per round).
-
-    Exactness: observed metrics aggregate the rows of the completed
-    action only (merged on task success), so a zero-valued "rows
-    changed" metric is a sound fixed-point witness — a task that never
-    saw a changed row contributes zero under any retry schedule.
-    Returns ``(checkpointed_df, metric_dict)``; the checkpointed plan
-    is a plain LogicalRDD (the CollectMetrics node does not survive
-    into consumers)."""
-    obs = Observation()
-    ck = df.observe(obs, *metrics).localCheckpoint(eager=True)
-    return ck, obs.get
-
-
-def spread(df: DataFrame) -> DataFrame:
-    """Ensure CPU-width parallelism before expression-heavy per-row work
-    (shingling, signature hashing).
-
-    Small single-file inputs arrive as ONE partition, serializing the
-    whole operator onto one core (observed 10x wall-clock at sf0.1). At
-    production scale inputs already have >= cores partitions and this
-    is a no-op branch - the repartition only fires on pathological
-    layouts, and shuffles just the raw rows, before any explode.
-
-    The repartition branch CHECKPOINTS: a bare repartition is not an
-    optimizer barrier — Catalyst pushes deterministic projections
-    below the exchange (to shrink shuffle bytes), which lands the
-    expensive interpreted shingle HOFs back on the single input
-    partition and re-runs them once per downstream consumer (observed:
-    two 4.5 s single-task map stages under dedup_prefix_jaccard at
-    sf0.1, 7.4 s -> 3.4 s from this barrier). Materializing the raw
-    rows is trivial exactly when this branch fires (a sub-core-count
-    input); the at-scale path never reaches it."""
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target).localCheckpoint(eager=True)
-    return df
-
-
-def _full_width(spark) -> int:
-    """Target partition count for USER-specified hash repartitions
-    (which AQE neither coalesces nor skew-splits): the larger of core
-    count and ``spark.sql.shuffle.partitions``, so the exchange is
-    never narrower than the cluster's tuned shuffle width."""
-    try:
-        conf_width = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    except (TypeError, ValueError):  # "auto" under some AQE setups
-        conf_width = 0
-    return max(spark.sparkContext.defaultParallelism, conf_width)
 
 
 def shingles(col: Column | str, n: int = 2) -> Column:
@@ -209,7 +135,7 @@ def prefix_jaccard_pairs(
     # single task (measured: the whole candidate+verify pipeline fused
     # into one 1.2 s serial task at sf0.1). spread() widens only when
     # below core count, so at scale this is a no-op branch.
-    ranked0 = (
+    ranked = materialize(
         tok.join(sid, "s")
         .groupBy("doc")
         .agg(F.sort_array(F.collect_list("sid")).alias("sh"))
@@ -218,11 +144,8 @@ def prefix_jaccard_pairs(
             "prefix",
             F.expr(f"slice(sh, 1, m - ((({num} * m) + {den} - 1) DIV {den}) + 1)"),
         )
-        .localCheckpoint(eager=True)
     )
-    ranked = spread(ranked0)
-    if ranked is not ranked0:
-        _free_checkpoint(ranked0)  # superseded by the widened copy
+    ranked = spread(ranked)
     # Carry each prefix shingle's POSITION in the rarity order: the
     # PPJoin positional filter bounds the best-possible overlap of a
     # candidate matched at positions (pa, pb) by 1 + min(ma-pa, mb-pb)
@@ -248,7 +171,7 @@ def prefix_jaccard_pairs(
     # below the configured partition count on a real cluster (round-6
     # ADVICE) — taking the max keeps the small-SF anti-coalesce fix a
     # no-op change locally while honoring the tuned width at scale.
-    target = _full_width(docs.sparkSession)
+    target = full_width(docs.sparkSession)
     p = (
         ranked.select("doc", "m", F.posexplode("prefix").alias("p0", "s"))
         .select("doc", "m", "s", (F.col("m") - F.col("p0") - 1).alias("r"))
@@ -652,43 +575,39 @@ def connected_components(
     takes the min of its own label and its neighbors' labels (one
     shuffle join + one groupBy per round). Rounds needed = graph
     diameter; near-dup clusters are dense, tiny-diameter graphs, so
-    2-4 rounds in practice. Per-round state is only (long, long) pairs
-    - document payloads never enter the loop - and lineage is truncated
-    with an eager localCheckpoint so the plan stays O(1) deep instead
-    of growing by two joins per round. For adversarial long-chain
-    graphs the same message/update shape upgrades to large-star/
-    small-star (O(log^2 n) rounds, Kiveris et al., "Connected
-    Components in MapReduce and Beyond").
+    2-4 rounds in practice. Per-round state is three longs per node
+    (node, label, previous label) - document payloads never enter the
+    loop - and lineage is truncated by materializing each round, so
+    the plan stays O(1) deep instead of growing by two joins per round.
+    For adversarial long-chain graphs the same message/update shape
+    upgrades to large-star/small-star (O(log^2 n) rounds, Kiveris et
+    al., "Connected Components in MapReduce and Beyond").
 
-    Convergence: SUM(label) over all nodes is monotonically
-    non-increasing and strictly decreases while any label changes, so
-    one cheap global agg per round detects the fixpoint (summed in
-    DECIMAL(38,0): exact, overflow-free at any node count).
+    Convergence: each round's min-aggregate also carries the node's
+    previous label, and the round's own checkpoint job observes the
+    number of nodes whose label dropped (``materialize`` metrics).
+    Labels only ever decrease, so a round with zero changed rows is the
+    fixpoint - one job per round, no separate convergence scan.
     """
     e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     sym = e.union(e.select(F.col("v"), F.col("u"))).distinct()
-    sym = spread(sym).localCheckpoint(eager=True)
+    sym = materialize(spread(sym))
 
     # The loop runs over EDGE ENDPOINTS only - in a dedup corpus the
     # overwhelming majority of docs are singletons, and dragging them
     # through every propagation round would multiply loop state by
     # corpus/endpoint ratio (~20x on the fixtures). Singletons join
     # back in one final left join below.
-    labels = (
+    labels = materialize(
         sym.select(F.col("u").alias("node"))
         .distinct()
         .withColumn("label", F.col("node"))
-        .localCheckpoint(eager=True)
     )
 
-    # Convergence detection rides the propagation checkpoint's own job
-    # (round-11): the old-vs-new label comparison is carried per node
-    # through the min-aggregate (labels holds exactly one row per node,
-    # so min-over-the-tagged-branch reconstructs the old label), and an
-    # observed SUM of changed-row indicators replaces the per-round
-    # signature collect — one job per round instead of two, and the
-    # pre-loop signature job disappears. Labels only ever decrease, so
-    # "no row changed" is exactly the old "sum unchanged" fixpoint.
+    # The old label is carried per node through the min-aggregate
+    # (labels holds exactly one row per node, so min over the tagged
+    # branch reconstructs it), and the checkpoint job observes the SUM
+    # of changed-row indicators.
     for _ in range(max_iter):
         msgs = (
             sym.alias("e")
@@ -703,19 +622,13 @@ def connected_components(
             F.min("label").alias("label"),
             F.min(F.when(F.col("_own"), F.col("label"))).alias("_old"),
         )
-        obs = Observation()
-        labels = (
-            agg.observe(
-                obs,
-                F.sum(
-                    (F.col("label") < F.col("_old")).cast("long")
-                ).alias("chg"),
-            )
-            .select("node", "label")  # _old never enters the checkpoint
-            .localCheckpoint(eager=True)
+        # _old stays in the checkpoint (the metric reads it); every
+        # consumer selects node/label explicitly.
+        labels, vals = materialize(
+            agg, F.sum((F.col("label") < F.col("_old")).cast("long")).alias("chg")
         )
-        _free_checkpoint(old)
-        if not (obs.get["chg"] or 0):
+        release(old)
+        if not (vals["chg"] or 0):
             break
     out = labels.select("node", F.col("label").alias("cluster_id"))
     if nodes is not None:
@@ -771,7 +684,7 @@ def connected_components_star(
         F.count(F.lit(1)).alias("n"),
         F.sum(F.xxhash64("u", "v")).alias("h"),
     )
-    cur, vals = _checkpoint_observed(
+    cur, vals = materialize(
         e.select(F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v"))
         .distinct(),
         *_SIG,
@@ -802,10 +715,10 @@ def connected_components_star(
 
     for _ in range(max_iter):
         old = cur
-        mid = _star(cur, large=True).localCheckpoint(eager=True)
-        _free_checkpoint(old)
-        cur, vals = _checkpoint_observed(_star(mid, large=False), *_SIG)
-        _free_checkpoint(mid)
+        mid = materialize(_star(cur, large=True))
+        release(old)
+        cur, vals = materialize(_star(mid, large=False), *_SIG)
+        release(mid)
         s = (vals["n"], vals["h"])
         if s == prev:
             break
@@ -1060,12 +973,12 @@ def _containment_dense(
         f"(acc, b) -> acc | shiftleft(CAST(1 AS BIGINT), CAST(b % 64 AS INT))))"
     )
     n_blocks = max(1, -(-n_docs // block_rows))
-    docbm = bits.select(
+    docbm = materialize(bits.select(
         "doc",
         F.size("bits").cast("long").alias("m"),
         bitmap.alias("bm"),
         F.pmod(F.hash("doc"), F.lit(n_blocks)).cast("int").alias("bid"),
-    ).localCheckpoint(eager=True)
+    ))
     spark = docbm.sparkSession
     bp = spark.createDataFrame(
         [(i, j) for i in range(n_blocks) for j in range(i, n_blocks)],
@@ -1158,9 +1071,7 @@ def containment_split_stats(
         .select(F.col(id_col).alias("doc"), tokens(text_col).alias("tk"))
         .select("doc", F.explode(shingles_tokens(F.col("tk"), n)).alias("s"))
     )
-    dfreq = tok.groupBy("s").agg(F.count("*").alias("df")).localCheckpoint(
-        eager=True
-    )
+    dfreq = materialize(tok.groupBy("s").agg(F.count("*").alias("df")))
     hist = _df_histogram(dfreq)
     cap, hot_frac = _cap_and_hot_fraction(hist, cold_work_per_token)
     n_shingles = sum(r["cnt"] for r in hist)
@@ -1280,7 +1191,7 @@ def containment_pairs(
     # Vocabulary-sized (distinct shingles): checkpoint once — it feeds
     # the cost histogram AND the hot split, and left lazy each consumer
     # re-runs the whole tokenize/explode/count pipeline.
-    dfreq = tok.groupBy("s").agg(F.count("*").alias("df")).localCheckpoint(eager=True)
+    dfreq = materialize(tok.groupBy("s").agg(F.count("*").alias("df")))
     if strategy not in ("auto", "index", "dense"):
         raise ValueError(f"unknown containment strategy {strategy!r}")
     if strategy != "index" and (strategy == "dense" or df_cap is None):
@@ -1314,7 +1225,7 @@ def containment_pairs(
     # Hot vocabulary: tiny by construction, so it broadcasts; rank
     # gives the ascending-rarity order the hot-prefix path needs. Its
     # count rides the checkpoint's own materialization job (r11).
-    hot_vocab, hv = _checkpoint_observed(
+    hot_vocab, hv = materialize(
         dfreq.filter(F.col("df") > df_cap)
         .withColumn("hid", F.row_number().over(Window.orderBy("df", "s")).cast("long"))
         .select("s", "hid"),
@@ -1348,7 +1259,7 @@ def containment_pairs(
             .groupBy("doc")
             .agg(F.sort_array(F.collect_list("hid")).alias("hot"))
         )
-        docinfo = (
+        docinfo = materialize(
             sizes.join(hotagg, "doc", "left")
             .select(
                 "doc",
@@ -1357,16 +1268,15 @@ def containment_pairs(
             )
             .withColumn("nh", F.size("hot").cast("long"))
             .withColumn("hbm", bitmap)
-            .localCheckpoint(eager=True)
         )
     else:
-        docinfo = sizes.select(
+        docinfo = materialize(sizes.select(
             "doc",
             "m",
             F.array().cast("array<long>").alias("hot"),
             F.lit(0).cast("long").alias("nh"),
             F.array().cast("array<long>").alias("hbm"),
-        ).localCheckpoint(eager=True)
+        ))
 
     # Cold path: bounded naive join over bare (doc, s) rows — the
     # narrowest possible shuffle payload; per-doc stats attach AFTER

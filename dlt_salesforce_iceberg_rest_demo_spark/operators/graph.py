@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .materialize import materialize, release
+
 
 def co_occurrence_pairs(
     df: DataFrame, group_col: str, item_col: str
@@ -76,14 +78,13 @@ def triangle_count(
     # three times (two wedge sides + the closing semi-join) — without
     # checkpoints the upstream derivation re-executes per consumer
     # (observed 4x the scan work on the co-occurrence graph at sf0.1).
-    e = (
+    e = materialize(
         edges.select(
             F.least(F.col(src), F.col(dst)).cast("long").alias("a"),
             F.greatest(F.col(src), F.col(dst)).cast("long").alias("b"),
         )
         .filter(F.col("a") != F.col("b"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     deg = (
         e.select(F.col("a").alias("n"))
@@ -102,17 +103,11 @@ def triangle_count(
             F.struct(F.col("db").alias("d"), F.col("b").alias("n")).alias("kb"),
         )
     )
-    oriented = keyed.select(
+    oriented = materialize(keyed.select(
         F.when(F.col("ka") < F.col("kb"), F.col("a")).otherwise(F.col("b")).alias("x"),
         F.when(F.col("ka") < F.col("kb"), F.col("b")).otherwise(F.col("a")).alias("y"),
         F.when(F.col("ka") < F.col("kb"), F.col("kb")).otherwise(F.col("ka")).alias("ky"),
-    ).localCheckpoint(eager=True)
-    # Once `oriented` is materialized the raw edge blocks are dead
-    # weight — free them now, not at GC time (leaked checkpoint blocks
-    # degraded LATER queries in long sessions via block-manager bloat).
-    from .dedup import _free_checkpoint
-
-    _free_checkpoint(e)
+    ))
     o1, o2 = oriented.alias("o1"), oriented.alias("o2")
     wedges = o1.join(
         o2,
@@ -164,12 +159,10 @@ def pagerank_int(
     # Materialize the (usually join-derived) edge list ONCE: without
     # this every iteration's lazy plan re-runs the upstream joins -
     # 3 iterations re-scanned orders x lineitem 3x before the fix.
-    sym = (
-        e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .distinct()
-        .localCheckpoint(eager=True)
+    sym = materialize(
+        e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v"))).distinct()
     )
-    deg = sym.groupBy("u").agg(F.count("*").alias("d")).localCheckpoint(eager=True)
+    deg = materialize(sym.groupBy("u").agg(F.count("*").alias("d")))
     ranks = deg.select(
         F.col("u").alias("node"), F.lit(unit).cast("long").alias("rank")
     )
@@ -208,22 +201,19 @@ def bellman_ford(
     same shape as :func:`pagerank_int`. Integer weights, so distances
     are exact and a SQL oracle can unroll the identical rounds.
 
-    State per round is (node, dist) longs; ``localCheckpoint`` breaks
-    the growing lineage (without it round k re-executes rounds 1..k-1,
-    and the superseded blocks are freed eagerly — see
-    ``dedup._free_checkpoint``).
+    State per round is (node, dist) longs; materializing each round
+    breaks the growing lineage (without it round k re-executes rounds
+    1..k-1), and the superseded round's blocks are released at once.
 
     Returns (node, dist) for every node reachable in <= iterations
     hops. Directed: pass a symmetrized edge list for undirected
     semantics.
     """
-    from .dedup import _free_checkpoint
-
-    e = edges.select(
+    e = materialize(edges.select(
         F.col(src).cast("long").alias("u"),
         F.col(dst).cast("long").alias("v"),
         F.col(weight).cast("long").alias("w"),
-    ).localCheckpoint(eager=True)
+    ))
     dist = (
         e.sparkSession.createDataFrame(
             [(int(s), 0) for s in sources], "node long, dist long"
@@ -233,17 +223,11 @@ def bellman_ford(
         relax = dist.join(e, dist["node"] == e["u"]).select(
             F.col("v").alias("node"), (F.col("dist") + F.col("w")).alias("dist")
         )
-        new = (
-            dist.unionAll(relax)
-            .groupBy("node")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=True)
+        new = materialize(
+            dist.unionAll(relax).groupBy("node").agg(F.min("dist").alias("dist"))
         )
-        _free_checkpoint(dist)
+        release(dist)
         dist = new
-    # The final frontier is checkpointed, so the edge blocks are no
-    # longer reachable from the returned plan — free them eagerly.
-    _free_checkpoint(e)
     return dist
 
 
@@ -332,17 +316,13 @@ def k_core(
     further rounds could still remove some. Raise ``max_iter`` for an
     adversarially deep peel (a path graph peels one layer per round).
     """
-    from .dedup import _checkpoint_observed, _free_checkpoint
-
     # undirected: symmetrize once, dedupe parallel edges, drop loops
     e = (
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .filter(F.col("u") != F.col("v"))
     )
-    e = (
-        e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .distinct()
-        .localCheckpoint(eager=True)
+    e = materialize(
+        e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v"))).distinct()
     )
     # ONE job per round (round-11; was two — r10 folded the `bad`
     # materialize+count into the rewrite, r11 folds the remaining
@@ -354,7 +334,7 @@ def k_core(
     # already-k-core graph) does zero rewrite rounds — the r10 shape
     # paid one full anti-join+checkpoint pass just to observe the
     # count didn't change.
-    deg, vals = _checkpoint_observed(
+    deg, vals = materialize(
         e.groupBy("u").agg(F.count("*").alias("d")),
         F.count(F.lit(1)).alias("n"),
         F.sum((F.col("d") < k).cast("long")).alias("nbad"),
@@ -379,7 +359,7 @@ def k_core(
             .groupBy(F.col("v").alias("u"))
             .agg(F.count("*").alias("ddec"))
         )
-        new_deg, vals = _checkpoint_observed(
+        new_deg, vals = materialize(
             deg.join(bad, "u", "left_anti")
             .join(dec, "u", "left")
             .select(
@@ -392,7 +372,7 @@ def k_core(
         n_bad = int(vals["nbad"] or 0)
         removed_total += n_alive - n_new
         n_alive = n_new
-        _free_checkpoint(deg)
+        release(deg)
         deg = new_deg
         # Compact the (never-shrinking) edge checkpoint once removal
         # dominates, so late-round decrement scans stay linear in the
@@ -401,13 +381,12 @@ def k_core(
         # by the next round's decrement join).
         if n_bad and removed_total * 2 > n_nodes:
             alive = deg.select("u")
-            compacted = (
+            compacted = materialize(
                 e.join(alive, "u")
                 .join(alive.select(F.col("u").alias("v")), "v")
                 .select("u", "v")
-                .localCheckpoint(eager=True)
             )
-            _free_checkpoint(e)
+            release(e)
             e = compacted
             n_nodes -= removed_total
             removed_total = 0
@@ -442,11 +421,11 @@ def _edge_support(e: DataFrame) -> DataFrame:
             F.struct(F.col("db").alias("d"), F.col("b").alias("n")).alias("kb"),
         )
     )
-    oriented = keyed.select(
+    oriented = materialize(keyed.select(
         F.when(F.col("ka") < F.col("kb"), F.col("a")).otherwise(F.col("b")).alias("x"),
         F.when(F.col("ka") < F.col("kb"), F.col("b")).otherwise(F.col("a")).alias("y"),
         F.when(F.col("ka") < F.col("kb"), F.col("kb")).otherwise(F.col("ka")).alias("ky"),
-    ).localCheckpoint(eager=True)
+    ))
     o1, o2 = oriented.alias("o1"), oriented.alias("o2")
     wedges = o1.join(
         o2,
@@ -480,13 +459,11 @@ def _edge_support(e: DataFrame) -> DataFrame:
         .groupBy("a", "b")
         .agg(F.count("*").cast("bigint").alias("support"))
     )
-    from .dedup import _free_checkpoint
-
     # support is consumed once by the caller before the next round's
     # checkpoint replaces `oriented`; materialize it so freeing the
     # orientation blocks is safe.
-    sup = sup.localCheckpoint(eager=True)
-    _free_checkpoint(oriented)
+    sup = materialize(sup)
+    release(oriented)
     return sup
 
 
@@ -509,19 +486,17 @@ def k_truss(
     support via the degree-ORIENTED wedge join (O(m^1.5), skew-proof —
     the `triangle_count` machinery with an inner closing join so each
     triangle credits its three edges), drops edges below k-2, and
-    localCheckpoints the shrinking edge list (superseded blocks freed
+    materializes the shrinking edge list (superseded blocks released
     eagerly). The fixed point is unique, so the output is
     deterministic regardless of peel order or round count.
 
     Returns surviving canonical edges (a, b, support) with the
     support AT the fixed point (>= k-2 everywhere).
     """
-    from .dedup import _checkpoint_observed, _free_checkpoint
-
     # The edge count rides the checkpoint's own materialization job
     # (observed metrics, round-11) — counting is free here and per
     # round below, so each peel round is exactly its rewrite job.
-    e, vals = _checkpoint_observed(
+    e, vals = materialize(
         edges.select(
             F.least(F.col(src), F.col(dst)).cast("long").alias("a"),
             F.greatest(F.col(src), F.col(dst)).cast("long").alias("b"),
@@ -548,7 +523,7 @@ def k_truss(
     for _ in range(max_iter):
         sup = _edge_support(e)
         keep = sup.filter(F.col("support") >= need).select("a", "b")
-        pruned, pvals = _checkpoint_observed(
+        pruned, pvals = materialize(
             e.join(keep, ["a", "b"], "left_semi"),
             F.count(F.lit(1)).alias("n"),
         )
@@ -558,11 +533,10 @@ def k_truss(
             # support (the edge set didn't change), so reuse it instead
             # of a full extra _edge_support pass. Every survivor is in
             # `keep` (support >= need >= 1), so the inner join is total.
-            _free_checkpoint(pruned)
             return e.join(sup, ["a", "b"]).select(
                 "a", "b", F.col("support").cast("bigint").alias("support")
             )
-        _free_checkpoint(e)
+        release(e)
         e = pruned
         n_before = n_after
     # max_iter exhausted without a fixed point: report support over

@@ -39,6 +39,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .materialize import materialize, release
+
 
 def _dot(a: Column, b: Column) -> Column:
     """Double-precision dot product of two float arrays, JVM-side.
@@ -1020,9 +1022,7 @@ def pq_fit(
         corpus, m, n_codes, iters, vec_col, id_col, train_fraction,
         with_ids=False,
     )
-    from .dedup import _free_checkpoint
-
-    _free_checkpoint(base)
+    release(base)
     return books
 
 
@@ -1138,12 +1138,11 @@ def _pq_lloyd(
     cols = ([F.col(id_col)] if with_ids else []) + [
         fused(F.col(vec_col)).alias("qe")
     ]
-    base = (
+    base = materialize(
         train.filter(_encodable(vec_col, dim))
         .select(*cols)
         .select(*(([id_col] if with_ids else []) + ["qe.uq", "qe.codes"]))
-        .localCheckpoint(eager=True)  # reused by every Lloyd iteration
-    )
+    )  # reused by every Lloyd iteration
     for it in range(iters):
         if it == 0:
             # the fused pass already computed codes under books_0
@@ -1339,14 +1338,12 @@ def _pq_corpus_codes(
     projection materializes as its OWN checkpoint (m int32s + id per
     row, ~dim/4 smaller) and ``base`` is freed immediately; repeated
     pq_topk calls no longer accumulate corpus-scale blocks in the
-    block manager (the exact pressure ``_free_checkpoint``'s docstring
-    blames for 2x bench variance). Same codes: the encode kernel just
-    runs inside the checkpoint's materialization job instead of inside
-    the consumer's plan. At train_fraction < 1 the old re-quantizing
+    block manager (the exact pressure ``materialize.release``'s
+    docstring blames for 2x bench variance). Same codes: the encode
+    kernel just runs inside the checkpoint's materialization job
+    instead of inside the consumer's plan. At train_fraction < 1 the old re-quantizing
     encode over the full corpus remains — the checkpoint only covers
     the sample."""
-    from .dedup import _free_checkpoint
-
     if train_fraction >= 1.0:
         if iters == 0:
             final = base.select(F.col(id_col).alias("corpus_id"), "codes")
@@ -1355,10 +1352,10 @@ def _pq_corpus_codes(
             final = base.select(
                 F.col(id_col).alias("corpus_id"), enc(F.col("uq")).alias("codes")
             )
-        codes = final.localCheckpoint(eager=True)
-        _free_checkpoint(base)
+        codes = materialize(final)
+        release(base)
         return codes
-    _free_checkpoint(base)  # training-sample checkpoint: not reusable
+    release(base)  # training-sample checkpoint: not reusable
     enc = _pq_encode_udf(books)
     # pre-filter on the JVM twin of encode's NULL mask instead of
     # .filter(codes.isNotNull()) after — the post-hoc filter planned
@@ -1524,10 +1521,6 @@ def pq_build(
         )
     )
     lake.replace(flat, f"{index_name}__codes")
-    from .dedup import _free_checkpoint
-
-    _free_checkpoint(base)  # no-op at train_fraction=1.0 (freed above)
-    _free_checkpoint(c)  # consumed by the committed write above
     spark = corpus.sparkSession
     book_rows = [
         (j, code, d, int(val))
@@ -1882,11 +1875,11 @@ def dbscan(
             .filter(F.col("cosine") >= eps_cosine)
             .select("id_a", "id_b")
         )
-    nb = pairs.select("id_a", "id_b").unionByName(
+    nb = materialize(pairs.select("id_a", "id_b").unionByName(
         pairs.select(
             F.col("id_b").alias("id_a"), F.col("id_a").alias("id_b")
         )
-    ).localCheckpoint(eager=True)
+    ))
     deg = nb.groupBy("id_a").agg(F.count("*").alias("n_neighbors"))
     core = deg.filter(F.col("n_neighbors") >= min_pts).select(
         F.col("id_a").alias("cid")

@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .materialize import materialize
+
 
 def _mg_summarize(counts: dict, capacity: int) -> None:
     """Decrement-phase of Misra-Gries: shrink to < capacity counters."""
@@ -85,16 +87,12 @@ def heavy_hitters(
             }
         )
 
-    # localCheckpoint: the summary feeds TWO consumers (merged keys +
+    # Materialized: the summary feeds TWO consumers (merged keys +
     # total n), and a mapInPandas subtree is duplicated per consumer —
     # without the materialization the one-pass MG kernel scanned the
     # input twice (found by the round-9 duplicated-python-op sweep).
     # The checkpoint is summary-sized: <= capacity rows per partition.
-    summaries = (
-        df.select(col)
-        .mapInPandas(summarize, out_schema)
-        .localCheckpoint(eager=True)
-    )
+    summaries = materialize(df.select(col).mapInPandas(summarize, out_schema))
     merged = (
         summaries.filter(F.col("key").isNotNull())
         .groupBy("key")

@@ -10,6 +10,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .materialize import full_width
+
 
 def sessionize(
     events: DataFrame,
@@ -93,12 +95,10 @@ def gapfill(
     the whole downstream join+window would run serially (observed:
     the full query funneled through 1 task; the round-4/5
     one-task-stage signature). An explicit-width hash repartition is
-    exempt from coalescing (`dedup._full_width`), and because it is
+    exempt from coalescing (`materialize.full_width`), and because it is
     on the window/join key it satisfies both downstream distribution
     requirements — no extra exchange anywhere in the plan.
     """
-    from .dedup import _full_width
-
     bucket = F.date_trunc(grain, F.col(ts_col)).alias("bucket_ts")
     b = events.groupBy(F.col(user_col), bucket).agg(
         F.count("*").alias("n_events"),
@@ -110,7 +110,7 @@ def gapfill(
         F.min("bucket_ts").alias("__lo"), F.max("bucket_ts").alias("__hi")
     )
     grid = spans.repartition(
-        _full_width(events.sparkSession), F.col(user_col)
+        full_width(events.sparkSession), F.col(user_col)
     ).select(
         user_col,
         F.explode(
@@ -159,8 +159,6 @@ def gapfill_interpolate(
     DuckDB oracle reproduces it bit-for-bit; edge buckets clamp to
     the nearest known value.
     """
-    from .dedup import _full_width
-
     bucket = F.date_trunc(grain, F.col(ts_col)).alias("bucket_ts")
     b = events.groupBy(F.col(user_col), bucket).agg(
         F.sum(F.col(value_col).cast("decimal(18,6)"))
@@ -171,7 +169,7 @@ def gapfill_interpolate(
         F.min("bucket_ts").alias("__lo"), F.max("bucket_ts").alias("__hi")
     )
     grid = spans.repartition(
-        _full_width(events.sparkSession), F.col(user_col)
+        full_width(events.sparkSession), F.col(user_col)
     ).select(
         user_col,
         F.explode(

@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .materialize import full_width, materialize, release, spread
+
 # Marker stopwords per language for the n-gram/marker heuristic.
 # Deliberately small + deterministic so the DuckDB oracle can replicate
 # the exact scoring.
@@ -615,76 +617,6 @@ def _bpe_merge_expr(arr_col: str, left: str, right: str) -> str:
     )
 
 
-def bpe_train_merges(
-    docs: DataFrame,
-    n_merges: int = 3,
-    text_col: str = "text",
-) -> DataFrame:
-    """Byte-pair-encoding merge training (Sennrich et al., 2016) as
-    DataFrame rounds — the tokenizer-training primitive of an LLM data
-    pipeline.
-
-    Scale design: the FIRST step collapses the corpus to its word
-    FREQUENCY table (one groupBy) — every later round operates on
-    vocabulary-sized data no matter how large the corpus, which is
-    exactly how production BPE trainers stay tractable at 100 TB. Per
-    round: adjacent-pair counts (explode of zipped neighbors, weighted
-    by word frequency, overlapping occurrences counted — reference
-    semantics), argmax with the deterministic (count DESC, left, right)
-    tie-break — the SAME convention as the batched trainer and the SQL
-    oracle replay, so ``bpe_train_merges_batched(batch_size=1)`` equals
-    this trainer exactly even when top counts tie (the previous
-    max-struct argmax broke ties toward the LARGEST pair; found by the
-    round-6 batched-vs-unbatched property test) — and the merge
-    applied to symbol arrays via a Catalyst fold
-    (:func:`_bpe_merge_expr`) — no Python in any loop. Only the single
-    winning pair is collected per round (two strings).
-
-    Returns (merge_rank, left, right, pair_count) — the learned merge
-    table, exactly reproducible; pytest pins it against a pure-Python
-    reference implementation.
-    """
-    words = (
-        docs.select(F.explode(tokens(text_col)).alias("w"))
-        .filter(F.length("w") > 0)
-        .groupBy("w")
-        .agg(F.count("*").alias("freq"))
-        .select(F.split("w", "").alias("arr"), "freq")
-        .localCheckpoint(eager=True)
-    )
-    spark = docs.sparkSession
-    merges: list[tuple[int, str, str, int]] = []
-    for rank in range(1, n_merges + 1):
-        pairs = words.select(
-            "freq",
-            F.explode(
-                F.zip_with(
-                    F.expr("slice(arr, 1, size(arr) - 1)"),
-                    F.expr("slice(arr, 2, size(arr) - 1)"),
-                    lambda a, b: F.struct(a.alias("l"), b.alias("r")),
-                )
-            ).alias("p"),
-        )
-        top = (
-            pairs.groupBy("p")
-            .agg(F.sum("freq").alias("cnt"))
-            .select("cnt", "p.l", "p.r")
-            .orderBy(F.col("cnt").desc(), "l", "r")
-            .limit(1)
-            .collect()
-        )
-        if not top or top[0]["cnt"] is None:
-            break
-        cnt, left, right = top[0]["cnt"], top[0]["l"], top[0]["r"]
-        merges.append((rank, left, right, int(cnt)))
-        words = words.select(
-            F.expr(_bpe_merge_expr("arr", left, right)).alias("arr"), "freq"
-        ).localCheckpoint(eager=True)
-    return spark.createDataFrame(
-        merges, "merge_rank long, left string, right string, pair_count long"
-    )
-
-
 def mix_to_target(
     docs: DataFrame,
     shares_permil: dict[str, int],
@@ -740,7 +672,7 @@ def bpe_encode(
     id_col: str = "doc_id",
 ) -> DataFrame:
     """Apply a trained BPE merge table to the corpus (the ENCODE side of
-    :func:`bpe_train_merges`): each word splits to characters, then the
+    :func:`bpe_train_merges_batched`): each word splits to characters, then the
     merges apply in rank order, greedy left-to-right non-overlapping —
     the exact semantics the trainer learned under.
 
@@ -817,11 +749,10 @@ def sparse_cosine_pairs(
     IEEE sqrt/multiply/divide chain in both engines.
 
     The weighted postings table feeds three consumers (norms + both
-    join sides), so it is localCheckpoint-materialized once — the
-    `prefix_jaccard_pairs` lesson; callers running many operators in
-    one session should unpersist between queries (bench hygiene).
+    join sides), so it is materialized once (the
+    `prefix_jaccard_pairs` lesson).
     """
-    from .dedup import shingles_tokens, spread
+    from .dedup import shingles_tokens
 
     d = spread(docs).select(
         F.col(id_col).alias("doc"), tokens(text_col).alias("tk0")
@@ -847,10 +778,9 @@ def sparse_cosine_pairs(
         keep = F.col("df") * 1000 <= F.lit(int(max_df_permil) * n_docs)
     else:
         keep = F.col("df") <= max_df
-    w = (
+    w = materialize(
         sh.join(dfreq.filter(keep), "s")
         .select("doc", "s", F.expr("1000000 DIV df").alias("wt"))
-        .localCheckpoint(eager=True)
     )
     norms = w.groupBy("doc").agg(
         F.sum(F.col("wt") * F.col("wt")).cast("bigint").alias("nrm2")
@@ -964,13 +894,17 @@ def bpe_train_merges_batched(
     sequential BPE is only that recounts happen per batch, not per
     merge (counts are still exact at every batch boundary; the classic
     trade described in the parallel-tokenizer literature). With
-    ``batch_size=1`` this IS :func:`bpe_train_merges` (pinned by
-    tests).
+    ``batch_size=1`` this is exact sequential BPE: one merge per round,
+    chosen by the deterministic (count DESC, left, right) tie-break
+    (pinned against a pure-Python reference by tests).
 
-    Scale shape identical to the sequential trainer: corpus collapses
-    to the word-frequency table first; every round touches only
-    vocabulary-sized data; the merge application is a Catalyst fold
-    per adopted pair. Per round the top ``8 * batch_size`` candidate
+    Scale design: the corpus collapses to the word-FREQUENCY table
+    first (one groupBy), so no matter how large the corpus every round
+    touches only vocabulary-sized data - how production BPE trainers
+    stay tractable at 100 TB. Pair counts weight each adjacent-symbol
+    pair by word frequency, overlapping occurrences counted; the merge
+    application is a Catalyst fold per adopted pair (no Python in any
+    loop). Per round the top ``8 * batch_size`` candidate
     rows are collected first; if the window is exhausted before the
     batch fills (every remaining pair shares a symbol with an adopted
     one), the collect WIDENS (4x) until the batch fills or the window
@@ -981,13 +915,12 @@ def bpe_train_merges_batched(
     Returns (merge_rank, left, right, pair_count); pair_count is the
     count AT ADOPTION TIME (start of its batch's round).
     """
-    words = (
+    words = materialize(
         docs.select(F.explode(tokens(text_col)).alias("w"))
         .filter(F.length("w") > 0)
         .groupBy("w")
         .agg(F.count("*").alias("freq"))
         .select(F.split("w", "").alias("arr"), "freq")
-        .localCheckpoint(eager=True)
     )
     spark = docs.sparkSession
     merges: list[tuple[int, str, str, int]] = []
@@ -1035,10 +968,8 @@ def bpe_train_merges_batched(
             new = new.select(
                 F.expr(_bpe_merge_expr("arr", left, right)).alias("arr"), "freq"
             )
-        new = new.localCheckpoint(eager=True)
-        from .dedup import _free_checkpoint
-
-        _free_checkpoint(words)
+        new = materialize(new)
+        release(words)
         words = new
     return spark.createDataFrame(
         merges, "merge_rank long, left string, right string, pair_count long"
@@ -1159,9 +1090,7 @@ def exact_substring_remove(
     The reassembly is exact even around empty tokens (consecutive
     spaces survive a split/join round-trip).
     """
-    from .dedup import _full_width
-
-    width = _full_width(docs.sparkSession)
+    width = full_width(docs.sparkSession)
     dup = _duplicated_windows(docs, text_col, window)
     # ADVICE r9: cov must be repartitioned at the SAME explicit width
     # as toks — the window upstream leaves it hash(doc_id)-clustered
@@ -1424,7 +1353,7 @@ def dsir_importance(
     bucket) counts — partial-aggregatable, so the one corpus-scale
     shuffle carries collapsed (doc_id, bucket, n) triples, at most
     ``buckets`` rows per doc — and that bounded table is
-    localCheckpoint-materialized (the BPE-trainer precedent) so BOTH
+    materialized (the BPE-trainer precedent) so BOTH
     consumers read it without re-expanding the corpus: the q-fit
     bucket totals (a ``buckets``-bounded second aggregate) and the
     per-doc scores (broadcast-joined 64-row LUT of smoothed
@@ -1467,19 +1396,13 @@ def dsir_importance(
 
     # one corpus gram-explode, collapsed to per-(doc, bucket) counts and
     # materialized so q-fit AND scoring read it (not the raw explode)
-    dg = (
-        grams(raw)
-        .groupBy("doc_id", "bucket")
-        .agg(F.count("*").alias("n"))
-        .localCheckpoint(eager=True)
+    dg = materialize(
+        grams(raw).groupBy("doc_id", "bucket").agg(F.count("*").alias("n"))
     )
     # target side gets the same one-scan treatment: its <=buckets-row
     # bucket totals are referenced twice below (grand total + LUT)
-    t_counts = (
-        grams(target)
-        .groupBy("bucket")
-        .agg(F.count("*").alias("t_b"))
-        .localCheckpoint(eager=True)
+    t_counts = materialize(
+        grams(target).groupBy("bucket").agg(F.count("*").alias("t_b"))
     )
     r_counts = dg.groupBy("bucket").agg(F.sum("n").alias("r_b"))
     spark = raw.sparkSession

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import dedup, multimodal, similarity, temporal, text
+from ..operators.materialize import spread
 from ._helpers import t
 from .registry import register
 
@@ -1350,7 +1351,7 @@ def corpus_top_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     of corpus row count; final top-k is a TakeOrdered, no global sort
     materialization. Tie-broken on the bigram for determinism."""
     docs = t(spark, sf_dir, "documents")
-    sh = dedup.spread(docs).select(
+    sh = spread(docs).select(
         "doc_id", F.explode(dedup.shingles("text", 2)).alias("bigram")
     )
     return (

@@ -30,6 +30,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..operators.materialize import scope
+
 
 @dataclass(frozen=True)
 class Query:
@@ -57,7 +59,10 @@ def register(
 
         def guarded(spark: SparkSession, sf_dir: str) -> DataFrame:
             _pin_session_semantics(spark)
-            return fn(spark, sf_dir)
+            # frees every block the build materialized that the
+            # returned plan does not read (operators/materialize.py)
+            with scope() as built:
+                return built.keep(fn(spark, sf_dir))
 
         guarded.__doc__ = fn.__doc__
         guarded.__name__ = fn.__name__

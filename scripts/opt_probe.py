@@ -105,6 +105,7 @@ def dump_sql_plans(name: str, tag: str) -> dict:
 
 
 def probe_one(name: str, tag: str) -> dict:
+    from dlt_salesforce_iceberg_rest_demo_spark.operators.materialize import scope
     from dlt_salesforce_iceberg_rest_demo_spark.plans import query_fns
     from dlt_salesforce_iceberg_rest_demo_spark.session import get_spark
 
@@ -130,14 +131,10 @@ def probe_one(name: str, tag: str) -> dict:
     before_jobs = {j["jobId"] for j in _jobs(spark)}
     runs = []
     for _ in range(3):
-        t0 = time.perf_counter()
-        _execute(fns[name](spark, SRC))
-        runs.append(time.perf_counter() - t0)
-        try:
-            for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-                rdd.unpersist()
-        except Exception:
-            pass
+        with scope():  # frees the blocks each result read once it has run
+            t0 = time.perf_counter()
+            _execute(fns[name](spark, SRC))
+            runs.append(time.perf_counter() - t0)
     new_stages = [
         s for s in _stages(spark)
         if (s["stageId"], s["attemptId"]) not in before_stages

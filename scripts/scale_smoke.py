@@ -75,7 +75,7 @@ HOT = [
     # stay the ONLY token-scale shuffle at 10x.
     "text_exact_substring_remove",
     # round-10 (r9 verdict task 7): Misra-Gries heavy hitters — its
-    # summary is localCheckpointed before fanning out to two consumers
+    # summary is materialized before fanning out to two consumers
     # (r9), so the checkpoint must stay SUMMARY-sized (O(capacity) per
     # partition), not input-sized, as the input grows 10x.
     "approx_heavy_hitters_users",
@@ -167,6 +167,7 @@ def run_one(name: str, big_dir: str, with_split_stats: bool) -> dict:
     import contextlib
     import io
 
+    from dlt_salesforce_iceberg_rest_demo_spark.operators.materialize import scope
     from dlt_salesforce_iceberg_rest_demo_spark.plans import query_fns
     from dlt_salesforce_iceberg_rest_demo_spark.session import get_spark
 
@@ -206,15 +207,11 @@ def run_one(name: str, big_dir: str, with_split_stats: bool) -> dict:
             (s["stageId"], s["attemptId"]) for s in _stage_rows(spark)
         }
         for _ in range(2):
-            t0 = time.perf_counter()
-            n = _execute(fns[name](spark, sf_dir))
-            runs.append(time.perf_counter() - t0)
+            with scope():  # frees the blocks each result read once it has run
+                t0 = time.perf_counter()
+                n = _execute(fns[name](spark, sf_dir))
+                runs.append(time.perf_counter() - t0)
         mets = _metrics_since(spark, before)
-        try:
-            for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-                rdd.unpersist()
-        except Exception:
-            pass
         entry[label] = {
             "sec": round(min(runs), 3),
             "rows": n,

@@ -454,7 +454,7 @@ class TestBpeTrainer:
         want = _ref_bpe(texts, 4)
         got = [
             (r["merge_rank"], r["left"], r["right"], r["pair_count"])
-            for r in t_ops.bpe_train_merges(docs, n_merges=4)
+            for r in t_ops.bpe_train_merges_batched(docs, n_merges=4, batch_size=1)
             .orderBy("merge_rank")
             .collect()
         ]
@@ -469,7 +469,7 @@ class TestBpeTrainer:
         docs = spark.createDataFrame([(1, "aaaa")], "doc_id long, text string")
         got = [
             (r["merge_rank"], r["left"], r["right"], r["pair_count"])
-            for r in t_ops.bpe_train_merges(docs, n_merges=2)
+            for r in t_ops.bpe_train_merges_batched(docs, n_merges=2, batch_size=1)
             .orderBy("merge_rank")
             .collect()
         ]
@@ -524,24 +524,6 @@ def _ref_bpe_batched(texts, n_merges, batch_size):
 
 
 class TestBpeTrainerBatched:
-    def test_batch_size_one_equals_sequential(self, spark):
-        from dlt_salesforce_iceberg_rest_demo_spark.operators import text as t_ops
-
-        docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-        seq = [
-            tuple(r)
-            for r in t_ops.bpe_train_merges(docs, n_merges=3)
-            .orderBy("merge_rank")
-            .collect()
-        ]
-        b1 = [
-            tuple(r)
-            for r in t_ops.bpe_train_merges_batched(docs, n_merges=3, batch_size=1)
-            .orderBy("merge_rank")
-            .collect()
-        ]
-        assert b1 == seq
-
     def test_matches_batched_reference(self, spark):
         from dlt_salesforce_iceberg_rest_demo_spark.operators import text as t_ops
 

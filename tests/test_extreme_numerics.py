@@ -160,7 +160,6 @@ def _redrive_params():
     ]
 
 @pytest.mark.parametrize("name", _redrive_params())
-@pytest.mark.exhaustive
 def test_numeric_oracles_hold_on_extreme_values(
     spark, extreme_num_duck, extreme_num_sf_dir, name
 ):

@@ -155,7 +155,6 @@ def _redrive_params():
     ]
 
 @pytest.mark.parametrize("name", _redrive_params())
-@pytest.mark.exhaustive
 def test_temporal_oracles_hold_on_extreme_timestamps(
     spark, extreme_ts_duck, extreme_ts_sf_dir, name
 ):
