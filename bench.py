@@ -12,11 +12,11 @@ file-footer caches - Janino compile alone varied 2-14s run-to-run on
 the widest plans), then the MEDIAN of three timed runs is reported
 per query (GC pauses on the iterative operators made a single timed
 run vary ~2x). Each run executes the query's FULL physical plan via
-its toRdd row count (see ``_execute``; a plain count() lets Catalyst
-prune computed columns and eliminate row-preserving joins, timing a
-plan that never runs the operator — found round 8); no collect of
-wide payloads, so the measurement is engine time, not
-driver-transfer time.
+its toRdd row count (see ``scripts/measure.py::execute``; a plain
+count() lets Catalyst prune computed columns and eliminate
+row-preserving joins, timing a plan that never runs the operator —
+found round 8); no collect of wide payloads, so the measurement is
+engine time, not driver-transfer time.
 
 Run this ALONE on a quiet machine: concurrent or recently-exited
 Spark sessions inflate wall times 1.5-2.5x uniformly (block-manager
@@ -30,14 +30,14 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
+from functools import partial
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
-from dlt_salesforce_iceberg_rest_demo_spark.operators.materialize import scope  # noqa: E402
 from dlt_salesforce_iceberg_rest_demo_spark.plans import query_fns  # noqa: E402
 from dlt_salesforce_iceberg_rest_demo_spark.session import get_spark  # noqa: E402
+from scripts.measure import timed  # noqa: E402
 
 # Headline set: one per operator family - relational core, windows,
 # merge semantics, and (as they land) the LLM-pipeline extensions.
@@ -161,26 +161,6 @@ EXTENSION_HEADLINE = [
 ]
 
 
-def _execute(df) -> int:
-    """Execute the query's FULL physical plan; return its row count.
-
-    Deliberately NOT ``df.count()``: Catalyst re-optimizes a count()
-    AROUND the result — column pruning deletes every computed
-    expression a count doesn't need (a map-only query times as a bare
-    parquet scan), and join elimination removes provably
-    row-preserving joins (observed round 8: the ExactSubstr per-doc
-    stats — left join of docs against a groupBy-unique aggregate —
-    collapsed to a parquet row count, so rounds bench'd the operator
-    at scan cost). ``toRdd()`` is the executed plan's own
-    InternalRow RDD: counting it runs the plan exactly as a consumer
-    of every output column would, still with zero driver-side row
-    transfer (per-partition counts only). Rounds 1-7 used count();
-    per-query comparisons against those rounds must expect honest
-    regressions on map-only and join-eliminated shapes.
-    """
-    return df._jdf.queryExecution().toRdd().count()
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
@@ -189,20 +169,13 @@ def main() -> None:
     fns = query_fns()
     names = [n for n in HEADLINE + EXTENSION_HEADLINE if n in fns]
 
-    def timed(name: str) -> float:
-        # The bench owns each result: its scope frees the blocks the
-        # result read as soon as it has run, not when the driver GCs it.
-        with scope():
-            t0 = time.perf_counter()
-            _execute(fns[name](spark, sf_dir))
-            return time.perf_counter() - t0
-
     timings: dict[str, float] = {}
     mins: dict[str, float] = {}
     total = 0.0
     for name in names:
-        timed(name)  # warm: codegen/JIT/footers
-        runs = [timed(name) for _ in range(3)]
+        make = partial(fns[name], spark, sf_dir)
+        timed(make, 1)  # warm: codegen/JIT/footers
+        runs, _ = timed(make, 3)
         dt = sorted(runs)[1]  # median of 3
         timings[name] = round(dt, 4)
         mins[name] = round(min(runs), 4)

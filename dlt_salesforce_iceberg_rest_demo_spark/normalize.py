@@ -168,27 +168,6 @@ def align_to_schema(df: DataFrame, target: T.StructType) -> DataFrame:
     return df.select(projections)
 
 
-def normalize_batch(
-    df: DataFrame,
-    *,
-    load_id: str | None = None,
-    timestamp_columns: list[str] | None = None,
-    target: T.StructType | None = None,
-    deterministic_id_from: list[str] | None = None,
-) -> DataFrame:
-    """Full normalize pipeline: snake_case -> timestamp parse -> lineage
-    -> (optional) schema alignment. Mirrors dlt extract->normalize->load
-    handoff as one lazy Catalyst plan (no materialization between steps;
-    the reference stages Parquet files between each)."""
-    out = snake_case_columns(df)
-    if timestamp_columns:
-        out = parse_canonical_datetime(out, [snake_case(c) for c in timestamp_columns])
-    out = add_lineage(out, load_id, deterministic_from=deterministic_id_from)
-    if target is not None:
-        out = align_to_schema(out, target)
-    return out
-
-
 def explode_nested(
     df: DataFrame,
     parent_name: str,

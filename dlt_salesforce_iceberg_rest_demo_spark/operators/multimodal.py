@@ -1717,19 +1717,6 @@ def _jpeg_progressive_scan_mc(
             eobrun = _jpeg_refine_ac(c, rd, ss, se, al, eobrun, table)
 
 
-def _jpeg_progressive_scan(
-    coefs, segments, table, ss, se, ah, al, ri: int
-) -> None:
-    """Single-component progressive scan (the grayscale path).
-    ``table`` is the DC table for first DC scans, the AC table for AC
-    scans, unused for DC refinement."""
-    comp = {"cid": 0, "dc": table, "ac": table}
-    _jpeg_progressive_scan_mc(
-        ([(coefs[i], comp)] for i in range(len(coefs))),
-        segments, ss, se, ah, al, ri,
-    )
-
-
 def decode_jpeg(data: bytes) -> tuple[int, int, int, bytes]:
     """Real JPEG decode, 1- or 3-component: segment walk, DQT/DHT
     table builds from the stream itself, entropy decode with

@@ -129,23 +129,6 @@ def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
     return rng.standard_normal((n_planes, dim)).round(6).tolist()
 
 
-def lsh_bucket(vec_col: Column, planes: list[list[float]]) -> Column:
-    """Signed-random-projection bucket id: bit j = sign(<v, h_j>)."""
-    bucket = F.lit(0).cast("long")
-    for j, plane in enumerate(planes):
-        proj = F.aggregate(
-            F.zip_with(
-                vec_col,
-                F.array(*[F.lit(w) for w in plane]),
-                lambda x, h: x.cast("double") * h,
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        bucket = bucket + F.when(proj > 0, F.lit(1 << j)).otherwise(F.lit(0))
-    return bucket
-
-
 def _table_buckets_udf(dim: int, n_planes: int, n_tables: int, seed: int):
     """Pandas UDF computing ALL hash-table buckets for a vector batch in
     one numpy matmul: (batch, dim) @ (dim, n_tables*n_planes) -> signs

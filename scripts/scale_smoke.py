@@ -1,8 +1,9 @@
 """Scale smoke: run the hottest headliners at sf0.1 AND a generated
 sf1.0 slice (10x rows) and report, per query and scale: wall time,
 Exchange (shuffle) count of the physical plan, shuffle-write bytes,
-SPILL bytes (memory+disk), and peak execution memory — via the Spark
-UI REST API (stage-level task metrics). The claims under test: plans
+SPILL bytes (memory+disk), and peak execution memory — from the
+stage-level task metrics in Spark's in-process status store, with the
+Spark UI off (scripts/measure.py). The claims under test: plans
 are scale-stable (no new shuffles appear), wall time grows
 near-linearly, and nothing SPILLS at sf1.0 in this 128 GiB JVM — the
 measured evidence behind the "designed for 100 TB" statements in the
@@ -27,6 +28,8 @@ engine behavior.
 
 Usage: python scripts/scale_smoke.py                 # full suite
        python scripts/scale_smoke.py --query N [--growdf]  # (internal)
+       python scripts/scale_smoke.py --hotwindow           # (internal)
+       python scripts/scale_smoke.py --removal-hotwindow   # (internal)
 Writes SCALE_SMOKE.json; prints one compact summary line.
 """
 
@@ -35,11 +38,13 @@ from __future__ import annotations
 import json
 import subprocess
 import sys
-import time
+from functools import partial
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
+
+from scripts import measure  # noqa: E402
 
 SRC = "/root/testdata/sf0.1"
 DST = "/tmp/scale_sf1.0"
@@ -123,40 +128,17 @@ PLAN_CHANGE_BY_DESIGN = {
 }
 
 
-def _execute(df) -> int:
-    """Run the query's FULL physical plan (toRdd row count) — see
-    bench.py `_execute`: a plain count() lets Catalyst prune computed
-    columns and eliminate row-preserving joins, timing a plan that
-    never runs the operator (found round 8 on the ExactSubstr
-    doc-stats shape)."""
-    return df._jdf.queryExecution().toRdd().count()
 
 
-def _stage_rows(spark) -> list[dict]:
-    import urllib.request
-
-    base = spark.sparkContext.uiWebUrl
-    app = spark.sparkContext.applicationId
-    with urllib.request.urlopen(
-        f"{base}/api/v1/applications/{app}/stages", timeout=30
-    ) as r:
-        return json.load(r)
-
-
-def _metrics_since(spark, before_ids: set) -> dict:
-    rows = [
-        s
-        for s in _stage_rows(spark)
-        if (s["stageId"], s["attemptId"]) not in before_ids
-    ]
+def _stage_metrics(stages: list[dict]) -> dict:
     return {
         "spill_bytes": sum(
             s.get("memoryBytesSpilled", 0) + s.get("diskBytesSpilled", 0)
-            for s in rows
+            for s in stages
         ),
-        "shuffle_write_bytes": sum(s.get("shuffleWriteBytes", 0) for s in rows),
+        "shuffle_write_bytes": sum(s.get("shuffleWriteBytes", 0) for s in stages),
         "peak_exec_mem": max(
-            (s.get("peakExecutionMemory", 0) for s in rows), default=0
+            (s.get("peakExecutionMemory", 0) for s in stages), default=0
         ),
     }
 
@@ -166,14 +148,12 @@ def run_one(name: str, big_dir: str, with_split_stats: bool) -> dict:
     Spark session; returns the report entry."""
     import contextlib
     import io
+    import re
 
-    from dlt_salesforce_iceberg_rest_demo_spark.operators.materialize import scope
     from dlt_salesforce_iceberg_rest_demo_spark.plans import query_fns
     from dlt_salesforce_iceberg_rest_demo_spark.session import get_spark
 
-    spark = get_spark(
-        "scale-smoke", extra_conf={"spark.ui.enabled": "true"}
-    )
+    spark = get_spark("scale-smoke")
     fns = query_fns()
     entry: dict = {}
     for label, sf_dir in (("sf0.1", SRC), ("sf1.0", big_dir)):
@@ -186,10 +166,9 @@ def run_one(name: str, big_dir: str, with_split_stats: bool) -> dict:
         # as scale instability. Collect also doubles as the warm run.
         df = fns[name](spark, sf_dir)
         df.collect()
-        # NB: collect() (not count()) everywhere in this file — a
-        # count() lets Catalyst prune computed columns / eliminate
-        # row-preserving joins and times a plan that never runs the
-        # operator (bench.py `_execute` has the full story).
+        # NB: collect() or measure.execute, never count() — a count()
+        # lets Catalyst prune computed columns / eliminate row-preserving
+        # joins and times a plan that never runs the operator.
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):
             df.explain("formatted")
@@ -197,27 +176,17 @@ def run_one(name: str, big_dir: str, with_split_stats: bool) -> dict:
         # section after the final tree — truncate there, or the count
         # double-counts every exchange (and re-inherits the initial
         # plan's broadcast->SMJ statistics flips).
-        import re
-
         plan_txt = buf.getvalue().split("Initial Plan", 1)[0]
         n_shuffle = len(re.findall(r"(?<![A-Za-z])Exchange", plan_txt))
         n_bcast = plan_txt.count("BroadcastExchange")
-        runs = []
-        before = {
-            (s["stageId"], s["attemptId"]) for s in _stage_rows(spark)
-        }
-        for _ in range(2):
-            with scope():  # frees the blocks each result read once it has run
-                t0 = time.perf_counter()
-                n = _execute(fns[name](spark, sf_dir))
-                runs.append(time.perf_counter() - t0)
-        mets = _metrics_since(spark, before)
+        snap = measure.Snapshot(spark)
+        runs, n = measure.timed(partial(fns[name], spark, sf_dir), 2)
         entry[label] = {
             "sec": round(min(runs), 3),
             "rows": n,
             "exchanges": n_shuffle,
             "broadcasts": n_bcast,
-            **mets,
+            **_stage_metrics(snap.stages()),
         }
         if with_split_stats:
             from dlt_salesforce_iceberg_rest_demo_spark.operators.dedup import (
@@ -260,6 +229,7 @@ def run_one(name: str, big_dir: str, with_split_stats: bool) -> dict:
 
 HOTWIN_DIR = "/tmp/hotwin_sf"
 HOTWIN_KEY = "hotwindow:text_exact_substring_dedup"
+REMOVAL_KEY = "hotwindow:text_exact_substring_remove"
 
 
 def _ensure_hotwin_slice(spark) -> None:
@@ -285,7 +255,7 @@ def _ensure_hotwin_slice(spark) -> None:
     )
 
 
-def _task_skew(spark, before_ids: set) -> dict:
+def _task_skew(snap: measure.Snapshot, stages: list[dict]) -> dict:
     """Straggler evidence over the stages this measurement ran:
     ``max_task_ms`` = the single longest task anywhere (with its
     stage's task count) — at toy scale AQE byte-coalesces the hot
@@ -296,27 +266,16 @@ def _task_skew(spark, before_ids: set) -> dict:
     so NO task inherits a hot window's full occurrence list (the
     count-over-window formulation funnels all ~1e6 occurrences of a
     hot window text through one task)."""
-    import urllib.request
-
-    base = spark.sparkContext.uiWebUrl
-    app = spark.sparkContext.applicationId
     out = {
         "max_task_ms": 0,
         "max_task_stage_tasks": 0,
         "max_median_task_ratio": 0.0,
     }
-    for s in _stage_rows(spark):
-        sid = (s["stageId"], s["attemptId"])
-        if sid in before_ids or s.get("numCompleteTasks", 0) < 1:
+    for s in stages:
+        if s.get("numCompleteTasks", 0) < 1:
             continue
-        url = (
-            f"{base}/api/v1/applications/{app}/stages/{s['stageId']}/"
-            f"{s['attemptId']}/taskSummary?quantiles=0.5,1.0"
-        )
-        try:
-            with urllib.request.urlopen(url, timeout=30) as r:
-                q = json.load(r)
-        except Exception:
+        q = snap.task_quantiles(s, [0.5, 1.0])
+        if q is None:
             continue
         med, mx = q["executorRunTime"]
         if mx > out["max_task_ms"]:
@@ -329,218 +288,161 @@ def _task_skew(spark, before_ids: set) -> dict:
     return out
 
 
-def run_hotwindow_variant(variant: str) -> dict:
-    """Warm steady-state measurement (bench convention: warm once,
-    median of 3 fresh-plan runs — a single cold run is dominated by
-    Janino/JIT compile, observed 14.2 s cold vs 2.6 s warm for the
-    SAME plan) of one duplicate-flag formulation on the hot-window
-    slice, in its own session. Records wall time, shuffle-write bytes
-    (the deterministic half of the claim: the groupBy-fp shape puts
-    only 16-byte fps and flagged int rows on the wire, the
-    count-over-window shape shuffles every window row with its text),
-    spill, and the longest single task across the timed runs."""
+def _dup_flag_frame(docs, variant: str):
+    """shipped = the groupBy-fp duplicate flag; contrast = the round-7
+    count(*) OVER (PARTITION BY wtext) flag — no map-side partial agg,
+    a hot window's rows land on one task."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     from dlt_salesforce_iceberg_rest_demo_spark.operators import text as t_ops
-    from dlt_salesforce_iceberg_rest_demo_spark.session import get_spark
 
-    spark = get_spark("scale-smoke", extra_conf={"spark.ui.enabled": "true"})
-    _ensure_hotwin_slice(spark)
-    docs = spark.read.parquet(str(Path(HOTWIN_DIR, "documents.parquet")))
-
-    def make():
-        if variant == "shipped":
-            return t_ops.exact_substring_spans(docs, window=8)
-        # round-7 shape: count(*) OVER (PARTITION BY wtext) — no
-        # map-side partial agg, a hot window's rows land on one task
-        win = t_ops._substring_windows(docs, "text", 8)
-        dup = (
-            win.withColumn(
-                "c", F.count("*").over(Window.partitionBy("wtext"))
-            )
-            .filter(F.col("c") > 1)
-            .select("doc_id", "pos", "e")
+    if variant == "shipped":
+        return t_ops.exact_substring_spans(docs, window=8)
+    win = t_ops._substring_windows(docs, "text", 8)
+    dup = (
+        win.withColumn(
+            "c", F.count("*").over(Window.partitionBy("wtext"))
         )
-        return t_ops._span_stats(docs, "text", dup)
-
-    n = _execute(make())  # warm: codegen/JIT/footers
-    before = {(s["stageId"], s["attemptId"]) for s in _stage_rows(spark)}
-    runs = []
-    for _ in range(3):
-        t0 = time.perf_counter()
-        n = _execute(make())
-        runs.append(time.perf_counter() - t0)
-    mets = _metrics_since(spark, before)
-    mets["shuffle_write_bytes"] //= 3  # per-run (3 timed runs summed)
-    return {
-        "sec": round(sorted(runs)[1], 3),
-        "rows": n,
-        **mets,
-        **_task_skew(spark, before),
-    }
+        .filter(F.col("c") > 1)
+        .select("doc_id", "pos", "e")
+    )
+    return t_ops._span_stats(docs, "text", dup)
 
 
-REMOVAL_KEY = "hotwindow:text_exact_substring_remove"
-
-
-def run_removal_variant(variant: str) -> dict:
-    """Warm median-of-3 of one ExactSubstr REMOVAL formulation on the
-    hot-window slice (1e6-occurrence phrase: nearly every token of the
-    hot docs is covered, so the coverage join and per-doc reassembly
-    run at full width). shipped = round-9 single-exchange shape (docs
+def _removal_frame(docs, variant: str):
+    """shipped = round-9 single-exchange removal (docs
     repartition(doc_id) -> coverage-marking LEFT join -> ONE groupBy
     for text_clean + n_tokens + n_removed; the stats join back carries
     only (doc_id, is-null)); contrast = the round-8 shape ((doc_id, p)
     anti-join, separate doc_id reassembly groupBy, then a stats join
-    that re-shuffles the full text column)."""
-    from dlt_salesforce_iceberg_rest_demo_spark.operators import text as t_ops
-    from dlt_salesforce_iceberg_rest_demo_spark.session import get_spark
+    that re-shuffles the full text column), reconstructed from the
+    same internals."""
     from pyspark.sql import functions as F
 
-    spark = get_spark("scale-smoke", extra_conf={"spark.ui.enabled": "true"})
+    from dlt_salesforce_iceberg_rest_demo_spark.operators import text as t_ops
+
+    if variant == "shipped":
+        return t_ops.exact_substring_remove(docs, window=8)
+    dup = t_ops._duplicated_windows(docs, "text", 8)
+    cov = t_ops._merged_spans(dup).select(
+        "doc_id", F.explode(F.sequence("s", "e")).alias("p")
+    )
+    tk = F.split(F.col("text"), " ")
+    toks = docs.select(
+        "doc_id", F.posexplode(tk).alias("p0", "tok")
+    ).select("doc_id", (F.col("p0") + 1).alias("p"), "tok")
+    kept = toks.join(cov, ["doc_id", "p"], "left_anti")
+    clean = kept.groupBy("doc_id").agg(
+        F.expr(
+            "array_join(transform(array_sort(collect_list(struct(p, tok))),"
+            " x -> x.tok), ' ')"
+        ).alias("__clean"),
+        F.count("*").alias("__n_kept"),
+    )
+    n_tokens = (
+        F.when(F.col("text").isNull(), F.lit(None).cast("long"))
+        .otherwise(F.size(tk).cast("long"))
+        .alias("n_tokens")
+    )
+    return (
+        docs.select("doc_id", F.col("text").alias("__text"), n_tokens)
+        .join(clean, "doc_id", "left")
+        .select(
+            "doc_id",
+            F.when(F.col("__text").isNull(), F.lit(None).cast("string"))
+            .otherwise(F.coalesce(F.col("__clean"), F.lit("")))
+            .alias("text_clean"),
+            "n_tokens",
+            (
+                F.col("n_tokens") - F.coalesce(F.col("__n_kept"), F.lit(0))
+            ).alias("n_removed"),
+        )
+    )
+
+
+# The hot-slice contrasts: the shipped formulation against the shape it
+# replaced, each variant in its own session on the hot-window slice.
+HOT_SLICE = {
+    HOTWIN_KEY: {
+        "flag": "--hotwindow",
+        "variant_flag": "--hotwindow-variant",
+        "contrast": "window_flag_contrast",
+        "frame": _dup_flag_frame,
+        "note": (
+            "hot slice: one 8-token phrase at ~1e6 occurrences/rotation, "
+            "warm median-of-3 per variant in its own session. shipped = "
+            "groupBy-fp partial agg + semi-join (hot windows collapse "
+            "map-side; only 16-byte fps and flagged (doc_id,pos,e) rows "
+            "shuffle); contrast = the round-7 count-over-window flag "
+            "(every window row incl. its text shuffles on wtext and a "
+            "hot window's occurrence list lands on one task; at this toy "
+            "scale LZ4+dictionary makes the hot text shuffle cheap and "
+            "AQE byte-coalescing funnels it to few-task stages — at "
+            "crawl scale neither mercy applies)"
+        ),
+    },
+    REMOVAL_KEY: {
+        "flag": "--removal-hotwindow",
+        "variant_flag": "--removal-variant",
+        "contrast": "r8_shape_contrast",
+        "frame": _removal_frame,
+        "note": (
+            "hot slice (one 8-token phrase, ~1e6 occurrences/rotation; hot "
+            "docs ~100% covered), warm median-of-3 per variant in its own "
+            "session. shipped = round-9 single token-scale exchange "
+            "(repartition(doc_id) satisfies the coverage join AND the one "
+            "combined reassembly/stats aggregation; the doc join back "
+            "carries no text); r8_shape_contrast = (doc_id,p) anti-join + "
+            "separate reassembly groupBy + a stats join re-shuffling the "
+            "full text column."
+        ),
+    },
+}
+
+
+def run_hot_variant(key: str, variant: str) -> dict:
+    """Warm steady-state measurement (bench convention: warm once,
+    median of 3 fresh-plan runs — a single cold run is dominated by
+    Janino/JIT compile, observed 14.2 s cold vs 2.6 s warm for the
+    SAME plan) of one formulation on the hot-window slice, in its own
+    session. Records wall time, per-run shuffle-write bytes (the
+    deterministic half of the claims: the shipped shapes put fewer
+    bytes on the wire), spill, and the longest single task across the
+    timed runs."""
+    from dlt_salesforce_iceberg_rest_demo_spark.session import get_spark
+
+    spark = get_spark("scale-smoke")
     _ensure_hotwin_slice(spark)
     docs = spark.read.parquet(str(Path(HOTWIN_DIR, "documents.parquet")))
-
-    def make():
-        if variant == "shipped":
-            return t_ops.exact_substring_remove(docs, window=8)
-        # round-8 shape, reconstructed from the same internals
-        dup = t_ops._duplicated_windows(docs, "text", 8)
-        cov = t_ops._merged_spans(dup).select(
-            "doc_id", F.explode(F.sequence("s", "e")).alias("p")
-        )
-        tk = F.split(F.col("text"), " ")
-        toks = docs.select(
-            "doc_id", F.posexplode(tk).alias("p0", "tok")
-        ).select("doc_id", (F.col("p0") + 1).alias("p"), "tok")
-        kept = toks.join(cov, ["doc_id", "p"], "left_anti")
-        clean = kept.groupBy("doc_id").agg(
-            F.expr(
-                "array_join(transform(array_sort(collect_list(struct(p, tok))),"
-                " x -> x.tok), ' ')"
-            ).alias("__clean"),
-            F.count("*").alias("__n_kept"),
-        )
-        n_tokens = (
-            F.when(F.col("text").isNull(), F.lit(None).cast("long"))
-            .otherwise(F.size(tk).cast("long"))
-            .alias("n_tokens")
-        )
-        return (
-            docs.select("doc_id", F.col("text").alias("__text"), n_tokens)
-            .join(clean, "doc_id", "left")
-            .select(
-                "doc_id",
-                F.when(F.col("__text").isNull(), F.lit(None).cast("string"))
-                .otherwise(F.coalesce(F.col("__clean"), F.lit("")))
-                .alias("text_clean"),
-                "n_tokens",
-                (
-                    F.col("n_tokens") - F.coalesce(F.col("__n_kept"), F.lit(0))
-                ).alias("n_removed"),
-            )
-        )
-
-    n = _execute(make())  # warm: codegen/JIT/footers
-    before = {(s["stageId"], s["attemptId"]) for s in _stage_rows(spark)}
-    runs = []
-    for _ in range(3):
-        t0 = time.perf_counter()
-        n = _execute(make())
-        runs.append(time.perf_counter() - t0)
-    mets = _metrics_since(spark, before)
+    make = partial(HOT_SLICE[key]["frame"], docs, variant)
+    measure.execute(make())  # warm: codegen/JIT/footers
+    snap = measure.Snapshot(spark)
+    runs, n = measure.timed(make, 3)
+    stages = snap.stages()
+    mets = _stage_metrics(stages)
     mets["shuffle_write_bytes"] //= 3  # per-run (3 timed runs summed)
     return {
         "sec": round(sorted(runs)[1], 3),
         "rows": n,
         **mets,
-        **_task_skew(spark, before),
+        **_task_skew(snap, stages),
     }
 
 
-def run_removal_hotwindow() -> dict:
-    """Shipped single-exchange removal vs the round-8 two-exchange
-    shape, each in its own subprocess on the hot slice."""
+def run_hot_slice(key: str) -> dict:
+    """One hot-slice entry: the shipped variant and its contrast, each
+    in its own subprocess."""
+    spec = HOT_SLICE[key]
     entry: dict = {}
-    for key, variant in (
-        ("shipped", "shipped"),
-        ("r8_shape_contrast", "contrast"),
-    ):
-        proc = subprocess.run(
-            [sys.executable, __file__, "--removal-variant", variant],
-            capture_output=True, text=True,
+    for name, variant in (("shipped", "shipped"), (spec["contrast"], "contrast")):
+        entry[name] = measure.isolated(
+            [__file__, spec["variant_flag"], variant], "VARIANT"
         )
-        line = next(
-            (
-                ln
-                for ln in proc.stdout.splitlines()
-                if ln.startswith("VARIANT ")
-            ),
-            None,
-        )
-        if line is None:
-            raise RuntimeError(
-                f"removal variant {variant} failed:\n{proc.stderr[-800:]}"
-            )
-        entry[key] = json.loads(line[len("VARIANT "):])
     entry["rows_equal"] = (
-        entry["shipped"]["rows"] == entry["r8_shape_contrast"]["rows"]
+        entry["shipped"]["rows"] == entry[spec["contrast"]]["rows"]
     )
-    entry["note"] = (
-        "hot slice (one 8-token phrase, ~1e6 occurrences/rotation; hot "
-        "docs ~100% covered), warm median-of-3 per variant in its own "
-        "session. shipped = round-9 single token-scale exchange "
-        "(repartition(doc_id) satisfies the coverage join AND the one "
-        "combined reassembly/stats aggregation; the doc join back "
-        "carries no text); r8_shape_contrast = (doc_id,p) anti-join + "
-        "separate reassembly groupBy + a stats join re-shuffling the "
-        "full text column."
-    )
-    return entry
-
-
-def run_hotwindow() -> dict:
-    """The hot-single-window entry: the SHIPPED groupBy-fp duplicate
-    flag vs the round-7 count-over-window formulation, each measured
-    cold in its own subprocess on the 1e6-occurrence slice."""
-    entry: dict = {}
-    for key, variant in (
-        ("shipped", "shipped"),
-        ("window_flag_contrast", "contrast"),
-    ):
-        proc = subprocess.run(
-            [sys.executable, __file__, "--hotwindow-variant", variant],
-            capture_output=True, text=True,
-        )
-        line = next(
-            (
-                ln
-                for ln in proc.stdout.splitlines()
-                if ln.startswith("VARIANT ")
-            ),
-            None,
-        )
-        if line is None:
-            raise RuntimeError(
-                f"hotwindow variant {variant} failed:\n{proc.stderr[-800:]}"
-            )
-        entry[key] = json.loads(line[len("VARIANT "):])
-    entry["rows_equal"] = (
-        entry["shipped"]["rows"] == entry["window_flag_contrast"]["rows"]
-    )
-    entry["note"] = (
-        "hot slice: one 8-token phrase at ~1e6 occurrences/rotation, "
-        "warm median-of-3 per variant in its own session. shipped = "
-        "groupBy-fp partial agg + semi-join (hot windows collapse "
-        "map-side; only 16-byte fps and flagged (doc_id,pos,e) rows "
-        "shuffle); contrast = the round-7 count-over-window flag "
-        "(every window row incl. its text shuffles on wtext and a "
-        "hot window's occurrence list lands on one task; at this toy "
-        "scale LZ4+dictionary makes the hot text shuffle cheap and "
-        "AQE byte-coalescing funnels it to few-task stages — at "
-        "crawl scale neither mercy applies)"
-    )
+    entry["note"] = spec["note"]
     return entry
 
 
@@ -555,25 +457,21 @@ def _ensure_slice(dst: str, mode: str) -> None:
 
 
 def main() -> None:
-    if len(sys.argv) >= 3 and sys.argv[1] == "--query":
-        name = sys.argv[2]
-        growdf = "--growdf" in sys.argv
+    args = sys.argv[1:]
+    if len(args) >= 2 and args[0] == "--query":
+        name = args[1]
+        growdf = "--growdf" in args
         big = DST_GROWDF if growdf else DST
         stats = growdf and name == "dedup_containment_pairs"
         print("RESULT " + json.dumps(run_one(name, big, stats)))
         return
-    if len(sys.argv) >= 3 and sys.argv[1] == "--hotwindow-variant":
-        print("VARIANT " + json.dumps(run_hotwindow_variant(sys.argv[2])))
-        return
-    if len(sys.argv) >= 2 and sys.argv[1] == "--hotwindow":
-        print("RESULT " + json.dumps(run_hotwindow()))
-        return
-    if len(sys.argv) >= 3 and sys.argv[1] == "--removal-variant":
-        print("VARIANT " + json.dumps(run_removal_variant(sys.argv[2])))
-        return
-    if len(sys.argv) >= 2 and sys.argv[1] == "--removal-hotwindow":
-        print("RESULT " + json.dumps(run_removal_hotwindow()))
-        return
+    for key, spec in HOT_SLICE.items():
+        if len(args) >= 2 and args[0] == spec["variant_flag"]:
+            print("VARIANT " + json.dumps(run_hot_variant(key, args[1])))
+            return
+        if args[:1] == [spec["flag"]]:
+            print("RESULT " + json.dumps(run_hot_slice(key)))
+            return
 
     _ensure_slice(DST, "disjoint")
     _ensure_slice(DST_GROWDF, "growdf")
@@ -581,18 +479,12 @@ def main() -> None:
     jobs = [(n, False) for n in HOT] + [(n, True) for n in GROWDF]
     for name, growdf in jobs:
         key = f"growdf:{name}" if growdf else name
-        cmd = [sys.executable, __file__, "--query", name]
-        if growdf:
-            cmd.append("--growdf")
-        proc = subprocess.run(cmd, capture_output=True, text=True)
-        line = next(
-            (ln for ln in proc.stdout.splitlines() if ln.startswith("RESULT ")),
-            None,
-        )
-        if line is None:
-            print(f"{key}: FAILED\n{proc.stderr[-500:]}", flush=True)
+        argv = [__file__, "--query", name] + (["--growdf"] if growdf else [])
+        try:
+            entry = measure.isolated(argv, "RESULT")
+        except RuntimeError as e:
+            print(f"{key}: FAILED\n{e}", flush=True)
             continue
-        entry = json.loads(line[len("RESULT "):])
         if key in PLAN_CHANGE_BY_DESIGN:
             entry["plan_change_by_design"] = PLAN_CHANGE_BY_DESIGN[key]
         report[key] = entry
@@ -607,46 +499,20 @@ def main() -> None:
             flush=True,
         )
 
-    # hot-single-window straggler slice (own subprocess, custom shape)
-    proc = subprocess.run(
-        [sys.executable, __file__, "--hotwindow"],
-        capture_output=True, text=True,
-    )
-    line = next(
-        (ln for ln in proc.stdout.splitlines() if ln.startswith("RESULT ")),
-        None,
-    )
-    if line is None:
-        print(f"{HOTWIN_KEY}: FAILED\n{proc.stderr[-500:]}", flush=True)
-    else:
-        entry = json.loads(line[len("RESULT "):])
-        report[HOTWIN_KEY] = entry
+    # hot-single-window slice: straggler and removal contrasts
+    for key, spec in HOT_SLICE.items():
+        try:
+            entry = measure.isolated([__file__, spec["flag"]], "RESULT")
+        except RuntimeError as e:
+            print(f"{key}: FAILED\n{e}", flush=True)
+            continue
+        report[key] = entry
+        shipped, contrast = entry["shipped"], entry[spec["contrast"]]
         print(
-            f"{HOTWIN_KEY}: shipped {entry['shipped']['sec']}s "
-            f"max/med {entry['shipped']['max_median_task_ratio']} vs "
-            f"window-flag {entry['window_flag_contrast']['sec']}s "
-            f"max/med "
-            f"{entry['window_flag_contrast']['max_median_task_ratio']}",
-            flush=True,
-        )
-
-    # removal on the same hot slice (shipped vs round-8 shape)
-    proc = subprocess.run(
-        [sys.executable, __file__, "--removal-hotwindow"],
-        capture_output=True, text=True,
-    )
-    line = next(
-        (ln for ln in proc.stdout.splitlines() if ln.startswith("RESULT ")),
-        None,
-    )
-    if line is None:
-        print(f"{REMOVAL_KEY}: FAILED\n{proc.stderr[-500:]}", flush=True)
-    else:
-        entry = json.loads(line[len("RESULT "):])
-        report[REMOVAL_KEY] = entry
-        print(
-            f"{REMOVAL_KEY}: shipped {entry['shipped']['sec']}s vs "
-            f"r8-shape {entry['r8_shape_contrast']['sec']}s",
+            f"{key}: shipped {shipped['sec']}s "
+            f"max/med {shipped['max_median_task_ratio']} vs "
+            f"{spec['contrast']} {contrast['sec']}s "
+            f"max/med {contrast['max_median_task_ratio']}",
             flush=True,
         )
 
