@@ -10,7 +10,10 @@ Per selected resource:
    (dlt normalize stage parity);
 4. write with the resource's disposition (replace / merge-on-Id /
    append fallback);
-5. advance the cursor to the max replication value actually loaded.
+5. advance the cursor to the max replication value of the batch, which
+   the lake write observes while it executes the batch
+   (``WriteReport.cursor``; no job after the write), once the write has
+   returned.
 
 `force_replace` (W6, salesforce_pipeline.py:32-34,184-203): every
 resource is written as replace and the state store is wiped first.
@@ -25,11 +28,10 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
 from .config import DEFAULT_RESOURCES, RESOURCES, ResourceConfig
-from .normalize import CANONICAL_TS_FORMAT, add_lineage, new_load_id, snake_case, snake_case_columns
-from .sinks.dispositions import ParquetLake, WriteReport
+from .normalize import add_lineage, new_load_id, snake_case, snake_case_columns
+from .sinks.dispositions import ParquetLake, WriteReport, mark_cursor
 from .sources.salesforce import Transport, read_object
 from .state import StateStore
 
@@ -117,6 +119,10 @@ class SalesforcePipeline:
             is_production=self.is_production,
         )
         normalized = add_lineage(snake_case_columns(df), load_id)
+        if cfg.replication_key:
+            cursor_col = snake_case(cfg.replication_key)
+            if cursor_col in normalized.columns:
+                normalized = mark_cursor(normalized, cursor_col)
 
         disposition = "replace" if force_replace else cfg.write_disposition
         pk = tuple(snake_case(k) for k in cfg.primary_key)
@@ -138,13 +144,8 @@ class SalesforcePipeline:
         else:
             report = self.lake.write(normalized, cfg.name, disposition, pk)
 
-        cursor_value: str | None = None
-        if cfg.replication_key:
-            cursor_col = snake_case(cfg.replication_key)
-            if cursor_col in normalized.columns:
-                row = normalized.agg(
-                    F.date_format(F.max(cursor_col), CANONICAL_TS_FORMAT).alias("m")
-                ).collect()[0]
-                cursor_value = row["m"]
-                self.state.advance(cfg.name, cursor_value)
-        return report, cursor_value
+        # The write has returned, so every row under report.cursor is
+        # committed (a failed write or audit never reaches this line).
+        if report.cursor is not None:
+            self.state.advance(cfg.name, report.cursor)
+        return report, report.cursor

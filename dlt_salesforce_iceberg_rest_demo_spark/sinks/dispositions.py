@@ -49,7 +49,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..normalize import align_to_schema, nullable_everything, widen_types
+from ..normalize import (
+    CANONICAL_TS_FORMAT,
+    align_to_schema,
+    nullable_everything,
+    widen_types,
+)
 
 logger = logging.getLogger(__name__)
 
@@ -70,6 +75,10 @@ TOMBSTONE_COL = "_cdc_deleted"
 # or silent guard-state corruption), so merge_cdc rejects them up front.
 _CDC_RESERVED = ("last_version", TOMBSTONE_COL, "__op", "__base_v")
 
+# Column metadata key that marks a batch's incremental cursor column
+# (see :func:`mark_cursor`).
+_CURSOR_HINT = "cursor"
+
 
 @dataclass
 class WriteReport:
@@ -77,6 +86,39 @@ class WriteReport:
     disposition: str
     rows_written: int
     fallback_append: bool = False
+    # Max of the batch's cursor column (CANONICAL_TS_FORMAT), observed
+    # while the write executed the batch; None without a marked cursor
+    # column or without a non-null cursor value.
+    cursor: str | None = None
+
+
+def mark_cursor(df: DataFrame, column: str) -> DataFrame:
+    """Mark ``column`` as the batch's incremental cursor, whose max
+    :meth:`ParquetLake.write` and :meth:`ParquetLake.write_to_branch`
+    then report in ``WriteReport.cursor``. The mark is column metadata:
+    it rides the batch through the write call and never reaches the
+    table schema."""
+    return df.withMetadata(column, {_CURSOR_HINT: True})
+
+
+def _observe_cursor(df: DataFrame):
+    """Attach the max of the marked cursor column to the batch itself,
+    below anything a disposition builds on it: every disposition executes
+    the batch at least once (a merge's count, or the write), and that
+    first execution fills the observation at no extra job. A merge's
+    value is therefore the batch max, never the merged table's. Returns
+    the unmarked batch and a reader for the value (None if unmarked)."""
+    from pyspark.sql import Observation
+
+    marked = [f.name for f in df.schema.fields if f.metadata.get(_CURSOR_HINT)]
+    if not marked:
+        return df, lambda: None
+    (column,) = marked
+    obs = Observation()
+    df = df.withMetadata(column, {}).observe(
+        obs, F.date_format(F.max(column), CANONICAL_TS_FORMAT).alias("cursor")
+    )
+    return df, lambda: obs.get["cursor"]
 
 
 class ParquetLake:
@@ -341,7 +383,22 @@ class ParquetLake:
         current main snapshot) auto-create on first contact; merge
         reads its base from the BRANCH, so multiple staged batches
         compose before one audit + fast_forward publishes them all.
+        The report carries the batch's max cursor as :meth:`write`'s
+        does.
         """
+        df, cursor = _observe_cursor(df)
+        report = self._write_to_branch(df, table, disposition, primary_key, branch)
+        report.cursor = cursor()
+        return report
+
+    def _write_to_branch(
+        self,
+        df: DataFrame,
+        table: str,
+        disposition: str,
+        primary_key: tuple[str, ...] | list[str],
+        branch: str,
+    ) -> WriteReport:
         if not self.exists(table):
             self.create_table(table, df.schema)
         if branch not in self.branches(table):
@@ -1150,11 +1207,16 @@ class ParquetLake:
         primary_key: tuple[str, ...] | list[str] = (),
     ) -> WriteReport:
         """Disposition dispatch, the destination entry point
-        (salesforce_pipeline.py:62-176)."""
+        (salesforce_pipeline.py:62-176). The report carries the batch's
+        max cursor when a column is marked with :func:`mark_cursor`."""
+        df, cursor = _observe_cursor(df)
         if disposition == "append":
-            return self.append(df, table)
-        if disposition == "replace":
-            return self.replace(df, table)
-        if disposition == "merge":
-            return self.merge(df, table, primary_key)
-        raise ValueError(f"unknown write disposition: {disposition}")
+            report = self.append(df, table)
+        elif disposition == "replace":
+            report = self.replace(df, table)
+        elif disposition == "merge":
+            report = self.merge(df, table, primary_key)
+        else:
+            raise ValueError(f"unknown write disposition: {disposition}")
+        report.cursor = cursor()
+        return report

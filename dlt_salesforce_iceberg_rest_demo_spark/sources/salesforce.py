@@ -18,10 +18,14 @@ Architecture differences (Spark-first, not a port):
 - Transport is an injectable protocol; production wires simple_salesforce
   (behind an import-try: not installed in this environment), tests use
   :class:`MockTransport`. The engine logic is identical either way.
-- Rows land as Arrow-typed Spark DataFrames, with datetime fields parsed
-  natively (no `%Y-%m-%dT%H:%M:%S.%fZ` string round-trip in the hot
-  path; `normalize.canonicalize_datetime` renders the reference's string
-  format on demand).
+- Each extracted batch lands in the JVM once, as one Arrow table:
+  under `spark.sql.execution.arrow.localRelationThreshold` (48 MB by
+  default) it is a `LocalRelation`, above it a JVM-side RDD of Arrow
+  batches. No Python worker runs in either case, however often the
+  plan executes (a merge executes its batch three times). Datetime
+  fields are parsed natively (no `%Y-%m-%dT%H:%M:%S.%fZ` string
+  round-trip in the hot path; `normalize.canonicalize_datetime` renders
+  the reference's string format on demand).
 - At scale the single-generator extraction (the reference is one Python
   process pulling all pages) becomes a *distributed* read:
   :func:`read_object_distributed` splits the PK domain into ranges and
@@ -36,9 +40,12 @@ from collections.abc import Callable, Iterable, Iterator
 from dataclasses import dataclass, field
 from typing import Any, Protocol
 
+import pyarrow as pa
+from pyspark.errors import PySparkTypeError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 # ---------------------------------------------------------------------------
 # Auth configuration (client.py:38-129). Pure config resolution - the
@@ -374,31 +381,31 @@ def _records_to_dataframe(
     meta: ObjectMeta,
     api_type: str,
 ) -> DataFrame:
-    """Dict rows -> typed DataFrame.
+    """Dict rows -> one Arrow table -> typed DataFrame.
 
     The reference's `_process_record` (records.py:15-47) strips the
     `attributes` envelope and string-formats datetimes per row in Python.
-    Here: envelope keys simply never enter the projection, and datetime
+    Here: envelope keys simply never enter the projection, each projected
+    field becomes one Arrow column (typed by :func:`_column`), and the
+    table crosses into the JVM once (see :func:`read_object`). Datetime
     conversion is one Column expression per field - epoch-millis
     (`timestamp_millis`) for the bulk shape, ISO parse (`to_timestamp`)
     for the standard shape.
     """
-    rows = [{f: r.get(f) for f in meta.fields} for r in records]
-    fields_struct = T.StructType(
-        [
-            T.StructField(
-                f,
-                T.LongType()
-                if (f in meta.date_fields and api_type == "bulk")
-                else T.StringType()
-                if f in meta.date_fields
-                else _infer_type(rows, f),
-                True,
-            )
-            for f in meta.fields
-        ]
+    records = list(records)
+    fields, columns = [], []
+    for f in meta.fields:
+        wire = (int if api_type == "bulk" else str) if f in meta.date_fields else None
+        dtype, values = _column(f, [r.get(f) for r in records], wire)
+        fields.append(T.StructField(f, dtype, True))
+        columns.append(values)
+    schema = T.StructType(fields)
+    arrow_schema = to_arrow_schema(schema)
+    table = pa.table(
+        [pa.array(v, type=a.type) for v, a in zip(columns, arrow_schema)],
+        schema=arrow_schema,
     )
-    df = spark.createDataFrame(rows, schema=fields_struct)
+    df = spark.createDataFrame(table, schema)
     for f in meta.date_fields:
         if api_type == "bulk":
             df = df.withColumn(f, F.timestamp_millis(F.col(f)))
@@ -407,21 +414,44 @@ def _records_to_dataframe(
     return df
 
 
-def _infer_type(rows: list[dict[str, Any]], field_name: str) -> T.DataType:
-    """Widened inference matching the reference's lattice (SURVEY §1.2,
-    iceberg/schema.py:37-40): int->long, float->double, bool, else string."""
-    for r in rows:
-        v = r.get(field_name)
-        if v is None:
-            continue
-        if isinstance(v, bool):
-            return T.BooleanType()
-        if isinstance(v, int):
-            return T.LongType()
-        if isinstance(v, float):
-            return T.DoubleType()
-        return T.StringType()
-    return T.StringType()
+# Python type of a column's values -> Spark type, the reference's
+# widened lattice (SURVEY §1.2, iceberg/schema.py:37-40). Columns of any
+# other type land as strings.
+_SCALAR_TYPES = {bool: T.BooleanType(), int: T.LongType(), float: T.DoubleType()}
+
+
+def _column(
+    name: str, values: list[Any], kind: type | None = None
+) -> tuple[T.DataType, list[Any]]:
+    """One field's Spark type and Arrow-ready values. The first non-null
+    value's type picks bool/int/float, and every other non-null value
+    must have exactly that type, else the column raises PySpark's
+    `FIELD_DATA_TYPE_UNACCEPTABLE_WITH_NAME`. A column led by any other
+    type, or all null, is string: each value rendered by ``str``, bools
+    lower-cased. ``kind`` pins the type instead (the datetime wire
+    shapes). These are the verdicts PySpark's row path gives the same
+    first-value schema. The check happens here because pyarrow would
+    cast: ``[1, 2.5]`` in an int64 array silently becomes ``[1, 2]``."""
+    if kind is None:
+        kind = next((type(v) for v in values if v is not None), str)
+    if kind not in _SCALAR_TYPES:
+        return T.StringType(), [
+            None if v is None else str(v).lower() if isinstance(v, bool) else str(v)
+            for v in values
+        ]
+    dtype = _SCALAR_TYPES[kind]
+    for v in values:
+        if v is not None and type(v) is not kind:
+            raise PySparkTypeError(
+                errorClass="FIELD_DATA_TYPE_UNACCEPTABLE_WITH_NAME",
+                messageParameters={
+                    "field_name": f"field {name}",
+                    "data_type": str(dtype),
+                    "obj": repr(v),
+                    "obj_type": str(type(v)),
+                },
+            )
+    return dtype, values
 
 
 # ---------------------------------------------------------------------------
@@ -439,8 +469,11 @@ def read_object(
 ) -> DataFrame:
     """S1/S2: full read of one sObject through the Bulk API with Standard
     API fallback - the reference's `get_records` re-expressed
-    (records.py:50-121). Driver-side paging like the reference, but rows
-    land Arrow-typed with native timestamps."""
+    (records.py:50-121). Driver-side paging like the reference; the
+    batch then lands in the JVM once, as one Arrow table with native
+    timestamps: a `LocalRelation` under
+    `spark.sql.execution.arrow.localRelationThreshold`, a JVM-side RDD
+    of Arrow batches above it, and no Python tasks in either case."""
     meta = object_meta(transport, sobject)
     soql = build_soql(
         sobject, meta.fields, replication_key, last_state, is_production

@@ -3,7 +3,11 @@ replace snapshots, no-PK fallback, force_replace - §3.1 of SURVEY.md."""
 
 from __future__ import annotations
 
+import pytest
+
+from dlt_salesforce_iceberg_rest_demo_spark import pipeline as pipeline_mod
 from dlt_salesforce_iceberg_rest_demo_spark.pipeline import SalesforcePipeline
+from dlt_salesforce_iceberg_rest_demo_spark.sinks import dispositions
 from dlt_salesforce_iceberg_rest_demo_spark.sinks.dispositions import ParquetLake
 from dlt_salesforce_iceberg_rest_demo_spark.state import StateStore
 
@@ -161,3 +165,83 @@ class TestWriteAuditPublish:
         wap = {r["id"]: r["annual_revenue"]
                for r in pb2.lake.read("account").collect()}
         assert wap == plain
+
+
+class TestCursorFromTheWrite:
+    """The cursor is the batch max the lake write observed; the state
+    store only moves once the write has returned (the cursor never
+    passes rows that were not written)."""
+
+    RESOURCES = ("account", "contact", "task")
+
+    def test_incremental_run_issues_no_job_after_a_write(
+        self, spark, tmp_path, monkeypatch
+    ):
+        make_pipeline(spark, tmp_path, version=1).run(self.RESOURCES)
+        p = make_pipeline(spark, tmp_path, version=2)
+        sc = spark.sparkContext
+        during, after = f"incremental-{tmp_path.name}", f"after-write-{tmp_path.name}"
+        # Jobs a resource issues after its write returns land in `after`
+        # until the next resource's extraction starts.
+        read, write = pipeline_mod.read_object, ParquetLake.write
+
+        def read_spy(*args, **kwargs):
+            sc.setJobGroup(during, "extract and write")
+            return read(*args, **kwargs)
+
+        def write_spy(self, *args, **kwargs):
+            report = write(self, *args, **kwargs)
+            sc.setJobGroup(after, "after the write")
+            return report
+
+        monkeypatch.setattr(pipeline_mod, "read_object", read_spy)
+        monkeypatch.setattr(ParquetLake, "write", write_spy)
+        try:
+            info = p.run(self.RESOURCES)
+        finally:
+            sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        tracker = sc.statusTracker()
+        assert set(info.cursors) == {"account"}  # task's poll found nothing new
+        assert list(tracker.getJobIdsForGroup(after)) == []
+        # merge: count + keys broadcast + write; replace and append: the write
+        assert len(tracker.getJobIdsForGroup(during)) <= 7
+
+    def test_failed_commit_leaves_the_cursor(self, spark, tmp_path, monkeypatch):
+        p1 = make_pipeline(spark, tmp_path, version=1)
+        p1.run(("account",))
+        cursor0 = p1.state.get("account")
+        readers = []
+        observe = dispositions._observe_cursor
+
+        def observe_spy(df):
+            df, reader = observe(df)
+            readers.append(reader)
+            return df, reader
+
+        def failing_commit(self, table, data_dirs, branch=None):
+            # the merge's count has already filled the observation
+            assert readers[-1]() > cursor0
+            raise OSError("commit interrupted")
+
+        monkeypatch.setattr(dispositions, "_observe_cursor", observe_spy)
+        monkeypatch.setattr(ParquetLake, "_commit", failing_commit)
+        p2 = make_pipeline(spark, tmp_path, version=2)
+        with pytest.raises(OSError, match="commit interrupted"):
+            p2.run(("account",))
+        assert readers
+        assert p2.state.get("account") == cursor0
+
+    def test_cursor_is_the_batch_max_not_the_tables(self, spark, tmp_path):
+        make_pipeline(spark, tmp_path, version=2).run(("account",))
+        p = make_pipeline(spark, tmp_path, version=1)
+        p.state.reset("account")
+        info = p.run(("account",))
+        # 001C (2024-01-09) stays in the merged table; the v1 batch tops
+        # out at 001B's 2024-01-03
+        table_max = p.lake.read("account").agg({"last_modified_date": "max"}).first()[0]
+        assert table_max.day == 9
+        assert info.cursors["account"].startswith("2024-01-03")
+        assert p.state.get("account") == info.cursors["account"]
+        # the cursor mark rides the batch, not the table schema
+        assert not any(f.metadata for f in p.lake.schema("account").fields)

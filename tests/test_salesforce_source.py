@@ -6,10 +6,13 @@ from __future__ import annotations
 import datetime
 
 import pytest
+from pyspark.errors import PySparkTypeError
 
 from dlt_salesforce_iceberg_rest_demo_spark.sources.salesforce import (
     BulkNotEnabledError,
+    ObjectMeta,
     SalesforceAuth,
+    _records_to_dataframe,
     build_soql,
     object_meta,
     read_object,
@@ -115,6 +118,89 @@ class TestReadObject:
         )
         ids = [r["Id"] for r in dist.collect()]
         assert sorted(ids) == ["001A", "001B"]  # no dup, no loss across ranges
+
+
+def _leaf_classes(df) -> list[str]:
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    return [leaves.apply(i).getClass().getSimpleName() for i in range(leaves.size())]
+
+
+class TestArrowLanding:
+    """A batch lands as one Arrow table with the verdicts the pickled-row
+    path gave (PySpark's schema verifier over a first-value schema): same
+    types, same raises, same timestamps, for both wire shapes."""
+
+    META = ObjectMeta(fields=["Id", "V", "When"], date_fields={"When"})
+    # One instant list, in each shape's wire form: bulk sends epoch
+    # millis, standard sends ISO strings ('Z' and '+0000' offsets).
+    WHEN = {
+        "bulk": [1704164645123, 0, -1500],
+        "standard": [
+            "2024-01-02T03:04:05.123Z",
+            "1970-01-01T00:00:00.000+0000",
+            "1969-12-31T23:59:58.500Z",
+        ],
+    }
+    WHEN_PARSED = [
+        datetime.datetime(2024, 1, 2, 3, 4, 5, 123000),
+        datetime.datetime(1970, 1, 1),
+        datetime.datetime(1969, 12, 31, 23, 59, 58, 500000),
+    ]
+
+    def land(self, spark, api_type, values, when=None):
+        when = when or [None] * len(values)
+        records = [
+            {"attributes": {"type": "X"}, "Id": str(i), "V": v, "When": w}
+            for i, (v, w) in enumerate(zip(values, when))
+        ]
+        return _records_to_dataframe(spark, records, self.META, api_type)
+
+    @pytest.mark.parametrize("api_type", ["bulk", "standard"])
+    @pytest.mark.parametrize(
+        "values",
+        [[1, 2.5], [1.5, 2], [1, "x"], [True, 1]],
+        ids=["int-float", "float-int", "int-str", "bool-int"],
+    )
+    def test_mixed_type_columns_raise(self, spark, api_type, values):
+        # pyarrow alone would land [1, 2.5] in an int64 column as [1, 2]
+        with pytest.raises(PySparkTypeError) as err:
+            self.land(spark, api_type, values).collect()
+        assert err.value.getCondition() == "FIELD_DATA_TYPE_UNACCEPTABLE_WITH_NAME"
+
+    @pytest.mark.parametrize("api_type", ["bulk", "standard"])
+    @pytest.mark.parametrize(
+        "values, dtype, landed",
+        [
+            ([3, None, 4], "bigint", [3, None, 4]),
+            ([2.5, 1.0], "double", [2.5, 1.0]),
+            ([False, True], "boolean", [False, True]),
+            ([None, None], "string", [None, None]),
+            # a string-led column renders every value with str()
+            (["x", 1, True, {"a": 1}], "string", ["x", "1", "true", "{'a': 1}"]),
+        ],
+        ids=["long", "double", "boolean", "all-null", "string-led"],
+    )
+    def test_column_types(self, spark, api_type, values, dtype, landed):
+        df = self.land(spark, api_type, values)
+        assert dict(df.dtypes)["V"] == dtype
+        assert [r["V"] for r in df.orderBy(df["Id"].cast("int")).collect()] == landed
+
+    @pytest.mark.parametrize("api_type", ["bulk", "standard"])
+    def test_empty_result_keeps_typed_schema(self, spark, api_type):
+        df = _records_to_dataframe(spark, [], self.META, api_type)
+        assert df.dtypes == [("Id", "string"), ("V", "string"), ("When", "timestamp")]
+        assert df.count() == 0
+
+    @pytest.mark.parametrize("api_type", ["bulk", "standard"])
+    def test_datetimes_from_either_wire_shape(self, spark, api_type):
+        df = self.land(spark, api_type, [1, 2, 3], self.WHEN[api_type])
+        got = [r["When"] for r in df.orderBy(df["Id"].cast("int")).collect()]
+        assert got == self.WHEN_PARSED
+
+    def test_read_object_plan_is_a_local_relation(self, spark):
+        # No LogicalRDD: nothing in the batch's plan runs a Python task.
+        df = read_object(spark, make_transport(), "Account")
+        assert _leaf_classes(df) == ["LocalRelation"]
 
 
 class TestAuth:
