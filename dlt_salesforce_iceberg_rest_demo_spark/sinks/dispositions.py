@@ -45,7 +45,7 @@ import shutil
 from dataclasses import dataclass
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -119,6 +119,22 @@ def _observe_cursor(df: DataFrame):
         obs, F.date_format(F.max(column), CANONICAL_TS_FORMAT).alias("cursor")
     )
     return df, lambda: obs.get["cursor"]
+
+
+def dedupe_keep_last(df: DataFrame, primary_key: list[str]) -> DataFrame:
+    """One row per primary key, for ``ParquetLake.merge(dedupe_batch=True)``
+    and the Iceberg sink's MERGE INTO source (which rejects multiple
+    source matches per target row): the documented divergence from the
+    reference's duplicate-preserving delete-then-insert (SURVEY §7
+    "What's hard"). Deterministic: rows ordered by all non-PK columns
+    descending, the first kept."""
+    order = [F.col(c).desc() for c in df.columns if c not in primary_key]
+    w = Window.partitionBy(*primary_key).orderBy(*(order or [F.lit(1)]))
+    return (
+        df.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") == 1)
+        .drop("__rn")
+    )
 
 
 class ParquetLake:
@@ -762,15 +778,7 @@ class ParquetLake:
             return WriteReport(table, "merge", rep.rows_written, fallback_append=True)
 
         if dedupe_batch:
-            from pyspark.sql import Window
-
-            order = [F.col(c).desc() for c in df.columns if c not in pk]
-            w = Window.partitionBy(*pk).orderBy(*(order or [F.lit(1)]))
-            df = (
-                df.withColumn("__rn", F.row_number().over(w))
-                .filter(F.col("__rn") == 1)
-                .drop("__rn")
-            )
+            df = dedupe_keep_last(df, pk)
 
         # Empty incremental batch -> no-op. Without this, copy-on-write
         # would rewrite the whole table for an idle cursor poll - O(table)

@@ -12,7 +12,7 @@ lake (``sinks.dispositions``) provides identical semantics for CI.
 What IS executed without the jar (tests/test_iceberg_contract.py): the
 SQL text generation (:func:`merge_into_sql`), identifier handling
 (:func:`qualified_ident`), the keep-last source dedupe
-(:func:`dedupe_keep_last`), the auto-create property set
+(``sinks.dispositions.dedupe_keep_last``), the auto-create property set
 (:func:`create_table_properties`), and the full disposition dispatch
 driven through a recording session - so the only never-run code is the
 thin writeTo/sql invocation layer whose strings those tests pin.
@@ -33,7 +33,7 @@ import logging
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .dispositions import DEFAULT_TABLE_PROPERTIES, WriteReport
+from .dispositions import DEFAULT_TABLE_PROPERTIES, WriteReport, dedupe_keep_last
 
 logger = logging.getLogger(__name__)
 
@@ -78,25 +78,6 @@ def merge_into_sql(ident: str, primary_key: list[str]) -> str:
         f"ON {on}\n"
         f"WHEN MATCHED THEN UPDATE SET *\n"
         f"WHEN NOT MATCHED THEN INSERT *"
-    )
-
-
-def dedupe_keep_last(df: DataFrame, primary_key: list[str]) -> DataFrame:
-    """MERGE INTO rejects multiple source matches per target row, so the
-    source batch is deduped keep-last first (the documented divergence
-    from the reference's duplicate-preserving delete-then-insert -
-    SURVEY §7 "What's hard"). Deterministic: rows ordered by all
-    non-PK columns descending, exactly like ParquetLake.merge's
-    ``dedupe_batch`` option."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    order = [F.col(c).desc() for c in df.columns if c not in primary_key]
-    w = Window.partitionBy(*primary_key).orderBy(*(order or [F.lit(1)]))
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
     )
 
 

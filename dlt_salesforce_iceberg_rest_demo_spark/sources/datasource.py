@@ -5,9 +5,9 @@ partition reads and real filter pushdown.
 SURVEY.md §4 calls for exactly this: the reference's hand-built SOQL
 pushdown (projection/predicate/sort/limit,
 ``salesforce/helpers/records.py:70-94``) re-expressed at the DataSource
-boundary so Catalyst drives it. ``read_object`` /
-``read_object_distributed`` in ``sources.salesforce`` are the
-imperative twins; this module is the declarative integration:
+boundary so Catalyst drives it. ``read_object`` in
+``sources.salesforce`` is the driver-side single-cursor read the
+pipeline uses; this module is the partition-parallel one:
 
 - ``partitions()`` splits the PK keyspace into lexicographic base-62
   Id ranges - one Bulk-API cursor per executor task (the JDBC-source
@@ -19,7 +19,10 @@ imperative twins; this module is the declarative integration:
   (P3); unsupported filters are returned to Spark and applied
   post-scan, so semantics never depend on pushdown.
 - Bulk -> Standard API fallback (S1/S2) happens per partition inside
-  ``read``.
+  ``read``, through ``sources.salesforce.fetch_records``.
+- ``schema()`` makes the one describe() call of a read; the readers
+  take their projection and datetime fields from the schema Spark
+  hands them.
 
 The transport is injected through options: ``transport_pickle``
 (base64 cloudpickle, used by tests and any picklable custom
@@ -48,11 +51,10 @@ from pyspark.sql.datasource import (
 from pyspark.sql import types as T
 
 from .salesforce import (
-    ObjectMeta,
     SalesforceAuth,
-    BulkNotEnabledError,
     Transport,
     build_soql,
+    fetch_records,
     object_meta,
 )
 
@@ -142,11 +144,40 @@ class _RangePartition(InputPartition):
         self.hi = hi
 
 
+def _convert(v: Any, dtype: T.DataType, api_type: str) -> Any:
+    if v is None:
+        return None
+    if isinstance(dtype, T.TimestampType):
+        if api_type == "bulk":  # epoch millis (records.py:34-38)
+            return _dt.datetime.fromtimestamp(v / 1000.0, tz=_dt.timezone.utc).replace(
+                tzinfo=None
+            )
+        return _dt.datetime.fromisoformat(str(v).replace("Z", "+00:00")).replace(
+            tzinfo=None
+        )
+    if isinstance(dtype, T.DateType):  # "YYYY-MM-DD" in either shape
+        return _dt.date.fromisoformat(str(v))
+    if isinstance(dtype, T.LongType):
+        return int(v)
+    if isinstance(dtype, T.DoubleType):
+        return float(v)
+    if isinstance(dtype, T.BooleanType):
+        return bool(v)
+    return str(v)
+
+
+def _rows(schema: T.StructType, records: list[dict], api_type: str) -> list[tuple]:
+    """Records as tuples of ``schema``'s fields and types. A list, not a
+    generator: Spark pickles a stream batch into its offset cache for
+    failure replay."""
+    fields = [(f.name, f.dataType) for f in schema.fields]
+    return [tuple(_convert(r.get(n), t, api_type) for n, t in fields) for r in records]
+
+
 class SalesforceReader(DataSourceReader):
-    def __init__(self, options: dict, schema: T.StructType, meta: ObjectMeta) -> None:
+    def __init__(self, options: dict, schema: T.StructType) -> None:
         self.options = options
         self.out_schema = schema
-        self.meta = meta
         self.sobject: str = options["sobject"]
         self.num_partitions = int(options.get("numpartitions", 4))
         self.id_field = options.get("id_field", "Id")
@@ -170,7 +201,6 @@ class SalesforceReader(DataSourceReader):
         return [_RangePartition(lo, hi) for lo, hi in pk_range_bounds(self.num_partitions)]
 
     def read(self, partition: _RangePartition) -> Iterator[tuple]:
-        transport = transport_from_options(self.options)
         preds = list(self.pushed)
         if partition.lo is not None:
             preds.append(f"{self.id_field} >= '{partition.lo}'")
@@ -178,48 +208,14 @@ class SalesforceReader(DataSourceReader):
             preds.append(f"{self.id_field} < '{partition.hi}'")
         soql = build_soql(
             self.sobject,
-            self.meta.fields,
+            self.out_schema.fieldNames(),
             is_production=self.is_production,
             extra_predicate=" AND ".join(preds) if preds else None,
         )
-        records: list[dict[str, Any]] = []
-        api_type = "bulk"
-        try:
-            for page in transport.query_bulk(self.sobject, soql):
-                records.extend(page)
-        except BulkNotEnabledError:
-            api_type = "standard"
-            records = []
-            for page in transport.query_standard(soql):
-                records.extend(page)
-
-        fields = [(f.name, f.dataType) for f in self.out_schema.fields]
-        date_fields = self.meta.date_fields
-        for r in records:
-            yield tuple(
-                self._convert(r.get(name), dtype, name in date_fields, api_type)
-                for name, dtype in fields
-            )
-
-    @staticmethod
-    def _convert(v: Any, dtype: T.DataType, is_date: bool, api_type: str) -> Any:
-        if v is None:
-            return None
-        if is_date:
-            if api_type == "bulk":  # epoch millis (records.py:34-38)
-                return _dt.datetime.fromtimestamp(v / 1000.0, tz=_dt.timezone.utc).replace(
-                    tzinfo=None
-                )
-            return _dt.datetime.fromisoformat(str(v).replace("Z", "+00:00")).replace(
-                tzinfo=None
-            )
-        if isinstance(dtype, T.LongType):
-            return int(v)
-        if isinstance(dtype, T.DoubleType):
-            return float(v)
-        if isinstance(dtype, T.BooleanType):
-            return bool(v)
-        return str(v)
+        records, api_type = fetch_records(
+            transport_from_options(self.options), self.sobject, soql
+        )
+        return iter(_rows(self.out_schema, records, api_type))
 
 
 class SalesforceDataSource(DataSource):
@@ -233,28 +229,20 @@ class SalesforceDataSource(DataSource):
     def name(cls) -> str:
         return "salesforce"
 
-    def _meta(self) -> ObjectMeta:
-        return object_meta(transport_from_options(self.options), self.options["sobject"])
-
     def schema(self) -> T.StructType:
-        transport = transport_from_options(self.options)
-        sobject = self.options["sobject"]
-        meta = object_meta(transport, sobject)
-        desc_types = {f["name"]: f["type"] for f in transport.describe(sobject)}
+        meta = object_meta(transport_from_options(self.options), self.options["sobject"])
         return T.StructType(
             [
-                T.StructField(
-                    name, _TYPE_MAP.get(desc_types.get(name, "string"), T.StringType()), True
-                )
+                T.StructField(name, _TYPE_MAP.get(meta.types[name], T.StringType()), True)
                 for name in meta.fields
             ]
         )
 
     def reader(self, schema: T.StructType) -> SalesforceReader:
-        return SalesforceReader(self.options, schema, self._meta())
+        return SalesforceReader(self.options, schema)
 
     def simpleStreamReader(self, schema: T.StructType) -> "SalesforceStreamReader":
-        return SalesforceStreamReader(self.options, schema, self._meta())
+        return SalesforceStreamReader(self.options, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -285,10 +273,9 @@ class SalesforceStreamReader(SimpleDataSourceStreamReader):
     batch DataSource path covers partition-parallel backfills.
     """
 
-    def __init__(self, options: dict, schema: T.StructType, meta: ObjectMeta) -> None:
+    def __init__(self, options: dict, schema: T.StructType) -> None:
         self.options = options
         self.out_schema = schema
-        self.meta = meta
         self.sobject: str = options["sobject"]
         self.replication_key: str = options.get("replication_key", "SystemModstamp")
         self.initial_cursor: str = options.get("initial_cursor", _INITIAL_CURSOR)
@@ -298,25 +285,14 @@ class SalesforceStreamReader(SimpleDataSourceStreamReader):
         return {"cursor": self.initial_cursor}
 
     def _fetch(self, extra_predicate: str | None) -> tuple[list[dict], str]:
-        transport = transport_from_options(self.options)
         soql = build_soql(
             self.sobject,
-            self.meta.fields,
+            self.out_schema.fieldNames(),
             replication_key=self.replication_key,
             is_production=self.is_production,
             extra_predicate=extra_predicate,
         )
-        records: list[dict[str, Any]] = []
-        api_type = "bulk"
-        try:
-            for page in transport.query_bulk(self.sobject, soql):
-                records.extend(page)
-        except BulkNotEnabledError:
-            api_type = "standard"
-            records = []
-            for page in transport.query_standard(soql):
-                records.extend(page)
-        return records, api_type
+        return fetch_records(transport_from_options(self.options), self.sobject, soql)
 
     def _cursor_of(self, record: dict, api_type: str) -> str:
         v = record.get(self.replication_key)
@@ -326,20 +302,6 @@ class SalesforceStreamReader(SimpleDataSourceStreamReader):
             )
         return str(v)
 
-    def _rows(self, records: list[dict], api_type: str) -> list[tuple]:
-        # a LIST, not a generator: Spark pickles the prefetched batch
-        # into its offset cache for failure replay
-        fields = [(f.name, f.dataType) for f in self.out_schema.fields]
-        return [
-            tuple(
-                SalesforceReader._convert(
-                    r.get(name), dtype, name in self.meta.date_fields, api_type
-                )
-                for name, dtype in fields
-            )
-            for r in records
-        ]
-
     def read(self, start: dict) -> tuple[Iterator[tuple], dict]:
         records, api_type = self._fetch(
             f"{self.replication_key} > {start['cursor']}"
@@ -348,11 +310,11 @@ class SalesforceStreamReader(SimpleDataSourceStreamReader):
             end = {"cursor": max(self._cursor_of(r, api_type) for r in records)}
         else:
             end = dict(start)
-        return self._rows(records, api_type), end
+        return _rows(self.out_schema, records, api_type), end
 
     def readBetweenOffsets(self, start: dict, end: dict) -> Iterator[tuple]:
         records, api_type = self._fetch(
             f"{self.replication_key} > {start['cursor']}"
             f" AND {self.replication_key} <= {end['cursor']}"
         )
-        return self._rows(records, api_type)
+        return _rows(self.out_schema, records, api_type)

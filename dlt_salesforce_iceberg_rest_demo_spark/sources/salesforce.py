@@ -26,23 +26,23 @@ Architecture differences (Spark-first, not a port):
   fields are parsed natively (no `%Y-%m-%dT%H:%M:%S.%fZ` string
   round-trip in the hot path; `normalize.canonicalize_datetime` renders
   the reference's string format on demand).
-- At scale the single-generator extraction (the reference is one Python
-  process pulling all pages) becomes a *distributed* read:
-  :func:`read_object_distributed` splits the PK domain into ranges and
-  fetches each range inside `mapInPandas` on executors - N parallel
-  Bulk API cursors instead of one.
+- Every reader pages through :func:`fetch_records`, the one Bulk scan
+  with Standard fallback. At scale the single-generator extraction (the
+  reference is one Python process pulling all pages) becomes the
+  registrable Data Source in :mod:`.datasource`:
+  ``spark.read.format("salesforce")`` splits the PK domain into Id
+  ranges, one executor task and one Bulk API cursor per range.
 """
 
 from __future__ import annotations
 
-import math
-from collections.abc import Callable, Iterable, Iterator
+from collections.abc import Iterable, Iterator
 from dataclasses import dataclass, field
 from typing import Any, Protocol
 
 import pyarrow as pa
 from pyspark.errors import PySparkTypeError
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
@@ -324,10 +324,12 @@ class MockTransport:
 class ObjectMeta:
     fields: list[str]
     date_fields: set[str]
+    types: dict[str, str] = field(default_factory=dict)  # describe type per field
 
 
 def object_meta(transport: Transport, sobject: str) -> ObjectMeta:
-    """S3 describe() scan -> projection list + datetime set.
+    """S3 describe() scan -> projection list + datetime set + describe
+    types, from one describe() call.
 
     Compound fields are pruned, keeping 'Name' (records.py:70-84): the
     compound parents (e.g. BillingAddress) never appear in the SELECT.
@@ -336,9 +338,9 @@ def object_meta(transport: Transport, sobject: str) -> ObjectMeta:
     compound = {
         f["compoundFieldName"] for f in desc if f.get("compoundFieldName") is not None
     } - {"Name"}
-    fields = [f["name"] for f in desc if f["name"] not in compound]
-    date_fields = {f["name"] for f in desc if f["type"] == "datetime"}
-    return ObjectMeta(fields=fields, date_fields=date_fields)
+    types = {f["name"]: f["type"] for f in desc if f["name"] not in compound}
+    date_fields = {name for name, t in types.items() if t == "datetime"}
+    return ObjectMeta(fields=list(types), date_fields=date_fields, types=types)
 
 
 def build_soql(
@@ -352,7 +354,7 @@ def build_soql(
     """The reference's query text generator (records.py:86-94):
     `SELECT <fields> FROM <obj> [WHERE key > state] [ORDER BY key ASC]
     [LIMIT 100]` - the LIMIT only in test mode (settings.py:4).
-    ``extra_predicate`` is the hook the distributed reader uses for PK
+    ``extra_predicate`` carries the Data Source's pushed filters and PK
     range splits."""
     predicate, order_by = "", ""
     clauses = []
@@ -388,9 +390,10 @@ def _records_to_dataframe(
     Here: envelope keys simply never enter the projection, each projected
     field becomes one Arrow column (typed by :func:`_column`), and the
     table crosses into the JVM once (see :func:`read_object`). Datetime
-    conversion is one Column expression per field - epoch-millis
-    (`timestamp_millis`) for the bulk shape, ISO parse (`to_timestamp`)
-    for the standard shape.
+    conversion is one Column expression per field in one projection -
+    epoch-millis (`timestamp_millis`) for the bulk shape, ISO parse
+    (`to_timestamp`) for the standard shape; a bad wire value raises in
+    either shape.
     """
     records = list(records)
     fields, columns = [], []
@@ -405,13 +408,24 @@ def _records_to_dataframe(
         [pa.array(v, type=a.type) for v, a in zip(columns, arrow_schema)],
         schema=arrow_schema,
     )
-    df = spark.createDataFrame(table, schema)
-    for f in meta.date_fields:
-        if api_type == "bulk":
-            df = df.withColumn(f, F.timestamp_millis(F.col(f)))
-        else:
-            df = df.withColumn(f, F.to_timestamp(F.col(f)))
-    return df
+    return spark.createDataFrame(table, schema).withColumns(
+        {f: _timestamp(f, api_type) for f in meta.date_fields}
+    )
+
+
+def _timestamp(name: str, api_type: str) -> Column:
+    """A datetime field's wire value as a timestamp. Bulk epoch millis
+    are already checked to be ints by :func:`_column`; an ISO string that
+    does not parse raises here instead of landing as NULL (the session
+    runs non-ANSI, where `to_timestamp` returns NULL)."""
+    c = F.col(name)
+    if api_type == "bulk":
+        return F.timestamp_millis(c)
+    ts = F.to_timestamp(c)
+    return F.when(
+        c.isNotNull() & ts.isNull(),
+        F.raise_error(F.concat(F.lit(f"field {name}: unparseable datetime "), c)),
+    ).otherwise(ts)
 
 
 # Python type of a column's values -> Spark type, the reference's
@@ -455,8 +469,22 @@ def _column(
 
 
 # ---------------------------------------------------------------------------
-# Single-cursor read (reference-parity execution shape).
+# Extraction: the one fetch loop, and the single-cursor read.
 # ---------------------------------------------------------------------------
+
+
+def fetch_records(
+    transport: Transport, sobject: str, soql: str
+) -> tuple[list[dict[str, Any]], str]:
+    """S1/S2: every page of ``soql`` through the Bulk API, or through the
+    Standard API when the org has no Bulk API (records.py:96-121); Bulk
+    pages already received are dropped. Returns the records and their
+    wire shape, ``"bulk"`` (datetimes as epoch millis) or ``"standard"``
+    (ISO strings)."""
+    try:
+        return [r for page in transport.query_bulk(sobject, soql) for r in page], "bulk"
+    except BulkNotEnabledError:
+        return [r for page in transport.query_standard(soql) for r in page], "standard"
 
 
 def read_object(
@@ -478,138 +506,5 @@ def read_object(
     soql = build_soql(
         sobject, meta.fields, replication_key, last_state, is_production
     )
-    records: list[dict[str, Any]] = []
-    api_type = "bulk"
-    try:
-        for page in transport.query_bulk(sobject, soql):
-            records.extend(page)
-    except BulkNotEnabledError:
-        api_type = "standard"
-        records = []
-        for page in transport.query_standard(soql):
-            records.extend(page)
+    records, api_type = fetch_records(transport, sobject, soql)
     return _records_to_dataframe(spark, records, meta, api_type)
-
-
-# ---------------------------------------------------------------------------
-# Distributed read: the 100 TB path.
-# ---------------------------------------------------------------------------
-
-
-def read_object_distributed(
-    spark: SparkSession,
-    transport_factory: Callable[[], Transport],
-    sobject: str,
-    *,
-    num_partitions: int = 16,
-    id_field: str = "Id",
-    last_state: str | None = None,
-    replication_key: str | None = None,
-    is_production: bool = True,
-) -> DataFrame:
-    """Partition-parallel extraction: split the PK domain into
-    ``num_partitions`` ranges and run one SOQL cursor per range inside
-    ``mapInPandas`` on executors.
-
-    This is what replaces the reference's single-process generator at
-    scale: a 1000-executor cluster opens 1000 Bulk API cursors, each
-    projecting/filtering server-side (P1-P5 pushdown preserved via
-    ``extra_predicate``). ``transport_factory`` must be picklable and is
-    invoked once per partition on the executor (connection-per-task, the
-    standard JDBC-source pattern).
-
-    Salesforce Ids are fixed-width base-62, so lexicographic range
-    predicates partition the keyspace; we derive split points from the
-    base-62 alphabet.
-    """
-    import pandas as pd
-
-    meta = object_meta(transport_factory(), sobject)
-    alphabet = "0123456789ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz"
-    n = len(alphabet)
-    bounds: list[tuple[str | None, str | None]] = []
-    step = n / num_partitions
-    cuts = [alphabet[min(n - 1, math.floor(i * step))] for i in range(1, num_partitions)]
-    cuts = sorted(set(cuts))
-    prev: str | None = None
-    for c in cuts:
-        bounds.append((prev, c))
-        prev = c
-    bounds.append((prev, None))
-
-    specs = [
-        {"lo": lo if lo is not None else "", "hi": hi if hi is not None else ""}
-        for lo, hi in bounds
-    ]
-    spec_df = spark.createDataFrame(
-        specs, schema="lo string, hi string"
-    ).repartition(len(specs))
-
-    out_schema = T.StructType(
-        [
-            T.StructField(
-                f,
-                T.TimestampType() if f in meta.date_fields else _DIST_STRING,
-                True,
-            )
-            for f in meta.fields
-        ]
-    )
-    # Distributed reads fetch everything as strings then cast on the
-    # Spark side - server types are not visible inside the worker.
-    date_fields = set(meta.date_fields)
-    fields = list(meta.fields)
-
-    def fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        transport = transport_factory()
-        for pdf in batches:
-            for _, row in pdf.iterrows():
-                preds = []
-                if row["lo"]:
-                    preds.append(f"{id_field} >= '{row['lo']}'")
-                if row["hi"]:
-                    preds.append(f"{id_field} < '{row['hi']}'")
-                soql = build_soql(
-                    sobject,
-                    fields,
-                    replication_key,
-                    last_state,
-                    is_production,
-                    extra_predicate=" AND ".join(preds) if preds else None,
-                )
-                records: list[dict[str, Any]] = []
-                try:
-                    for page in transport.query_bulk(sobject, soql):
-                        records.extend(page)
-                    api_type = "bulk"
-                except BulkNotEnabledError:
-                    records = []
-                    for page in transport.query_standard(soql):
-                        records.extend(page)
-                    api_type = "standard"
-                out = {}
-                for f in fields:
-                    vals = [r.get(f) for r in records]
-                    if f in date_fields:
-                        if api_type == "bulk":
-                            out[f] = pd.to_datetime(
-                                pd.Series(vals, dtype="float64"), unit="ms"
-                            )
-                        else:
-                            out[f] = pd.to_datetime(
-                                pd.Series(vals, dtype="object").str.replace(
-                                    "Z", "+00:00"
-                                ),
-                                utc=True,
-                            ).dt.tz_localize(None)
-                    else:
-                        out[f] = pd.Series(
-                            [None if v is None else str(v) for v in vals],
-                            dtype="object",
-                        )
-                yield pd.DataFrame(out, columns=fields)
-
-    return spec_df.mapInPandas(fetch, schema=out_schema)
-
-
-_DIST_STRING = T.StringType()

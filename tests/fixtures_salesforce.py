@@ -4,6 +4,9 @@ compound fields, system datetime fields, FK AccountId)."""
 
 from __future__ import annotations
 
+import base64
+import pickle
+
 from dlt_salesforce_iceberg_rest_demo_spark.sources.salesforce import MockTransport
 
 
@@ -144,3 +147,10 @@ def make_transport(version: int = 1, bulk_enabled: bool = True) -> MockTransport
         },
         bulk_enabled=bulk_enabled,
     )
+
+
+def datasource_options(transport=None, sobject: str = "Account", **extra) -> dict:
+    """``spark.read.format("salesforce")`` options over a mock org
+    (``make_transport()`` unless given)."""
+    blob = base64.b64encode(pickle.dumps(transport or make_transport())).decode()
+    return {"sobject": sobject, "transport_pickle": blob, **extra}

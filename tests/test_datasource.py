@@ -3,8 +3,7 @@ with partition-parallel reads and filter pushdown into generated SOQL."""
 
 from __future__ import annotations
 
-import base64
-import pickle
+import datetime
 
 import pytest
 from pyspark.sql import functions as F
@@ -14,17 +13,16 @@ from pyspark.sql.datasource import EqualTo, GreaterThan, IsNotNull, StringContai
 from dlt_salesforce_iceberg_rest_demo_spark.sources.datasource import (
     SalesforceDataSource,
     SalesforceReader,
+    SalesforceStreamReader,
     pk_range_bounds,
-    transport_from_options,
 )
-from dlt_salesforce_iceberg_rest_demo_spark.sources.salesforce import object_meta
+from dlt_salesforce_iceberg_rest_demo_spark.sources.salesforce import MockTransport
 
-from .fixtures_salesforce import make_transport
+from .fixtures_salesforce import datasource_options, f, make_transport
 
 
 def _opts(version=1, bulk_enabled=True, **extra):
-    blob = base64.b64encode(pickle.dumps(make_transport(version, bulk_enabled))).decode()
-    return {"sobject": "Account", "transport_pickle": blob, **extra}
+    return datasource_options(make_transport(version, bulk_enabled), **extra)
 
 
 @pytest.fixture()
@@ -97,9 +95,7 @@ class TestRead:
 class TestPushdown:
     def _reader(self):
         opts = _opts()
-        ds = SalesforceDataSource(opts)
-        meta = object_meta(transport_from_options(opts), "Account")
-        return SalesforceReader(opts, ds.schema(), meta)
+        return SalesforceReader(opts, SalesforceDataSource(opts).schema())
 
     def test_supported_filters_become_soql(self):
         r = self._reader()
@@ -145,14 +141,8 @@ class TestRangeBounds:
 
 class TestStreamReader:
     def _stream_reader(self, version=1):
-        from dlt_salesforce_iceberg_rest_demo_spark.sources.datasource import (
-            SalesforceStreamReader,
-        )
-
         opts = _opts(version)
-        ds = SalesforceDataSource(opts)
-        meta = object_meta(transport_from_options(opts), "Account")
-        return SalesforceStreamReader(opts, ds.schema(), meta)
+        return SalesforceStreamReader(opts, SalesforceDataSource(opts).schema())
 
     def test_initial_offset_is_reference_epoch(self):
         r = self._stream_reader()
@@ -203,3 +193,58 @@ class TestStreamReader:
         q.awaitTermination(60)
         out = registered.sql("SELECT Id FROM sf_stream_accounts").collect()
         assert sorted(r.Id for r in out) == ["001A", "001B"]
+
+
+class TestDescribeOnce:
+    @pytest.mark.parametrize("kind", ["batch", "stream"])
+    def test_one_describe_per_read(self, monkeypatch, kind):
+        # the schema's describe() is the read's only one: the readers
+        # take projection and datetime fields from the schema they get
+        calls = []
+        describe = MockTransport.describe
+        monkeypatch.setattr(
+            MockTransport, "describe", lambda self, s: calls.append(s) or describe(self, s)
+        )
+        ds = SalesforceDataSource(_opts())
+        schema = ds.schema()
+        if kind == "batch":
+            r = ds.reader(schema)
+            rows = [row for p in r.partitions() for row in r.read(p)]
+        else:
+            r = ds.simpleStreamReader(schema)
+            rows, _ = r.read(r.initialOffset())
+        assert len(rows) == 2
+        assert calls == ["Account"]
+
+
+class TestDateFields:
+    """describe type ``date`` ("YYYY-MM-DD" on the wire in both shapes)
+    lands as DateType."""
+
+    DESCRIBE = [f("Id", "id"), f("CloseDate", "date"), f("SystemModstamp", "datetime")]
+    ROWS = [
+        {"Id": "006A", "CloseDate": "2024-03-31", "SystemModstamp": "2024-01-02T00:00:00.000000Z"},
+        {"Id": "006B", "CloseDate": None, "SystemModstamp": "2024-01-03T00:00:00.000000Z"},
+    ]
+    WANT = [("006A", datetime.date(2024, 3, 31)), ("006B", None)]
+
+    def _options(self, bulk_enabled):
+        t = MockTransport(
+            describes={"Opportunity": self.DESCRIBE},
+            data={"Opportunity": self.ROWS},
+            bulk_enabled=bulk_enabled,
+        )
+        return datasource_options(t, sobject="Opportunity")
+
+    @pytest.mark.parametrize("bulk_enabled", [True, False], ids=["bulk", "standard"])
+    def test_batch_read(self, registered, bulk_enabled):
+        df = registered.read.format("salesforce").options(**self._options(bulk_enabled)).load()
+        assert dict(df.dtypes)["CloseDate"] == "date"
+        assert sorted((r.Id, r.CloseDate) for r in df.collect()) == self.WANT
+
+    @pytest.mark.parametrize("bulk_enabled", [True, False], ids=["bulk", "standard"])
+    def test_stream_rows(self, bulk_enabled):
+        ds = SalesforceDataSource(self._options(bulk_enabled))
+        r = ds.simpleStreamReader(ds.schema())
+        rows, _ = r.read(r.initialOffset())
+        assert sorted(row[:2] for row in rows) == self.WANT

@@ -143,12 +143,17 @@ class TestShuffleShape:
 
 class TestSourceScale:
     def test_distributed_salesforce_read_parallelism(self, spark):
-        from tests.fixtures_salesforce import make_transport
-        from dlt_salesforce_iceberg_rest_demo_spark.sources.salesforce import (
-            read_object_distributed,
+        from tests.fixtures_salesforce import datasource_options
+        from dlt_salesforce_iceberg_rest_demo_spark.sources.datasource import (
+            SalesforceDataSource,
         )
 
-        df = read_object_distributed(spark, make_transport, "Account", num_partitions=8)
+        spark.dataSource.register(SalesforceDataSource)
+        df = (
+            spark.read.format("salesforce")
+            .options(**datasource_options(numpartitions="8"))
+            .load()
+        )
         # the fetch stage must carry the requested fan-out
         assert df.rdd.getNumPartitions() >= 8
 

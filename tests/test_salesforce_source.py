@@ -3,11 +3,16 @@ transport - the reference's subtle correctness surface per SURVEY §7."""
 
 from __future__ import annotations
 
+import ast
 import datetime
+from pathlib import Path
 
 import pytest
-from pyspark.errors import PySparkTypeError
+from pyspark.errors import PySparkException, PySparkTypeError
+from pyspark.sql import functions as F
 
+import dlt_salesforce_iceberg_rest_demo_spark as pkg
+from dlt_salesforce_iceberg_rest_demo_spark.sources.datasource import SalesforceDataSource
 from dlt_salesforce_iceberg_rest_demo_spark.sources.salesforce import (
     BulkNotEnabledError,
     ObjectMeta,
@@ -16,10 +21,9 @@ from dlt_salesforce_iceberg_rest_demo_spark.sources.salesforce import (
     build_soql,
     object_meta,
     read_object,
-    read_object_distributed,
 )
 
-from .fixtures_salesforce import make_transport
+from .fixtures_salesforce import datasource_options, make_transport
 
 
 class TestSOQL:
@@ -104,20 +108,73 @@ class TestReadObject:
         assert "WHERE LastModifiedDate >" in t.queries_seen[-1]
 
     def test_distributed_read_matches_single(self, spark):
+        # the partition-parallel read is the registrable Data Source
         single = read_object(spark, make_transport(), "Account")
-        dist = read_object_distributed(
-            spark, make_transport, "Account", num_partitions=4
-        )
-        s = sorted((r["Id"], r["Name"], r["LastModifiedDate"]) for r in single.collect())
-        d = sorted((r["Id"], r["Name"], r["LastModifiedDate"]) for r in dist.collect())
-        assert s == d
+        dist = _datasource(spark, make_transport(), numpartitions="8")
+        assert dist.dtypes == single.dtypes
+        assert sorted(dist.collect()) == sorted(single.collect())
 
-    def test_distributed_read_partitions_disjoint(self, spark):
-        dist = read_object_distributed(
-            spark, make_transport, "Account", num_partitions=8
+    @pytest.mark.parametrize("version, ids", [(1, ["001B"]), (2, ["001B", "001C"])])
+    def test_filtered_datasource_read_equals_incremental(self, spark, version, ids):
+        # a cursor filter pushed into the Data Source's SOQL returns what
+        # read_object's `cursor > state` predicate returns
+        single = read_object(
+            spark,
+            make_transport(version),
+            "Account",
+            last_state="2024-01-02T00:00:00.000000Z",
+            replication_key="LastModifiedDate",
         )
-        ids = [r["Id"] for r in dist.collect()]
-        assert sorted(ids) == ["001A", "001B"]  # no dup, no loss across ranges
+        dist = _datasource(spark, make_transport(version), numpartitions="8").filter(
+            F.col("LastModifiedDate") > datetime.datetime(2024, 1, 2)
+        )
+        assert sorted(r["Id"] for r in dist.collect()) == ids
+        assert sorted(dist.collect()) == sorted(single.collect())
+
+
+def _datasource(spark, transport, **options):
+    spark.dataSource.register(SalesforceDataSource)
+    return (
+        spark.read.format("salesforce")
+        .options(**datasource_options(transport, **options))
+        .load()
+    )
+
+
+class TestOneExtractionPath:
+    """Every reader pages through ``fetch_records``; the partition-parallel
+    read is the Data Source, not a ``mapInPandas`` over range specs."""
+
+    PKG = Path(pkg.__file__).resolve().parent
+
+    def test_transport_queries_only_in_fetch_records(self):
+        inside, outside = [], []
+
+        def visit(node, owner, path):
+            if isinstance(node, ast.FunctionDef):
+                owner = node.name
+            if (
+                isinstance(node, ast.Call)
+                and getattr(node.func, "attr", None) in ("query_bulk", "query_standard")
+            ):
+                site = f"{path.relative_to(self.PKG)}:{node.lineno} {node.func.attr}"
+                (inside if owner == "fetch_records" else outside).append(site)
+            for child in ast.iter_child_nodes(node):
+                visit(child, owner, path)
+
+        for path in sorted(self.PKG.rglob("*.py")):
+            visit(ast.parse(path.read_text(), str(path)), None, path)
+        assert len(inside) == 2, inside
+        assert outside == []
+
+    def test_no_map_in_pandas_in_sources(self):
+        offenders = [
+            f"{path.name}:{node.lineno}"
+            for path in sorted((self.PKG / "sources").glob("*.py"))
+            for node in ast.walk(ast.parse(path.read_text(), str(path)))
+            if isinstance(node, ast.Attribute) and node.attr == "mapInPandas"
+        ]
+        assert offenders == []
 
 
 def _leaf_classes(df) -> list[str]:
@@ -190,6 +247,16 @@ class TestArrowLanding:
         df = _records_to_dataframe(spark, [], self.META, api_type)
         assert df.dtypes == [("Id", "string"), ("V", "string"), ("When", "timestamp")]
         assert df.count() == 0
+
+    @pytest.mark.parametrize("api_type", ["bulk", "standard"])
+    @pytest.mark.parametrize("bad", ["x", 1.5e12], ids=["text", "float"])
+    def test_unparseable_datetime_raises(self, spark, api_type, bad):
+        # never a silent NULL timestamp (a NULL cursor escapes the
+        # max-cursor observation): bulk raises while typing the column,
+        # standard when the parse runs
+        when = [self.WHEN[api_type][0], bad]
+        with pytest.raises(PySparkException, match="field When"):
+            self.land(spark, api_type, [1, 2], when).collect()
 
     @pytest.mark.parametrize("api_type", ["bulk", "standard"])
     def test_datetimes_from_either_wire_shape(self, spark, api_type):
