@@ -31,6 +31,12 @@ deployment) get real snapshot isolation:
   100 TB the shuffle cost is one broadcast pass over the base, not a
   sort-merge of the table.
 
+Like the reference, there is one destination body (``ParquetLake._write``)
+and two refs it commits to: main (:meth:`ParquetLake.write`) or a WAP
+branch (:meth:`ParquetLake.write_to_branch`). It is built from two
+primitives, append-or-skip (an empty batch commits nothing) and the
+copy-on-write rewrite, which ``merge_cdc`` shares.
+
 The real-Iceberg path (same dispositions through ``MERGE INTO`` /
 ``writeTo``) lives in ``sinks.iceberg`` and activates when the runtime
 jar + catalog are configured.
@@ -45,7 +51,7 @@ import shutil
 from dataclasses import dataclass
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -108,8 +114,6 @@ def _observe_cursor(df: DataFrame):
     first execution fills the observation at no extra job. A merge's
     value is therefore the batch max, never the merged table's. Returns
     the unmarked batch and a reader for the value (None if unmarked)."""
-    from pyspark.sql import Observation
-
     marked = [f.name for f in df.schema.fields if f.metadata.get(_CURSOR_HINT)]
     if not marked:
         return df, lambda: None
@@ -119,22 +123,6 @@ def _observe_cursor(df: DataFrame):
         obs, F.date_format(F.max(column), CANONICAL_TS_FORMAT).alias("cursor")
     )
     return df, lambda: obs.get["cursor"]
-
-
-def dedupe_keep_last(df: DataFrame, primary_key: list[str]) -> DataFrame:
-    """One row per primary key, for ``ParquetLake.merge(dedupe_batch=True)``
-    and the Iceberg sink's MERGE INTO source (which rejects multiple
-    source matches per target row): the documented divergence from the
-    reference's duplicate-preserving delete-then-insert (SURVEY §7
-    "What's hard"). Deterministic: rows ordered by all non-PK columns
-    descending, the first kept."""
-    order = [F.col(c).desc() for c in df.columns if c not in primary_key]
-    w = Window.partitionBy(*primary_key).orderBy(*(order or [F.lit(1)]))
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
 
 
 class ParquetLake:
@@ -295,8 +283,14 @@ class ParquetLake:
             return data, None
         return data["dirs"], data.get("committed_at")
 
-    def _current_manifest(self, table: str) -> list[str]:
-        return self._manifest_info(table, self._current_version(table))[0]
+    def _head(self, table: str, ref: str | None) -> int:
+        """Head version of ``ref``: main's pointer (None) or a branch."""
+        if ref is None:
+            return self._current_version(table)
+        return self._branch_version(table, ref)
+
+    def _current_manifest(self, table: str, ref: str | None = None) -> list[str]:
+        return self._manifest_info(table, self._head(table, ref))[0]
 
     def _commit(self, table: str, data_dirs: list[str], branch: str | None = None) -> None:
         """Write a new manifest then atomically swing a pointer — the
@@ -308,11 +302,7 @@ class ParquetLake:
         import time
 
         tdir = self.root / table
-        parent = (
-            self._branch_version(table, branch)
-            if branch is not None
-            else self._current_version(table)
-        )
+        parent = self._head(table, branch)
         existing = [int(m.name.split(".")[1]) for m in tdir.glob("_MANIFEST.*.json")]
         v = (max(existing) if existing else -1) + 1
         (tdir / f"_MANIFEST.{v}.json").write_text(
@@ -336,7 +326,7 @@ class ParquetLake:
     def branches(self, table: str) -> dict[str, int]:
         """Named MUTABLE heads: branch name -> head version. Unlike tags
         (:meth:`set_ref`, pinned forever), a branch advances when
-        written to via ``append_to_branch``."""
+        written to via :meth:`write_to_branch`."""
         p = self.root / table / "_BRANCHES.json"
         return json.loads(p.read_text()) if p.exists() else {}
 
@@ -367,88 +357,6 @@ class ParquetLake:
         b = self.branches(table)
         b.pop(name, None)
         self._write_branches(table, b)
-
-    def append_to_branch(self, df: DataFrame, table: str, branch: str) -> WriteReport:
-        """W1 append against a BRANCH head: new branch snapshot = branch
-        manifest + one new data dir; main's pointer is untouched. Same
-        empty-batch no-op rule as :meth:`append`."""
-        df = self._prepare(table, df)
-        name, rows = self._new_data_dir(table, df)
-        if rows == 0:
-            shutil.rmtree(self.root / table / name, ignore_errors=True)
-            return WriteReport(table, "append", 0)
-        head = self._branch_version(table, branch)
-        dirs = self._manifest_info(table, head)[0]
-        self._commit(table, dirs + [name], branch=branch)
-        return WriteReport(table, "append", rows)
-
-    def write_to_branch(
-        self,
-        df: DataFrame,
-        table: str,
-        disposition: str,
-        primary_key: tuple[str, ...] | list[str] = (),
-        *,
-        branch: str,
-    ) -> WriteReport:
-        """WAP staging write: the same disposition semantics as
-        :meth:`write` (append / replace / merge with the W4 fallbacks
-        and the batch-local-duplicates merge quirk), committed to a
-        BRANCH head instead of main — the write half of
-        write-audit-publish. The table (and the branch, forked at the
-        current main snapshot) auto-create on first contact; merge
-        reads its base from the BRANCH, so multiple staged batches
-        compose before one audit + fast_forward publishes them all.
-        The report carries the batch's max cursor as :meth:`write`'s
-        does.
-        """
-        df, cursor = _observe_cursor(df)
-        report = self._write_to_branch(df, table, disposition, primary_key, branch)
-        report.cursor = cursor()
-        return report
-
-    def _write_to_branch(
-        self,
-        df: DataFrame,
-        table: str,
-        disposition: str,
-        primary_key: tuple[str, ...] | list[str],
-        branch: str,
-    ) -> WriteReport:
-        if not self.exists(table):
-            self.create_table(table, df.schema)
-        if branch not in self.branches(table):
-            self.create_branch(table, branch)
-        if disposition == "append":
-            return self.append_to_branch(df, table, branch)
-        df = self._prepare(table, df)
-        if disposition == "replace":
-            name, rows = self._new_data_dir(table, df)
-            self._commit(table, [name], branch=branch)
-            return WriteReport(table, "replace", rows)
-        if disposition != "merge":
-            raise ValueError(f"unknown disposition: {disposition}")
-        pk = [k for k in primary_key]
-        missing = [k for k in pk if k not in df.columns]
-        if not pk or missing:
-            logger.warning(
-                "merge-to-branch for %s without usable primary key %s: "
-                "falling back to append",
-                table,
-                pk,
-            )
-            rep = self.append_to_branch(df, table, branch)
-            return WriteReport(table, "merge", rep.rows_written, fallback_append=True)
-        batch_rows = df.count()
-        if batch_rows == 0:
-            return WriteReport(table, "merge", 0)
-        base = self.read(table, branch, with_tombstones=True)
-        keys = df.select(*pk).distinct()
-        kept = base.join(F.broadcast(keys), pk, "left_anti")
-        merged = kept.unionByName(df)
-        name, _total = self._new_data_dir(table, merged)
-        self._commit(table, [name], branch=branch)
-        return WriteReport(table, "merge", batch_rows)
 
     def _manifest_parent(self, table: str, v: int) -> int | None:
         data = json.loads((self.root / table / f"_MANIFEST.{v}.json").read_text())
@@ -590,12 +498,9 @@ class ParquetLake:
         """Materialize df as an immutable data dir; returns (name, rows).
 
         The row count rides the write itself via ``observe()`` (one
-        scan total) - the previous read-back count was a second full
-        scan of just-written data per commit, which at 100 TB doubles
-        every load's I/O. Falls back to the read-back count if the
-        observation can't attach (non-classic backends)."""
-        from pyspark.sql import Observation
-
+        scan total): a read-back count would be a second full scan of
+        just-written data per commit, which at 100 TB doubles every
+        load's I/O."""
         tdir = self.root / table
         # Allocate past any existing dir, not main-version + 1: branch
         # commits write data dirs without advancing the main pointer,
@@ -607,21 +512,15 @@ class ParquetLake:
         ]
         v = max(existing, default=self._current_version(table)) + 1
         name = f"data_{v:06d}"
-        try:
-            obs = Observation(f"rows_{table}_{v}")
-            df = df.observe(obs, F.count(F.lit(1)).alias("n"))
-        except Exception:
-            obs = None
-        writer = df.write.mode("errorifexists")
+        obs = Observation(f"rows_{table}_{v}")
+        writer = df.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
+            "errorifexists"
+        )
         parts = self.partition_columns(table)
         if parts:
             writer = writer.partitionBy(*parts)
         writer.parquet(str(tdir / name))
-        if obs is not None:
-            rows = int(obs.get["n"])
-        else:
-            rows = self.spark.read.parquet(str(tdir / name)).count()
-        return name, rows
+        return name, int(obs.get["n"])
 
     # -- W5: auto-create ---------------------------------------------------
 
@@ -657,17 +556,12 @@ class ParquetLake:
     def drop_table(self, table: str) -> None:
         shutil.rmtree(self.root / table, ignore_errors=True)
 
-    def _prepare(
-        self, table: str, df: DataFrame, evolve: bool = False
-    ) -> DataFrame:
+    def _prepare(self, table: str, df: DataFrame) -> DataFrame:
         """Auto-create if missing, then T3-align the batch to the table
         schema (add typed NULLs, drop extras, target order -
-        salesforce_pipeline.py:153-176). With ``evolve=True`` new batch
-        columns widen the table schema first instead of being dropped."""
+        salesforce_pipeline.py:153-176)."""
         if not self.exists(table):
             self.create_table(table, df.schema)
-        elif evolve:
-            self.evolve_schema(table, df.schema)
         return align_to_schema(df, self.schema(table))
 
     def evolve_schema(self, table: str, batch_schema: T.StructType) -> list[str]:
@@ -695,111 +589,146 @@ class ParquetLake:
         os.replace(tmp, tdir / "_SCHEMA.json")
         return [f.name for f in added]
 
-    # -- W1/W2/W3 dispositions ----------------------------------------------
+    # -- W1-W4 dispositions: one body, committed to main or a branch -------
 
-    def append(self, df: DataFrame, table: str, evolve: bool = False) -> WriteReport:
-        """W1: new snapshot = old manifest + one new data dir.
-
-        An empty batch is a no-op: no data dir, no commit. dlt never
-        invokes the destination for a zero-item batch, so an idle
-        incremental poll (cursor advanced past all rows) must not grow
-        the snapshot chain - at scale that is one spurious manifest per
-        table per tick.
-
-        ``evolve=True`` adds unknown batch columns to the table schema
-        first (see :meth:`evolve_schema`); the default keeps reference
-        drop-extras parity."""
-        df = self._prepare(table, df, evolve=evolve)
-        name, rows = self._new_data_dir(table, df)
-        if rows == 0:
-            shutil.rmtree(self.root / table / name, ignore_errors=True)
-            return WriteReport(table, "append", 0)
-        self._commit(table, self._current_manifest(table) + [name])
-        return WriteReport(table, "append", rows)
-
-    def replace(self, df: DataFrame, table: str) -> WriteReport:
-        """W2: new snapshot = exactly the new data dir. One atomic commit
-        (the reference needs two: delete(AlwaysTrue) + append)."""
-        df = self._prepare(table, df)
-        name, rows = self._new_data_dir(table, df)
-        self._commit(table, [name])
-        return WriteReport(table, "replace", rows)
-
-    def merge(
+    def write(
         self,
         df: DataFrame,
         table: str,
-        primary_key: tuple[str, ...] | list[str],
-        *,
-        dedupe_batch: bool = False,
+        disposition: str,
+        primary_key: tuple[str, ...] | list[str] = (),
     ) -> WriteReport:
-        """W3 merge = batch-local delete-then-insert upsert
-        (salesforce_pipeline.py:83-130):
+        """Disposition dispatch, the destination entry point
+        (salesforce_pipeline.py:62-176), committed to main. The report
+        carries the batch's max cursor when a column is marked with
+        :func:`mark_cursor`."""
+        return self._write(df, table, disposition, primary_key, None)
 
-        1. rows in the base whose PK appears in the batch are deleted
-           (the reference builds an Or-of-And PyIceberg expression, P7;
-           here it's a broadcast anti-join - same relation algebra);
-        2. the whole batch is appended.
+    def write_to_branch(
+        self,
+        df: DataFrame,
+        table: str,
+        disposition: str,
+        primary_key: tuple[str, ...] | list[str] = (),
+        *,
+        branch: str,
+    ) -> WriteReport:
+        """WAP staging write: :meth:`write` committed to a BRANCH head
+        instead of main — the write half of write-audit-publish. The
+        branch forks at the current main snapshot on first contact;
+        merge reads its base from the branch, so multiple staged batches
+        compose before one audit + :meth:`fast_forward` publishes them."""
+        return self._write(df, table, disposition, primary_key, branch)
 
-        Reference quirk preserved: duplicate PKs *within* one batch
-        survive as duplicates (the delete runs before the insert, against
-        the base only). ``dedupe_batch=True`` opts into keep-last-by-
-        batch-order instead - the documented idiomatic improvement
-        (SURVEY §7 "What's hard").
+    def append(self, df: DataFrame, table: str) -> WriteReport:
+        """W1 on main: ``write(df, table, "append")``."""
+        return self.write(df, table, "append")
 
-        W4 fallbacks: no declared PK, or PK columns absent from the
-        data -> warn + append (salesforce_pipeline.py:131-138).
+    def replace(self, df: DataFrame, table: str) -> WriteReport:
+        """W2 on main: ``write(df, table, "replace")``."""
+        return self.write(df, table, "replace")
+
+    def merge(
+        self, df: DataFrame, table: str, primary_key: tuple[str, ...] | list[str]
+    ) -> WriteReport:
+        """W3 on main: ``write(df, table, "merge", primary_key)``."""
+        return self.write(df, table, "merge", primary_key)
+
+    def _write(
+        self,
+        df: DataFrame,
+        table: str,
+        disposition: str,
+        primary_key: tuple[str, ...] | list[str],
+        ref: str | None,
+    ) -> WriteReport:
+        """The one disposition body; ``ref`` is None (main) or a branch.
+
+        - W1 append: new snapshot = head + one new data dir
+          (:meth:`_append_or_skip`: an empty batch commits nothing).
+        - W2 replace: new snapshot = exactly the new data dir, one
+          atomic commit (the reference needs two: delete(AlwaysTrue) +
+          append). An empty replace commits: it truncates.
+        - W3 merge = batch-local delete-then-insert upsert
+          (salesforce_pipeline.py:83-130): base rows whose PK appears in
+          the batch are deleted (the reference builds an Or-of-And
+          PyIceberg expression; here a broadcast anti-join, see
+          :meth:`_rewrite`), then the whole batch is inserted. Reference
+          quirk preserved: duplicate PKs *within* one batch survive as
+          duplicates. A base with no data dirs has nothing to delete,
+          so the batch is appended.
+        - W4: merge with no PK, or PK columns the table lacks, warns and
+          appends on every load, first contact included
+          (salesforce_pipeline.py:131-138).
         """
-        pk = list(primary_key)
-        if not self.exists(table):
-            df0 = self._prepare(table, df)
-            name, rows = self._new_data_dir(table, df0)
-            self._commit(table, [name])
-            # Reference emits the no-PK warning on every load, including
-            # first contact (salesforce_pipeline.py:131-138).
-            return WriteReport(table, "merge", rows, fallback_append=not pk)
-
+        if disposition not in ("append", "replace", "merge"):
+            raise ValueError(f"unknown write disposition: {disposition}")
+        df, cursor = _observe_cursor(df)
         df = self._prepare(table, df)
-        if not pk:
+        if ref is not None and ref not in self.branches(table):
+            self.create_branch(table, ref)
+        pk = list(primary_key)
+        fallback = disposition == "merge" and (
+            not pk or any(k not in df.columns for k in pk)
+        )
+        if fallback:
             logger.warning(
-                "merge disposition for %s without primary key: falling back to append",
+                "merge disposition for %s without usable primary key %s: "
+                "falling back to append",
                 table,
+                pk,
             )
-            rep = self.append(df, table)
-            return WriteReport(table, "merge", rep.rows_written, fallback_append=True)
-        missing = [k for k in pk if k not in df.columns]
-        if missing:
-            logger.warning(
-                "merge keys %s not present in batch for %s: falling back to append",
-                missing,
-                table,
-            )
-            rep = self.append(df, table)
-            return WriteReport(table, "merge", rep.rows_written, fallback_append=True)
-
-        if dedupe_batch:
-            df = dedupe_keep_last(df, pk)
-
-        # Empty incremental batch -> no-op. Without this, copy-on-write
-        # would rewrite the whole table for an idle cursor poll - O(table)
-        # for zero changes, catastrophic at scale.
-        batch_rows = df.count()
-        if batch_rows == 0:
-            return WriteReport(table, "merge", 0)
-
-        # with_tombstones: the copy-on-write rewrite must carry guard
-        # tombstones for untouched keys; a tombstone whose key the plain
-        # merge upserts is replaced (guard state erased for that key —
-        # the documented unguarded-write contract in merge_cdc).
-        base = self.read(table, with_tombstones=True)
-        keys = df.select(*pk).distinct()
-        kept = base.join(F.broadcast(keys), pk, "left_anti")
-        merged = kept.unionByName(df)
-        name, _total = self._new_data_dir(table, merged)
-        self._commit(table, [name])
+        if disposition == "replace":
+            name, rows = self._new_data_dir(table, df)
+            self._commit(table, [name], ref)
+        elif (
+            disposition == "append"
+            or fallback
+            or not self._current_manifest(table, ref)
+        ):
+            rows = self._append_or_skip(df, table, ref)
+        else:
+            # A full count, not isEmpty(): a limit-1 action would fill
+            # the cursor observation under the batch from a partial scan.
+            rows = df.count()
+            # An empty batch is a no-op: copy-on-write would rewrite the
+            # whole table for an idle cursor poll.
+            if rows:
+                self._rewrite(table, ref, df.select(*pk).distinct(), df)
         # rows_written = batch rows loaded (the reference's LoadInfo
         # semantics), not the copy-on-write rewrite size.
-        return WriteReport(table, "merge", batch_rows)
+        return WriteReport(
+            table, disposition, rows, fallback_append=fallback, cursor=cursor()
+        )
+
+    def _append_or_skip(self, df: DataFrame, table: str, ref: str | None) -> int:
+        """Commit ``df`` as one more data dir on the head of ``ref``, or
+        nothing at all when it holds no rows: dlt never invokes the
+        destination for a zero-item batch, so an idle incremental poll
+        must not grow the snapshot chain (at scale, one spurious
+        manifest per table per tick). Returns the rows written."""
+        name, rows = self._new_data_dir(table, df)
+        if rows == 0:
+            shutil.rmtree(self.root / table / name, ignore_errors=True)
+        else:
+            self._commit(table, self._current_manifest(table, ref) + [name], ref)
+        return rows
+
+    def _rewrite(
+        self, table: str, ref: str | None, keys: DataFrame, incoming: DataFrame
+    ) -> None:
+        """Copy-on-write commit on the head of ``ref``: one new data dir
+        holding the base minus every row that matches ``keys`` on its
+        columns, plus ``incoming``. The anti-join broadcasts the
+        batch-sized key set, so the base is scanned once, never
+        shuffled. ``with_tombstones``: guard tombstones of untouched
+        keys survive the rewrite; those of touched keys fall to the
+        anti-join (the documented unguarded-write contract in
+        :meth:`merge_cdc`)."""
+        base = self.read(table, ref, with_tombstones=True)
+        kept = base.join(F.broadcast(keys), keys.columns, "left_anti")
+        name, _rows = self._new_data_dir(table, kept.unionByName(incoming))
+        self._commit(table, [name], ref)
 
     def merge_cdc(
         self,
@@ -903,23 +832,12 @@ class ParquetLake:
         if not table_guarded:
             upserts = upserts.drop("last_version")
         if not self.exists(table):
-            df0 = self._prepare(table, upserts)
-            name, rows = self._new_data_dir(table, df0)
-            if rows == 0:
-                shutil.rmtree(self.root / table / name, ignore_errors=True)
-                return WriteReport(table, "merge_cdc", 0)
-            self._commit(table, [name])
+            rows = self._append_or_skip(self._prepare(table, upserts), table, None)
             return WriteReport(table, "merge_cdc", rows)
         n_upserts = upserts.count()
-        touched = log.select(key_col).distinct()
-        # with_tombstones: untouched keys' guard state survives the
-        # rewrite; touched keys' tombstones fall to the anti-join (the
-        # documented unguarded-overwrites-guard-state contract).
-        base = self.read(table, with_tombstones=True)
-        kept = base.join(F.broadcast(touched), key_col, "left_anti")
-        merged = kept.unionByName(self._prepare(table, upserts))
-        name, _total = self._new_data_dir(table, merged)
-        self._commit(table, [name])
+        self._rewrite(
+            table, None, log.select(key_col).distinct(), self._prepare(table, upserts)
+        )
         return WriteReport(table, "merge_cdc", n_upserts)
 
     def _check_version_castable(
@@ -1025,12 +943,7 @@ class ParquetLake:
         if not self.exists(table):
             incoming = split(final)
             n_upserts = incoming.filter(~F.col(TOMBSTONE_COL)).count()
-            df0 = self._prepare(table, incoming)
-            name, rows = self._new_data_dir(table, df0)
-            if rows == 0:
-                shutil.rmtree(self.root / table / name, ignore_errors=True)
-                return WriteReport(table, "merge_cdc", 0)
-            self._commit(table, [name])
+            self._append_or_skip(self._prepare(table, incoming), table, None)
             return WriteReport(table, "merge_cdc", n_upserts)
         base = self.read(table, with_tombstones=True)
         if "last_version" in base.columns:
@@ -1054,13 +967,8 @@ class ParquetLake:
         n_upserts = incoming.filter(~F.col(TOMBSTONE_COL)).count()
         # additive evolution: a previously-unguarded table gains
         # last_version + _cdc_deleted (typed NULLs for older files)
-        incoming = self._prepare(table, incoming, evolve=True)
-        kept = self.read(table, with_tombstones=True).join(
-            F.broadcast(dec.select(key_col)), key_col, "left_anti"
-        )
-        merged = align_to_schema(kept, self.schema(table)).unionByName(incoming)
-        name, _total = self._new_data_dir(table, merged)
-        self._commit(table, [name])
+        self.evolve_schema(table, incoming.schema)
+        self._rewrite(table, None, dec.select(key_col), self._prepare(table, incoming))
         return WriteReport(table, "merge_cdc", n_upserts)
 
     def compact_tombstones(
@@ -1180,8 +1088,6 @@ class ParquetLake:
         here. Time travel shortens to the kept window; the current
         snapshot is never touched. Returns the deleted data dirs
         (relative names) for audit logging."""
-        import shutil
-
         tdir = self.root / table
         keep = set(self._main_ancestry(table, limit=keep_last))
         # Tagged snapshots and branch HEADS are retention roots (Iceberg
@@ -1206,25 +1112,3 @@ class ParquetLake:
             if v not in keep:
                 m.unlink()
         return deleted
-
-    def write(
-        self,
-        df: DataFrame,
-        table: str,
-        disposition: str,
-        primary_key: tuple[str, ...] | list[str] = (),
-    ) -> WriteReport:
-        """Disposition dispatch, the destination entry point
-        (salesforce_pipeline.py:62-176). The report carries the batch's
-        max cursor when a column is marked with :func:`mark_cursor`."""
-        df, cursor = _observe_cursor(df)
-        if disposition == "append":
-            report = self.append(df, table)
-        elif disposition == "replace":
-            report = self.replace(df, table)
-        elif disposition == "merge":
-            report = self.merge(df, table, primary_key)
-        else:
-            raise ValueError(f"unknown write disposition: {disposition}")
-        report.cursor = cursor()
-        return report

@@ -12,7 +12,7 @@ lake (``sinks.dispositions``) provides identical semantics for CI.
 What IS executed without the jar (tests/test_iceberg_contract.py): the
 SQL text generation (:func:`merge_into_sql`), identifier handling
 (:func:`qualified_ident`), the keep-last source dedupe
-(``sinks.dispositions.dedupe_keep_last``), the auto-create property set
+(:func:`dedupe_keep_last`), the auto-create property set
 (:func:`create_table_properties`), and the full disposition dispatch
 driven through a recording session - so the only never-run code is the
 thin writeTo/sql invocation layer whose strings those tests pin.
@@ -31,9 +31,10 @@ from __future__ import annotations
 
 import logging
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
 
-from .dispositions import DEFAULT_TABLE_PROPERTIES, WriteReport, dedupe_keep_last
+from .dispositions import DEFAULT_TABLE_PROPERTIES, WriteReport
 
 logger = logging.getLogger(__name__)
 
@@ -52,6 +53,21 @@ def is_available(spark: SparkSession) -> bool:
         return True
     except Exception:
         return False
+
+
+def dedupe_keep_last(df: DataFrame, primary_key: list[str]) -> DataFrame:
+    """One row per primary key for the MERGE INTO source, which rejects
+    multiple source matches per target row: the documented divergence
+    from the reference's duplicate-preserving delete-then-insert (SURVEY
+    §7 "What's hard"). Deterministic: rows ordered by all non-PK columns
+    descending, the first kept."""
+    order = [F.col(c).desc() for c in df.columns if c not in primary_key]
+    w = Window.partitionBy(*primary_key).orderBy(*(order or [F.lit(1)]))
+    return (
+        df.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") == 1)
+        .drop("__rn")
+    )
 
 
 def qualified_ident(catalog: str, namespace: str, table: str) -> str:

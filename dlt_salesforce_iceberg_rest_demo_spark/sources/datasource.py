@@ -122,6 +122,10 @@ def _soql_literal(v: Any) -> str:
         # SOQL datetime literals are unquoted ISO-8601 (same canonical
         # format the reference normalizes to, records.py:32-45)
         return v.strftime("%Y-%m-%dT%H:%M:%S.%fZ")
+    if isinstance(v, _dt.date):
+        # after the datetime branch: datetime subclasses date. SOQL date
+        # literals are unquoted YYYY-MM-DD.
+        return v.isoformat()
     if isinstance(v, bool):
         return "TRUE" if v else "FALSE"
     if isinstance(v, (int, float)):

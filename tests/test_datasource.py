@@ -118,6 +118,13 @@ class TestPushdown:
         assert rest == unsupported
         assert r.pushed == []
 
+    def test_date_filter_pushes_unquoted_literal(self):
+        # SOQL date literals are bare YYYY-MM-DD; a live org rejects quotes
+        r = self._reader()
+        rest = list(r.pushFilters([GreaterThan(("CloseDate",), datetime.date(2024, 1, 1))]))
+        assert rest == []
+        assert r.pushed == ["CloseDate > 2024-01-01"]
+
     def test_pushed_filter_prunes_server_side(self):
         # run read() directly: the mock transport interprets the WHERE,
         # so only matching rows ever leave the "server"

@@ -3,10 +3,15 @@ the end-to-end disposition tests SURVEY §5 calls for."""
 
 from __future__ import annotations
 
+import logging
+from pathlib import Path
+
 import pytest
 from pyspark.sql import Row
 from pyspark.sql import types as T
 
+import dlt_salesforce_iceberg_rest_demo_spark as pkg
+from dlt_salesforce_iceberg_rest_demo_spark.sinks import dispositions
 from dlt_salesforce_iceberg_rest_demo_spark.sinks.dispositions import ParquetLake
 
 
@@ -122,13 +127,6 @@ class TestMerge:
         dup_batch = df_of(spark, [Row(id=1, v="x"), Row(id=1, v="y")])
         lake.merge(dup_batch, "t", ("id",))
         assert lake.count("t") == 2  # both duplicate rows present
-
-    def test_dedupe_batch_opt_in(self, spark, tmp_path):
-        lake = make_lake(spark, tmp_path)
-        lake.merge(df_of(spark, [Row(id=1, v="a")]), "t", ("id",))
-        dup_batch = df_of(spark, [Row(id=1, v="x"), Row(id=1, v="y")])
-        lake.merge(dup_batch, "t", ("id",), dedupe_batch=True)
-        assert lake.count("t") == 1
 
     def test_merge_without_pk_appends_with_flag(self, spark, tmp_path):
         # W4 guard (salesforce_pipeline.py:131-138)
@@ -326,7 +324,9 @@ class TestRefsAndEvolution:
     def test_evolve_append_adds_column_and_backfills_null(self, spark, tmp_path):
         lake = make_lake(spark, tmp_path)
         lake.append(df_of(spark, [Row(id=1, v="a")]), "t")
-        lake.append(df_of(spark, [Row(id=2, v="b", extra=7)]), "t", evolve=True)
+        batch = df_of(spark, [Row(id=2, v="b", extra=7)])
+        lake.evolve_schema("t", batch.schema)
+        lake.append(batch, "t")
         got = rows_by_id(lake, "t")
         # pre-evolution file reads the new column as typed NULL
         assert got[1]["extra"] is None
@@ -800,7 +800,9 @@ class TestBranchesWap:
         lake.replace(df_of(spark, [Row(id=1, v="a")]), "t")
         main_v = lake.current_version("t")
         lake.create_branch("t", "audit")
-        lake.append_to_branch(df_of(spark, [Row(id=2, v="b")]), "t", "audit")
+        lake.write_to_branch(
+            df_of(spark, [Row(id=2, v="b")]), "t", "append", branch="audit"
+        )
         # isolation: main unchanged, branch sees the staged batch
         assert lake.current_version("t") == main_v
         assert lake.count("t") == 1
@@ -814,7 +816,9 @@ class TestBranchesWap:
         lake = make_lake(spark, tmp_path)
         lake.replace(df_of(spark, [Row(id=1, v="a")]), "t")
         lake.create_branch("t", "audit")
-        lake.append_to_branch(df_of(spark, [Row(id=2, v="bad")]), "t", "audit")
+        lake.write_to_branch(
+            df_of(spark, [Row(id=2, v="bad")]), "t", "append", branch="audit"
+        )
         lake.drop_branch("t", "audit")
         assert {r.id for r in lake.read("t").collect()} == {1}
         assert "audit" not in lake.branches("t")
@@ -823,7 +827,9 @@ class TestBranchesWap:
         lake = make_lake(spark, tmp_path)
         lake.replace(df_of(spark, [Row(id=1, v="a")]), "t")
         lake.create_branch("t", "audit")
-        lake.append_to_branch(df_of(spark, [Row(id=2, v="b")]), "t", "audit")
+        lake.write_to_branch(
+            df_of(spark, [Row(id=2, v="b")]), "t", "append", branch="audit"
+        )
         # main diverges after the fork
         lake.append(df_of(spark, [Row(id=9, v="z")]), "t")
         import pytest as _pytest
@@ -835,8 +841,12 @@ class TestBranchesWap:
         lake = make_lake(spark, tmp_path)
         lake.replace(df_of(spark, [Row(id=1, v="a")]), "t")
         lake.create_branch("t", "stage")
-        lake.append_to_branch(df_of(spark, [Row(id=2, v="b")]), "t", "stage")
-        lake.append_to_branch(df_of(spark, [Row(id=3, v="c")]), "t", "stage")
+        lake.write_to_branch(
+            df_of(spark, [Row(id=2, v="b")]), "t", "append", branch="stage"
+        )
+        lake.write_to_branch(
+            df_of(spark, [Row(id=3, v="c")]), "t", "append", branch="stage"
+        )
         lake.fast_forward("t", "stage")
         assert lake.count("t") == 3
 
@@ -869,7 +879,9 @@ class TestBranchesWap:
         lake.replace(df_of(spark, [Row(id=1)]), "t")
         main_v = lake.current_version("t")
         lake.create_branch("t", "stage")
-        lake.append_to_branch(df_of(spark, [Row(id=2)]), "t", "stage")
+        lake.write_to_branch(
+            df_of(spark, [Row(id=2)]), "t", "append", branch="stage"
+        )
         time.sleep(0.01)
         assert lake.version_as_of("t", dt.datetime.now()) == main_v
 
@@ -904,8 +916,12 @@ class TestBranchesWap:
         lake = make_lake(spark, tmp_path)
         lake.replace(df_of(spark, [Row(id=1)]), "t")
         lake.create_branch("t", "stage")
-        lake.append_to_branch(df_of(spark, [Row(id=2)]), "t", "stage")
-        lake.append_to_branch(df_of(spark, [Row(id=3)]), "t", "stage")
+        lake.write_to_branch(
+            df_of(spark, [Row(id=2)]), "t", "append", branch="stage"
+        )
+        lake.write_to_branch(
+            df_of(spark, [Row(id=3)]), "t", "append", branch="stage"
+        )
         lake.vacuum("t", keep_last=1)  # keeps main head + branch HEAD only
         import pytest as _pytest
 
@@ -962,7 +978,9 @@ class TestBranchesWap:
         # Orphaned WAP staging commit: branch commit whose branch is
         # then dropped without publishing (failed audit).
         lake.create_branch("t", "wap")
-        lake.append_to_branch(df_of(spark, [Row(id=9, v="orphan")]), "t", "wap")
+        lake.write_to_branch(
+            df_of(spark, [Row(id=9, v="orphan")]), "t", "append", branch="wap"
+        )
         orphan = lake._branch_version("t", "wap")
         lake.drop_branch("t", "wap")
         lake.append(df_of(spark, [Row(id=2, v="v2")]), "t")
@@ -982,12 +1000,90 @@ class TestBranchesWap:
         lake = make_lake(spark, tmp_path)
         lake.replace(df_of(spark, [Row(id=1, v="a")]), "t")
         lake.create_branch("t", "keepme")
-        lake.append_to_branch(df_of(spark, [Row(id=2, v="b")]), "t", "keepme")
+        lake.write_to_branch(
+            df_of(spark, [Row(id=2, v="b")]), "t", "append", branch="keepme"
+        )
         # several main commits so vacuum has something to expire
         for i in range(3):
             lake.append(df_of(spark, [Row(id=10 + i, v="x")]), "t")
         lake.vacuum("t", keep_last=1)
         assert {r.id for r in lake.read("t", "keepme").collect()} == {1, 2}
+
+
+class TestOneWritePath:
+    """``write`` and ``write_to_branch`` + ``fast_forward`` run one
+    disposition body against two refs: the same live rows, report,
+    commits and W4 warning for every disposition, batch and table."""
+
+    SCHEMA = "id long, v string"
+
+    def _write_once(self, spark, lake, caplog, via_branch, seeded, rows, disposition, pk):
+        if seeded:
+            lake.replace(spark.createDataFrame([(1, "a"), (2, "b")], self.SCHEMA), "t")
+        manifests = lambda: len(list((lake.root / "t").glob("_MANIFEST.*.json")))  # noqa: E731
+        before = manifests()
+        batch = spark.createDataFrame(rows, self.SCHEMA)
+        caplog.clear()
+        with caplog.at_level(logging.WARNING, logger=dispositions.logger.name):
+            if via_branch:
+                report = lake.write_to_branch(batch, "t", disposition, pk, branch="wap")
+                lake.fast_forward("t", "wap")
+            else:
+                report = lake.write(batch, "t", disposition, pk)
+        warned = any(r.name == dispositions.logger.name for r in caplog.records)
+        return sorted(lake.read("t").collect()), report, manifests() - before, warned
+
+    @pytest.mark.parametrize("seeded", [False, True], ids=["absent", "holding-rows"])
+    @pytest.mark.parametrize(
+        "rows", [[], [(1, "x"), (1, "y")]], ids=["empty", "shared-key"]
+    )
+    @pytest.mark.parametrize(
+        "disposition,pk",
+        [
+            ("append", ()),
+            ("replace", ()),
+            ("merge", ("id",)),
+            ("merge", ()),
+            ("merge", ("nope",)),
+        ],
+        ids=["append", "replace", "merge-id", "merge-no-pk", "merge-missing-pk"],
+    )
+    def test_main_and_branch_agree(
+        self, spark, tmp_path, caplog, disposition, pk, rows, seeded
+    ):
+        main, branch = (
+            self._write_once(
+                spark,
+                ParquetLake(spark, tmp_path / f"lake{i}"),
+                caplog,
+                via_branch,
+                seeded,
+                rows,
+                disposition,
+                pk,
+            )
+            for i, via_branch in enumerate((False, True))
+        )
+        assert main[0] == branch[0]  # live rows
+        assert main[1] == branch[1]  # WriteReport, every field
+        assert main[2] == branch[2]  # new manifests
+        for _rows, report, _new, warned in (main, branch):
+            assert warned == report.fallback_append
+        if not rows and disposition != "replace":
+            # an empty batch commits nothing (first contact: manifest 0 only)
+            assert main[2] == (0 if seeded else 1)
+
+    def test_one_copy_on_write_in_source(self):
+        root = Path(pkg.__file__).resolve().parent
+        assert (root / "sinks" / "dispositions.py").read_text().count('"left_anti"') == 1
+        gone = ("append_to_branch", "_write_to_branch", "dedupe_batch")
+        offenders = [
+            f"{path.relative_to(root)}: {name}"
+            for path in sorted(root.rglob("*.py"))
+            for name in gone
+            if name in path.read_text()
+        ]
+        assert offenders == []
 
 
 class TestCompactZorder:
