@@ -12,9 +12,15 @@ extraction and load:
    NULLs for missing columns, silently drop extras, keep target order
    (/root/reference/salesforce_pipeline.py:153-176).
 
-Spark-first: all four are pure Column expressions (JVM-side, codegen'd),
-never per-row Python - the reference's `_process_record`
-(records.py:15-47) is exactly the per-row loop we refuse to port.
+Spark-first, and never per-row Python on the executors (the
+reference's `_process_record`, records.py:15-47, is exactly the per-row
+loop we refuse to port). Steps 1-3 happen where the batch is built:
+`sources.salesforce.read_object(..., load_id=)` lands it as one Arrow
+table whose names are already :func:`snake_case`, with the lineage
+columns and native timestamps set by Arrow casts (the reference's
+string round-trip survives only as :func:`canonicalize_datetime`, for
+byte-parity checks). Step 4 is :func:`align_to_schema`, one projection
+the lake skips when the batch already has the table's columns.
 """
 
 from __future__ import annotations
@@ -22,7 +28,6 @@ from __future__ import annotations
 import logging
 import re
 import time
-import uuid
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -32,6 +37,11 @@ logger = logging.getLogger(__name__)
 
 # Canonical datetime format of the reference (records.py:38,45).
 CANONICAL_TS_FORMAT = "yyyy-MM-dd'T'HH:mm:ss.SSSSSS'Z'"
+
+# Column metadata key that marks a batch's incremental cursor column:
+# set by the source when it lands a batch, read (and dropped) by the
+# lake write, which reports the column's max in ``WriteReport.cursor``.
+CURSOR_HINT = "cursor"
 
 
 def snake_case(name: str) -> str:
@@ -48,41 +58,9 @@ def snake_case(name: str) -> str:
     return name.strip("_").lower()
 
 
-def snake_case_columns(df: DataFrame) -> DataFrame:
-    """Rename every column to its snake_case form (T5)."""
-    mapping = {c: snake_case(c) for c in df.columns}
-    return df.select([F.col(f"`{c}`").alias(new) for c, new in mapping.items()])
-
-
 def new_load_id() -> str:
     """dlt load ids are epoch-seconds strings (e.g. '1755043200.123')."""
     return str(time.time())
-
-
-def add_lineage(
-    df: DataFrame,
-    load_id: str | None = None,
-    *,
-    deterministic_from: list[str] | None = None,
-) -> DataFrame:
-    """Inject `_dlt_load_id` / `_dlt_id` (T5).
-
-    dlt's `_dlt_id` is a random per-row id; pass ``deterministic_from=
-    [cols...]`` to derive it content-addressed (md5 of the concatenated
-    columns) instead - reproducible across runs, required for
-    oracle-checked pipelines and handy for idempotent retries.
-    """
-    load_id = load_id if load_id is not None else new_load_id()
-    if deterministic_from:
-        row_id: Column = F.md5(
-            F.concat_ws("\x1f", *[F.col(c).cast("string") for c in deterministic_from]).cast(
-                "binary"
-            )
-        )
-    else:
-        # uuid() is nondeterministic by design (matches dlt's random id).
-        row_id = F.expr("uuid()")
-    return df.withColumn("_dlt_load_id", F.lit(load_id)).withColumn("_dlt_id", row_id)
 
 
 def canonicalize_datetime(df: DataFrame, columns: list[str]) -> DataFrame:
@@ -186,13 +164,13 @@ def explode_nested(
 
     Returns ``{parent_name: parent_df_without_nested_cols,
     "<parent>__<field>": child_df, ...}``. Requires ``id_col`` on the
-    parent (add via `add_lineage` first). posexplode is map-side; each
-    child table is written/partitioned independently downstream, which
-    is exactly how nested data stays scan-efficient at 100 TB (child
-    scans never touch parent payloads).
+    parent (a batch landed by `read_object(..., load_id=)` carries it).
+    posexplode is map-side; each child table is written/partitioned
+    independently downstream, which is exactly how nested data stays
+    scan-efficient at 100 TB (child scans never touch parent payloads).
     """
     if id_col not in df.columns:
-        raise ValueError(f"{id_col} missing - run add_lineage first")
+        raise ValueError(f"{id_col} missing from the parent")
     out: dict[str, DataFrame] = {}
     nested = [
         f.name

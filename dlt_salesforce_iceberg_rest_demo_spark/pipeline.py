@@ -5,12 +5,16 @@ Per selected resource:
 
 1. read the last cursor from the state store (dlt incremental parity);
 2. extract through the transport with P1-P5 pushdown (Bulk -> Standard
-   fallback);
-3. normalize: snake_case identifiers + `_dlt_load_id`/`_dlt_id` lineage
-   (dlt normalize stage parity);
-4. write with the resource's disposition (replace / merge-on-Id /
-   append fallback);
-5. advance the cursor to the max replication value of the batch, which
+   fallback) and land the batch already normalized (dlt normalize stage
+   parity): ``read_object(..., load_id=)`` builds one Arrow table with
+   snake_case names, `_dlt_load_id`/`_dlt_id` lineage, native
+   timestamps and the cursor column marked, so the lake receives a bare
+   `LocalRelation` with the table's columns and no projection to run;
+3. write with the resource's disposition (replace / merge-on-Id /
+   append fallback). An empty batch for a table that exists is not
+   written unless it replaces (an idle poll, which dlt never sends to
+   the destination either): it runs no Spark job;
+4. advance the cursor to the max replication value of the batch, which
    the lake write observes while it executes the batch
    (``WriteReport.cursor``; no job after the write), once the write has
    returned.
@@ -18,7 +22,7 @@ Per selected resource:
 `force_replace` (W6, salesforce_pipeline.py:32-34,184-203): every
 resource is written as replace and the state store is wiped first.
 
-The whole of steps 2-4 is ONE lazy Catalyst plan per resource - no
+The whole of steps 2-3 is ONE lazy Catalyst plan per resource - no
 intermediate materialization (the reference stages dicts -> parquet job
 files -> arrow batches between its three dlt stages).
 """
@@ -30,8 +34,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import SparkSession
 
 from .config import DEFAULT_RESOURCES, RESOURCES, ResourceConfig
-from .normalize import add_lineage, new_load_id, snake_case, snake_case_columns
-from .sinks.dispositions import ParquetLake, WriteReport, mark_cursor
+from .normalize import new_load_id, snake_case
+from .sinks.dispositions import ParquetLake, WriteReport, falls_back_to_append
 from .sources.salesforce import Transport, read_object
 from .state import StateStore
 
@@ -110,26 +114,33 @@ class SalesforcePipeline:
                 else None
             )
         )
-        df = read_object(
+        batch = read_object(
             self.spark,
             self.transport,
             cfg.sobject,
             last_state=last_state,
             replication_key=cfg.replication_key,
             is_production=self.is_production,
+            load_id=load_id,
         )
-        normalized = add_lineage(snake_case_columns(df), load_id)
-        if cfg.replication_key:
-            cursor_col = snake_case(cfg.replication_key)
-            if cursor_col in normalized.columns:
-                normalized = mark_cursor(normalized, cursor_col)
-
         disposition = "replace" if force_replace else cfg.write_disposition
         pk = tuple(snake_case(k) for k in cfg.primary_key)
+        # An idle poll: nothing to write. isEmpty() on the landed batch
+        # runs on the driver (no job), before the lake attaches its
+        # cursor observation.
+        if (
+            disposition != "replace"
+            and self.lake.exists(cfg.name)
+            and batch.isEmpty()
+        ):
+            columns = self.lake.schema(cfg.name).fieldNames()
+            fallback = falls_back_to_append(disposition, pk, columns)
+            return WriteReport(cfg.name, disposition, 0, fallback_append=fallback), None
+
         if audit is not None:
             branch = f"wap_{load_id}"
             report = self.lake.write_to_branch(
-                normalized, cfg.name, disposition, pk, branch=branch
+                batch, cfg.name, disposition, pk, branch=branch
             )
             if audit(self.lake.read(cfg.name, branch), cfg.name):
                 self.lake.fast_forward(cfg.name, branch)
@@ -142,7 +153,7 @@ class SalesforcePipeline:
                     None,
                 )
         else:
-            report = self.lake.write(normalized, cfg.name, disposition, pk)
+            report = self.lake.write(batch, cfg.name, disposition, pk)
 
         # The write has returned, so every row under report.cursor is
         # committed (a failed write or audit never reaches this line).

@@ -168,8 +168,8 @@ def schema_align_add_missing(spark: SparkSession, sf_dir: str) -> DataFrame:
 def lineage_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T5 dlt-normalize lineage: every row gets `_dlt_load_id` (load
     timestamp string) and `_dlt_id` (row id). dlt's row id is random;
-    for oracle determinism this uses content-addressed md5 - the
-    production path in `normalize.add_lineage` supports both."""
+    for oracle determinism this uses content-addressed md5 (the
+    pipeline lands a random id per row, `sources.salesforce._row_ids`)."""
     return t(spark, sf_dir, "documents").select(
         "doc_id",
         "text",

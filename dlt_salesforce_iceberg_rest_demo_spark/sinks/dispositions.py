@@ -57,6 +57,7 @@ from pyspark.sql import types as T
 
 from ..normalize import (
     CANONICAL_TS_FORMAT,
+    CURSOR_HINT,
     align_to_schema,
     nullable_everything,
     widen_types,
@@ -81,10 +82,6 @@ TOMBSTONE_COL = "_cdc_deleted"
 # or silent guard-state corruption), so merge_cdc rejects them up front.
 _CDC_RESERVED = ("last_version", TOMBSTONE_COL, "__op", "__base_v")
 
-# Column metadata key that marks a batch's incremental cursor column
-# (see :func:`mark_cursor`).
-_CURSOR_HINT = "cursor"
-
 
 @dataclass
 class WriteReport:
@@ -98,13 +95,14 @@ class WriteReport:
     cursor: str | None = None
 
 
-def mark_cursor(df: DataFrame, column: str) -> DataFrame:
-    """Mark ``column`` as the batch's incremental cursor, whose max
-    :meth:`ParquetLake.write` and :meth:`ParquetLake.write_to_branch`
-    then report in ``WriteReport.cursor``. The mark is column metadata:
-    it rides the batch through the write call and never reaches the
-    table schema."""
-    return df.withMetadata(column, {_CURSOR_HINT: True})
+def falls_back_to_append(
+    disposition: str, primary_key: tuple[str, ...] | list[str], columns: list[str]
+) -> bool:
+    """W4 (salesforce_pipeline.py:131-138): a merge without a primary
+    key, or on PK columns the table lacks, is written as an append."""
+    return disposition == "merge" and (
+        not primary_key or any(k not in columns for k in primary_key)
+    )
 
 
 def _observe_cursor(df: DataFrame):
@@ -114,7 +112,7 @@ def _observe_cursor(df: DataFrame):
     first execution fills the observation at no extra job. A merge's
     value is therefore the batch max, never the merged table's. Returns
     the unmarked batch and a reader for the value (None if unmarked)."""
-    marked = [f.name for f in df.schema.fields if f.metadata.get(_CURSOR_HINT)]
+    marked = [f.name for f in df.schema.fields if f.metadata.get(CURSOR_HINT)]
     if not marked:
         return df, lambda: None
     (column,) = marked
@@ -123,6 +121,10 @@ def _observe_cursor(df: DataFrame):
         obs, F.date_format(F.max(column), CANONICAL_TS_FORMAT).alias("cursor")
     )
     return df, lambda: obs.get["cursor"]
+
+
+def _columns(schema: T.StructType) -> list[tuple[str, T.DataType]]:
+    return [(f.name, f.dataType) for f in schema.fields]
 
 
 class ParquetLake:
@@ -243,6 +245,8 @@ class ParquetLake:
         (tagged snapshots never expire — same contract as Iceberg's
         expire_snapshots). Audit/eval pipelines tag the snapshot they
         ran on; retraining reads the tag, not 'whatever is current'."""
+        if name in self.branches(table):
+            raise ValueError(f"{name!r} is already a branch of {table}")
         v = self._current_version(table) if version is None else version
         if not (self.root / table / f"_MANIFEST.{v}.json").exists():
             raise ValueError(f"snapshot {v} of {table} does not exist")
@@ -346,7 +350,11 @@ class ParquetLake:
         Iceberg branch, enabling WRITE-AUDIT-PUBLISH: load into the
         branch, validate it (`operators.expectations.check_report` over
         ``read(table, branch)``), then :meth:`fast_forward` main. A
-        failed audit just drops the branch; main never saw bad data."""
+        failed audit just drops the branch; main never saw bad data.
+        A tag and a branch never share a name (``read`` would resolve
+        it to the tag)."""
+        if name in self.refs(table):
+            raise ValueError(f"{name!r} is already a tag of {table}")
         v = self._current_version(table) if version is None else version
         if not (self.root / table / f"_MANIFEST.{v}.json").exists():
             raise ValueError(f"snapshot {v} of {table} does not exist")
@@ -559,10 +567,16 @@ class ParquetLake:
     def _prepare(self, table: str, df: DataFrame) -> DataFrame:
         """Auto-create if missing, then T3-align the batch to the table
         schema (add typed NULLs, drop extras, target order -
-        salesforce_pipeline.py:153-176)."""
+        salesforce_pipeline.py:153-176). A batch that already has the
+        table's columns, names and types in order, is returned as is:
+        the aligning projection costs ~40 driver round trips per column
+        and would change nothing."""
         if not self.exists(table):
             self.create_table(table, df.schema)
-        return align_to_schema(df, self.schema(table))
+        target = self.schema(table)
+        if _columns(df.schema) == _columns(target):
+            return df
+        return align_to_schema(df, target)
 
     def evolve_schema(self, table: str, batch_schema: T.StructType) -> list[str]:
         """Additive schema evolution (the opt-in extension SURVEY §7
@@ -600,8 +614,9 @@ class ParquetLake:
     ) -> WriteReport:
         """Disposition dispatch, the destination entry point
         (salesforce_pipeline.py:62-176), committed to main. The report
-        carries the batch's max cursor when a column is marked with
-        :func:`mark_cursor`."""
+        carries the batch's max cursor when a column's metadata carries
+        ``normalize.CURSOR_HINT`` (``read_object(..., load_id=)`` marks
+        the replication key)."""
         return self._write(df, table, disposition, primary_key, None)
 
     def write_to_branch(
@@ -668,9 +683,7 @@ class ParquetLake:
         if ref is not None and ref not in self.branches(table):
             self.create_branch(table, ref)
         pk = list(primary_key)
-        fallback = disposition == "merge" and (
-            not pk or any(k not in df.columns for k in pk)
-        )
+        fallback = falls_back_to_append(disposition, pk, df.columns)
         if fallback:
             logger.warning(
                 "merge disposition for %s without usable primary key %s: "

@@ -8,8 +8,8 @@ Reference behavior reproduced (citations into /root/reference):
   P3 incremental predicate `cursor > state`, P4 `ORDER BY cursor ASC`,
   P5 test-mode `LIMIT 100`: records.py:70-94.
 - P6 `attributes` envelope strip + T1/T2 datetime normalization:
-  records.py:15-47 (a per-row Python loop there; a vectorized Arrow /
-  Column expression here).
+  records.py:15-47 (a per-row Python loop there; one Arrow cast per
+  column here).
 - Auth surface: 6 credential shapes resolved into one client config,
   salesforce/helpers/client.py:38-214.
 
@@ -22,10 +22,12 @@ Architecture differences (Spark-first, not a port):
   under `spark.sql.execution.arrow.localRelationThreshold` (48 MB by
   default) it is a `LocalRelation`, above it a JVM-side RDD of Arrow
   batches. No Python worker runs in either case, however often the
-  plan executes (a merge executes its batch three times). Datetime
-  fields are parsed natively (no `%Y-%m-%dT%H:%M:%S.%fZ` string
-  round-trip in the hot path; `normalize.canonicalize_datetime` renders
-  the reference's string format on demand).
+  plan executes (a merge executes its batch more than once), and no
+  projection sits on top: datetime and date fields are cast by Arrow
+  (no `%Y-%m-%dT%H:%M:%S.%fZ` string round-trip in the hot path;
+  `normalize.canonicalize_datetime` renders the reference's string
+  format on demand), and the pipeline's batch arrives with dlt's
+  normalize already applied (``read_object(..., load_id=)``).
 - Every reader pages through :func:`fetch_records`, the one Bulk scan
   with Standard fallback. At scale the single-generator extraction (the
   reference is one Python process pulling all pages) becomes the
@@ -36,16 +38,18 @@ Architecture differences (Spark-first, not a port):
 
 from __future__ import annotations
 
+import os
 from collections.abc import Iterable, Iterator
 from dataclasses import dataclass, field
 from typing import Any, Protocol
 
 import pyarrow as pa
-from pyspark.errors import PySparkTypeError
-from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.errors import PySparkTypeError, PySparkValueError
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
-from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.pandas.types import to_arrow_type
+
+from ..normalize import CURSOR_HINT, snake_case
 
 # ---------------------------------------------------------------------------
 # Auth configuration (client.py:38-129). Pure config resolution - the
@@ -382,50 +386,86 @@ def _records_to_dataframe(
     records: Iterable[dict[str, Any]],
     meta: ObjectMeta,
     api_type: str,
+    load_id: str | None = None,
+    cursor: str | None = None,
 ) -> DataFrame:
-    """Dict rows -> one Arrow table -> typed DataFrame.
+    """Dict rows -> one Arrow table -> typed DataFrame over a bare
+    `LocalRelation` (or, above the local-relation threshold, a JVM-side
+    RDD of Arrow batches): no projection runs on top of it.
 
     The reference's `_process_record` (records.py:15-47) strips the
     `attributes` envelope and string-formats datetimes per row in Python.
     Here: envelope keys simply never enter the projection, each projected
-    field becomes one Arrow column (typed by :func:`_column`), and the
-    table crosses into the JVM once (see :func:`read_object`). Datetime
-    conversion is one Column expression per field in one projection -
-    epoch-millis (`timestamp_millis`) for the bulk shape, ISO parse
-    (`to_timestamp`) for the standard shape; a bad wire value raises in
-    either shape.
+    field becomes one Arrow column (typed by :func:`_landed`, datetimes
+    and dates by an Arrow cast of their wire form), and the table crosses
+    into the JVM once (see :func:`read_object`).
+
+    With ``load_id`` the batch is built in its lake form, dlt's normalize
+    stage done here (SURVEY §3.1 steps 3-4): names in :func:`snake_case`,
+    the ``cursor`` field (an API name) marked with :data:`CURSOR_HINT`,
+    and the lineage columns `_dlt_load_id` (``load_id``) and `_dlt_id`
+    (:func:`_row_ids`) appended. Without it the batch keeps the API
+    names.
     """
     records = list(records)
-    fields, columns = [], []
+    fields, arrays = [], []
     for f in meta.fields:
-        wire = (int if api_type == "bulk" else str) if f in meta.date_fields else None
-        dtype, values = _column(f, [r.get(f) for r in records], wire)
-        fields.append(T.StructField(f, dtype, True))
-        columns.append(values)
-    schema = T.StructType(fields)
-    arrow_schema = to_arrow_schema(schema)
-    table = pa.table(
-        [pa.array(v, type=a.type) for v, a in zip(columns, arrow_schema)],
-        schema=arrow_schema,
-    )
-    return spark.createDataFrame(table, schema).withColumns(
-        {f: _timestamp(f, api_type) for f in meta.date_fields}
-    )
+        dtype, array = _landed(f, [r.get(f) for r in records], meta, api_type)
+        name, metadata = f, None
+        if load_id is not None:
+            name = snake_case(f)
+            metadata = {CURSOR_HINT: True} if f == cursor else None
+        fields.append(T.StructField(name, dtype, True, metadata))
+        arrays.append(array)
+    if load_id is not None:
+        fields += [
+            T.StructField("_dlt_load_id", T.StringType(), True),
+            T.StructField("_dlt_id", T.StringType(), True),
+        ]
+        arrays += [pa.repeat(load_id, len(records)), _row_ids(len(records))]
+    table = pa.Table.from_arrays(arrays, names=[f.name for f in fields])
+    return spark.createDataFrame(table, T.StructType(fields))
 
 
-def _timestamp(name: str, api_type: str) -> Column:
-    """A datetime field's wire value as a timestamp. Bulk epoch millis
-    are already checked to be ints by :func:`_column`; an ISO string that
-    does not parse raises here instead of landing as NULL (the session
-    runs non-ANSI, where `to_timestamp` returns NULL)."""
-    c = F.col(name)
-    if api_type == "bulk":
-        return F.timestamp_millis(c)
-    ts = F.to_timestamp(c)
-    return F.when(
-        c.isNotNull() & ts.isNull(),
-        F.raise_error(F.concat(F.lit(f"field {name}: unparseable datetime "), c)),
-    ).otherwise(ts)
+def _row_ids(n: int) -> pa.Array:
+    """dlt's `_dlt_id`: a random id per row, 128 bits as 32 hex digits.
+    Drawn once, when the batch lands, so every execution of the batch's
+    plan (a merge runs it more than once) sees the same ids."""
+    raw = os.urandom(16 * n).hex()
+    return pa.array([raw[i : i + 32] for i in range(0, 32 * n, 32)], pa.string())
+
+
+_TIMESTAMP = pa.timestamp("us", tz="UTC")
+
+
+def _landed(
+    name: str, values: list[Any], meta: ObjectMeta, api_type: str
+) -> tuple[T.DataType, pa.Array]:
+    """One field's Spark type and Arrow column. A datetime field's wire
+    value is cast by Arrow: bulk epoch millis (checked to be ints by
+    :func:`_column`) or a standard ISO string with its zone (`Z` or
+    `+0000`; a string without one is refused, not read as local time).
+    A `date` field is an ISO `YYYY-MM-DD` string in either shape. A bad
+    wire value raises naming the field, never a NULL."""
+    if name in meta.date_fields and api_type == "bulk":
+        _, millis = _column(name, values, int)
+        wire = pa.array(millis, pa.int64()).cast(pa.timestamp("ms", tz="UTC"))
+        return T.TimestampType(), _cast(name, wire, _TIMESTAMP, "datetime")
+    if name in meta.date_fields:
+        wire = pa.array(_column(name, values, str)[1], pa.string())
+        return T.TimestampType(), _cast(name, wire, _TIMESTAMP, "datetime")
+    if meta.types.get(name) == "date":
+        wire = pa.array(_column(name, values, str)[1], pa.string())
+        return T.DateType(), _cast(name, wire, pa.date32(), "date")
+    dtype, values = _column(name, values)
+    return dtype, pa.array(values, to_arrow_type(dtype))
+
+
+def _cast(name: str, array: pa.Array, to: pa.DataType, what: str) -> pa.Array:
+    try:
+        return array.cast(to)
+    except pa.ArrowInvalid as e:
+        raise PySparkValueError(message=f"field {name}: unparseable {what}: {e}") from None
 
 
 # Python type of a column's values -> Spark type, the reference's
@@ -442,8 +482,8 @@ def _column(
     must have exactly that type, else the column raises PySpark's
     `FIELD_DATA_TYPE_UNACCEPTABLE_WITH_NAME`. A column led by any other
     type, or all null, is string: each value rendered by ``str``, bools
-    lower-cased. ``kind`` pins the type instead (the datetime wire
-    shapes). These are the verdicts PySpark's row path gives the same
+    lower-cased. ``kind`` pins the type instead (the datetime and date
+    wire shapes). These are the verdicts PySpark's row path gives the same
     first-value schema. The check happens here because pyarrow would
     cast: ``[1, 2.5]`` in an int64 array silently becomes ``[1, 2]``."""
     if kind is None:
@@ -494,17 +534,23 @@ def read_object(
     last_state: str | None = None,
     replication_key: str | None = None,
     is_production: bool = True,
+    load_id: str | None = None,
 ) -> DataFrame:
     """S1/S2: full read of one sObject through the Bulk API with Standard
     API fallback - the reference's `get_records` re-expressed
     (records.py:50-121). Driver-side paging like the reference; the
     batch then lands in the JVM once, as one Arrow table with native
-    timestamps: a `LocalRelation` under
+    timestamps and dates: a `LocalRelation` under
     `spark.sql.execution.arrow.localRelationThreshold`, a JVM-side RDD
-    of Arrow batches above it, and no Python tasks in either case."""
+    of Arrow batches above it, and no Python tasks in either case.
+    With ``load_id`` the batch lands normalized for the lake (snake_case
+    names, lineage columns, the ``replication_key`` column marked as the
+    cursor; see :func:`_records_to_dataframe`)."""
     meta = object_meta(transport, sobject)
     soql = build_soql(
         sobject, meta.fields, replication_key, last_state, is_production
     )
     records, api_type = fetch_records(transport, sobject, soql)
-    return _records_to_dataframe(spark, records, meta, api_type)
+    return _records_to_dataframe(
+        spark, records, meta, api_type, load_id, replication_key
+    )

@@ -49,6 +49,13 @@ TASK_DESCRIBE = [
     f("SystemModstamp", "datetime"),
 ]
 
+OPPORTUNITY_CONTACT_ROLE_DESCRIBE = [
+    f("Id", "id"),
+    f("ContactId", "reference"),
+    f("Role", "picklist"),
+    f("SystemModstamp", "datetime"),
+]
+
 
 def ts(day: int, hour: int = 0) -> str:
     return f"2024-01-{day:02d}T{hour:02d}:00:00.000000Z"
@@ -132,6 +139,11 @@ TASKS_V1 = [
     {"Id": "00TB", "Subject": "email", "SystemModstamp": ts(5)},
 ]
 
+# Unchanged in v2, like TASKS_V1: the idle incremental polls.
+OPPORTUNITY_CONTACT_ROLES_V1 = [
+    {"Id": "00KA", "ContactId": "003A", "Role": "Decision Maker", "SystemModstamp": ts(2)},
+]
+
 
 def make_transport(version: int = 1, bulk_enabled: bool = True) -> MockTransport:
     return MockTransport(
@@ -139,11 +151,13 @@ def make_transport(version: int = 1, bulk_enabled: bool = True) -> MockTransport
             "Account": ACCOUNT_DESCRIBE,
             "Contact": CONTACT_DESCRIBE,
             "Task": TASK_DESCRIBE,
+            "OpportunityContactRole": OPPORTUNITY_CONTACT_ROLE_DESCRIBE,
         },
         data={
             "Account": ACCOUNTS_V1 if version == 1 else ACCOUNTS_V2,
             "Contact": CONTACTS_V1 if version == 1 else CONTACTS_V2,
             "Task": TASKS_V1,
+            "OpportunityContactRole": OPPORTUNITY_CONTACT_ROLES_V1,
         },
         bulk_enabled=bulk_enabled,
     )

@@ -1009,6 +1009,39 @@ class TestBranchesWap:
         lake.vacuum("t", keep_last=1)
         assert {r.id for r in lake.read("t", "keepme").collect()} == {1, 2}
 
+    def test_tag_cannot_shadow_a_branch(self, spark, tmp_path):
+        # A branch merge used to read its base from a same-named tag, and
+        # the publish dropped every row committed after the tag: main
+        # ended as [1, 3], row 2 gone.
+        lake = make_lake(spark, tmp_path)
+        lake.replace(df_of(spark, [Row(id=1, v="a")]), "t")
+        lake.set_ref("t", "x")
+        lake.append(df_of(spark, [Row(id=2, v="b")]), "t")
+        head = lake.current_version("t")
+        with pytest.raises(ValueError, match="already a tag"):
+            lake.write_to_branch(
+                df_of(spark, [Row(id=3, v="c")]), "t", "merge", ("id",), branch="x"
+            )
+        assert lake.branches("t") == {}
+        assert lake.current_version("t") == head
+        assert sorted(rows_by_id(lake, "t")) == [1, 2]
+
+    def test_branch_and_tag_names_are_exclusive(self, spark, tmp_path):
+        lake = make_lake(spark, tmp_path)
+        lake.replace(df_of(spark, [Row(id=1, v="a")]), "t")
+        lake.set_ref("t", "tag")
+        lake.create_branch("t", "branch")
+        with pytest.raises(ValueError, match="already a tag"):
+            lake.create_branch("t", "tag")
+        with pytest.raises(ValueError, match="already a branch"):
+            lake.set_ref("t", "branch")
+        assert set(lake.refs("t")) == {"tag"}
+        assert set(lake.branches("t")) == {"branch"}
+        # re-pinning a tag, or re-forking a branch, under its own name is
+        # not a clash
+        lake.set_ref("t", "tag")
+        lake.create_branch("t", "branch")
+
 
 class TestOneWritePath:
     """``write`` and ``write_to_branch`` + ``fast_forward`` run one

@@ -9,12 +9,10 @@ from pyspark.sql import types as T
 
 from dlt_salesforce_iceberg_rest_demo_spark.normalize import (
     align_to_schema,
-    add_lineage,
     canonicalize_datetime,
     nullable_everything,
     parse_canonical_datetime,
     snake_case,
-    snake_case_columns,
     widen_types,
 )
 
@@ -28,11 +26,6 @@ class TestSnakeCase:
         assert snake_case("already_snake") == "already_snake"
         assert snake_case("SLAExpirationDate") == "sla_expiration_date"
         assert snake_case("Field__c") == "field_c"
-
-    def test_rename_columns(self, spark):
-        df = spark.createDataFrame([Row(AccountId="a", AnnualRevenue=1.0)])
-        out = snake_case_columns(df)
-        assert out.columns == ["account_id", "annual_revenue"]
 
 
 class TestTypes:
@@ -96,39 +89,18 @@ class TestDatetime:
         assert out.collect()[0]["ts"] == datetime.datetime(2024, 1, 2, 3, 4, 5)
 
 
-class TestLineage:
-    def test_deterministic_id(self, spark):
-        df = spark.createDataFrame([Row(k="a"), Row(k="b")])
-        out1 = add_lineage(df, "L1", deterministic_from=["k"])
-        out2 = add_lineage(df, "L1", deterministic_from=["k"])
-        assert sorted(r["_dlt_id"] for r in out1.collect()) == sorted(
-            r["_dlt_id"] for r in out2.collect()
-        )
-
-    def test_random_id_unique(self, spark):
-        df = spark.createDataFrame([Row(k="a"), Row(k="b")])
-        ids = [r["_dlt_id"] for r in add_lineage(df, "L1").collect()]
-        assert len(set(ids)) == 2
-
-
 class TestExplodeNested:
     def test_child_tables_keyed_to_parent(self, spark):
-        from pyspark.sql import functions as F
-
-        from dlt_salesforce_iceberg_rest_demo_spark.normalize import (
-            add_lineage,
-            explode_nested,
-        )
+        from dlt_salesforce_iceberg_rest_demo_spark.normalize import explode_nested
 
         df = spark.createDataFrame(
             [
-                (1, [{"Sku": "a", "Qty": 2}, {"Sku": "b", "Qty": 1}]),
-                (2, []),
-                (3, None),
+                (1, [{"Sku": "a", "Qty": 2}, {"Sku": "b", "Qty": 1}], "r1"),
+                (2, [], "r2"),
+                (3, None, "r3"),
             ],
-            "id long, LineItems array<struct<Sku string, Qty long>>",
+            "id long, LineItems array<struct<Sku string, Qty long>>, _dlt_id string",
         )
-        df = add_lineage(df, load_id="L1")
         tables = explode_nested(df, "order")
         assert set(tables) == {"order", "order__line_items"}
         parent = tables["order"]

@@ -3,9 +3,14 @@ replace snapshots, no-PK fallback, force_replace - §3.1 of SURVEY.md."""
 
 from __future__ import annotations
 
+import logging
+import os
+
 import pytest
 
 from dlt_salesforce_iceberg_rest_demo_spark import pipeline as pipeline_mod
+from dlt_salesforce_iceberg_rest_demo_spark.config import RESOURCES
+from dlt_salesforce_iceberg_rest_demo_spark.normalize import snake_case
 from dlt_salesforce_iceberg_rest_demo_spark.pipeline import SalesforcePipeline
 from dlt_salesforce_iceberg_rest_demo_spark.sinks import dispositions
 from dlt_salesforce_iceberg_rest_demo_spark.sinks.dispositions import ParquetLake
@@ -245,3 +250,104 @@ class TestCursorFromTheWrite:
         assert p.state.get("account") == info.cursors["account"]
         # the cursor mark rides the batch, not the table schema
         assert not any(f.metadata for f in p.lake.schema("account").fields)
+
+
+class TestLandedBatchReachesTheLake:
+    """The batch lands normalized (``read_object(..., load_id=)``): the
+    lake's write gets a bare ``LocalRelation``, and its schema alignment
+    returns the batch untouched."""
+
+    RESOURCES = ("account", "contact", "task")
+
+    def test_write_gets_a_bare_local_relation(self, spark, tmp_path, monkeypatch):
+        read, write, prepare = pipeline_mod.read_object, ParquetLake.write, ParquetLake._prepare
+        reads, plans, untouched = [], [], []
+
+        def read_spy(spark_, transport, sobject, **kwargs):
+            reads.append(sobject)
+            return read(spark_, transport, sobject, **kwargs)
+
+        def write_spy(self, df, *args, **kwargs):
+            plans.append(df._jdf.queryExecution().analyzed().getClass().getSimpleName())
+            return write(self, df, *args, **kwargs)
+
+        def prepare_spy(self, table, df):
+            out = prepare(self, table, df)
+            untouched.append(out is df)
+            return out
+
+        monkeypatch.setattr(pipeline_mod, "read_object", read_spy)
+        monkeypatch.setattr(ParquetLake, "write", write_spy)
+        monkeypatch.setattr(ParquetLake, "_prepare", prepare_spy)
+        make_pipeline(spark, tmp_path, version=1).run(self.RESOURCES)  # creates
+        make_pipeline(spark, tmp_path, version=2).run(self.RESOURCES)  # task idle
+        # the pipeline reads each resource once, through its own binding
+        assert reads == ["Account", "Contact", "Task"] * 2
+        assert plans == ["LocalRelation"] * 5
+        assert untouched == [True] * 5
+
+
+class TestIdlePoll:
+    """An incremental poll that finds nothing new, into a table that
+    exists, is not written: no Spark job, no manifest, no data dir."""
+
+    RESOURCES = ("account", "opportunity_contact_role", "task")
+    IDLE = {"opportunity_contact_role": "OpportunityContactRole", "task": "Task"}
+
+    def test_idle_polls_run_no_job_and_commit_nothing(
+        self, spark, tmp_path, monkeypatch, caplog
+    ):
+        make_pipeline(spark, tmp_path, version=1).run(self.RESOURCES)
+        p = make_pipeline(spark, tmp_path, version=2)
+        files = {t: sorted(os.listdir(tmp_path / "lake" / t)) for t in self.IDLE}
+        sc = spark.sparkContext
+        read = pipeline_mod.read_object
+
+        def group(sobject):
+            return f"{tmp_path.name}-{sobject}"
+
+        def read_spy(spark_, transport, sobject, **kwargs):
+            # every job until the next resource's read is this resource's
+            sc.setJobGroup(group(sobject), sobject)
+            return read(spark_, transport, sobject, **kwargs)
+
+        monkeypatch.setattr(pipeline_mod, "read_object", read_spy)
+        caplog.clear()  # the first load's W4 warning
+        with caplog.at_level(logging.WARNING, logger=dispositions.__name__):
+            try:
+                info = p.run(self.RESOURCES)
+            finally:
+                sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        tracker = sc.statusTracker()
+        assert len(tracker.getJobIdsForGroup(group("Account"))) > 0
+        for table, sobject in self.IDLE.items():
+            assert list(tracker.getJobIdsForGroup(group(sobject))) == [], table
+            assert sorted(os.listdir(tmp_path / "lake" / table)) == files[table]
+        # dlt never calls the destination for zero items: no W4 warning
+        assert "falling back to append" not in caplog.text
+        assert set(info.cursors) == {"account"}
+        # the report is the one the lake gives for the same empty batch
+        reports = {r.table: r for r in info.reports}
+        for table, sobject in self.IDLE.items():
+            cfg = RESOURCES[table]
+            empty = read(
+                spark,
+                p.transport,
+                sobject,
+                last_state=p.state.get(table),
+                replication_key=cfg.replication_key,
+                load_id="L",
+            )
+            pk = tuple(snake_case(k) for k in cfg.primary_key)
+            assert reports[table] == p.lake.write(empty, table, cfg.write_disposition, pk)
+        assert reports["task"].fallback_append
+
+    def test_idle_poll_under_audit_stages_nothing(self, spark, tmp_path):
+        make_pipeline(spark, tmp_path, version=1).run(self.RESOURCES)
+        audited = []
+        p = make_pipeline(spark, tmp_path, version=2)
+        info = p.run(self.RESOURCES, audit=lambda df, table: audited.append(table) or True)
+        assert audited == ["account"]
+        assert [r.rows_written for r in info.reports] == [2, 0, 0]
+        assert all(p.lake.branches(t) == {} for t in self.RESOURCES)

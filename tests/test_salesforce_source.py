@@ -12,9 +12,11 @@ from pyspark.errors import PySparkException, PySparkTypeError
 from pyspark.sql import functions as F
 
 import dlt_salesforce_iceberg_rest_demo_spark as pkg
+from dlt_salesforce_iceberg_rest_demo_spark.normalize import CURSOR_HINT, snake_case
 from dlt_salesforce_iceberg_rest_demo_spark.sources.datasource import SalesforceDataSource
 from dlt_salesforce_iceberg_rest_demo_spark.sources.salesforce import (
     BulkNotEnabledError,
+    MockTransport,
     ObjectMeta,
     SalesforceAuth,
     _records_to_dataframe,
@@ -23,7 +25,7 @@ from dlt_salesforce_iceberg_rest_demo_spark.sources.salesforce import (
     read_object,
 )
 
-from .fixtures_salesforce import datasource_options, make_transport
+from .fixtures_salesforce import datasource_options, f, make_transport, ts
 
 
 class TestSOQL:
@@ -268,6 +270,126 @@ class TestArrowLanding:
         # No LogicalRDD: nothing in the batch's plan runs a Python task.
         df = read_object(spark, make_transport(), "Account")
         assert _leaf_classes(df) == ["LocalRelation"]
+
+    @pytest.mark.parametrize("api_type", ["bulk", "standard"])
+    def test_zoneless_iso_string_raises(self, spark, api_type):
+        # Salesforce always sends a zone ('Z' or '+0000'); a string
+        # without one is refused rather than read in some local zone.
+        # Bulk sends no strings at all.
+        with pytest.raises(PySparkException, match="field When"):
+            self.land(spark, api_type, [1], ["2024-01-02T03:04:05.000"])
+
+
+class TestLandedBatch:
+    """``read_object(..., load_id=)`` lands the batch in its lake form:
+    dlt's normalize stage applied inside the Arrow table, with nothing
+    left for a projection to do."""
+
+    def land(self, spark, version=1, **kw):
+        return read_object(
+            spark,
+            make_transport(version),
+            "Account",
+            replication_key="LastModifiedDate",
+            load_id="L1",
+            **kw,
+        )
+
+    def test_names_are_snake_case_then_lineage(self, spark):
+        meta = object_meta(make_transport(), "Account")
+        df = self.land(spark)
+        assert df.columns == [snake_case(c) for c in meta.fields] + [
+            "_dlt_load_id",
+            "_dlt_id",
+        ]
+        assert {"last_modified_date", "number_of_employees"} <= set(df.columns)
+
+    def test_rows_and_types_equal_the_api_form(self, spark):
+        api = read_object(spark, make_transport(), "Account")
+        df = self.land(spark).drop("_dlt_load_id", "_dlt_id")
+        assert df.dtypes == [(snake_case(c), t) for c, t in api.dtypes]
+        assert sorted(map(tuple, df.collect())) == sorted(map(tuple, api.collect()))
+
+    def test_constant_load_id(self, spark):
+        assert {r["_dlt_load_id"] for r in self.land(spark, version=2).collect()} == {"L1"}
+
+    def test_one_unique_dlt_id_per_row_drawn_once(self, spark):
+        df = self.land(spark, version=2)
+        ids = [r["_dlt_id"] for r in df.collect()]
+        assert len(set(ids)) == len(ids) == 3
+        # every execution of the batch sees the same ids (a merge runs
+        # it more than once)
+        assert sorted(r["_dlt_id"] for r in df.collect()) == sorted(ids)
+
+    def test_cursor_column_is_marked(self, spark):
+        marks = {f.name: f.metadata for f in self.land(spark).schema.fields if f.metadata}
+        assert marks == {"last_modified_date": {CURSOR_HINT: True}}
+        api = read_object(spark, make_transport(), "Account", replication_key="LastModifiedDate")
+        assert not any(f.metadata for f in api.schema.fields)
+
+    def test_plan_is_a_bare_local_relation(self, spark):
+        plan = self.land(spark)._jdf.queryExecution().analyzed()
+        assert plan.getClass().getSimpleName() == "LocalRelation"
+
+    def test_empty_batch_keeps_the_lake_names(self, spark):
+        # (types of value-typed fields fall back to string: no value)
+        full = self.land(spark)
+        empty = self.land(spark, last_state="2099-01-01T00:00:00.000000Z")
+        assert empty.isEmpty()
+        assert empty.columns == full.columns
+
+
+class TestDateFieldsLand:
+    """describe type ``date`` lands as DateType through ``read_object``,
+    as it does through the Data Source, over both wire shapes."""
+
+    DESCRIBES = {
+        "Opportunity": [
+            f("Id", "id"),
+            f("Amount", "currency"),
+            f("CloseDate", "date"),
+            f("SystemModstamp", "datetime"),
+        ],
+        "Contact": [f("Id", "id"), f("Birthdate", "date"), f("SystemModstamp", "datetime")],
+    }
+    DATA = {
+        "Opportunity": [
+            {"Id": "006A", "Amount": 10.5, "CloseDate": "2024-03-31", "SystemModstamp": ts(2)},
+            {"Id": "006B", "Amount": 2.0, "CloseDate": None, "SystemModstamp": ts(3)},
+        ],
+        "Contact": [
+            {"Id": "003A", "Birthdate": "1915-12-10", "SystemModstamp": ts(1)},
+            {"Id": "003B", "Birthdate": "2006-02-28", "SystemModstamp": ts(2)},
+        ],
+    }
+
+    def transport(self, bulk_enabled, data=None):
+        return MockTransport(
+            describes=self.DESCRIBES, data=data or self.DATA, bulk_enabled=bulk_enabled
+        )
+
+    @pytest.mark.parametrize("bulk_enabled", [True, False], ids=["bulk", "standard"])
+    @pytest.mark.parametrize(
+        "sobject, field", [("Opportunity", "CloseDate"), ("Contact", "Birthdate")]
+    )
+    def test_read_object_equals_datasource(self, spark, bulk_enabled, sobject, field):
+        single = read_object(spark, self.transport(bulk_enabled), sobject)
+        dist = _datasource(spark, self.transport(bulk_enabled), sobject=sobject)
+        assert dict(single.dtypes)[field] == "date"
+        assert single.dtypes == dist.dtypes
+        assert sorted(single.collect()) == sorted(dist.collect())
+        want = {r["Id"]: r[field] for r in self.DATA[sobject]}
+        assert {
+            r["Id"]: r[field] and r[field].isoformat() for r in single.collect()
+        } == want
+
+    @pytest.mark.parametrize("bulk_enabled", [True, False], ids=["bulk", "standard"])
+    @pytest.mark.parametrize("bad", ["31/03/2024", "2024-02-30"])
+    def test_unparseable_date_raises(self, spark, bulk_enabled, bad):
+        rows = [{**self.DATA["Opportunity"][0], "CloseDate": bad}]
+        t = self.transport(bulk_enabled, {**self.DATA, "Opportunity": rows})
+        with pytest.raises(PySparkException, match="field CloseDate: unparseable date"):
+            read_object(spark, t, "Opportunity")
 
 
 class TestAuth:
