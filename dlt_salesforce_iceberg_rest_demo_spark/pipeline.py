@@ -1,7 +1,10 @@
 """End-to-end pipeline: the Spark-native `load()`
 (/root/reference/salesforce_pipeline.py:179-206, §3.1 of SURVEY.md).
 
-Per selected resource:
+The selected resources load side by side, one thread each
+(:func:`session.concurrently`; dlt extracts each resource in its own
+worker and keeps one writer per table per run). A resource named twice
+is refused before anything is extracted. Per resource:
 
 1. read the last cursor from the state store (dlt incremental parity);
 2. extract through the transport with P1-P5 pushdown (Bulk -> Standard
@@ -16,8 +19,13 @@ Per selected resource:
    the destination either): it runs no Spark job;
 4. advance the cursor to the max replication value of the batch, which
    the lake write observes while it executes the batch
-   (``WriteReport.cursor``; no job after the write), once the write has
-   returned.
+   (``WriteReport.cursor``; no job after the write), once that
+   resource's write has returned.
+
+A resource that fails does not stop the others: they finish, commit and
+advance their cursors; the failed resource's cursor stays where it was,
+and ``run`` raises its error once every resource is done. The reports
+and cursors of a successful run are in resource order.
 
 `force_replace` (W6, salesforce_pipeline.py:32-34,184-203): every
 resource is written as replace and the state store is wiped first.
@@ -35,6 +43,7 @@ from pyspark.sql import SparkSession
 
 from .config import DEFAULT_RESOURCES, RESOURCES, ResourceConfig
 from .normalize import new_load_id, snake_case
+from .session import concurrently
 from .sinks.dispositions import ParquetLake, WriteReport, falls_back_to_append
 from .sources.salesforce import Transport, read_object
 from .state import StateStore
@@ -79,27 +88,34 @@ class SalesforcePipeline:
         load_id: str | None = None,
         audit=None,
     ) -> LoadInfo:
-        """Load the selected resources. With ``audit`` set (a callable
+        """Load the selected resources, side by side (see the module
+        docstring). With ``audit`` set (a callable
         ``(DataFrame, table_name) -> bool``), every resource runs in
         WRITE-AUDIT-PUBLISH mode: the batch lands on a per-load BRANCH
         (``wap_{load_id}``), the audit inspects the branch's full table
         state, and only a passing audit fast-forwards main — a failing
         one drops the branch, leaves main untouched, and does NOT
         advance the incremental cursor (the failed batch re-extracts
-        next run). The governed-ingestion upgrade the reference cannot
-        express (PyIceberg single-writer, no branches; SURVEY §2.4).
+        next run). ``audit`` is called on the resource's own thread, so
+        several calls may run at once. The governed-ingestion upgrade
+        the reference cannot express (PyIceberg single-writer, no
+        branches; SURVEY §2.4).
         """
+        repeated = sorted({n for n in resources if resources.count(n) > 1})
+        if repeated:
+            raise ValueError(f"resources named more than once: {repeated}")
+        configs = [RESOURCES[name] for name in resources]
         if force_replace:
             self.state.reset()
         info = LoadInfo(load_id=load_id or new_load_id())
-        for name in resources:
-            cfg = RESOURCES[name]
-            report, cursor = self._load_resource(
-                cfg, info.load_id, force_replace, audit
-            )
+        loaded = concurrently(
+            lambda cfg: self._load_resource(cfg, info.load_id, force_replace, audit),
+            configs,
+        )
+        for cfg, (report, cursor) in zip(configs, loaded):
             info.reports.append(report)
             if cursor is not None:
-                info.cursors[name] = cursor
+                info.cursors[cfg.name] = cursor
         return info
 
     def _load_resource(

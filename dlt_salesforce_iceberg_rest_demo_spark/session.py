@@ -15,7 +15,9 @@ shape survives a multi-executor cluster at 100 TB:
 
 The reference runs one Python process end-to-end
 (``/root/reference/README.md:271``); this factory is the replacement for
-its implicit "execution engine".
+its implicit "execution engine". :func:`concurrently` is its worker
+pool: the one way the package submits independent driver-side work
+(one table's load or scan) side by side.
 """
 
 from __future__ import annotations
@@ -23,9 +25,20 @@ from __future__ import annotations
 import os
 import tempfile
 import zipfile
+from collections.abc import Callable, Iterable
+from concurrent.futures import ThreadPoolExecutor
+from contextvars import copy_context
 from pathlib import Path
+from typing import TypeVar
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import SparkSession
+
+_T = TypeVar("_T")
+_R = TypeVar("_R")
+
+# dlt's default number of load workers (``[load] workers``).
+WORKERS = 20
 
 _SHIPPED_APPS: set[str] = set()
 
@@ -146,3 +159,33 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def concurrently(fn: Callable[[_T], _R], items: Iterable[_T]) -> list[_R]:
+    """``[fn(item) for item in items]``, with the calls side by side on
+    up to :data:`WORKERS` threads, so independent Spark jobs and their
+    driver-side latency overlap instead of adding up.
+
+    Each call sees what the caller set: its Spark local properties (job
+    group, job description, scheduler pool) and tags, through
+    ``pyspark.inheritable_thread_target``, and a copy of its
+    ``contextvars`` context, so an open ``materialize.scope()`` owns
+    what a call materializes. Results come back in item order. Every
+    call runs to completion; then the exception of the first failed
+    item, in item order, is raised, with a note naming each later
+    failure. With 0 or 1 items ``fn`` runs in the caller's thread."""
+    items = list(items)
+    if len(items) <= 1:
+        return [fn(item) for item in items]
+    session = SparkSession.active()
+    with ThreadPoolExecutor(min(len(items), WORKERS)) as pool:
+        futures = [
+            pool.submit(inheritable_thread_target(session)(copy_context().run), fn, item)
+            for item in items
+        ]
+    errors = [e for e in (f.exception() for f in futures) if e is not None]
+    if errors:
+        for later in errors[1:]:
+            errors[0].add_note(f"a later item failed too: {later!r}")
+        raise errors[0]
+    return [f.result() for f in futures]

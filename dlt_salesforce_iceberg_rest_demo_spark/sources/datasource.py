@@ -51,25 +51,13 @@ from pyspark.sql.datasource import (
 from pyspark.sql import types as T
 
 from .salesforce import (
+    DESCRIBE_TYPES,
     SalesforceAuth,
     Transport,
     build_soql,
     fetch_records,
     object_meta,
 )
-
-# describe() type -> Spark type (reference lattice, SURVEY §1.2: ints
-# widen to long, floats to double, everything unknown to string).
-_TYPE_MAP: dict[str, T.DataType] = {
-    "datetime": T.TimestampType(),
-    "date": T.DateType(),
-    "int": T.LongType(),
-    "long": T.LongType(),
-    "double": T.DoubleType(),
-    "currency": T.DoubleType(),
-    "percent": T.DoubleType(),
-    "boolean": T.BooleanType(),
-}
 
 _B62 = "0123456789ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz"
 
@@ -148,7 +136,7 @@ class _RangePartition(InputPartition):
         self.hi = hi
 
 
-def _convert(v: Any, dtype: T.DataType, api_type: str) -> Any:
+def _convert(name: str, v: Any, dtype: T.DataType, api_type: str) -> Any:
     if v is None:
         return None
     if isinstance(dtype, T.TimestampType):
@@ -156,9 +144,12 @@ def _convert(v: Any, dtype: T.DataType, api_type: str) -> Any:
             return _dt.datetime.fromtimestamp(v / 1000.0, tz=_dt.timezone.utc).replace(
                 tzinfo=None
             )
-        return _dt.datetime.fromisoformat(str(v).replace("Z", "+00:00")).replace(
-            tzinfo=None
-        )
+        # ISO with its zone (`Z`, `+0000`, `+01:00`), as UTC; a string
+        # without one is refused, not read as local time (as read_object)
+        ts = _dt.datetime.fromisoformat(str(v).replace("Z", "+00:00"))
+        if ts.tzinfo is None:
+            raise ValueError(f"field {name}: unparseable datetime: {v!r} has no zone")
+        return ts.astimezone(_dt.timezone.utc).replace(tzinfo=None)
     if isinstance(dtype, T.DateType):  # "YYYY-MM-DD" in either shape
         return _dt.date.fromisoformat(str(v))
     if isinstance(dtype, T.LongType):
@@ -175,7 +166,7 @@ def _rows(schema: T.StructType, records: list[dict], api_type: str) -> list[tupl
     generator: Spark pickles a stream batch into its offset cache for
     failure replay."""
     fields = [(f.name, f.dataType) for f in schema.fields]
-    return [tuple(_convert(r.get(n), t, api_type) for n, t in fields) for r in records]
+    return [tuple(_convert(n, r.get(n), t, api_type) for n, t in fields) for r in records]
 
 
 class SalesforceReader(DataSourceReader):
@@ -237,7 +228,7 @@ class SalesforceDataSource(DataSource):
         meta = object_meta(transport_from_options(self.options), self.options["sobject"])
         return T.StructType(
             [
-                T.StructField(name, _TYPE_MAP.get(meta.types[name], T.StringType()), True)
+                T.StructField(name, DESCRIBE_TYPES.get(meta.types[name], T.StringType()), True)
                 for name in meta.fields
             ]
         )

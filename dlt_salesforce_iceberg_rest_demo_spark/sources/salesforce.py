@@ -446,7 +446,9 @@ def _landed(
     :func:`_column`) or a standard ISO string with its zone (`Z` or
     `+0000`; a string without one is refused, not read as local time).
     A `date` field is an ISO `YYYY-MM-DD` string in either shape. A bad
-    wire value raises naming the field, never a NULL."""
+    wire value raises naming the field, never a NULL. Any other field
+    is typed by its values (:func:`_column`), or by its describe type
+    (:data:`DESCRIBE_TYPES`) when the batch has no value for it."""
     if name in meta.date_fields and api_type == "bulk":
         _, millis = _column(name, values, int)
         wire = pa.array(millis, pa.int64()).cast(pa.timestamp("ms", tz="UTC"))
@@ -457,6 +459,10 @@ def _landed(
     if meta.types.get(name) == "date":
         wire = pa.array(_column(name, values, str)[1], pa.string())
         return T.DateType(), _cast(name, wire, pa.date32(), "date")
+    if all(v is None for v in values):
+        # an empty first poll must not freeze a numeric field as string
+        dtype = DESCRIBE_TYPES.get(meta.types.get(name), T.StringType())
+        return dtype, pa.nulls(len(values), to_arrow_type(dtype))
     dtype, values = _column(name, values)
     return dtype, pa.array(values, to_arrow_type(dtype))
 
@@ -467,6 +473,21 @@ def _cast(name: str, array: pa.Array, to: pa.DataType, what: str) -> pa.Array:
     except pa.ArrowInvalid as e:
         raise PySparkValueError(message=f"field {name}: unparseable {what}: {e}") from None
 
+
+# describe() type -> Spark type (reference lattice, SURVEY §1.2: ints
+# widen to long, floats to double, everything unknown to string). The
+# Data Source types every field by it; `read_object` types a field by
+# it when the batch has no value to type it by.
+DESCRIBE_TYPES: dict[str, T.DataType] = {
+    "datetime": T.TimestampType(),
+    "date": T.DateType(),
+    "int": T.LongType(),
+    "long": T.LongType(),
+    "double": T.DoubleType(),
+    "currency": T.DoubleType(),
+    "percent": T.DoubleType(),
+    "boolean": T.BooleanType(),
+}
 
 # Python type of a column's values -> Spark type, the reference's
 # widened lattice (SURVEY §1.2, iceberg/schema.py:37-40). Columns of any
@@ -482,8 +503,9 @@ def _column(
     must have exactly that type, else the column raises PySpark's
     `FIELD_DATA_TYPE_UNACCEPTABLE_WITH_NAME`. A column led by any other
     type, or all null, is string: each value rendered by ``str``, bools
-    lower-cased. ``kind`` pins the type instead (the datetime and date
-    wire shapes). These are the verdicts PySpark's row path gives the same
+    lower-cased (:func:`_landed` types an all-null field by its describe
+    type before it gets here). ``kind`` pins the type instead (the
+    datetime and date wire shapes). These are the verdicts PySpark's row path gives the same
     first-value schema. The check happens here because pyarrow would
     cast: ``[1, 2.5]`` in an int64 array silently becomes ``[1, 2]``."""
     if kind is None:

@@ -9,8 +9,11 @@ dir (I3, salesforce_pipeline.py:184-188).
 
 Here: a JSON file per pipeline. Deliberately tiny - state is per-table
 scalar watermarks, not data - and the file write is atomic
-(write-temp + rename) so a crashed run never corrupts state. At scale
-this would live in a catalog table; the interface doesn't change.
+(write-temp + rename) so a crashed run never corrupts state.
+`advance` and `reset` read-modify-write under an instance lock, so
+the pipeline's concurrent resource loads never drop each other's
+cursor. At scale this would live in a catalog table; the interface
+doesn't change.
 """
 
 from __future__ import annotations
@@ -18,6 +21,7 @@ from __future__ import annotations
 import json
 import os
 import tempfile
+import threading
 from dataclasses import dataclass
 from pathlib import Path
 
@@ -28,6 +32,7 @@ class StateStore:
 
     def __init__(self, path: str | os.PathLike[str]) -> None:
         self.path = Path(path)
+        self._lock = threading.Lock()
 
     def _read(self) -> dict[str, str]:
         if not self.path.exists():
@@ -44,22 +49,24 @@ class StateStore:
         idempotent (I4)."""
         if cursor_value is None:
             return
-        state = self._read()
-        prev = state.get(table)
-        if prev is None or cursor_value > prev:
-            state[table] = cursor_value
-            self._write(state)
+        with self._lock:
+            state = self._read()
+            prev = state.get(table)
+            if prev is None or cursor_value > prev:
+                state[table] = cursor_value
+                self._write(state)
 
     def reset(self, table: str | None = None) -> None:
         """I3 state reset: one table, or everything (force_replace's
         `shutil.rmtree` of the pipeline dir)."""
-        if table is None:
-            if self.path.exists():
-                self.path.unlink()
-            return
-        state = self._read()
-        state.pop(table, None)
-        self._write(state)
+        with self._lock:
+            if table is None:
+                if self.path.exists():
+                    self.path.unlink()
+                return
+            state = self._read()
+            state.pop(table, None)
+            self._write(state)
 
     def _write(self, state: dict[str, str]) -> None:
         self.path.parent.mkdir(parents=True, exist_ok=True)

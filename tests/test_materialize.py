@@ -38,6 +38,7 @@ OWNER = PKG / "operators" / "materialize.py"
 # Observations that watch something other than a materialization.
 OTHER_OBSERVATIONS = {
     PKG / "sinks" / "dispositions.py": "counts the rows of a lake write",
+    PKG / "check_tables.py": "counts the rows under a table's sample scan",
 }
 
 

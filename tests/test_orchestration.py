@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import uuid
+
 import pytest
 
 from dlt_salesforce_iceberg_rest_demo_spark import orchestration as orch
@@ -116,6 +118,38 @@ class TestCheckTables:
         assert len(acct["sample"]) <= 3
         assert len(acct["sample_columns"]) <= 5
         assert acct["location"].endswith("account")
+
+    def test_n_rows_is_the_live_count_in_one_job_per_table(self, spark, tmp_path):
+        lake = ParquetLake(spark, tmp_path / "lake")
+        schema = "id long, version long, op string, v string"
+        log = [(1, 1, "I", "a"), (2, 1, "I", "b"), (3, 1, "I", "c"), (4, 2, "D", None)]
+        lake.merge_cdc(spark.createDataFrame(log, schema), "cdc", "id", guard_stale=True)
+        lake.merge_cdc(
+            spark.createDataFrame([(2, 5, "D", None)], schema), "cdc", "id", guard_stale=True
+        )
+        assert lake.read("cdc", with_tombstones=True).count() == 4  # 2 tombstones
+        lake.replace(spark.createDataFrame([(1, "x")], "id long, v string"), "truncated")
+        lake.replace(spark.createDataFrame([], "id long, v string"), "truncated")
+        lake.replace(spark.range(1000).withColumnRenamed("id", "k"), "wide")
+        lake.create_table("empty", spark.range(0).schema)
+
+        sc = spark.sparkContext
+        group = f"check-tables-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "check_tables")
+        try:
+            report = check_tables(lake)
+        finally:
+            sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+
+        assert list(report) == lake.list_tables()
+        assert {t: r["n_rows"] for t, r in report.items()} == {
+            t: lake.count(t) for t in lake.list_tables()
+        }
+        assert report["cdc"]["n_rows"] == 2 and report["truncated"]["n_rows"] == 0
+        assert [row[0] for row in report["wide"]["sample"]] == [0, 1, 2]
+        # one job per table: the sample's scan, which also counts
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == len(report)
 
 
 class _FakeAirflowModule:

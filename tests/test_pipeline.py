@@ -5,8 +5,10 @@ from __future__ import annotations
 
 import logging
 import os
+import threading
 
 import pytest
+from pyspark.sql import types as T
 
 from dlt_salesforce_iceberg_rest_demo_spark import pipeline as pipeline_mod
 from dlt_salesforce_iceberg_rest_demo_spark.config import RESOURCES
@@ -16,7 +18,7 @@ from dlt_salesforce_iceberg_rest_demo_spark.sinks import dispositions
 from dlt_salesforce_iceberg_rest_demo_spark.sinks.dispositions import ParquetLake
 from dlt_salesforce_iceberg_rest_demo_spark.state import StateStore
 
-from .fixtures_salesforce import make_transport
+from .fixtures_salesforce import make_transport, ts
 
 
 def make_pipeline(spark, tmp_path, version=1):
@@ -279,10 +281,13 @@ class TestLandedBatchReachesTheLake:
         monkeypatch.setattr(pipeline_mod, "read_object", read_spy)
         monkeypatch.setattr(ParquetLake, "write", write_spy)
         monkeypatch.setattr(ParquetLake, "_prepare", prepare_spy)
+        # the pipeline reads each resource once per run, through its own
+        # binding (in no set order: the resources load side by side)
         make_pipeline(spark, tmp_path, version=1).run(self.RESOURCES)  # creates
+        assert sorted(reads) == ["Account", "Contact", "Task"]
+        reads.clear()
         make_pipeline(spark, tmp_path, version=2).run(self.RESOURCES)  # task idle
-        # the pipeline reads each resource once, through its own binding
-        assert reads == ["Account", "Contact", "Task"] * 2
+        assert sorted(reads) == ["Account", "Contact", "Task"]
         assert plans == ["LocalRelation"] * 5
         assert untouched == [True] * 5
 
@@ -351,3 +356,84 @@ class TestIdlePoll:
         assert audited == ["account"]
         assert [r.rows_written for r in info.reports] == [2, 0, 0]
         assert all(p.lake.branches(t) == {} for t in self.RESOURCES)
+
+
+class TestConcurrentResources:
+    """The resources of a run load side by side, one writer per table;
+    a failed resource stops neither the others nor their cursors."""
+
+    RESOURCES = ("account", "contact", "task")
+
+    def test_resources_extract_at_once(self, spark, tmp_path):
+        p = make_pipeline(spark, tmp_path)
+        # passes only if every resource is inside its extraction at once
+        barrier = threading.Barrier(len(self.RESOURCES), timeout=30)
+        query_bulk = p.transport.query_bulk
+
+        def waiting_query_bulk(sobject, soql):
+            barrier.wait()
+            yield from query_bulk(sobject, soql)
+
+        p.transport.query_bulk = waiting_query_bulk
+        info = p.run(self.RESOURCES)
+        # reports and cursors in resource order
+        assert [r.table for r in info.reports] == list(self.RESOURCES)
+        assert list(info.cursors) == ["account", "task"]
+        assert [p.lake.count(t) for t in self.RESOURCES] == [2, 2, 2]
+
+    def test_a_failed_resource_keeps_its_cursor_and_the_others_commit(
+        self, spark, tmp_path
+    ):
+        make_pipeline(spark, tmp_path, version=1).run(("account",))
+        p = make_pipeline(spark, tmp_path, version=2)
+        cursor0 = p.state.get("account")
+        query_bulk = p.transport.query_bulk
+
+        def failing_query_bulk(sobject, soql):
+            if sobject == "Account":
+                raise ConnectionError("Account extraction failed")
+            yield from query_bulk(sobject, soql)
+
+        p.transport.query_bulk = failing_query_bulk
+        with pytest.raises(ConnectionError, match="Account extraction failed"):
+            p.run(self.RESOURCES)
+        assert p.state.get("account") == cursor0
+        assert p.lake.count("account") == 2
+        # contact replaced by the v2 snapshot, task created, its cursor set
+        assert {r["id"] for r in p.lake.read("contact").collect()} == {"003B"}
+        assert p.lake.count("task") == 2
+        assert p.state.get("task").startswith(ts(5)[:10])
+
+    def test_a_resource_named_twice_is_refused_before_extraction(self, spark, tmp_path):
+        p = make_pipeline(spark, tmp_path)
+        with pytest.raises(ValueError, match="account"):
+            p.run(("account", "contact", "account"))
+        assert p.transport.queries_seen == []
+        assert p.lake.list_tables() == []
+
+
+class TestAllNullFieldsTypedByDescribe:
+    """A field with no value in its batch lands with its describe type,
+    so an empty first poll does not freeze numeric fields as strings."""
+
+    def test_empty_first_poll_then_rows(self, spark, tmp_path, monkeypatch):
+        p = make_pipeline(spark, tmp_path)
+        p.transport.data = {**p.transport.data, "Account": []}
+        p.run(("account",))
+        types = {f.name: f.dataType for f in p.lake.schema("account").fields}
+        assert types["annual_revenue"] == T.DoubleType()
+        assert types["number_of_employees"] == T.LongType()
+
+        prepare, untouched = ParquetLake._prepare, []
+
+        def prepare_spy(self, table, df):
+            out = prepare(self, table, df)
+            untouched.append(out is df)
+            return out
+
+        monkeypatch.setattr(ParquetLake, "_prepare", prepare_spy)
+        make_pipeline(spark, tmp_path, version=1).run(("account",))
+        assert untouched == [True]
+        rows = account_rows(p)
+        assert rows["001A"]["annual_revenue"] == 1_000_000.0
+        assert rows["001A"]["number_of_employees"] == 50

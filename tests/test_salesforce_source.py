@@ -332,11 +332,11 @@ class TestLandedBatch:
         assert plan.getClass().getSimpleName() == "LocalRelation"
 
     def test_empty_batch_keeps_the_lake_names(self, spark):
-        # (types of value-typed fields fall back to string: no value)
+        # a field with no value is typed by its describe type
         full = self.land(spark)
         empty = self.land(spark, last_state="2099-01-01T00:00:00.000000Z")
         assert empty.isEmpty()
-        assert empty.columns == full.columns
+        assert empty.dtypes == full.dtypes
 
 
 class TestDateFieldsLand:
@@ -390,6 +390,39 @@ class TestDateFieldsLand:
         t = self.transport(bulk_enabled, {**self.DATA, "Opportunity": rows})
         with pytest.raises(PySparkException, match="field CloseDate: unparseable date"):
             read_object(spark, t, "Opportunity")
+
+
+class TestIsoOffsets:
+    """Standard-shape datetimes with any zone offset land as the same UTC
+    instant through both readers; a string without a zone is refused."""
+
+    DESCRIBE = [f("Id", "id"), f("SystemModstamp", "datetime")]
+    WIRE = {
+        "001A": "2024-01-15T12:34:56.000+01:00",
+        "001B": "2024-01-15T11:34:56.000Z",
+        "001C": "2024-01-15T11:34:56.000+0000",
+        "001D": "2024-01-15T09:04:56.000-02:30",
+    }
+
+    def transport(self, wire):
+        rows = [{"Id": i, "SystemModstamp": v} for i, v in wire.items()]
+        return MockTransport(
+            describes={"Account": self.DESCRIBE}, data={"Account": rows}, bulk_enabled=False
+        )
+
+    def test_both_readers_apply_the_offset(self, spark):
+        single = read_object(spark, self.transport(self.WIRE), "Account")
+        dist = _datasource(spark, self.transport(self.WIRE))
+        instant = datetime.datetime(2024, 1, 15, 11, 34, 56)
+        assert sorted(single.collect()) == sorted(dist.collect())
+        assert {r["SystemModstamp"] for r in single.collect()} == {instant}
+
+    def test_both_readers_refuse_a_zoneless_string(self, spark):
+        t = self.transport({"001A": "2024-01-15T12:34:56.000"})
+        with pytest.raises(PySparkException, match="field SystemModstamp"):
+            read_object(spark, t, "Account")
+        with pytest.raises(Exception, match="field SystemModstamp: unparseable datetime"):
+            _datasource(spark, t).collect()
 
 
 class TestAuth:

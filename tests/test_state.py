@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import sys
+import threading
+
 from dlt_salesforce_iceberg_rest_demo_spark.state import StateStore
 
 
@@ -34,3 +37,28 @@ def test_reset_single_and_all(tmp_path):
 def test_persistence_across_instances(tmp_path):
     StateStore(tmp_path / "s.json").advance("t", "x")
     assert StateStore(tmp_path / "s.json").get("t") == "x"
+
+
+def test_concurrent_advances_lose_no_cursor(tmp_path):
+    # the pipeline advances each resource's cursor from its own thread
+    s = StateStore(tmp_path / "s.json")
+    tables = [f"t{i}" for i in range(16)]
+    start = threading.Barrier(len(tables), timeout=30)
+
+    def advance(table):
+        start.wait()
+        for step in range(20):
+            s.advance(table, f"2024-01-01T00:00:{step:02d}.000000Z")
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=advance, args=(t,)) for t in tables]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert {t: s.get(t) for t in tables} == {t: "2024-01-01T00:00:19.000000Z" for t in tables}
