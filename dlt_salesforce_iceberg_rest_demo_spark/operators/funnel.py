@@ -31,42 +31,6 @@ def _hop_filter(type_col, ts_col, step, max_gap_seconds):
     return cond
 
 
-def ordered_funnel(
-    events: DataFrame,
-    steps: list[str],
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    max_gap_seconds: int | None = None,
-) -> DataFrame:
-    """Per-step completion counts for the ordered ``steps`` list.
-
-    Returns one row per step: ``(step_index, step, n_users)`` where
-    ``n_users`` counts users whose funnel reached that step in order.
-    """
-    if not steps:
-        raise ValueError("steps must be non-empty")
-    stage = (
-        events.filter(F.col(type_col) == steps[0])
-        .groupBy(user_col)
-        .agg(F.min(ts_col).alias("__t"))
-    )
-    counts = [stage.count()]
-    for step in steps[1:]:
-        stage = (
-            events.join(stage, user_col)
-            .filter(_hop_filter(type_col, ts_col, step, max_gap_seconds))
-            .groupBy(user_col)
-            .agg(F.min(ts_col).alias("__t"))
-        )
-        counts.append(stage.count())
-    spark = events.sparkSession
-    return spark.createDataFrame(
-        [(i, s, int(c)) for i, (s, c) in enumerate(zip(steps, counts))],
-        "step_index int, step string, n_users bigint",
-    )
-
-
 def ordered_funnel_df(
     events: DataFrame,
     steps: list[str],
@@ -75,9 +39,11 @@ def ordered_funnel_df(
     ts_col: str = "ts",
     max_gap_seconds: int | None = None,
 ) -> DataFrame:
-    """Fully-lazy variant: one row per step via unioned count
-    aggregates (no driver-side count() actions), for registry use
-    where the result must be a single deferred DataFrame."""
+    """Per-step completion counts for the ordered ``steps`` list: one
+    row per step, ``(step_index, step, n_users)``, where ``n_users``
+    counts users whose funnel reached that step in order. Fully lazy:
+    the per-step counts are unioned aggregates of one deferred
+    DataFrame, with no driver-side action."""
     if not steps:
         raise ValueError("steps must be non-empty")
     stage = (

@@ -18,11 +18,21 @@ deployment) get real snapshot isolation:
 
 - each table is a directory of immutable data dirs plus numbered
   manifest files; a manifest lists the data dirs visible in that
-  snapshot;
-- a commit = write data dir(s) + write manifest N+1 + atomically rename
-  a pointer file. Readers resolve the pointer once - a crashed writer
+  snapshot, its commit time and its parent version, and every
+  manifest (the empty manifest 0 included) has that one shape;
+- one ref map per table, ``_REFS.json``, names every head the way
+  Iceberg table metadata's ``refs`` does: ``name -> {"version",
+  "type"}``, where ``main`` is the branch holding the published
+  snapshot, WAP branches are branches too, and tags pin a version.
+  Tags and branches share that one namespace, and ``main`` is reserved;
+- a commit = write data dir(s), write manifest N+1, then atomically
+  replace the ref map. Readers resolve a ref once - a crashed writer
   can never leave a half-visible table (STRICTLY better than the
-  reference's two-commit replace, which has a visible-empty window);
+  reference's two-commit replace, which has a visible-empty window).
+  The ref map is read, changed and replaced without a lock, so each
+  table has one writer at a time: ``SalesforcePipeline`` loads each
+  table on one thread (``session.concurrently`` gives each resource
+  one call, and a resource named twice is refused);
 - append never rewrites history (manifest N+1 = manifest N + new dir) -
   O(batch), not O(table);
 - merge is copy-on-write like Iceberg's MERGE INTO default: rewrite of
@@ -36,6 +46,10 @@ and two refs it commits to: main (:meth:`ParquetLake.write`) or a WAP
 branch (:meth:`ParquetLake.write_to_branch`). It is built from two
 primitives, append-or-skip (an empty batch commits nothing) and the
 copy-on-write rewrite, which ``merge_cdc`` shares.
+
+The layout has one format. A lake in the earlier layout (main's head
+and the branches each in a store of their own, manifest 0 a bare list)
+is neither read nor migrated: ``exists`` does not see its tables.
 
 The real-Iceberg path (same dispositions through ``MERGE INTO`` /
 ``writeTo``) lives in ``sinks.iceberg`` and activates when the runtime
@@ -51,9 +65,11 @@ import shutil
 from dataclasses import dataclass
 from pathlib import Path
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..normalize import (
     CANONICAL_TS_FORMAT,
@@ -81,6 +97,9 @@ TOMBSTONE_COL = "_cdc_deleted"
 # payload uses one of these would collide (ambiguous/duplicate columns,
 # or silent guard-state corruption), so merge_cdc rejects them up front.
 _CDC_RESERVED = ("last_version", TOMBSTONE_COL, "__op", "__base_v")
+
+# The branch that holds a table's published snapshot, in its ref map.
+MAIN = "main"
 
 
 @dataclass
@@ -127,6 +146,22 @@ def _columns(schema: T.StructType) -> list[tuple[str, T.DataType]]:
     return [(f.name, f.dataType) for f in schema.fields]
 
 
+def _refuse_main(table: str, name: str) -> None:
+    if name == MAIN:
+        raise ValueError(
+            f"{MAIN!r} is reserved for the published head of {table}"
+        )
+
+
+def _write_json(path: Path, data) -> None:
+    """Replace ``path`` with ``data`` as JSON in one atomic step (a temp
+    file, then a rename over it): a reader sees the old file or the new
+    one, never a half-written one."""
+    tmp = path.with_name(f"{path.name}.tmp")
+    tmp.write_text(json.dumps(data))
+    os.replace(tmp, path)
+
+
 class ParquetLake:
     """Snapshot-versioned parquet tables under one root directory."""
 
@@ -141,11 +176,11 @@ class ParquetLake:
         return sorted(
             p.name
             for p in self.root.iterdir()
-            if p.is_dir() and (p / "_POINTER").exists()
+            if p.is_dir() and (p / "_REFS.json").exists()
         )
 
     def exists(self, table: str) -> bool:
-        return (self.root / table / "_POINTER").exists()
+        return (self.root / table / "_REFS.json").exists()
 
     def table_location(self, table: str) -> str:
         return str(self.root / table)
@@ -161,10 +196,16 @@ class ParquetLake:
         *,
         with_tombstones: bool = False,
     ) -> DataFrame:
-        """Scan a snapshot (S4): the current one, ``version`` for time
-        travel (any manifest `vacuum` hasn't expired), or a named ref
-        (tag) created with :meth:`set_ref` — the Iceberg
-        ``VERSION AS OF 'tag'`` analog.
+        """Scan a snapshot (S4): main's head, ``version`` for time
+        travel (any manifest `vacuum` hasn't expired), or a ref name
+        from the table's ref map: a tag (:meth:`set_ref`), a branch
+        (:meth:`create_branch`) or ``"main"`` — the Iceberg ``VERSION
+        AS OF 'ref'`` analog.
+
+        A snapshot with no data dirs (a table created but never
+        written, or truncated by an empty replace) is an empty Arrow
+        table of the table schema: a ``LocalRelation``, so scanning it
+        starts no Python worker.
 
         Guard tombstones (see :meth:`merge_cdc` ``guard_stale``) are
         filtered out and the marker column dropped — readers see live
@@ -173,26 +214,18 @@ class ParquetLake:
         state survives merges and compactions (an equality-delete-file
         read analog: the scan applies the deletes, maintenance carries
         them)."""
-        if isinstance(version, str):
-            named = {**self.branches(table), **self.refs(table)}
-            if version not in named:
-                raise ValueError(
-                    f"ref or branch {version!r} does not exist on {table}"
-                )
-            version = named[version]
-        if version is None:
-            dirs = self._current_manifest(table)
-        else:
-            manifest = self.root / table / f"_MANIFEST.{version}.json"
-            if not manifest.exists():
-                raise ValueError(
-                    f"snapshot {version} of {table} does not exist "
-                    "(never written, or expired by vacuum)"
-                )
-            dirs = self._manifest_info(table, version)[0]
+        if version is None or isinstance(version, str):
+            version = self._head(table, version)
+        elif not self._manifest_path(table, version).exists():
+            raise ValueError(
+                f"snapshot {version} of {table} does not exist "
+                "(never written, or expired by vacuum)"
+            )
+        dirs = self._manifest(table, version)["dirs"]
         schema = self.schema(table)
         if not dirs:
-            df = self.spark.createDataFrame([], schema)
+            empty = pa.Table.from_batches([], to_arrow_schema(schema))
+            df = self.spark.createDataFrame(empty, schema)
         else:
             paths = [str(self.root / table / d) for d in dirs]
             df = self.spark.read.schema(schema).parquet(*paths)
@@ -203,8 +236,8 @@ class ParquetLake:
         return df
 
     def current_version(self, table: str) -> int:
-        """Public snapshot id for time travel / diff."""
-        return self._current_version(table)
+        """Public snapshot id for time travel / diff: main's head."""
+        return self._head(table)
 
     def diff(
         self, table: str, from_version: int, to_version: int | None = None
@@ -231,38 +264,82 @@ class ParquetLake:
         """A1 verification count - metadata-only on parquet footers."""
         return self.read(table).count()
 
+    # -- the ref map (Iceberg ``refs``): main, branches and tags ----------
+
+    def _ref_map(self, table: str) -> dict[str, dict]:
+        """``name -> {"version": int, "type": "branch" | "tag"}``, main
+        included; empty for a table that does not exist."""
+        p = self.root / table / "_REFS.json"
+        return json.loads(p.read_text()) if p.exists() else {}
+
+    def _put_ref(
+        self, table: str, name: str, version: int | None, kind: str = "branch"
+    ) -> None:
+        """Point ``name`` at ``version`` as a ``kind`` ref, or remove it
+        (``version`` None), in one atomic replace of the ref map."""
+        refs = self._ref_map(table)
+        if version is None:
+            refs.pop(name, None)
+        else:
+            refs[name] = {"version": version, "type": kind}
+        _write_json(self.root / table / "_REFS.json", refs)
+
+    def _head(self, table: str, ref: str | None = None) -> int:
+        """The version ``ref`` points at; main's head for None."""
+        entry = self._ref_map(table).get(ref or MAIN)
+        if entry is None:
+            raise ValueError(f"ref {ref or MAIN!r} does not exist on {table}")
+        return entry["version"]
+
+    def _named(self, table: str, kind: str) -> dict[str, int]:
+        return {
+            name: entry["version"]
+            for name, entry in self._ref_map(table).items()
+            if entry["type"] == kind and name != MAIN
+        }
+
+    def _claim(self, table: str, name: str, kind: str, version: int | None) -> int:
+        """Point the ``kind`` ref ``name`` at ``version`` (main's head
+        by default), the body of :meth:`set_ref` and
+        :meth:`create_branch`. ``main`` is reserved, and a name held by
+        the other kind is refused (``read`` resolves a name to one
+        ref); re-pinning a tag or re-forking a branch under its own
+        name is allowed."""
+        _refuse_main(table, name)
+        held = self._ref_map(table).get(name)
+        if held is not None and held["type"] != kind:
+            raise ValueError(f"{name!r} is already a {held['type']} of {table}")
+        v = self._head(table) if version is None else version
+        if not self._manifest_path(table, v).exists():
+            raise ValueError(f"snapshot {v} of {table} does not exist")
+        self._put_ref(table, name, v, kind)
+        return v
+
+    def _drop(self, table: str, name: str, kind: str) -> None:
+        """Remove the ``kind`` ref ``name`` if there is one, the body of
+        :meth:`drop_ref` and :meth:`drop_branch`."""
+        _refuse_main(table, name)
+        if self._ref_map(table).get(name, {}).get("type") == kind:
+            self._put_ref(table, name, None)
+
     # -- named snapshot refs (Iceberg tag analog) -------------------------
 
     def refs(self, table: str) -> dict[str, int]:
         """Named snapshot refs: tag name -> pinned version."""
-        p = self.root / table / "_REFS.json"
-        return json.loads(p.read_text()) if p.exists() else {}
+        return self._named(table, "tag")
 
     def set_ref(self, table: str, name: str, version: int | None = None) -> int:
-        """Pin a name to a snapshot (current one by default) — the
+        """Pin a name to a snapshot (main's head by default) — the
         Iceberg tag: reproducible reads (`read(table, 'ref')`) that
         survive later commits, and a retention root for `vacuum`
         (tagged snapshots never expire — same contract as Iceberg's
         expire_snapshots). Audit/eval pipelines tag the snapshot they
-        ran on; retraining reads the tag, not 'whatever is current'."""
-        if name in self.branches(table):
-            raise ValueError(f"{name!r} is already a branch of {table}")
-        v = self._current_version(table) if version is None else version
-        if not (self.root / table / f"_MANIFEST.{v}.json").exists():
-            raise ValueError(f"snapshot {v} of {table} does not exist")
-        refs = self.refs(table)
-        refs[name] = v
-        tmp = self.root / table / f"_REFS.tmp.{name}"
-        tmp.write_text(json.dumps(refs))
-        os.replace(tmp, self.root / table / "_REFS.json")
-        return v
+        ran on; retraining reads the tag, not 'whatever is current'.
+        Raises ValueError for ``"main"`` and for a branch's name."""
+        return self._claim(table, name, "tag", version)
 
     def drop_ref(self, table: str, name: str) -> None:
-        refs = self.refs(table)
-        refs.pop(name, None)
-        tmp = self.root / table / f"_REFS.tmp.{name}"
-        tmp.write_text(json.dumps(refs))
-        os.replace(tmp, self.root / table / "_REFS.json")
+        self._drop(table, name, "tag")
 
     def schema(self, table: str) -> T.StructType:
         schema_file = self.root / table / "_SCHEMA.json"
@@ -270,177 +347,75 @@ class ParquetLake:
 
     # -- snapshot plumbing -------------------------------------------------
 
-    def _pointer(self, table: str) -> Path:
-        return self.root / table / "_POINTER"
+    def _manifest_path(self, table: str, v: int) -> Path:
+        return self.root / table / f"_MANIFEST.{v}.json"
 
-    def _current_version(self, table: str) -> int:
-        return int(self._pointer(table).read_text())
-
-    def _manifest_info(self, table: str, v: int) -> tuple[list[str], int | None]:
-        """Manifest payload: (data dirs, commit epoch-micros). Reads
-        both formats — the original bare dir list (committed_at None)
-        and the current {"dirs", "committed_at"} dict."""
-        data = json.loads(
-            (self.root / table / f"_MANIFEST.{v}.json").read_text()
-        )
-        if isinstance(data, list):
-            return data, None
-        return data["dirs"], data.get("committed_at")
-
-    def _head(self, table: str, ref: str | None) -> int:
-        """Head version of ``ref``: main's pointer (None) or a branch."""
-        if ref is None:
-            return self._current_version(table)
-        return self._branch_version(table, ref)
+    def _manifest(self, table: str, v: int) -> dict:
+        """Manifest ``v``: ``{"dirs", "committed_at", "parent"}``, the
+        commit time in epoch micros (None for manifest 0) and the
+        parent version (None for manifest 0)."""
+        return json.loads(self._manifest_path(table, v).read_text())
 
     def _current_manifest(self, table: str, ref: str | None = None) -> list[str]:
-        return self._manifest_info(table, self._head(table, ref))[0]
+        return self._manifest(table, self._head(table, ref))["dirs"]
 
-    def _commit(self, table: str, data_dirs: list[str], branch: str | None = None) -> None:
-        """Write a new manifest then atomically swing a pointer — the
-        main ``_POINTER`` or a branch head. Manifests record commit
-        wall-clock (epoch micros, for AS-OF time travel) and their
-        PARENT version (for fast-forward ancestry checks). Version
-        numbers are allocated globally (1 + max existing manifest), so
-        branch and main histories never collide."""
+    def _commit(self, table: str, data_dirs: list[str], ref: str | None = None) -> None:
+        """Write a new manifest, then move ``ref`` (main for None) to it
+        in the ref map. Manifests record commit wall-clock (epoch
+        micros, for AS-OF time travel) and their PARENT version (for
+        fast-forward ancestry checks). Version numbers are allocated
+        globally (1 + max existing manifest), so branch and main
+        histories never collide."""
         import time
 
         tdir = self.root / table
-        parent = self._head(table, branch)
+        parent = self._head(table, ref)
         existing = [int(m.name.split(".")[1]) for m in tdir.glob("_MANIFEST.*.json")]
         v = (max(existing) if existing else -1) + 1
-        (tdir / f"_MANIFEST.{v}.json").write_text(
-            json.dumps(
-                {
-                    "dirs": data_dirs,
-                    "committed_at": time.time_ns() // 1000,
-                    "parent": parent,
-                }
-            )
+        _write_json(
+            self._manifest_path(table, v),
+            {
+                "dirs": data_dirs,
+                "committed_at": time.time_ns() // 1000,
+                "parent": parent,
+            },
         )
-        if branch is not None:
-            self._write_branches(table, {**self.branches(table), branch: v})
-        else:
-            tmp = tdir / f"_POINTER.tmp.{v}"
-            tmp.write_text(str(v))
-            os.replace(tmp, self._pointer(table))
+        self._put_ref(table, ref or MAIN, v)
 
     # -- branches (Iceberg branch / write-audit-publish analog) ----------
 
     def branches(self, table: str) -> dict[str, int]:
-        """Named MUTABLE heads: branch name -> head version. Unlike tags
-        (:meth:`set_ref`, pinned forever), a branch advances when
-        written to via :meth:`write_to_branch`."""
-        p = self.root / table / "_BRANCHES.json"
-        return json.loads(p.read_text()) if p.exists() else {}
-
-    def _write_branches(self, table: str, branches: dict[str, int]) -> None:
-        tmp = self.root / table / "_BRANCHES.tmp"
-        tmp.write_text(json.dumps(branches))
-        os.replace(tmp, self.root / table / "_BRANCHES.json")
-
-    def _branch_version(self, table: str, name: str) -> int:
-        b = self.branches(table)
-        if name not in b:
-            raise ValueError(f"branch {name!r} does not exist on {table}")
-        return b[name]
+        """Named MUTABLE heads other than main: branch name -> head
+        version. Unlike tags (:meth:`set_ref`, pinned forever), a branch
+        advances when written to via :meth:`write_to_branch`."""
+        return self._named(table, "branch")
 
     def create_branch(self, table: str, name: str, version: int | None = None) -> int:
-        """Fork a branch at a snapshot (current main by default) — the
+        """Fork a branch at a snapshot (main's head by default) — the
         Iceberg branch, enabling WRITE-AUDIT-PUBLISH: load into the
         branch, validate it (`operators.expectations.check_report` over
         ``read(table, branch)``), then :meth:`fast_forward` main. A
         failed audit just drops the branch; main never saw bad data.
-        A tag and a branch never share a name (``read`` would resolve
-        it to the tag)."""
-        if name in self.refs(table):
-            raise ValueError(f"{name!r} is already a tag of {table}")
-        v = self._current_version(table) if version is None else version
-        if not (self.root / table / f"_MANIFEST.{v}.json").exists():
-            raise ValueError(f"snapshot {v} of {table} does not exist")
-        self._write_branches(table, {**self.branches(table), name: v})
-        return v
+        Raises ValueError for ``"main"`` (only :meth:`fast_forward`
+        moves main) and for a tag's name."""
+        return self._claim(table, name, "branch", version)
 
     def drop_branch(self, table: str, name: str) -> None:
-        b = self.branches(table)
-        b.pop(name, None)
-        self._write_branches(table, b)
-
-    def _manifest_parent(self, table: str, v: int) -> int | None:
-        data = json.loads((self.root / table / f"_MANIFEST.{v}.json").read_text())
-        return data.get("parent") if isinstance(data, dict) else None
-
-    def _is_legacy_manifest(self, table: str, v: int) -> bool:
-        """True iff manifest ``v`` predates lineage recording: a bare
-        dir list, or a dict with no "parent" key at all. A dict whose
-        parent is present (even if null for a root) is lineage-era and
-        therefore reachable via parent chains if it was ever on main."""
-        data = json.loads((self.root / table / f"_MANIFEST.{v}.json").read_text())
-        return not isinstance(data, dict) or "parent" not in data
+        self._drop(table, name, "branch")
 
     def _main_ancestry(self, table: str, limit: int | None = None) -> list[int]:
         """Versions along MAIN's parent chain, newest first, starting at
-        the current pointer. The chain is the published lineage — branch
-        heads and orphaned WAP staging manifests are never on it (until
-        a fast_forward publishes them). Stops cleanly at the root or at
-        lineage `vacuum` already expired; ``limit`` caps the walk.
-
-        LEGACY FALLBACK: if the chain breaks at a pre-lineage manifest
-        (no recorded parent, but numerically older manifests still on
-        disk), the walk extends with the descending numeric window and
-        warns — expiring real pre-lineage history (or refusing AS-OF
-        resolution past the break) would be a silent behavior change vs
-        the old numeric-window retention. The window admits ONLY
-        legacy-format manifests (no recorded parent): lineage-era
-        commits always record their parent (:meth:`_commit`), so any
-        parented manifest below the break is branch lineage or an
-        orphaned WAP staging manifest that was never published on main —
-        including those would let ``version_as_of`` resolve timestamp
-        travel to a snapshot main never saw, and would break the
-        monotone-commit-time ordering its early return relies on
-        (pre-lineage manifests are numbered monotonically with commit
-        time because branches did not exist pre-lineage)."""
+        main's head. The chain is the published lineage — branch heads
+        and orphaned WAP staging manifests are never on it (until a
+        fast_forward publishes them). Stops at manifest 0 (no parent),
+        at a manifest `vacuum` expired, or after ``limit`` versions."""
         chain: list[int] = []
-        v: int | None = self._current_version(table)
-        expired = False
+        v: int | None = self._head(table)
         while v is not None and (limit is None or len(chain) < limit):
-            if not (self.root / table / f"_MANIFEST.{v}.json").exists():
-                expired = True  # vacuumed lineage: genuine end of history
+            if not self._manifest_path(table, v).exists():
                 break
             chain.append(v)
-            v = self._manifest_parent(table, v)
-        if (
-            not expired
-            and v is None
-            and chain
-            and (limit is None or len(chain) < limit)
-        ):
-            older = sorted(
-                (
-                    w
-                    for w in (
-                        int(m.name.split(".")[1])
-                        for m in (self.root / table).glob("_MANIFEST.*.json")
-                    )
-                    if w < chain[-1]
-                    and w not in chain
-                    and self._is_legacy_manifest(table, w)
-                ),
-                reverse=True,
-            )
-            if older:
-                logger.warning(
-                    "lineage of %s breaks at legacy manifest v%d (no "
-                    "recorded parent); falling back to the numeric "
-                    "version window over %d older manifest(s)",
-                    table,
-                    chain[-1],
-                    len(older),
-                )
-                for w in older:
-                    if limit is not None and len(chain) >= limit:
-                        break
-                    chain.append(w)
+            v = self._manifest(table, v)["parent"]
         return chain
 
     def fast_forward(self, table: str, branch: str) -> int:
@@ -451,12 +426,15 @@ class ParquetLake:
         nothing was committed to main since the fork — the Iceberg
         fast_forward contract; a diverged main must be resolved by
         re-branching, never silently overwritten."""
-        head = self._branch_version(table, branch)
-        current = self._current_version(table)
+        heads = self.branches(table)
+        if branch not in heads:
+            raise ValueError(f"branch {branch!r} does not exist on {table}")
+        head = heads[branch]
+        current = self._head(table)
         v: int | None = head
         while v is not None and v > current:
             try:
-                v = self._manifest_parent(table, v)
+                v = self._manifest(table, v)["parent"]
             except FileNotFoundError:
                 # Interior branch lineage expired by vacuum: the walk can
                 # no longer prove ancestry — same clean refusal as a
@@ -467,23 +445,19 @@ class ParquetLake:
                 f"main of {table} (v{current}) is not an ancestor of "
                 f"branch {branch!r} (v{head}); cannot fast-forward"
             )
-        tdir = self.root / table
-        tmp = tdir / f"_POINTER.tmp.ff{head}"
-        tmp.write_text(str(head))
-        os.replace(tmp, self._pointer(table))
+        self._put_ref(table, MAIN, head)
         return head
 
     def version_as_of(self, table: str, as_of) -> int:
         """Resolve the snapshot current AS OF a wall-clock instant
         (Iceberg `TIMESTAMP AS OF` / `snapshot_id_as_of`): the newest
         MAIN-lineage ancestor whose commit time <= ``as_of`` (datetime
-        or epoch micros). Resolution walks the current pointer's parent
-        chain — branch commits and dropped (audit-failed) WAP staging
-        manifests are invisible, matching Iceberg's contract that
-        timestamp travel follows the main branch history only.
-        Pre-timestamp legacy manifests (and the empty manifest 0,
-        written by create_table without a timestamp) only resolve by
-        explicit version number."""
+        or epoch micros). Resolution walks main's parent chain — branch
+        commits and dropped (audit-failed) WAP staging manifests are
+        invisible, matching Iceberg's contract that timestamp travel
+        follows the main branch history only. The empty manifest 0
+        carries no commit time, so it resolves only by explicit version
+        number."""
         import datetime as _dt
 
         if isinstance(as_of, _dt.datetime):
@@ -491,7 +465,7 @@ class ParquetLake:
         # Commit times are monotone along the parent chain (child commits
         # after parent), so the first qualifying ancestor is the answer.
         for v in self._main_ancestry(table):
-            _, ts = self._manifest_info(table, v)
+            ts = self._manifest(table, v)["committed_at"]
             if ts is not None and ts <= as_of:
                 return v
         raise ValueError(
@@ -511,14 +485,14 @@ class ParquetLake:
         load's I/O."""
         tdir = self.root / table
         # Allocate past any existing dir, not main-version + 1: branch
-        # commits write data dirs without advancing the main pointer,
-        # so version-derived names would collide on the next write.
+        # commits write data dirs without advancing main's head, so
+        # version-derived names would collide on the next write.
         existing = [
             int(p.name.split("_")[1])
             for p in tdir.glob("data_*")
             if p.name.split("_")[1].isdigit()
         ]
-        v = max(existing, default=self._current_version(table)) + 1
+        v = max(existing, default=self._head(table)) + 1
         name = f"data_{v:06d}"
         obs = Observation(f"rows_{table}_{v}")
         writer = df.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
@@ -551,15 +525,18 @@ class ParquetLake:
         tdir = self.root / table
         tdir.mkdir(parents=True, exist_ok=True)
         final_schema = nullable_everything(widen_types(schema))
-        (tdir / "_SCHEMA.json").write_text(json.dumps(final_schema.jsonValue()))
+        _write_json(tdir / "_SCHEMA.json", final_schema.jsonValue())
         props = dict(properties or DEFAULT_TABLE_PROPERTIES)
         if partition_by:
             props["partition-by"] = ",".join(partition_by)
-        (tdir / "_PROPERTIES.json").write_text(json.dumps(props))
-        (tdir / "_MANIFEST.0.json").write_text(json.dumps([]))
-        tmp = tdir / "_POINTER.tmp.0"
-        tmp.write_text("0")
-        os.replace(tmp, self._pointer(table))
+        _write_json(tdir / "_PROPERTIES.json", props)
+        _write_json(
+            self._manifest_path(table, 0),
+            {"dirs": [], "committed_at": None, "parent": None},
+        )
+        # The ref map comes last: it is the table's commit point, so a
+        # crash before it leaves no table that `exists` would report.
+        self._put_ref(table, MAIN, 0)
 
     def drop_table(self, table: str) -> None:
         shutil.rmtree(self.root / table, ignore_errors=True)
@@ -597,10 +574,7 @@ class ParquetLake:
         new_schema = T.StructType(
             current.fields + [T.StructField(f.name, f.dataType, True) for f in added]
         )
-        tdir = self.root / table
-        tmp = tdir / "_SCHEMA.tmp.json"
-        tmp.write_text(json.dumps(new_schema.jsonValue()))
-        os.replace(tmp, tdir / "_SCHEMA.json")
+        _write_json(self.root / table / "_SCHEMA.json", new_schema.jsonValue())
         return [f.name for f in added]
 
     # -- W1-W4 dispositions: one body, committed to main or a branch -------
@@ -1092,29 +1066,27 @@ class ParquetLake:
 
     def vacuum(self, table: str, keep_last: int = 1) -> list[str]:
         """Expire old snapshots: keep the last ``keep_last`` snapshots of
-        MAIN's lineage (walking the current pointer's parent chain, not
-        a numeric version range — versions are allocated globally across
+        MAIN's lineage (walking main's parent chain, not a numeric
+        version range — versions are allocated globally across
         branches, so a numeric window would retain rejected WAP staging
-        manifests while expiring real main history), delete older
-        manifests and any data dir no kept manifest references. Orphaned
-        branch manifests (dropped after a failed audit) are reclaimed
-        here. Time travel shortens to the kept window; the current
-        snapshot is never touched. Returns the deleted data dirs
-        (relative names) for audit logging."""
+        manifests while expiring real main history) and the version of
+        every ref, delete older manifests and any data dir no kept
+        manifest references. Orphaned branch manifests (dropped after a
+        failed audit) are reclaimed here. Time travel shortens to the
+        kept window; main's head is never touched. Returns the deleted
+        data dirs (relative names) for audit logging."""
         tdir = self.root / table
         keep = set(self._main_ancestry(table, limit=keep_last))
-        # Tagged snapshots and branch HEADS are retention roots (Iceberg
-        # expire_snapshots contract): their manifests and data dirs
-        # never expire. (Interior branch lineage may expire — a later
-        # fast_forward of a vacuumed-through branch then refuses, the
-        # safe failure mode.)
-        keep.update(self.refs(table).values())
-        keep.update(self.branches(table).values())
+        # Every ref — tags and branch HEADS — is a retention root
+        # (Iceberg expire_snapshots contract): its manifest and data
+        # dirs never expire. (Interior branch lineage may expire — a
+        # later fast_forward of a vacuumed-through branch then refuses,
+        # the safe failure mode.)
+        keep.update(entry["version"] for entry in self._ref_map(table).values())
         referenced: set[str] = set()
         for v in keep:
-            manifest = tdir / f"_MANIFEST.{v}.json"
-            if manifest.exists():
-                referenced.update(self._manifest_info(table, v)[0])
+            if self._manifest_path(table, v).exists():
+                referenced.update(self._manifest(table, v)["dirs"])
         deleted = []
         for p in sorted(tdir.glob("data_*")):
             if p.name not in referenced:

@@ -3,7 +3,9 @@ the end-to-end disposition tests SURVEY §5 calls for."""
 
 from __future__ import annotations
 
+import json
 import logging
+import re
 from pathlib import Path
 
 import pytest
@@ -84,6 +86,38 @@ class TestCreateAndAppend:
         assert "junk" not in lake.read("t").columns
 
 
+class TestEmptyRead:
+    """A snapshot with no data dirs reads as an Arrow ``LocalRelation``
+    of the table schema: no pickled rows, so no Python worker task."""
+
+    SCHEMA = T.StructType(
+        [
+            T.StructField(name, dtype)
+            for name, dtype in [
+                ("id", T.LongType()),
+                ("x", T.DoubleType()),
+                ("s", T.StringType()),
+                ("ts", T.TimestampType()),
+                ("d", T.DateType()),
+                ("flag", T.BooleanType()),
+                ("amount", T.DecimalType(18, 2)),
+                ("tags", T.ArrayType(T.StringType())),
+            ]
+        ]
+    )
+
+    def test_unwritten_table_is_a_local_relation(self, spark, tmp_path):
+        lake = make_lake(spark, tmp_path)
+        lake.create_table("t", self.SCHEMA)
+        dtypes = [(f.name, f.dataType.simpleString()) for f in lake.schema("t").fields]
+        for df in (lake.read("t"), lake.read("t", 0)):
+            leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+            classes = [leaves.apply(i).getClass().getSimpleName() for i in range(leaves.size())]
+            assert classes == ["LocalRelation"]
+            assert df.dtypes == dtypes
+            assert df.collect() == []
+
+
 class TestReplace:
     def test_replace_supplants(self, spark, tmp_path):
         lake = make_lake(spark, tmp_path)
@@ -94,10 +128,10 @@ class TestReplace:
     def test_replace_is_single_snapshot(self, spark, tmp_path):
         lake = make_lake(spark, tmp_path)
         lake.append(df_of(spark, [Row(id=1, v="a")]), "t")
-        v_before = lake._current_version("t")
+        v_before = lake.current_version("t")
         lake.replace(df_of(spark, [Row(id=2, v="b")]), "t")
         # exactly one commit (reference needs delete+append = two)
-        assert lake._current_version("t") == v_before + 1
+        assert lake.current_version("t") == v_before + 1
 
 
 class TestMerge:
@@ -188,7 +222,7 @@ class TestMaintenance:
         versions = sorted(
             int(m.name.split(".")[1]) for m in tdir.glob("_MANIFEST.*.json")
         )
-        assert versions == [lake._current_version("t")]
+        assert versions == [lake.current_version("t")]
 
     def test_vacuum_keep_last_two_preserves_previous_snapshot(self, spark, tmp_path):
         lake = make_lake(spark, tmp_path)
@@ -928,74 +962,6 @@ class TestBranchesWap:
         with _pytest.raises(ValueError, match="not an ancestor"):
             lake.fast_forward("t", "stage")
 
-    def test_vacuum_legacy_lineage_break_falls_back_to_numeric_window(
-        self, spark, tmp_path
-    ):
-        """A pre-lineage manifest (no recorded parent) mid-history must
-        NOT truncate retention/AS-OF there: the walk falls back to the
-        numeric version window so vacuum(keep_last=N) still retains N
-        real snapshots and version_as_of resolves past the break."""
-        import datetime as dt
-        import json as _json
-        import time
-
-        lake = make_lake(spark, tmp_path)
-        lake.replace(df_of(spark, [Row(id=1, v="v1")]), "t")
-        v1 = lake.current_version("t")
-        time.sleep(0.01)
-        t_after_v1 = dt.datetime.now()
-        time.sleep(0.01)
-        lake.append(df_of(spark, [Row(id=2, v="v2")]), "t")
-        v2 = lake.current_version("t")
-        lake.append(df_of(spark, [Row(id=3, v="v3")]), "t")
-        lake.append(df_of(spark, [Row(id=4, v="v4")]), "t")
-        # Simulate a legacy migration: every manifest at/below the break
-        # predates lineage recording (real pre-lineage history has NO
-        # parent keys anywhere — branches did not exist then).
-        for w in (v1, v2):
-            mpath = lake.root / "t" / f"_MANIFEST.{w}.json"
-            data = _json.loads(mpath.read_text())
-            data.pop("parent", None)
-            mpath.write_text(_json.dumps(data))
-        assert v1 in lake._main_ancestry("t")  # fallback window reaches v1
-        # AS-OF resolution crosses the break to the real older snapshot
-        assert lake.version_as_of("t", t_after_v1) == v1
-        lake.vacuum("t", keep_last=4)
-        assert {r.v for r in lake.read("t", v1).collect()} == {"v1"}
-
-    def test_legacy_window_excludes_lineage_era_orphans(
-        self, spark, tmp_path
-    ):
-        """A lineage-era manifest below a legacy break (an orphaned WAP
-        staging commit or branch-only commit — it records a parent) must
-        NOT enter the numeric fallback window: timestamp travel would
-        otherwise resolve to a snapshot never published on main."""
-        import json as _json
-
-        lake = make_lake(spark, tmp_path)
-        lake.replace(df_of(spark, [Row(id=1, v="v1")]), "t")
-        v1 = lake.current_version("t")
-        # Orphaned WAP staging commit: branch commit whose branch is
-        # then dropped without publishing (failed audit).
-        lake.create_branch("t", "wap")
-        lake.write_to_branch(
-            df_of(spark, [Row(id=9, v="orphan")]), "t", "append", branch="wap"
-        )
-        orphan = lake._branch_version("t", "wap")
-        lake.drop_branch("t", "wap")
-        lake.append(df_of(spark, [Row(id=2, v="v2")]), "t")
-        lake.append(df_of(spark, [Row(id=3, v="v3")]), "t")
-        head = lake.current_version("t")
-        # Legacy break at the head: strip its parent (pre-lineage form).
-        mpath = lake.root / "t" / f"_MANIFEST.{head}.json"
-        data = _json.loads(mpath.read_text())
-        data.pop("parent", None)
-        mpath.write_text(_json.dumps(data))
-        ancestry = lake._main_ancestry("t")
-        assert orphan not in ancestry  # parented ⇒ never in the window
-        assert v1 not in ancestry  # lineage-era real history: also out —
-        # conservative, matches "stop at the break" for parented manifests
-
     def test_vacuum_keeps_branch_head(self, spark, tmp_path):
         lake = make_lake(spark, tmp_path)
         lake.replace(df_of(spark, [Row(id=1, v="a")]), "t")
@@ -1041,6 +1007,67 @@ class TestBranchesWap:
         # not a clash
         lake.set_ref("t", "tag")
         lake.create_branch("t", "branch")
+
+    def test_main_is_reserved(self, spark, tmp_path):
+        # "main" names the published head in the ref map: tagging it would
+        # shadow it, forking it would move main past fast_forward's
+        # ancestry check, and dropping it would delete the table's head.
+        lake = make_lake(spark, tmp_path)
+        lake.replace(df_of(spark, [Row(id=1, v="a")]), "t")
+        head = lake.current_version("t")
+        lake.write_to_branch(
+            df_of(spark, [Row(id=2, v="b")]), "t", "append", branch="stage"
+        )
+        staged = lake.branches("t")["stage"]
+        for call in (
+            lambda: lake.set_ref("t", "main"),
+            lambda: lake.create_branch("t", "main", staged),
+            lambda: lake.drop_ref("t", "main"),
+            lambda: lake.drop_branch("t", "main"),
+        ):
+            with pytest.raises(ValueError, match="reserved"):
+                call()
+        assert lake.current_version("t") == head
+        assert lake.refs("t") == {} and lake.branches("t") == {"stage": staged}
+        assert sorted(lake.read("t", "main").collect()) == sorted(lake.read("t").collect())
+        assert sorted(rows_by_id(lake, "t")) == [1]
+
+
+class TestOneLayout:
+    """Each table keeps its heads in one ref map and writes one manifest
+    shape, through create, append, tag, branch write, publish and
+    vacuum."""
+
+    def test_one_ref_map_and_one_manifest_shape(self, spark, tmp_path):
+        lake = make_lake(spark, tmp_path)
+        lake.replace(df_of(spark, [Row(id=1, v="a")]), "t")
+        lake.append(df_of(spark, [Row(id=2, v="b")]), "t")
+        tagged = lake.set_ref("t", "tag")
+        lake.write_to_branch(
+            df_of(spark, [Row(id=3, v="c")]), "t", "merge", ("id",), branch="stage"
+        )
+        head = lake.fast_forward("t", "stage")
+        lake.write_to_branch(
+            df_of(spark, [Row(id=4, v="rejected")]), "t", "append", branch="wap"
+        )
+        lake.drop_branch("t", "wap")
+        assert lake.vacuum("t", keep_last=10)  # the rejected staging dir
+
+        tdir = lake.root / "t"
+        names = sorted(p.name for p in tdir.iterdir())
+        layout = r"_REFS\.json|_SCHEMA\.json|_PROPERTIES\.json|_MANIFEST\.\d+\.json|data_\d+"
+        assert [n for n in names if not re.fullmatch(layout, n)] == []
+        assert "_MANIFEST.0.json" in names
+        for manifest in tdir.glob("_MANIFEST.*.json"):
+            data = json.loads(manifest.read_text())
+            assert isinstance(data, dict) and set(data) == {"dirs", "committed_at", "parent"}
+        refs = json.loads((tdir / "_REFS.json").read_text())
+        assert refs == {
+            "main": {"version": head, "type": "branch"},
+            "tag": {"version": tagged, "type": "tag"},
+            "stage": {"version": head, "type": "branch"},
+        }
+        assert sorted(rows_by_id(lake, "t")) == [1, 2, 3]
 
 
 class TestOneWritePath:
@@ -1108,8 +1135,18 @@ class TestOneWritePath:
 
     def test_one_copy_on_write_in_source(self):
         root = Path(pkg.__file__).resolve().parent
-        assert (root / "sinks" / "dispositions.py").read_text().count('"left_anti"') == 1
-        gone = ("append_to_branch", "_write_to_branch", "dedupe_batch")
+        source = (root / "sinks" / "dispositions.py").read_text()
+        assert source.count('"left_anti"') == 1
+        # one atomic metadata write: every ref move and metadata file
+        assert source.count("os.replace(") == 1
+        gone = (
+            "append_to_branch",
+            "_write_to_branch",
+            "dedupe_batch",
+            "_POINTER",
+            "_BRANCHES",
+            "_is_legacy_manifest",
+        )
         offenders = [
             f"{path.relative_to(root)}: {name}"
             for path in sorted(root.rglob("*.py"))

@@ -1371,7 +1371,6 @@ class TestExpectations:
 class TestOrderedFunnel:
     def test_funnel_counts_ordered_completion(self, spark):
         from dlt_salesforce_iceberg_rest_demo_spark.operators.funnel import (
-            ordered_funnel,
             ordered_funnel_df,
         )
 
@@ -1391,14 +1390,9 @@ class TestOrderedFunnel:
         ).withColumn("ts", F.col("ts").cast("timestamp"))
         got = {
             r.step: r.n_users
-            for r in ordered_funnel(ev, ["a", "b", "c"]).collect()
-        }
-        assert got == {"a": 3, "b": 1, "c": 1}
-        lazy = {
-            r.step: r.n_users
             for r in ordered_funnel_df(ev, ["a", "b", "c"]).collect()
         }
-        assert lazy == got
+        assert got == {"a": 3, "b": 1, "c": 1}
 
 
 class TestAsofJoinForward:
