@@ -16,6 +16,7 @@ last ulp between engines.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -214,10 +215,9 @@ def bellman_ford(
         F.col(dst).cast("long").alias("v"),
         F.col(weight).cast("long").alias("w"),
     ))
-    dist = (
-        e.sparkSession.createDataFrame(
-            [(int(s), 0) for s in sources], "node long, dist long"
-        )
+    dist = e.sparkSession.createDataFrame(
+        pa.table({"node": [int(s) for s in sources], "dist": [0] * len(sources)}),
+        "node long, dist long",
     )
     for _ in range(iterations):
         relax = dist.join(e, dist["node"] == e["u"]).select(

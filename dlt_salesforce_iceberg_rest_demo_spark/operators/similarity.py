@@ -34,6 +34,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -1390,7 +1391,8 @@ def _pq_search(
     lut_lit = F.lit(luts).cast("array<array<array<bigint>>>")
     qdf = F.broadcast(
         queries.sparkSession.createDataFrame(
-            [(q, i + 1) for i, q in enumerate(qids)], "query_id long, qpos int"
+            pa.table({"query_id": qids, "qpos": list(range(1, len(qids) + 1))}),
+            "query_id long, qpos int",
         )
     )
     lut_q = F.element_at(lut_lit, F.col("qpos"))

@@ -8,6 +8,7 @@ frequencies) - so the shapes hold at 100 TB.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -642,7 +643,10 @@ def mix_to_target(
     map-side filter: O(corpus) with no payload shuffle.
     """
     shares = docs.sparkSession.createDataFrame(
-        [(g, int(p)) for g, p in shares_permil.items()],
+        pa.table({
+            group_col: list(shares_permil),
+            "share_permil": [int(p) for p in shares_permil.values()],
+        }),
         f"{group_col} string, share_permil long",
     )
     counts = docs.groupBy(group_col).agg(F.count("*").alias("n_g"))

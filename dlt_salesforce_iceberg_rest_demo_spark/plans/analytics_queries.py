@@ -16,6 +16,7 @@ floats, md5 buckets for sampling, rational thresholds for filters.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -1181,7 +1182,8 @@ def corpus_mix_to_target(spark: SparkSession, sf_dir: str) -> DataFrame:
     kept = mix_to_target(docs, _MIX_SHARES, group_col="lang")
     counts = docs.groupBy("lang").agg(F.count("*").alias("n_g"))
     shares = spark.createDataFrame(
-        [(g, p) for g, p in _MIX_SHARES.items()], "lang string, share_permil long"
+        pa.table({"lang": list(_MIX_SHARES), "share_permil": list(_MIX_SHARES.values())}),
+        "lang string, share_permil long",
     )
     return (
         kept.groupBy("lang")

@@ -7,6 +7,19 @@ Parquet-in-Iceberg. ``spark.read.parquet`` is the native equivalent:
 vectorized scan, predicate pushdown, column pruning all come from
 Catalyst for free (SURVEY.md §4).
 
+Schemas: in the reference a scan's schema comes from table metadata,
+not from its data files. Here each fixture file's Spark schema is
+resolved once per file version: the first read of a file infers it
+(Spark's own inference, a one-task footer job), and every later read
+passes it back through ``spark.read.schema(...)``, which runs no job.
+An entry is keyed by the file's path, ``st_mtime_ns`` and ``st_size``,
+and by the session settings that change what Spark infers from a
+footer (``_INFERENCE_CONF``), so a rewritten file or a session with
+other settings is inferred again. A directory path (a Spark-written
+table) is inferred on every read: its mtime does not change when a
+file inside it is rewritten. Every call builds a fresh relation, so a
+self-join still gets distinct attribute ids on its two sides.
+
 Scale note: at 100 TB these would be partitioned/bucketed Iceberg
 tables; the loader keeps the call-site identical (``load_table(spark,
 sf_dir, name)``) so swapping in ``spark.table("lake.ns.name")`` is a
@@ -15,11 +28,12 @@ one-liner.
 
 from __future__ import annotations
 
-import functools
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 # The driver-generated TPC-H-ish star schema (TESTDATA.md).
 TABLES = (
@@ -37,12 +51,25 @@ TABLES = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+_NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
 
-@functools.lru_cache(maxsize=None)
+# Session settings that change the schema Spark infers from a footer.
+_INFERENCE_CONF = (
+    _NANOS_AS_LONG,
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+)
+
+# path -> ((st_mtime_ns, st_size), nanos columns, {settings: schema});
+# a rewritten file replaces its path's entry. No lock: threads that miss
+# together each infer the same schema and store equal values.
+_FILES: dict[str, tuple[tuple[int, int], tuple[str, ...], dict[tuple, StructType]]] = {}
+
+
 def _nanos_timestamp_columns(path: str) -> tuple[str, ...]:
     """Columns stored as parquet TIMESTAMP(NANOS), which Spark's reader
-    rejects (PARQUET_TYPE_ILLEGAL). One cheap driver-side footer read,
-    cached per path."""
+    rejects (PARQUET_TYPE_ILLEGAL). One cheap driver-side footer read."""
     try:
         import pyarrow.parquet as pq
 
@@ -54,6 +81,31 @@ def _nanos_timestamp_columns(path: str) -> tuple[str, ...]:
         )
     except Exception:
         return ()
+
+
+def _scan(spark: SparkSession, path: str) -> tuple[DataFrame, tuple[str, ...]]:
+    """A fresh scan of one Parquet path with its schema resolved once per
+    file version (module docstring), and the path's nanos columns, which
+    Spark reads as longs under `spark.sql.legacy.parquet.nanosAsLong`."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        st = None  # not a local path: Spark reads it, or raises its error
+    if st is not None and stat.S_ISREG(st.st_mode):
+        version = (st.st_mtime_ns, st.st_size)
+        entry = _FILES.get(path)
+        if entry is None or entry[0] != version:
+            entry = _FILES[path] = (version, _nanos_timestamp_columns(path), {})
+        _, ns_cols, schemas = entry
+    else:
+        ns_cols, schemas = (), {}  # nothing to key on: infer every time
+    if ns_cols:
+        spark.conf.set(_NANOS_AS_LONG, "true")
+    settings = tuple(spark.conf.get(k) for k in _INFERENCE_CONF)
+    schema = schemas.get(settings)
+    if schema is None:
+        schema = schemas[settings] = spark.read.parquet(path).schema
+    return spark.read.schema(schema).parquet(path), ns_cols
 
 
 def _ntz_to_sessiontz(df: DataFrame) -> DataFrame:
@@ -75,6 +127,10 @@ def _ntz_to_sessiontz(df: DataFrame) -> DataFrame:
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one fixture table. Plain parquet scan -> full pushdown support.
 
+    The schema is resolved once per file version (module docstring), so
+    only the first read of a file runs Spark's one-task schema-inference
+    job: building a plan over files read before runs no job.
+
     Nanosecond-timestamp columns (a historical fixture format for
     `events.ts`) are read as long nanos
     (`spark.sql.legacy.parquet.nanosAsLong`, set at runtime so the
@@ -84,12 +140,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     from TIMESTAMP_NTZ to session-tz TIMESTAMP (UTC session -> same
     instant; see `_ntz_to_sessiontz`).
     """
-    path = f"{sf_dir}/{name}.parquet"
-    ns_cols = _nanos_timestamp_columns(path)
-    if not ns_cols:
-        return _ntz_to_sessiontz(spark.read.parquet(path))
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
+    df, ns_cols = _scan(spark, f"{sf_dir}/{name}.parquet")
     for c in ns_cols:
         df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` DIV 1000")))
     return _ntz_to_sessiontz(df)
@@ -112,21 +163,17 @@ def load_table_incremental(
     ns >= 0) is applied before conversion, so row-group min/max skipping
     works - at 100 TB an idle cursor poll touches only the tail files.
     """
-    path = f"{sf_dir}/{name}.parquet"
-    ns_cols = _nanos_timestamp_columns(path)
+    df, ns_cols = _scan(spark, f"{sf_dir}/{name}.parquet")
     cutoff = F.lit(cursor_gt).cast("timestamp")
     if ts_col not in ns_cols:
         from pyspark.sql.types import TimestampNTZType
 
-        df = spark.read.parquet(path)
         if isinstance(df.schema[ts_col].dataType, TimestampNTZType):
             # Filter the raw NTZ column (pushes to the parquet scan);
             # UTC session makes the NTZ cutoff the same instant.
             cutoff_ntz = F.lit(cursor_gt).cast("timestamp_ntz")
             return _ntz_to_sessiontz(df.filter(F.col(ts_col) > cutoff_ntz))
         return df.filter(F.col(ts_col) > cutoff)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
     cutoff_ns = F.unix_micros(cutoff) * 1000 + 999
     df = df.filter(F.col(ts_col) > cutoff_ns)
     for c in ns_cols:

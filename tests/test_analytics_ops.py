@@ -1407,3 +1407,36 @@ class TestKTruss:
         # edges peel. A single no-recount pass would wrongly keep (1,2).
         bowtie = [(1, 2), (1, 3), (2, 3), (1, 4), (2, 4)]
         assert k_truss(self._edges(spark, bowtie), k=4).count() == 0
+
+
+class TestLocalRelationLanding:
+    """Small driver-side lists land as Arrow ``LocalRelation`` leaves, not
+    as pickled rows that every execution re-ships through Python workers."""
+
+    @staticmethod
+    def _leaves(df) -> list[str]:
+        leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+        return [leaves.apply(i).getClass().getSimpleName() for i in range(leaves.size())]
+
+    def test_driver_lists_are_local_relations(self, spark):
+        from dlt_salesforce_iceberg_rest_demo_spark.operators import text
+        from dlt_salesforce_iceberg_rest_demo_spark.plans import query_fns
+        from dlt_salesforce_iceberg_rest_demo_spark.sources.parquet import load_table
+
+        edges = spark.createDataFrame([(1, 2, 1)], "src long, dst long, w long")
+        for sources in ([1, 3], []):
+            dist = graph.bellman_ford(edges, sources, iterations=0)
+            assert self._leaves(dist) == ["LocalRelation"]
+            assert dist.schema.simpleString() == "struct<node:bigint,dist:bigint>"
+            assert sorted(tuple(r) for r in dist.collect()) == [(s, 0) for s in sources]
+        assert graph.bellman_ford(edges, [], iterations=2).collect() == []
+
+        docs = load_table(spark, SF_DIR, "documents")
+        mixed = text.mix_to_target(docs, {"en": 600, "de": 400})
+        assert set(self._leaves(mixed)) == {"LogicalRelation", "LocalRelation"}
+
+        fns = query_fns()
+        mix_query = fns["corpus_mix_to_target"](spark, SF_DIR)
+        assert set(self._leaves(mix_query)) == {"LogicalRelation", "LocalRelation"}
+        # _pq_search's query ids
+        assert "LocalRelation" in self._leaves(fns["similarity_pq_topk"](spark, SF_DIR))
