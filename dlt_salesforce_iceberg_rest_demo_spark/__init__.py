@@ -11,17 +11,18 @@ This package re-expresses that surface on Spark primitives:
 
 - ``session``      : SparkSession factory tuned for local[32] and for scale.
 - ``sources``      : Salesforce reader (mock-transport testable, SOQL
-                     pushdown), parquet fixture loader, catalog helpers.
-- ``normalize``    : dlt-normalize parity (snake_case, lineage columns,
-                     datetime canonicalization, nullable-everything schemas).
+                     pushdown), its Python Data Source, the parquet fixture loader.
+- ``normalize``    : dlt-normalize parity (snake_case, the cursor format,
+                     schema alignment, nullable-everything schemas).
 - ``sinks``        : disposition writer (append / replace / merge) on a
-                     parquet-backed lake; Iceberg path gated on the runtime.
+                     parquet-backed lake with Iceberg's table semantics.
 - ``state``        : incremental cursor store (dlt pipeline-state parity).
 - ``plans``        : the query registry driving the driver correctness gate.
 - ``operators``    : LLM-data-pipeline extensions - dedup (exact/minhash/
                      simhash/jaccard), similarity search, text analysis,
                      multimodal column plumbing, as-of join, sessionization.
-- ``streaming``    : Structured Streaming incremental ingestion.
+- ``functions``    : salted joins, Bloom runtime filters, batch inference,
+                     Python UDTFs.
 """
 
 __version__ = "0.1.0"

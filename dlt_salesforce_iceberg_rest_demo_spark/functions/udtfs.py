@@ -7,7 +7,7 @@ UDTFs are the Spark-native generalization: one input row expands to
 N output rows with imperative per-row logic, lateral-joined against
 the input table.
 
-Tier guidance (same as functions/udfs.py): built-in expressions
+Tier guidance (the package's rule for Python): built-in expressions
 (explode/sequence/transform) beat a UDTF when they can express the
 expansion - the UDTF here exists for genuinely imperative expansions
 and is asserted equal to its declarative twin where one exists.

@@ -17,10 +17,11 @@ reference's `_process_record`, records.py:15-47, is exactly the per-row
 loop we refuse to port). Steps 1-3 happen where the batch is built:
 `sources.salesforce.read_object(..., load_id=)` lands it as one Arrow
 table whose names are already :func:`snake_case`, with the lineage
-columns and native timestamps set by Arrow casts (the reference's
-string round-trip survives only as :func:`canonicalize_datetime`, for
-byte-parity checks). Step 4 is :func:`align_to_schema`, one projection
-the lake skips when the batch already has the table's columns.
+columns and native timestamps set by Arrow casts (no string
+round-trip; the canonical format survives as
+:data:`CANONICAL_TS_FORMAT`, in which the lake reports a batch's
+cursor). Step 4 is :func:`align_to_schema`, one projection the lake
+skips when the batch already has the table's columns.
 """
 
 from __future__ import annotations
@@ -61,31 +62,6 @@ def snake_case(name: str) -> str:
 def new_load_id() -> str:
     """dlt load ids are epoch-seconds strings (e.g. '1755043200.123')."""
     return str(time.time())
-
-
-def canonicalize_datetime(df: DataFrame, columns: list[str]) -> DataFrame:
-    """T1/T2: render timestamp columns in the reference's canonical string
-    format. One vectorized expression per column; the reference does this
-    per-row in Python (records.py:32-45)."""
-    out = df
-    for c in columns:
-        out = out.withColumn(c, F.date_format(F.col(c), CANONICAL_TS_FORMAT))
-    return out
-
-
-def parse_canonical_datetime(df: DataFrame, columns: list[str]) -> DataFrame:
-    """Inverse of :func:`canonicalize_datetime`: parse canonical strings
-    (or epoch-millis longs, the Bulk API shape - records.py:34-38) back
-    to native timestamps. Native is the preferred on-lake representation;
-    the string round-trip exists only for byte-parity checks."""
-    out = df
-    for c in columns:
-        dt = df.schema[c].dataType
-        if isinstance(dt, T.LongType):
-            out = out.withColumn(c, F.timestamp_millis(F.col(c)))
-        else:
-            out = out.withColumn(c, F.to_timestamp(F.col(c)))
-    return out
 
 
 def nullable_everything(schema: T.StructType) -> T.StructType:
@@ -146,58 +122,6 @@ def align_to_schema(df: DataFrame, target: T.StructType) -> DataFrame:
     return df.select(projections)
 
 
-def explode_nested(
-    df: DataFrame,
-    parent_name: str,
-    id_col: str = "_dlt_id",
-) -> dict[str, DataFrame]:
-    """dlt-normalize child-table extraction: every array-of-struct
-    column becomes its own child table keyed back to the parent.
-
-    dlt's normalize layer relationalizes nested data as
-    ``<parent>__<field>`` tables carrying ``_dlt_parent_id`` (the
-    parent row's ``_dlt_id``) and ``_dlt_list_idx`` (the element's
-    position). The reference never exercises it - Salesforce compound
-    fields are pruned to flat leaves
-    (`salesforce/helpers/records.py:70-84`) - but the layer is part of
-    the framework's contract, so the Spark engine carries it too.
-
-    Returns ``{parent_name: parent_df_without_nested_cols,
-    "<parent>__<field>": child_df, ...}``. Requires ``id_col`` on the
-    parent (a batch landed by `read_object(..., load_id=)` carries it).
-    posexplode is map-side; each child table is written/partitioned
-    independently downstream, which is exactly how nested data stays
-    scan-efficient at 100 TB (child scans never touch parent payloads).
-    """
-    if id_col not in df.columns:
-        raise ValueError(f"{id_col} missing from the parent")
-    out: dict[str, DataFrame] = {}
-    nested = [
-        f.name
-        for f in df.schema.fields
-        if isinstance(f.dataType, T.ArrayType)
-        and isinstance(f.dataType.elementType, T.StructType)
-    ]
-    parent = df
-    for col in nested:
-        child = (
-            df.select(
-                F.col(id_col).alias("_dlt_parent_id"),
-                F.posexplode(F.col(col)).alias("_dlt_list_idx", "__elem"),
-            )
-            .select("_dlt_parent_id", "_dlt_list_idx", "__elem.*")
-        )
-        # snake_case only the payload fields - the _dlt control columns
-        # are already canonical (snake_case would strip their prefix)
-        for f in child.columns:
-            if not f.startswith("_dlt_") and snake_case(f) != f:
-                child = child.withColumnRenamed(f, snake_case(f))
-        out[f"{parent_name}__{snake_case(col)}"] = child
-        parent = parent.drop(col)
-    out[parent_name] = parent
-    return out
-
-
 def pseudonymize(
     df: DataFrame, columns: list[str], salt: str | None = None
 ) -> DataFrame:
@@ -233,35 +157,3 @@ def pseudonymize(
             ),
         )
     return out
-
-
-def schema_compat_report(
-    old: T.StructType, new: T.StructType
-) -> dict[str, object]:
-    """Data-contract compatibility check between two table schemas —
-    the gate a WAP audit or CI step runs before publishing a schema
-    change: classifies every difference and says whether the change
-    is BACKWARD-compatible for readers of the old schema.
-
-    - added:        columns only in ``new`` (additive; compatible —
-                    `evolve_schema` semantics: old files read as NULL);
-    - removed:      columns only in ``old`` (BREAKING for readers);
-    - type_changed: same name, different type after reference widening
-                    (int->long, float->double are therefore NOT flagged
-                    — the lake applies them on write anyway; BREAKING
-                    otherwise);
-    - compatible:   True iff nothing was removed or type-changed.
-    """
-    old_w = {f.name.lower(): f.dataType for f in widen_types(old).fields}
-    new_w = {f.name.lower(): f.dataType for f in widen_types(new).fields}
-    added = sorted(n for n in new_w if n not in old_w)
-    removed = sorted(n for n in old_w if n not in new_w)
-    type_changed = sorted(
-        n for n in old_w if n in new_w and old_w[n] != new_w[n]
-    )
-    return {
-        "added": added,
-        "removed": removed,
-        "type_changed": type_changed,
-        "compatible": not removed and not type_changed,
-    }

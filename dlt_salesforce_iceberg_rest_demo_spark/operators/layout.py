@@ -100,22 +100,6 @@ def hilbert_key_2d(
     )
 
 
-def hilbert_layout(
-    df: DataFrame, x: str, y: str, num_files: int = 32, bits: int = 16
-) -> DataFrame:
-    """Two-column clustering for writing, :func:`zorder_layout`'s shape
-    with the Hilbert key: range-partition + local sort on the curve
-    position, so each output file covers a contiguous curve segment
-    (a compact blob in (x, y) space, tighter than the Z equivalent)."""
-    z = hilbert_key_2d(x, y, bits).alias("__h")
-    return (
-        df.withColumn("__h", z)
-        .repartitionByRange(num_files, F.col("__h"))
-        .sortWithinPartitions("__h")
-        .drop("__h")
-    )
-
-
 def zorder_layout(
     df: DataFrame, cols: list[str], num_files: int = 32, bits: int = 16
 ) -> DataFrame:

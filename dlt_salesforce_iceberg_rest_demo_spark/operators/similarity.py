@@ -458,29 +458,10 @@ def _quantize_unit_np(mat: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     return uq, nz
 
 
-def _quantize_unit_udf(dim: int):
-    """Arrow-batched :func:`_quantize_unit_np` as a column: array<long>
-    of ``floor(x_i / ‖x‖ * 1e6)``; NULL for zero-norm / malformed
-    rows. A JVM transform-lambda twin exists mathematically but
-    re-evaluates the 64-element norm fold PER ELEMENT (interpreted
-    HOFs, no CSE) — measured ~6x slower than this numpy path on the
-    fit loop."""
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def qu(vecs: pd.Series) -> pd.Series:
-        m, valid = _stack_valid(vecs, dim)
-        uq, nz = _quantize_unit_np(m)
-        return pd.Series(
-            [uq[i] if valid[i] and nz[i] else None for i in range(len(valid))]
-        )
-
-    return qu
-
-
 def _encodable(vec_col: str, dim: int):
     """JVM-side predicate that is TRUE exactly when
-    :func:`_quantize_unit_udf` / :func:`_pq_encode_udf` would return
-    non-NULL for the row: correct length AND nonzero quantized norm.
+    :func:`_quantize_unit_np` / :func:`_pq_encode_udf` would give a
+    non-NULL row: correct length AND nonzero quantized norm.
     The norm test replays _quantize_unit_np's arithmetic — per-element
     ``floor(x*x*1e15)`` summed as nonneg integers is > 0 iff SOME
     element's floor is >= 1 — as the same IEEE double op sequence, so
@@ -1162,7 +1143,7 @@ def _pq_lloyd(
 
 
 def _pq_fused_udf(books: "list[list[list[int]]]"):
-    """Pandas UDF fusing :func:`_quantize_unit_udf` and
+    """Pandas UDF fusing :func:`_quantize_unit_np` and
     :func:`_pq_encode_udf` into one Python pass: returns
     struct(uq array<long>, codes array<int>) — the quantized unit
     vector plus its sub-codes under the given (initial) codebooks.

@@ -160,18 +160,6 @@ def print_result(verification: dict[str, Any]) -> dict[str, Any]:
     return summary
 
 
-def run_flow(
-    pipeline: SalesforcePipeline, overrides: dict[str, str] | None = None
-) -> dict[str, Any]:
-    """The full 4-task flow, sequentially - what both orchestrators
-    execute, minus their schedulers (Airflow's tick is 'every 6 hours',
-    airflow/README.md)."""
-    config = validate_configuration(overrides)
-    result = run_pipeline_task(pipeline, config)
-    verification = verify_data_load(pipeline.lake, result)
-    return print_result(verification)
-
-
 def build_airflow_dag(pipeline_factory):  # pragma: no cover - needs airflow
     """Airflow TaskFlow DAG mirroring salesforce_iceberg_dag.py:28-186
     (import-gated: airflow is not installed here)."""

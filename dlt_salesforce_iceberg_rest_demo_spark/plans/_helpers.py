@@ -24,6 +24,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from ..sources.parquet import load_table
 
@@ -34,6 +36,14 @@ SQL_DEC = "DECIMAL(18,6)"
 
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
+
+
+def empty_frame(spark: SparkSession, ddl: str) -> DataFrame:
+    """A 0-row frame of the ``ddl`` schema, landed as an empty Arrow
+    table: a ``LocalRelation`` that runs no job when collected (an empty
+    Python list lands as a ``LogicalRDD``, one job per collect)."""
+    schema = StructType.fromDDL(ddl)
+    return spark.createDataFrame(to_arrow_schema(schema).empty_table(), schema)
 
 
 def dsum(col: Column | str, alias: str) -> Column:

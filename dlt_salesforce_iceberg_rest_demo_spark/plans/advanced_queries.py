@@ -14,7 +14,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ._helpers import t
+from ._helpers import empty_frame, t
 from .registry import register
 
 # ---------------------------------------------------------------------------
@@ -522,8 +522,8 @@ def similarity_pq_persisted_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         # pq_build raises loudly on an empty corpus (the BUILD-step
         # contract); this QUERY-shaped wrapper returns the documented
         # empty schema instead, matching pq_topk's behavior
-        return spark.createDataFrame(
-            [], "query_id long, corpus_id long, cosine double, rank long"
+        return empty_frame(
+            spark, "query_id long, corpus_id long, cosine double, rank long"
         )
     return similarity.pq_query(
         lake, "pqidx", emb.filter(F.col("vec_id") < 8), k=5, corpus=emb

@@ -901,7 +901,7 @@ def multimodal_jpeg_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     glob, SOF0 height/width parsed JVM-SIDE (byte-aligned anchored
     regexp over the hex string, precision-byte-validated, NULL dims
     on no match), and the payload entropy-DECODED (Huffman + DC prediction
-    + dequant + IDCT, `multimodal.decode_jpeg_gray`) in the
+    + dequant + IDCT, `multimodal.decode_jpeg`) in the
     Arrow-batched stats pass. Output: per-doc JVM-parsed dims + the
     decoded pixel count — the full encode -> file -> binaryFile ->
     header-parse -> entropy-decode loop must agree with the oracle's

@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ._helpers import t
+from ._helpers import empty_frame, t
 from .registry import register
 
 # ---------------------------------------------------------------------------
@@ -337,8 +337,8 @@ def cdc_guarded_out_of_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     for b in batches:
         lake.merge_cdc(b, "orders_cdc", "o_orderkey", guard_stale=True)
     if not lake.exists("orders_cdc"):  # empty source: no batch, no table
-        return spark.createDataFrame(
-            [],
+        return empty_frame(
+            spark,
             "o_orderkey long, final_price double, "
             "final_status string, last_version long",
         )
@@ -406,8 +406,8 @@ def cdc_guarded_timestamp_versions(spark: SparkSession, sf_dir: str) -> DataFram
     for b in batches:
         lake.merge_cdc(b, "orders_cdc", "o_orderkey", guard_stale=True)
     if not lake.exists("orders_cdc"):
-        return spark.createDataFrame(
-            [],
+        return empty_frame(
+            spark,
             "o_orderkey long, final_price double, "
             "final_status string, last_version long",
         )

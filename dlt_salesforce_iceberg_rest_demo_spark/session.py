@@ -75,16 +75,13 @@ def get_spark(
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
-    enable_iceberg: bool = False,
 ) -> SparkSession:
     """Build (or fetch) the SparkSession.
 
-    ``enable_iceberg=True`` adds the Iceberg runtime + REST catalog config
-    mirroring the reference's Lakekeeper setup
-    (``/root/reference/salesforce_pipeline.py:42-49``); it requires the
-    iceberg-spark-runtime jar on the classpath and is therefore optional -
-    all disposition semantics are also available on the parquet-backed
-    lake (see ``sinks.dispositions``).
+    Tables live in the Parquet-backed lake (``sinks.dispositions``),
+    which carries the reference's Iceberg table semantics
+    (``/root/reference/salesforce_pipeline.py:42-49``), so the session
+    needs no catalog config. ``extra_conf`` adds any other setting.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cpus}]"
@@ -133,24 +130,6 @@ def get_spark(
         # lets pushFilters() compile predicates into server-side SOQL.
         .config("spark.sql.python.filterPushdown.enabled", "true")
     )
-
-    if enable_iceberg:
-        catalog = os.environ.get("ICEBERG_CATALOG_NAME", "lake")
-        builder = (
-            builder.config(
-                "spark.sql.extensions",
-                "org.apache.iceberg.spark.extensions.IcebergSparkSessionExtensions",
-            )
-            .config(
-                f"spark.sql.catalog.{catalog}",
-                "org.apache.iceberg.spark.SparkCatalog",
-            )
-            .config(f"spark.sql.catalog.{catalog}.type", "rest")
-            .config(
-                f"spark.sql.catalog.{catalog}.uri",
-                os.environ.get("ICEBERG_REST_URI", "http://localhost:8181/catalog"),
-            )
-        )
 
     if extra_conf:
         for k, v in extra_conf.items():

@@ -51,9 +51,10 @@ The layout has one format. A lake in the earlier layout (main's head
 and the branches each in a store of their own, manifest 0 a bare list)
 is neither read nor migrated: ``exists`` does not see its tables.
 
-The real-Iceberg path (same dispositions through ``MERGE INTO`` /
-``writeTo``) lives in ``sinks.iceberg`` and activates when the runtime
-jar + catalog are configured.
+This lake is the one implementation of the reference's Iceberg table
+semantics. A real Iceberg catalog would be a second backend under
+``_write`` (the same observed rows and cursor, the commit summary as
+``snapshot-property.*``), not a parallel copy of the dispositions.
 """
 
 from __future__ import annotations

@@ -33,7 +33,7 @@ import stat
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StructType, TimestampNTZType
 
 # The driver-generated TPC-H-ish star schema (TESTDATA.md).
 TABLES = (
@@ -48,8 +48,6 @@ TABLES = (
     "documents",
     "embeddings",
 )
-
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 _NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
 
@@ -108,20 +106,27 @@ def _scan(spark: SparkSession, path: str) -> tuple[DataFrame, tuple[str, ...]]:
     return spark.read.schema(schema).parquet(path), ns_cols
 
 
-def _ntz_to_sessiontz(df: DataFrame) -> DataFrame:
-    """Cast TIMESTAMP_NTZ columns to session-tz TIMESTAMP.
+def _typed(df: DataFrame, ns_cols: tuple[str, ...]) -> DataFrame:
+    """The typing step both loaders end with, as one ``withColumns``.
+
+    Nanosecond-timestamp columns (a historical fixture format for
+    `events.ts`), read as long nanos under
+    `spark.sql.legacy.parquet.nanosAsLong`, become native microsecond
+    timestamps: truncation, matching DuckDB's ns->us cast.
 
     The driver fixtures store naive microsecond timestamps
     (`timestamp[us]`, isAdjustedToUTC=false), which Spark reads as
     TIMESTAMP_NTZ. Every operator (and DuckDB's naive-UTC oracle
     semantics) works on session-tz timestamps with the session pinned
-    to UTC, so the cast changes the type, not the instant."""
-    from pyspark.sql.types import TimestampNTZType
-
-    ntz = [f.name for f in df.schema.fields if isinstance(f.dataType, TimestampNTZType)]
-    for c in ntz:
-        df = df.withColumn(c, F.col(c).cast("timestamp"))
-    return df
+    to UTC, so those columns are cast to TIMESTAMP: the cast changes
+    the type, not the instant."""
+    cols = {c: F.timestamp_micros(F.expr(f"`{c}` DIV 1000")) for c in ns_cols}
+    cols.update(
+        (f.name, F.col(f"`{f.name}`").cast("timestamp"))
+        for f in df.schema.fields
+        if isinstance(f.dataType, TimestampNTZType)
+    )
+    return df.withColumns(cols) if cols else df
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -129,21 +134,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
     The schema is resolved once per file version (module docstring), so
     only the first read of a file runs Spark's one-task schema-inference
-    job: building a plan over files read before runs no job.
-
-    Nanosecond-timestamp columns (a historical fixture format for
-    `events.ts`) are read as long nanos
-    (`spark.sql.legacy.parquet.nanosAsLong`, set at runtime so the
-    driver's own SparkSession works too) and converted to native
-    microsecond timestamps - truncation, matching DuckDB's ns->us cast.
-    Naive microsecond columns (the current fixture format) are cast
-    from TIMESTAMP_NTZ to session-tz TIMESTAMP (UTC session -> same
-    instant; see `_ntz_to_sessiontz`).
+    job: building a plan over files read before runs no job. Timestamp
+    columns come back as session-tz TIMESTAMP (:func:`_typed`).
     """
     df, ns_cols = _scan(spark, f"{sf_dir}/{name}.parquet")
-    for c in ns_cols:
-        df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` DIV 1000")))
-    return _ntz_to_sessiontz(df)
+    return _typed(df, ns_cols)
 
 
 def load_table_incremental(
@@ -153,39 +148,22 @@ def load_table_incremental(
     ts_col: str,
     cursor_gt: str,
 ) -> DataFrame:
-    """Cursor scan (`ts > cursor`) with the predicate pushed to parquet
-    even for nanos-timestamp columns.
+    """Cursor scan (`ts > cursor`) with the predicate pushed to parquet,
+    typed like :func:`load_table`.
 
     The plain path (load_table + filter) filters the *converted*
     timestamp, which Catalyst cannot push through `timestamp_micros(ns
-    DIV 1000)` - every row group gets read. Here the equivalent raw
-    predicate `ns > us*1000 + 999` (exactly `ns DIV 1000 > us` for
-    ns >= 0) is applied before conversion, so row-group min/max skipping
-    works - at 100 TB an idle cursor poll touches only the tail files.
+    DIV 1000)` - every row group gets read. Here the predicate is
+    applied to the raw column before :func:`_typed`: for nanos the
+    equivalent `ns > us*1000 + 999` (exactly `ns DIV 1000 > us` for
+    ns >= 0), for TIMESTAMP_NTZ the cutoff as NTZ (the same instant in
+    the UTC session), so row-group min/max skipping works - at 100 TB
+    an idle cursor poll touches only the tail files.
     """
     df, ns_cols = _scan(spark, f"{sf_dir}/{name}.parquet")
     cutoff = F.lit(cursor_gt).cast("timestamp")
-    if ts_col not in ns_cols:
-        from pyspark.sql.types import TimestampNTZType
-
-        if isinstance(df.schema[ts_col].dataType, TimestampNTZType):
-            # Filter the raw NTZ column (pushes to the parquet scan);
-            # UTC session makes the NTZ cutoff the same instant.
-            cutoff_ntz = F.lit(cursor_gt).cast("timestamp_ntz")
-            return _ntz_to_sessiontz(df.filter(F.col(ts_col) > cutoff_ntz))
-        return df.filter(F.col(ts_col) > cutoff)
-    cutoff_ns = F.unix_micros(cutoff) * 1000 + 999
-    df = df.filter(F.col(ts_col) > cutoff_ns)
-    for c in ns_cols:
-        df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` DIV 1000")))
-    return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every fixture table as a temp view for spark.sql queries."""
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
+    if ts_col in ns_cols:
+        cutoff = F.unix_micros(cutoff) * 1000 + 999
+    elif isinstance(df.schema[ts_col].dataType, TimestampNTZType):
+        cutoff = F.lit(cursor_gt).cast("timestamp_ntz")
+    return _typed(df.filter(F.col(ts_col) > cutoff), ns_cols)

@@ -24,10 +24,9 @@ Architecture differences (Spark-first, not a port):
   batches. No Python worker runs in either case, however often the
   plan executes (a merge executes its batch more than once), and no
   projection sits on top: datetime and date fields are cast by Arrow
-  (no `%Y-%m-%dT%H:%M:%S.%fZ` string round-trip in the hot path;
-  `normalize.canonicalize_datetime` renders the reference's string
-  format on demand), and the pipeline's batch arrives with dlt's
-  normalize already applied (``read_object(..., load_id=)``).
+  (no `%Y-%m-%dT%H:%M:%S.%fZ` string round-trip), and the
+  pipeline's batch arrives with dlt's normalize already applied
+  (``read_object(..., load_id=)``).
 - Every reader pages through :func:`fetch_records`, the one Bulk scan
   with Standard fallback. At scale the single-generator extraction (the
   reference is one Python process pulling all pages) becomes the

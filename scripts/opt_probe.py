@@ -93,20 +93,6 @@ def probe_one(name: str, tag: str) -> dict:
     runs, _ = measure.timed(partial(fns[name], spark, SRC), 3)
     new_stages = snap.stages()
     n_jobs = len(snap.jobs())
-    top = sorted(
-        new_stages, key=lambda s: -(s.get("executorRunTime") or 0)
-    )[:8]
-    stage_rows = [
-        {
-            "run_ms": s.get("executorRunTime", 0) // 3,
-            "cpu_ms": s.get("executorCpuTime", 0) // 3_000_000 // 3,
-            "tasks": s.get("numCompleteTasks", 0) // 3,
-            "sh_r_mb": round(s.get("shuffleReadBytes", 0) / 3 / 1e6, 1),
-            "sh_w_mb": round(s.get("shuffleWriteBytes", 0) / 3 / 1e6, 1),
-            "name": (s.get("name") or "")[:90],
-        }
-        for s in top
-    ]
     return {
         "query": name,
         "median": round(sorted(runs)[1], 3),
@@ -117,8 +103,26 @@ def probe_one(name: str, tag: str) -> dict:
         "exchanges": n_exchange,
         "python_nodes": n_python,
         "sum_stage_run_ms": sum(s.get("executorRunTime", 0) for s in new_stages) // 3,
-        "top_stages": stage_rows,
+        "top_stages": top_stages(new_stages),
     }
+
+
+def top_stages(stages: list[dict], n: int = 8) -> list[dict]:
+    """The ``n`` stages with the most executor time, one row each. Every
+    timed run submits its own stages, so a row is one stage of one run
+    and is reported as measured (not divided by the run count)."""
+    top = sorted(stages, key=lambda s: -(s.get("executorRunTime") or 0))[:n]
+    return [
+        {
+            "run_ms": s.get("executorRunTime", 0),
+            "cpu_ms": s.get("executorCpuTime", 0) // 1_000_000,
+            "tasks": s.get("numCompleteTasks", 0),
+            "sh_r_mb": round(s.get("shuffleReadBytes", 0) / 1e6, 1),
+            "sh_w_mb": round(s.get("shuffleWriteBytes", 0) / 1e6, 1),
+            "name": (s.get("name") or "")[:90],
+        }
+        for s in top
+    ]
 
 
 # child flag -> (measurement, stdout tag); the parent runs each query

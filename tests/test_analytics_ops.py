@@ -1440,3 +1440,35 @@ class TestLocalRelationLanding:
         assert set(self._leaves(mix_query)) == {"LogicalRelation", "LocalRelation"}
         # _pq_search's query ids
         assert "LocalRelation" in self._leaves(fns["similarity_pq_topk"](spark, SF_DIR))
+
+    def test_empty_results_are_local_relations(self, spark, tmp_path):
+        """The registry's hand-built empty results land as an empty Arrow
+        table: a ``LocalRelation`` whose collect runs no Spark job."""
+        import uuid
+
+        from dlt_salesforce_iceberg_rest_demo_spark.plans import query_fns
+        from dlt_salesforce_iceberg_rest_demo_spark.sources.parquet import load_table
+
+        for name in ("orders", "embeddings"):
+            load_table(spark, SF_DIR, name).limit(0).write.parquet(
+                str(tmp_path / f"{name}.parquet")
+            )
+        fns = query_fns()
+        cdc = "o_orderkey long, final_price double, final_status string, last_version long"
+        sc = spark.sparkContext
+        for query, ddl in (
+            ("similarity_pq_persisted_topk", "query_id long, corpus_id long, cosine double, rank long"),
+            ("cdc_guarded_out_of_order", cdc),
+            ("cdc_guarded_timestamp_versions", cdc),
+        ):
+            df = fns[query](spark, str(tmp_path))
+            assert self._leaves(df) == ["LocalRelation"], query
+            assert df.schema == spark.createDataFrame([], ddl).schema, query
+            group = f"empty-result-{uuid.uuid4().hex}"
+            sc.setJobGroup(group, query)
+            try:
+                assert df.collect() == [], query
+            finally:
+                sc._jsc.clearJobGroup()
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            assert sc.statusTracker().getJobIdsForGroup(group) == [], query

@@ -31,6 +31,17 @@ def test_counters_read_without_ui(spark):
     assert len(q["executorRunTime"]) == 2
 
 
+def test_probe_reports_each_stage_undivided(spark):
+    from scripts import opt_probe
+
+    snap = measure.Snapshot(spark)
+    df = spark.range(0, 100, numPartitions=1).groupBy((F.col("id") % 7).alias("k")).count()
+    measure.execute(df.coalesce(1))
+    rows = opt_probe.top_stages(snap.stages())
+    assert rows and all(r["tasks"] >= 1 for r in rows)
+    assert sum(r["tasks"] for r in rows) == sum(s["numCompleteTasks"] for s in snap.stages())
+
+
 def test_execute_runs_columns_count_prunes(spark):
     @F.udf("long")
     def boom(x):

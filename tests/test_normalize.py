@@ -2,16 +2,12 @@
 
 from __future__ import annotations
 
-import datetime
-
 from pyspark.sql import Row
 from pyspark.sql import types as T
 
 from dlt_salesforce_iceberg_rest_demo_spark.normalize import (
     align_to_schema,
-    canonicalize_datetime,
     nullable_everything,
-    parse_canonical_datetime,
     snake_case,
     widen_types,
 )
@@ -72,53 +68,6 @@ class TestAlign:
         assert align_to_schema(df, target).collect()[0]["id"] == "x"
 
 
-class TestDatetime:
-    def test_canonical_roundtrip(self, spark):
-        ts = datetime.datetime(2024, 1, 2, 3, 4, 5, 678901)
-        df = spark.createDataFrame([Row(ts=ts)])
-        canon = canonicalize_datetime(df, ["ts"])
-        s = canon.collect()[0]["ts"]
-        assert s == "2024-01-02T03:04:05.678901Z"  # records.py:38 format
-        back = parse_canonical_datetime(canon, ["ts"])
-        assert back.collect()[0]["ts"] == ts
-
-    def test_epoch_millis_parse(self, spark):
-        # Bulk API shape (records.py:34-38): epoch millis -> timestamp
-        df = spark.createDataFrame([Row(ts=1704164645000)])
-        out = parse_canonical_datetime(df, ["ts"])
-        assert out.collect()[0]["ts"] == datetime.datetime(2024, 1, 2, 3, 4, 5)
-
-
-class TestExplodeNested:
-    def test_child_tables_keyed_to_parent(self, spark):
-        from dlt_salesforce_iceberg_rest_demo_spark.normalize import explode_nested
-
-        df = spark.createDataFrame(
-            [
-                (1, [{"Sku": "a", "Qty": 2}, {"Sku": "b", "Qty": 1}], "r1"),
-                (2, [], "r2"),
-                (3, None, "r3"),
-            ],
-            "id long, LineItems array<struct<Sku string, Qty long>>, _dlt_id string",
-        )
-        tables = explode_nested(df, "order")
-        assert set(tables) == {"order", "order__line_items"}
-        parent = tables["order"]
-        assert "LineItems" not in parent.columns
-        child = tables["order__line_items"].collect()
-        # empty/NULL arrays contribute no child rows
-        assert len(child) == 2
-        parent_ids = {
-            r["id"]: r["_dlt_id"] for r in parent.collect()
-        }
-        for r in child:
-            assert r._dlt_parent_id == parent_ids[1]
-        assert sorted((r.sku, r.qty, r._dlt_list_idx) for r in child) == [
-            ("a", 2, 0),
-            ("b", 1, 1),
-        ]
-
-
 class TestPseudonymize:
     def test_deterministic_null_safe_and_fk_preserving(self, spark):
         import hashlib
@@ -149,48 +98,3 @@ class TestPseudonymize:
         ):
             pseudonymize(df, ["k"])
         assert any("salt" in r.message for r in caplog.records)
-
-
-class TestSchemaCompat:
-    def test_classification_and_widening_tolerance(self, spark):
-        from pyspark.sql import types as T
-
-        from dlt_salesforce_iceberg_rest_demo_spark.normalize import (
-            schema_compat_report,
-        )
-
-        old = T.StructType(
-            [
-                T.StructField("id", T.IntegerType()),
-                T.StructField("v", T.FloatType()),
-                T.StructField("gone", T.StringType()),
-                T.StructField("flips", T.StringType()),
-            ]
-        )
-        new = T.StructType(
-            [
-                T.StructField("id", T.LongType()),      # widening only -> OK
-                T.StructField("v", T.DoubleType()),     # widening only -> OK
-                T.StructField("flips", T.LongType()),   # real type change
-                T.StructField("fresh", T.StringType()),  # additive
-            ]
-        )
-        rep = schema_compat_report(old, new)
-        assert rep["added"] == ["fresh"]
-        assert rep["removed"] == ["gone"]
-        assert rep["type_changed"] == ["flips"]
-        assert rep["compatible"] is False
-
-    def test_additive_only_is_compatible(self, spark):
-        from pyspark.sql import types as T
-
-        from dlt_salesforce_iceberg_rest_demo_spark.normalize import (
-            schema_compat_report,
-        )
-
-        old = T.StructType([T.StructField("id", T.LongType())])
-        new = T.StructType(
-            [T.StructField("id", T.LongType()), T.StructField("x", T.StringType())]
-        )
-        rep = schema_compat_report(old, new)
-        assert rep["compatible"] is True and rep["added"] == ["x"]

@@ -20,6 +20,7 @@ from dlt_salesforce_iceberg_rest_demo_spark.operators import (
 )
 from dlt_salesforce_iceberg_rest_demo_spark.sources.parquet import load_table
 
+from . import jpeg_codecs as jc
 from .conftest import SF_DIR
 
 
@@ -1614,14 +1615,14 @@ class TestBinaryCodecs:
             pix = rng.randint(0, 256, size=w * h, dtype=np.uint8).tobytes()
             data = mm.encode_jpeg_gray(pix, w, h)
             assert data[:2] == b"\xff\xd8" and data[-2:] == b"\xff\xd9"
-            w2, h2, out = mm.decode_jpeg_gray(data)
+            w2, h2, out = jc.decode_jpeg_gray(data)
             assert (w2, h2) == (w, h)
             err = np.abs(
                 np.frombuffer(out, np.uint8).astype(int)
                 - np.frombuffer(pix, np.uint8).astype(int)
             )
             assert err.max() <= 2
-            assert mm.decode_jpeg_gray(data)[2] == out  # deterministic
+            assert jc.decode_jpeg_gray(data)[2] == out  # deterministic
 
     def test_jpeg_standard_table_lossy_but_deterministic(self):
         """The Annex-K luminance table path: genuinely lossy (smaller
@@ -1632,11 +1633,11 @@ class TestBinaryCodecs:
         from dlt_salesforce_iceberg_rest_demo_spark.operators import multimodal as mm
 
         pix = bytes(range(256))  # smooth gradient
-        d1 = mm.encode_jpeg_gray(pix, 16, 16, quant=mm.JPEG_STD_LUMA_QUANT)
-        d2 = mm.encode_jpeg_gray(pix, 16, 16, quant=mm.JPEG_STD_LUMA_QUANT)
+        d1 = mm.encode_jpeg_gray(pix, 16, 16, quant=jc.JPEG_STD_LUMA_QUANT)
+        d2 = mm.encode_jpeg_gray(pix, 16, 16, quant=jc.JPEG_STD_LUMA_QUANT)
         assert d1 == d2
         assert len(d1) < len(mm.encode_jpeg_gray(pix, 16, 16))
-        w, h, out = mm.decode_jpeg_gray(d1)
+        w, h, out = jc.decode_jpeg_gray(d1)
         assert (w, h) == (16, 16)
         err = np.abs(
             np.frombuffer(out, np.uint8).astype(int)
@@ -1667,11 +1668,11 @@ class TestBinaryCodecs:
             + struct.pack(">64H", *vals)
             + base[dqt + 4 + ln - 2 :]
         )
-        assert mm.decode_jpeg_gray(wide) == mm.decode_jpeg_gray(base)
+        assert jc.decode_jpeg_gray(wide) == jc.decode_jpeg_gray(base)
         with pytest.raises(ValueError, match="invalid DQT precision"):
             bad = bytearray(wide)
             bad[dqt + 4] = 0x20 | (bad[dqt + 4] & 0x0F)
-            mm.decode_jpeg_gray(bytes(bad))
+            jc.decode_jpeg_gray(bytes(bad))
 
     def test_jpeg_restart_intervals_round_trip(self):
         """DRI/RSTn (round 6 — previously NotImplementedError): encode
@@ -1685,7 +1686,7 @@ class TestBinaryCodecs:
         from dlt_salesforce_iceberg_rest_demo_spark.operators import multimodal as mm
 
         pix = bytes((x * 7 + 13) % 256 for x in range(24 * 16))  # 24x16: 6 MCUs
-        plain = mm.decode_jpeg_gray(mm.encode_jpeg_gray(pix, 24, 16))
+        plain = jc.decode_jpeg_gray(mm.encode_jpeg_gray(pix, 24, 16))
         for ri in (1, 2, 3, 5):
             data = mm.encode_jpeg_gray(pix, 24, 16, restart_interval=ri)
             assert b"\xff\xdd" in data
@@ -1693,18 +1694,18 @@ class TestBinaryCodecs:
                 data.count(bytes([0xFF, 0xD0 + k])) for k in range(8)
             )
             assert n_rst == (6 - 1) // ri
-            assert mm.decode_jpeg_gray(data) == plain
+            assert jc.decode_jpeg_gray(data) == plain
         # 9 restarts exercise the cyclic wrap RST7 -> RST0
         wide = bytes((x * 3 + 5) % 256 for x in range(88 * 8))  # 11 MCUs
         data = mm.encode_jpeg_gray(wide, 88, 8, restart_interval=1)
         assert bytes([0xFF, 0xD0]) in data and bytes([0xFF, 0xD7]) in data
-        assert mm.decode_jpeg_gray(data) == mm.decode_jpeg_gray(
+        assert jc.decode_jpeg_gray(data) == jc.decode_jpeg_gray(
             mm.encode_jpeg_gray(wide, 88, 8)
         )
         # a stream whose restart marker was stripped must fail loudly
         broken = data.replace(bytes([0xFF, 0xD0]), b"", 1)
         with pytest.raises(ValueError):
-            mm.decode_jpeg_gray(broken)
+            jc.decode_jpeg_gray(broken)
 
     def test_jpeg_progressive_round_trip_default_script(self):
         """SOF2 decode (round 6 — previously NotImplementedError):
@@ -1715,16 +1716,16 @@ class TestBinaryCodecs:
         from dlt_salesforce_iceberg_rest_demo_spark.operators import multimodal as mm
 
         pix = bytes((x * 37 + (x // 29) * 11) % 256 for x in range(29 * 21))
-        for q in (None, mm.JPEG_STD_LUMA_QUANT):
-            base = mm.decode_jpeg_gray(mm.encode_jpeg_gray(pix, 29, 21, quant=q))
-            prog = mm.encode_jpeg_gray_progressive(pix, 29, 21, quant=q)
+        for q in (None, jc.JPEG_STD_LUMA_QUANT):
+            base = jc.decode_jpeg_gray(mm.encode_jpeg_gray(pix, 29, 21, quant=q))
+            prog = jc.encode_jpeg_gray_progressive(pix, 29, 21, quant=q)
             assert b"\xff\xc2" in prog
             assert prog.count(b"\xff\xda") == 6  # the 6-scan script
-            assert mm.decode_jpeg_gray(prog) == base
+            assert jc.decode_jpeg_gray(prog) == base
         # deterministic bytes
-        assert mm.encode_jpeg_gray_progressive(
+        assert jc.encode_jpeg_gray_progressive(
             pix, 29, 21
-        ) == mm.encode_jpeg_gray_progressive(pix, 29, 21)
+        ) == jc.encode_jpeg_gray_progressive(pix, 29, 21)
 
     def test_jpeg_progressive_custom_scan_scripts(self):
         """Spectral-selection-only, deep successive approximation, and
@@ -1744,10 +1745,10 @@ class TestBinaryCodecs:
         smooth = bytes(min(255, (x % 40) + (x // 40)) for x in range(40 * 24))
         busy = bytes((x * 73 + (x // 17) * 41) % 256 for x in range(40 * 24))
         for pix in (smooth, busy):
-            base = mm.decode_jpeg_gray(mm.encode_jpeg_gray(pix, 40, 24))
+            base = jc.decode_jpeg_gray(mm.encode_jpeg_gray(pix, 40, 24))
             for script in scripts:
-                got = mm.decode_jpeg_gray(
-                    mm.encode_jpeg_gray_progressive(pix, 40, 24, scans=script)
+                got = jc.decode_jpeg_gray(
+                    jc.encode_jpeg_gray_progressive(pix, 40, 24, scans=script)
                 )
                 assert got == base, script
 
@@ -1781,10 +1782,10 @@ class TestBinaryCodecs:
             al_ac = rng.randint(0, 2)
             scans += [(a, b, 0, al_ac) for a, b in bands]
             scans += [(1, 63, a, a - 1) for a in range(al_ac, 0, -1)]
-            q = mm.JPEG_STD_LUMA_QUANT if rng.random() < 0.5 else None
-            base = mm.decode_jpeg_gray(mm.encode_jpeg_gray(pix, w, h, quant=q))
-            got = mm.decode_jpeg_gray(
-                mm.encode_jpeg_gray_progressive(pix, w, h, quant=q, scans=scans)
+            q = jc.JPEG_STD_LUMA_QUANT if rng.random() < 0.5 else None
+            base = jc.decode_jpeg_gray(mm.encode_jpeg_gray(pix, w, h, quant=q))
+            got = jc.decode_jpeg_gray(
+                jc.encode_jpeg_gray_progressive(pix, w, h, quant=q, scans=scans)
             )
             assert got == base, (w, h, scans)
 
@@ -1798,7 +1799,7 @@ class TestBinaryCodecs:
 
         pix = bytes([9] * (16 * 24))
         (tmp_path / "p.jpg").write_bytes(
-            mm.encode_jpeg_gray_progressive(pix, 16, 24)
+            jc.encode_jpeg_gray_progressive(pix, 16, 24)
         )
         df = mm.ingest_binary_dir(spark, str(tmp_path), glob="*.jpg")
         row = df.collect()[0]
@@ -1820,25 +1821,25 @@ class TestBinaryCodecs:
         ext = bytearray(base)
         ext[sof + 1] = 0xC1  # SOF0 -> SOF1 (extended sequential)
         with pytest.raises(NotImplementedError, match="SOF0"):
-            mm.decode_jpeg_gray(bytes(ext))
+            jc.decode_jpeg_gray(bytes(ext))
         # round-7: 3-component YCbCr now DECODES, so claiming ncomp=3
         # in a frame header that only carries one component spec is a
         # MALFORMED stream (short SOF), not an unsupported feature
         multi = bytearray(base)
         multi[sof + 9] = 3  # ncomp 1 -> 3, but SOF body stays 9 bytes
         with pytest.raises(ValueError, match="truncated SOF"):
-            mm.decode_jpeg_gray(bytes(multi))
+            jc.decode_jpeg_gray(bytes(multi))
         cmyk = bytearray(base)
         cmyk[sof + 9] = 4  # 4-component (CMYK/Adobe) stays a seam
         with pytest.raises(NotImplementedError, match="grayscale"):
-            mm.decode_jpeg_gray(bytes(cmyk))
+            jc.decode_jpeg_gray(bytes(cmyk))
         # a BASELINE scan header mislabeled as progressive (SOF2) is a
         # malformed stream, not an unsupported feature: Se=63 in a DC
         # scan must fail loudly (round 6 — SOF2 itself now decodes)
         prog = bytearray(base)
         prog[sof + 1] = 0xC2
         with pytest.raises(ValueError, match="Se=0"):
-            mm.decode_jpeg_gray(bytes(prog))
+            jc.decode_jpeg_gray(bytes(prog))
         assert struct.unpack(">HH", base[sof + 5 : sof + 9]) == (8, 8)
 
     def test_jpeg_ingest_meta_jvm_side_and_decode_stats(self, spark, tmp_path):
@@ -2001,7 +2002,7 @@ class TestJpegForeignGolden:
         from dlt_salesforce_iceberg_rest_demo_spark.operators import multimodal as mm
 
         p = self._fixture("spark_mllib_grayscale_progressive.jpg")
-        w, h, px = mm.decode_jpeg_gray(p.read_bytes())
+        w, h, px = jc.decode_jpeg_gray(p.read_bytes())
         jw, jh, jpx = self._imageio_gray(spark, p)
         assert (w, h) == (jw, jh) == (300, 215)
         diff = np.abs(
@@ -2016,7 +2017,7 @@ class TestJpegForeignGolden:
         from dlt_salesforce_iceberg_rest_demo_spark.operators import multimodal as mm
 
         p = self._fixture("ipython_2x2_baseline_gray.jpg")
-        assert mm.decode_jpeg_gray(p.read_bytes()) == (2, 2, b"\x80" * 4)
+        assert jc.decode_jpeg_gray(p.read_bytes()) == (2, 2, b"\x80" * 4)
 
     def test_our_encodings_decode_identically_in_imageio(
         self, spark, tmp_path
@@ -2035,8 +2036,8 @@ class TestJpegForeignGolden:
         files = {
             "base.jpg": mm.encode_jpeg_gray(pix, 24, 16),
             "rst.jpg": mm.encode_jpeg_gray(pix, 24, 16, restart_interval=2),
-            "prog.jpg": mm.encode_jpeg_gray_progressive(pix, 24, 16),
-            "prog_custom.jpg": mm.encode_jpeg_gray_progressive(
+            "prog.jpg": jc.encode_jpeg_gray_progressive(pix, 24, 16),
+            "prog_custom.jpg": jc.encode_jpeg_gray_progressive(
                 pix, 24, 16,
                 scans=[(0, 0, 0, 0), (1, 31, 0, 1), (32, 63, 0, 1),
                        (1, 31, 1, 0), (32, 63, 1, 0)],
@@ -2045,7 +2046,7 @@ class TestJpegForeignGolden:
         for name, data in files.items():
             (tmp_path / name).write_bytes(data)
         for name, data in files.items():
-            w, h, ours = mm.decode_jpeg_gray(data)
+            w, h, ours = jc.decode_jpeg_gray(data)
             jw, jh, theirs = self._imageio_gray(spark, tmp_path / name)
             assert (w, h) == (jw, jh) == (24, 16), name
             diff = np.abs(
@@ -2063,23 +2064,23 @@ class TestJpegForeignGolden:
 
         pix = bytes(range(64)) * 6
         base = mm.encode_jpeg_gray(pix, 24, 16)
-        want = mm.decode_jpeg_gray(base)
+        want = jc.decode_jpeg_gray(base)
         # fill bytes before EOI (terminates the entropy segment scan)
         assert base.endswith(b"\xff\xd9")
         padded = base[:-2] + b"\xff" * 3 + b"\xff\xd9"
-        assert mm.decode_jpeg_gray(padded) == want
+        assert jc.decode_jpeg_gray(padded) == want
         # fill bytes between header segments (marker-loop path)
         assert base.startswith(b"\xff\xd8")
         padded2 = b"\xff\xd8" + b"\xff\xff" + base[2:]
-        assert mm.decode_jpeg_gray(padded2) == want
+        assert jc.decode_jpeg_gray(padded2) == want
         # progressive: fill before the DHT that terminates scan 1 (a
         # raw FF C4 cannot occur inside entropy data — FF is stuffed)
-        prog = mm.encode_jpeg_gray_progressive(pix, 24, 16)
-        want_p = mm.decode_jpeg_gray(prog)
+        prog = jc.encode_jpeg_gray_progressive(pix, 24, 16)
+        want_p = jc.decode_jpeg_gray(prog)
         sos1 = prog.index(b"\xff\xda")
         dht2 = prog.index(b"\xff\xc4", sos1)
         padded3 = prog[:dht2] + b"\xff\xff" + prog[dht2:]
-        assert mm.decode_jpeg_gray(padded3) == want_p
+        assert jc.decode_jpeg_gray(padded3) == want_p
 
     def test_jpeg_invalid_ac_symbol_explicit_error(self):
         """Round-7 ADVICE fix: an AC run/size symbol with SSSS=0 and
@@ -2096,7 +2097,7 @@ class TestJpegForeignGolden:
         ac_table = {(1, 0): 0x10}       # one-bit code 0 -> run 1, size 0
         segments = [bytearray([0x00])]  # bits: DC '0', AC '0'
         with pytest.raises(ValueError, match="invalid AC run/size"):
-            mm._jpeg_baseline_scan(coefs, segments, dc_table, ac_table, 0)
+            jc._jpeg_baseline_scan(coefs, segments, dc_table, ac_table, 0)
 
 
 class TestJpegColor:
@@ -2187,8 +2188,8 @@ class TestJpegColor:
         rng = np.random.RandomState(11)
         rgb = rng.randint(0, 256, size=(24, 24, 3), dtype=np.uint8).tobytes()
         kw = dict(
-            quant_luma=mm.JPEG_STD_LUMA_QUANT,
-            quant_chroma=mm.JPEG_STD_CHROMA_QUANT,
+            quant_luma=jc.JPEG_STD_LUMA_QUANT,
+            quant_chroma=jc.JPEG_STD_CHROMA_QUANT,
         )
         d1 = mm.encode_jpeg_color(rgb, 24, 24, **kw)
         assert d1 == mm.encode_jpeg_color(rgb, 24, 24, **kw)
@@ -2257,8 +2258,8 @@ class TestJpegColor:
             ),
             "c420std.jpg": mm.encode_jpeg_color(
                 rgb.tobytes(), 34, 23,
-                quant_luma=mm.JPEG_STD_LUMA_QUANT,
-                quant_chroma=mm.JPEG_STD_CHROMA_QUANT,
+                quant_luma=jc.JPEG_STD_LUMA_QUANT,
+                quant_chroma=jc.JPEG_STD_CHROMA_QUANT,
             ),
         }
         for n, d in files.items():
@@ -2317,7 +2318,7 @@ class TestJpegColor:
         rgb = np.zeros((8, 8, 3), np.uint8).tobytes()
         data = mm.encode_jpeg_color(rgb, 8, 8)
         with pytest.raises(ValueError, match="not a grayscale"):
-            mm.decode_jpeg_gray(data)
+            jc.decode_jpeg_gray(data)
 
 
 class TestJpegColorProgressive:
@@ -2340,16 +2341,16 @@ class TestJpegColorProgressive:
                 base = mm.decode_jpeg(
                     mm.encode_jpeg_color(rgb.tobytes(), W, H, subsampling=sub)
                 )
-                prog = mm.encode_jpeg_color_progressive(
+                prog = jc.encode_jpeg_color_progressive(
                     rgb.tobytes(), W, H, subsampling=sub
                 )
                 assert prog[2:4] == b"\xff\xe0" and b"\xff\xc2" in prog
                 assert mm.decode_jpeg(prog) == base, (W, H, sub)
         # deterministic bytes
         rgb = rng.randint(0, 256, size=(13, 17, 3), dtype=np.uint8)
-        assert mm.encode_jpeg_color_progressive(
+        assert jc.encode_jpeg_color_progressive(
             rgb.tobytes(), 17, 13
-        ) == mm.encode_jpeg_color_progressive(rgb.tobytes(), 17, 13)
+        ) == jc.encode_jpeg_color_progressive(rgb.tobytes(), 17, 13)
 
     def test_custom_scan_script(self):
         """A minimal no-successive-approximation script (sequential-
@@ -2368,7 +2369,7 @@ class TestJpegColorProgressive:
         ]
         base = mm.decode_jpeg(mm.encode_jpeg_color(rgb.tobytes(), 34, 23))
         got = mm.decode_jpeg(
-            mm.encode_jpeg_color_progressive(rgb.tobytes(), 34, 23, scans=custom)
+            jc.encode_jpeg_color_progressive(rgb.tobytes(), 34, 23, scans=custom)
         )
         assert got == base
 
@@ -2380,7 +2381,7 @@ class TestJpegColorProgressive:
         rng = np.random.RandomState(31)
         rgb = rng.randint(0, 256, size=(23, 34, 3), dtype=np.uint8)
         for sub in [(2, 2), (1, 1)]:
-            d = mm.encode_jpeg_color_progressive(
+            d = jc.encode_jpeg_color_progressive(
                 rgb.tobytes(), 34, 23, subsampling=sub
             )
             p = tmp_path / f"p{sub[0]}{sub[1]}.jpg"
@@ -2426,9 +2427,9 @@ class TestJpegStreamValidation:
         rgbpix = rng.randint(0, 256, size=24 * 16 * 3, dtype=np.uint8).tobytes()
         streams = [
             mm.encode_jpeg_gray(pix, 24, 16),
-            mm.encode_jpeg_gray_progressive(pix, 24, 16),
+            jc.encode_jpeg_gray_progressive(pix, 24, 16),
             mm.encode_jpeg_color(rgbpix, 24, 16),
-            mm.encode_jpeg_color_progressive(rgbpix, 24, 16),
+            jc.encode_jpeg_color_progressive(rgbpix, 24, 16),
             mm.encode_jpeg_gray(pix, 24, 16, restart_interval=2),
         ]
         rnd = random.Random(99)

@@ -63,7 +63,11 @@ class TestFlow:
         pipeline = make_pipeline(spark, tmp_path)
         overrides = dict(FULL_CONFIG)
         overrides["SALESFORCE_RESOURCES"] = "account,contact"
-        summary = orch.run_flow(pipeline, overrides)
+        # the four tasks in the order both orchestrator builders wire them
+        config = orch.validate_configuration(overrides)
+        result = orch.run_pipeline_task(pipeline, config)
+        verification = orch.verify_data_load(pipeline.lake, result)
+        summary = orch.print_result(verification)
         assert summary == {
             "tables_verified": 2,
             "tables_total": 2,

@@ -20,6 +20,7 @@ from dlt_salesforce_iceberg_rest_demo_spark.sources.parquet import (
     TABLES,
     _scan,
     load_table,
+    load_table_incremental,
 )
 
 from .conftest import SF_DIR
@@ -127,6 +128,27 @@ class TestSchemaCache:
         b = load_table(spark, SF_DIR, "nation")
         joined = a.alias("a").join(b.alias("b"), F.col("a.n_nationkey") == F.col("b.n_nationkey"))
         assert joined.count() == a.count()
+
+
+class TestLoaderTyping:
+    def test_incremental_types_columns_like_load_table(self, spark, tmp_path):
+        """Both loaders end with the same typing step: on a file whose
+        cursor is TIMESTAMP(NANOS), a naive-microsecond column comes back
+        as session-tz ``timestamp`` from either, and the cursor filter
+        still runs on the raw column."""
+        ns = [1_700_000_000_123_456_789, 1_700_000_100_000_000_999]
+        seen = pa.array([1_600_000_000_000_000, 1_600_000_001_000_000], pa.timestamp("us"))
+        write(tmp_path / "events.parquet", id=pa.array([1, 2], pa.int64()),
+              ts=pa.array(ns, pa.timestamp("ns")), seen=seen)
+        full = load_table(spark, str(tmp_path), "events")
+        inc = load_table_incremental(
+            spark, str(tmp_path), "events", "ts", "2023-11-14 22:14:00"
+        )
+        assert full.dtypes == [("id", "bigint"), ("ts", "timestamp"), ("seen", "timestamp")]
+        assert inc.dtypes == full.dtypes
+        assert [r.id for r in inc.collect()] == [2]
+        pushed = inc._jdf.queryExecution().executedPlan().toString()
+        assert "GreaterThan(ts," in pushed
 
 
 class TestOneInferenceSite:

@@ -568,8 +568,8 @@ class TestNonRegistryPythonOpSweep:
     was caught solely because a registry query happened to compose the
     kernel. These tests execute the operator entry points NO registry
     query reaches (persisted-index build/query splits, the
-    non-broadcast incremental-substring probe, the stateful streaming
-    twins) and hold them to the same invariant: no duplicated
+    non-broadcast incremental-substring probe) and hold them to the
+    same invariant: no duplicated
     scalar-UDF signature, at most one map-style Python node, per plan.
     Building this sweep immediately caught another instance:
     `pq_build` aliased the encode UDF output and posexploded it, and
@@ -680,61 +680,4 @@ class TestNonRegistryPythonOpSweep:
                 ),
                 offenders,
             )
-        assert not offenders, offenders
-
-    def test_streaming_twins_no_duplicated_python(self, spark, tmp_path):
-        """The stateful streaming kernels, audited from the LAST
-        micro-batch's executed plan (explainInternal): one
-        FlatMapGroupsInPandasWithState node each, no duplicated
-        scalar-UDF signatures."""
-        from pyspark.sql import Row
-
-        from dlt_salesforce_iceberg_rest_demo_spark.streaming import (
-            stateful_user_totals,
-            streaming_heavy_hitters,
-        )
-
-        landing = tmp_path / "in"
-        landing.mkdir()
-        rows = [
-            Row(user_id=1, value=10.0, event_type="a"),
-            Row(user_id=2, value=1.0, event_type="b"),
-        ]
-        spark.createDataFrame(rows).coalesce(1).write.parquet(
-            str(landing / "b1")
-        )
-        stream = (
-            spark.readStream.schema(
-                "user_id long, value double, event_type string"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(landing / "*"))
-        )
-        offenders: dict = {}
-        for name, out in (
-            ("stateful_user_totals", stateful_user_totals(stream)),
-            ("streaming_heavy_hitters", streaming_heavy_hitters(stream)),
-        ):
-            q = (
-                out.writeStream.format("memory")
-                .queryName(f"sweep_{name}")
-                .outputMode("update")
-                .option(
-                    "checkpointLocation", str(tmp_path / f"ckpt_{name}")
-                )
-                .start()
-            )
-            try:
-                q.processAllAvailable()
-                # extended=False prints the physical plan only —
-                # extended mode repeats the node once per plan phase
-                # (parsed/analyzed/optimized/physical), which would
-                # read as spurious duplication
-                plan = q._jsq.explainInternal(False)
-            finally:
-                q.stop()
-            # the with-state node prints as FlatMapGroupsInPandasWithState
-            # (matched by the FlatMapGroupsInPandas pattern): exactly one
-            self._audit(name, plan, offenders)
-            assert "FlatMapGroupsInPandas" in plan, name
         assert not offenders, offenders

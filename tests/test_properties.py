@@ -10,11 +10,13 @@ negative values, duplicate keys, zero vectors), not in volume.
 
 from __future__ import annotations
 
+import pandas as pd
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import Row
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from dlt_salesforce_iceberg_rest_demo_spark.functions.skew import salted_join
 from dlt_salesforce_iceberg_rest_demo_spark.operators import similarity, temporal
@@ -2470,6 +2472,22 @@ class TestDsirProperty:
         assert got == want[:n_select]
 
 
+def _quantize_unit_udf(dim: int):
+    """Reference column for the mask tests: ``similarity._quantize_unit_np``
+    as an Arrow-batched UDF, array<long> of ``floor(x_i / ‖x‖ * 1e6)``,
+    NULL for malformed and zero-norm rows, the rows the package's
+    kernels drop."""
+    @F.pandas_udf(T.ArrayType(T.LongType()))
+    def qu(vecs: pd.Series) -> pd.Series:
+        m, valid = similarity._stack_valid(vecs, dim)
+        uq, nz = similarity._quantize_unit_np(m)
+        return pd.Series(
+            [uq[i] if valid[i] and nz[i] else None for i in range(len(valid))]
+        )
+
+    return qu
+
+
 class TestJvmUdfTwinMasks:
     """r9 verdict task 2: the round-9 plan fixes moved the Python
     UDFs' NULL-mask logic into JVM twin predicates (`_encodable`) and
@@ -2532,7 +2550,7 @@ class TestJvmUdfTwinMasks:
         non-NULL — raw AND finite-prefiltered (agreement must not
         depend on the prefilter)."""
         df = self._df(spark)
-        qu = similarity._quantize_unit_udf(self.DIM)
+        qu = _quantize_unit_udf(self.DIM)
         for pre in (
             df,
             similarity._non_null_vectors(df, "embedding", finite=True),
@@ -2625,7 +2643,7 @@ class TestJvmUdfTwinMasks:
             [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
             "id long, embedding array<double>",
         )
-        qu = similarity._quantize_unit_udf(self.DIM)
+        qu = _quantize_unit_udf(self.DIM)
         enc = {
             r["id"]
             for r in df.filter(

@@ -1,6 +1,5 @@
-"""Tier-2 (Pandas UDF / applyInPandas) implementations must agree with
-their native tier-1 twins, plus IVF ANN recall and the nanos-cursor
-pushdown plan."""
+"""Python-tier similarity kernels (IVF ANN recall, NULL-vector
+tolerance, deterministic k-means) and the nanos-cursor pushdown plan."""
 
 from __future__ import annotations
 
@@ -9,54 +8,13 @@ import io
 
 from pyspark.sql import functions as F
 
-from dlt_salesforce_iceberg_rest_demo_spark.functions import (
-    asof_join_pandas,
-    quality_score_pandas,
-)
-from dlt_salesforce_iceberg_rest_demo_spark.operators import similarity, temporal, text
+from dlt_salesforce_iceberg_rest_demo_spark.operators import similarity
 from dlt_salesforce_iceberg_rest_demo_spark.sources.parquet import (
     load_table,
     load_table_incremental,
 )
 
 from .conftest import SF_DIR
-
-
-def test_pandas_quality_udf_matches_native(spark):
-    docs = load_table(spark, SF_DIR, "documents")
-    native = {r.doc_id: r.quality for r in text.quality_score(docs).collect()}
-    via_udf = {
-        r.doc_id: r.q
-        for r in docs.select(
-            "doc_id", quality_score_pandas("text").alias("q")
-        ).collect()
-    }
-    assert set(native) == set(via_udf)
-    for k in native:
-        assert abs(native[k] - via_udf[k]) < 1e-12
-
-
-def test_pandas_asof_matches_native(spark):
-    events = load_table(spark, SF_DIR, "events")
-    purchases = events.filter(F.col("event_type") == "purchase").select(
-        "user_id", "event_id", "ts", "value"
-    )
-    clicks = events.filter(F.col("event_type") == "click").select(
-        "user_id", "event_id", "ts", "value"
-    )
-    native = {
-        r.event_id: (r.ts_asof, r.event_id_asof)
-        for r in temporal.asof_join(
-            purchases, clicks, on="user_id", right_cols=["event_id"]
-        ).collect()
-    }
-    pandas_tier = {
-        r.event_id: (r.ts_asof, r.event_id_asof)
-        for r in asof_join_pandas(
-            purchases, clicks, on="user_id", right_cols=["event_id"]
-        ).collect()
-    }
-    assert native == pandas_tier
 
 
 def test_ivf_recall_at_5(spark):
@@ -125,68 +83,3 @@ def test_nanos_cursor_pushdown_plan_and_result(spark):
     assert sorted(r.event_id for r in inc.collect()) == sorted(
         r.event_id for r in plain.collect()
     )
-
-
-def test_arrow_udf_matches_native_token_count(spark):
-    """useArrow=True row-wise UDF tier: exact agreement with the
-    JVM-native split/size expression."""
-    from dlt_salesforce_iceberg_rest_demo_spark.functions.udfs import (
-        token_count_arrow_udf,
-    )
-    from dlt_salesforce_iceberg_rest_demo_spark.operators.text import tokens
-    from dlt_salesforce_iceberg_rest_demo_spark.sources.parquet import load_table
-
-    from .conftest import SF_DIR
-
-    docs = load_table(spark, SF_DIR, "documents")
-    udf = token_count_arrow_udf()
-    both = docs.select(
-        "doc_id",
-        F.size(tokens("text")).alias("native"),
-        udf(F.col("text")).alias("arrow_udf"),
-    )
-    assert both.filter(F.col("native") != F.col("arrow_udf")).count() == 0
-    assert both.count() > 0
-
-
-def test_apply_in_arrow_matches_native_extrema(spark):
-    from dlt_salesforce_iceberg_rest_demo_spark.functions.arrow_tier import (
-        group_extrema_apply_in_arrow,
-    )
-    from dlt_salesforce_iceberg_rest_demo_spark.sources.parquet import load_table
-
-    from .conftest import SF_DIR
-
-    ev = load_table(spark, SF_DIR, "events")
-    arrow = {
-        r.user_id: (r.n_events, r.min_value, r.max_value)
-        for r in group_extrema_apply_in_arrow(ev).collect()
-    }
-    native = {
-        r.user_id: (r.n_events, r.min_value, r.max_value)
-        for r in ev.groupBy("user_id")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.min("value").alias("min_value"),
-            F.max("value").alias("max_value"),
-        )
-        .collect()
-    }
-    assert arrow == native and len(arrow) > 0
-
-
-def test_map_in_arrow_matches_native_withcolumn(spark):
-    from dlt_salesforce_iceberg_rest_demo_spark.functions.arrow_tier import (
-        add_double_map_in_arrow,
-    )
-    from dlt_salesforce_iceberg_rest_demo_spark.sources.parquet import load_table
-
-    from .conftest import SF_DIR
-
-    ev = load_table(spark, SF_DIR, "events").select("event_id", "value")
-    arrow = {r.event_id: r.doubled for r in add_double_map_in_arrow(ev).collect()}
-    native = {
-        r.event_id: r.doubled
-        for r in ev.withColumn("doubled", F.col("value") * 2).collect()
-    }
-    assert arrow == native and len(arrow) > 0
