@@ -15,13 +15,15 @@ extraction and load:
 Spark-first, and never per-row Python on the executors (the
 reference's `_process_record`, records.py:15-47, is exactly the per-row
 loop we refuse to port). Steps 1-3 happen where the batch is built:
-`sources.salesforce.read_object(..., load_id=)` lands it as one Arrow
-table whose names are already :func:`snake_case`, with the lineage
-columns and native timestamps set by Arrow casts (no string
-round-trip; the canonical format survives as
-:data:`CANONICAL_TS_FORMAT`, in which the lake reports a batch's
-cursor). Step 4 is :func:`align_to_schema`, one projection the lake
-skips when the batch already has the table's columns.
+`sources.salesforce.read_object(..., load_id=)` lands it as one
+driver-side Arrow table whose names are already :func:`snake_case`,
+with the lineage columns and native timestamps set by Arrow casts (no
+string round-trip; the canonical format survives as
+:data:`CANONICAL_TS_FORMAT`, in which the lake reports the batch's
+cursor, read on the driver). Step 4 is :func:`align_to_schema`, one
+projection the lake runs only for a batch whose columns differ from
+the table's; a landed batch has them, and the lake writes it from the
+driver.
 """
 
 from __future__ import annotations
@@ -39,9 +41,10 @@ logger = logging.getLogger(__name__)
 # Canonical datetime format of the reference (records.py:38,45).
 CANONICAL_TS_FORMAT = "yyyy-MM-dd'T'HH:mm:ss.SSSSSS'Z'"
 
-# Column metadata key that marks a batch's incremental cursor column:
-# set by the source when it lands a batch, read (and dropped) by the
-# lake write, which reports the column's max in ``WriteReport.cursor``.
+# Arrow field-metadata key that marks a batch's incremental cursor
+# column: set by the source when it lands a batch, read (and dropped)
+# by the lake write, which reports the column's max in
+# ``WriteReport.cursor``.
 CURSOR_HINT = "cursor"
 
 

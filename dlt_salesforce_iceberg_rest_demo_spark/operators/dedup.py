@@ -25,6 +25,7 @@ from __future__ import annotations
 import random
 
 import numpy as np
+import pyarrow as pa
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -980,8 +981,9 @@ def _containment_dense(
         F.pmod(F.hash("doc"), F.lit(n_blocks)).cast("int").alias("bid"),
     ))
     spark = docbm.sparkSession
+    pairs = [(i, j) for i in range(n_blocks) for j in range(i, n_blocks)]
     bp = spark.createDataFrame(
-        [(i, j) for i in range(n_blocks) for j in range(i, n_blocks)],
+        pa.table({"bi": [i for i, _ in pairs], "bj": [j for _, j in pairs]}),
         "bi int, bj int",
     )
     lside = docbm.join(F.broadcast(bp), docbm["bid"] == bp["bi"]).select(

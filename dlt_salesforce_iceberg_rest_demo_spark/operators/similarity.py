@@ -664,16 +664,17 @@ def ivf_build(
         "corpus_id", "cluster", "pos", F.col("val0").cast("double").alias("val")
     )
     lake.replace(flat, f"{index_name}__assignments")
-    spark = corpus.sparkSession
-    cent_rows = [
-        (ci, pi, float(v))
-        for ci, row in enumerate(centroids)
-        for pi, v in enumerate(row)
-    ]
-    cent_df = spark.createDataFrame(
-        cent_rows, "cluster long, pos long, val double"
+    lake.replace(
+        pa.Table.from_pylist(
+            [
+                {"cluster": ci, "pos": pi, "val": float(v)}
+                for ci, row in enumerate(centroids)
+                for pi, v in enumerate(row)
+            ],
+            pa.schema([("cluster", pa.int64()), ("pos", pa.int64()), ("val", pa.float64())]),
+        ),
+        f"{index_name}__centroids",
     )
-    lake.replace(cent_df, f"{index_name}__centroids")
     return centroids
 
 
@@ -1487,15 +1488,16 @@ def pq_build(
         )
     )
     lake.replace(flat, f"{index_name}__codes")
-    spark = corpus.sparkSession
-    book_rows = [
-        (j, code, d, int(val))
-        for j, book in enumerate(books)
-        for code, cent in enumerate(book)
-        for d, val in enumerate(cent)
-    ]
     lake.replace(
-        spark.createDataFrame(book_rows, "j long, code long, d long, val long"),
+        pa.Table.from_pylist(
+            [
+                {"j": j, "code": code, "d": d, "val": int(val)}
+                for j, book in enumerate(books)
+                for code, cent in enumerate(book)
+                for d, val in enumerate(cent)
+            ],
+            pa.schema([(c, pa.int64()) for c in ("j", "code", "d", "val")]),
+        ),
         f"{index_name}__books",
     )
     return books

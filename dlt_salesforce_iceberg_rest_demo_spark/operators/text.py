@@ -976,7 +976,11 @@ def bpe_train_merges_batched(
         release(words)
         words = new
     return spark.createDataFrame(
-        merges, "merge_rank long, left string, right string, pair_count long"
+        pa.table(
+            [list(c) for c in zip(*merges)] or [[], [], [], []],
+            names=["merge_rank", "left", "right", "pair_count"],
+        ),
+        "merge_rank long, left string, right string, pair_count long",
     )
 
 

@@ -9,18 +9,21 @@ is refused before anything is extracted. Per resource:
 1. read the last cursor from the state store (dlt incremental parity);
 2. extract through the transport with P1-P5 pushdown (Bulk -> Standard
    fallback) and land the batch already normalized (dlt normalize stage
-   parity): ``read_object(..., load_id=)`` builds one Arrow table with
-   snake_case names, `_dlt_load_id`/`_dlt_id` lineage, native
-   timestamps and the cursor column marked, so the lake receives a bare
-   `LocalRelation` with the table's columns and no projection to run;
+   parity): ``read_object(..., load_id=)`` builds one driver-side Arrow
+   table with snake_case names, `_dlt_load_id`/`_dlt_id` lineage,
+   native timestamps and the cursor column marked in its field
+   metadata - the table's columns, with no projection to run;
 3. write with the resource's disposition (replace / merge-on-Id /
-   append fallback). An empty batch for a table that exists is not
+   append fallback). The lake writes the Arrow batch from the driver,
+   as the reference's destination does (``i_table.append(pa_table)``):
+   only a merge into a table that has data runs Spark jobs, for its
+   copy-on-write rewrite. An empty batch for a table that exists is not
    written unless it replaces (an idle poll, which dlt never sends to
-   the destination either): it runs no Spark job;
+   the destination either);
 4. advance the cursor to the max replication value of the batch, which
-   the lake write observes while it executes the batch
-   (``WriteReport.cursor``; no job after the write), once that
-   resource's write has returned.
+   the lake write reads from the Arrow batch on the driver
+   (``WriteReport.cursor``; no job), once that resource's write has
+   returned.
 
 A resource that fails does not stop the others: they finish, commit and
 advance their cursors; the failed resource's cursor stays where it was,
@@ -30,9 +33,10 @@ and cursors of a successful run are in resource order.
 `force_replace` (W6, salesforce_pipeline.py:32-34,184-203): every
 resource is written as replace and the state store is wiped first.
 
-The whole of steps 2-3 is ONE lazy Catalyst plan per resource - no
-intermediate materialization (the reference stages dicts -> parquet job
-files -> arrow batches between its three dlt stages).
+Steps 2-3 hold each batch as one Arrow table from the transport to
+the Parquet file - no intermediate materialization (the reference
+stages dicts -> parquet job files -> arrow batches between its three
+dlt stages).
 """
 
 from __future__ import annotations
@@ -141,13 +145,11 @@ class SalesforcePipeline:
         )
         disposition = "replace" if force_replace else cfg.write_disposition
         pk = tuple(snake_case(k) for k in cfg.primary_key)
-        # An idle poll: nothing to write. isEmpty() on the landed batch
-        # runs on the driver (no job), before the lake attaches its
-        # cursor observation.
+        # An idle poll: nothing to write.
         if (
             disposition != "replace"
             and self.lake.exists(cfg.name)
-            and batch.isEmpty()
+            and batch.num_rows == 0
         ):
             columns = self.lake.schema(cfg.name).fieldNames()
             fallback = falls_back_to_append(disposition, pk, columns)

@@ -47,18 +47,27 @@ branch (:meth:`ParquetLake.write_to_branch`). It is built from two
 primitives, append-or-skip (an empty batch commits nothing) and the
 copy-on-write rewrite, which ``merge_cdc`` shares.
 
+Like the reference's ``i_table.append(pa_table)``, the body takes a
+driver-side Arrow batch (what ``sources.salesforce.read_object``
+lands) and writes it from the driver as one Parquet file, with its
+rows and cursor read there: only a merge into a table that has data
+runs Spark, for its rewrite. A DataFrame batch, and an Arrow batch
+that needs alignment or goes to a partitioned table, is written by
+Spark.
+
 The layout has one format. A lake in the earlier layout (main's head
 and the branches each in a store of their own, manifest 0 a bare list)
 is neither read nor migrated: ``exists`` does not see its tables.
 
 This lake is the one implementation of the reference's Iceberg table
 semantics. A real Iceberg catalog would be a second backend under
-``_write`` (the same observed rows and cursor, the commit summary as
+``_write`` (the same rows and cursor, the commit summary as
 ``snapshot-property.*``), not a parallel copy of the dispositions.
 """
 
 from __future__ import annotations
 
+import datetime
 import json
 import logging
 import os
@@ -67,13 +76,14 @@ from dataclasses import dataclass
 from pathlib import Path
 
 import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
 
 from ..normalize import (
-    CANONICAL_TS_FORMAT,
     CURSOR_HINT,
     align_to_schema,
     nullable_everything,
@@ -83,10 +93,8 @@ from ..normalize import (
 logger = logging.getLogger(__name__)
 
 # Table properties written at auto-create (salesforce_pipeline.py:146-149).
-DEFAULT_TABLE_PROPERTIES = {
-    "write.format.default": "parquet",
-    "write.parquet.compression-codec": "snappy",
-}
+CODEC = "write.parquet.compression-codec"
+DEFAULT_TABLE_PROPERTIES = {"write.format.default": "parquet", CODEC: "snappy"}
 
 # Marker column for guard_stale tombstones: a delete that wins under the
 # version guard persists as a row with this column True (payload NULL,
@@ -109,9 +117,9 @@ class WriteReport:
     disposition: str
     rows_written: int
     fallback_append: bool = False
-    # Max of the batch's cursor column (CANONICAL_TS_FORMAT), observed
-    # while the write executed the batch; None without a marked cursor
-    # column or without a non-null cursor value.
+    # Max of an Arrow batch's marked cursor column (:func:`_cursor`);
+    # None for a DataFrame batch, without a marked cursor column or
+    # without a non-null cursor value.
     cursor: str | None = None
 
 
@@ -125,22 +133,23 @@ def falls_back_to_append(
     )
 
 
-def _observe_cursor(df: DataFrame):
-    """Attach the max of the marked cursor column to the batch itself,
-    below anything a disposition builds on it: every disposition executes
-    the batch at least once (a merge's count, or the write), and that
-    first execution fills the observation at no extra job. A merge's
-    value is therefore the batch max, never the merged table's. Returns
-    the unmarked batch and a reader for the value (None if unmarked)."""
-    marked = [f.name for f in df.schema.fields if f.metadata.get(CURSOR_HINT)]
+def _cursor(batch: pa.Table) -> str | None:
+    """The max of the column whose Arrow field metadata carries
+    ``normalize.CURSOR_HINT``, read on the driver and written as
+    ``F.date_format(F.max(c), CANONICAL_TS_FORMAT)`` writes it in a UTC
+    session (4-digit year, 6-digit micros, a literal ``Z``). None
+    without a marked column or without a non-null value in it."""
+    marked = [
+        f.name for f in batch.schema if CURSOR_HINT.encode() in (f.metadata or {})
+    ]
     if not marked:
-        return df, lambda: None
+        return None
     (column,) = marked
-    obs = Observation()
-    df = df.withMetadata(column, {}).observe(
-        obs, F.date_format(F.max(column), CANONICAL_TS_FORMAT).alias("cursor")
-    )
-    return df, lambda: obs.get["cursor"]
+    top = pc.max(batch[column].cast(pa.timestamp("us", tz="UTC"))).value
+    if top is None:
+        return None
+    t = datetime.datetime(1970, 1, 1) + datetime.timedelta(microseconds=top)
+    return f"{t.year:04d}-{t:%m-%dT%H:%M:%S}.{t.microsecond:06d}Z"
 
 
 def _columns(schema: T.StructType) -> list[tuple[str, T.DataType]]:
@@ -477,13 +486,21 @@ class ParquetLake:
         spec = self.table_properties(table).get("partition-by", "")
         return [c for c in spec.split(",") if c]
 
-    def _new_data_dir(self, table: str, df: DataFrame) -> tuple[str, int]:
-        """Materialize df as an immutable data dir; returns (name, rows).
+    def _new_data_dir(self, table: str, batch: pa.Table | DataFrame) -> tuple[str, int]:
+        """Materialize ``batch`` as an immutable data dir; returns (name,
+        rows).
 
-        The row count rides the write itself via ``observe()`` (one
-        scan total): a read-back count would be a second full scan of
-        just-written data per commit, which at 100 TB doubles every
-        load's I/O."""
+        An Arrow batch (already in the table's Arrow schema, see
+        :meth:`_land`) is written from the driver as one Parquet file
+        compressed with the table's :data:`CODEC`, as the reference's
+        destination writes its batches: no Spark job. Its timestamps are
+        stored as INT64 micros (Iceberg's type) and read back at the
+        table schema like Spark's own files.
+
+        A DataFrame is written by a Spark job whose row count rides the
+        write itself via ``observe()`` (one scan total): a read-back
+        count would be a second full scan of just-written data per
+        commit, which at 100 TB doubles every load's I/O."""
         tdir = self.root / table
         # Allocate past any existing dir, not main-version + 1: branch
         # commits write data dirs without advancing main's head, so
@@ -495,8 +512,16 @@ class ParquetLake:
         ]
         v = max(existing, default=self._head(table)) + 1
         name = f"data_{v:06d}"
+        if isinstance(batch, pa.Table):
+            (tdir / name).mkdir()
+            pq.write_table(
+                batch,
+                tdir / name / "part-00000.parquet",
+                compression=self.table_properties(table).get(CODEC, "snappy"),
+            )
+            return name, batch.num_rows
         obs = Observation(f"rows_{table}_{v}")
-        writer = df.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
+        writer = batch.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
             "errorifexists"
         )
         parts = self.partition_columns(table)
@@ -542,6 +567,25 @@ class ParquetLake:
     def drop_table(self, table: str) -> None:
         shutil.rmtree(self.root / table, ignore_errors=True)
 
+    def _land(self, table: str, batch: pa.Table) -> pa.Table | DataFrame:
+        """Auto-create if missing, then decide where an Arrow batch is
+        written. A batch with the table's columns (names and Arrow types
+        in order) into an unpartitioned table stays on the driver,
+        returned in the table's Arrow schema (the cast changes no type;
+        it drops the cursor mark). Any other batch enters Spark as a
+        ``LocalRelation`` and takes the DataFrame route (:meth:`_prepare`):
+        schema drift keeps :func:`align_to_schema`'s permissive casts
+        (and Spark's session-zone reading of naive timestamps), and a
+        partitioned table keeps Spark's hive partition-value encoding."""
+        if not self.exists(table):
+            self.create_table(table, from_arrow_schema(batch.schema))
+        target = to_arrow_schema(self.schema(table))
+        if self.partition_columns(table) or [
+            (f.name, f.type) for f in batch.schema
+        ] != [(f.name, f.type) for f in target]:
+            return self._prepare(table, self.spark.createDataFrame(batch))
+        return batch.cast(target)
+
     def _prepare(self, table: str, df: DataFrame) -> DataFrame:
         """Auto-create if missing, then T3-align the batch to the table
         schema (add typed NULLs, drop extras, target order -
@@ -582,21 +626,22 @@ class ParquetLake:
 
     def write(
         self,
-        df: DataFrame,
+        batch: pa.Table | DataFrame,
         table: str,
         disposition: str,
         primary_key: tuple[str, ...] | list[str] = (),
     ) -> WriteReport:
         """Disposition dispatch, the destination entry point
-        (salesforce_pipeline.py:62-176), committed to main. The report
-        carries the batch's max cursor when a column's metadata carries
+        (salesforce_pipeline.py:62-176), committed to main. ``batch`` is
+        a driver-side Arrow table or a DataFrame. The report carries an
+        Arrow batch's max cursor when a field's metadata carries
         ``normalize.CURSOR_HINT`` (``read_object(..., load_id=)`` marks
         the replication key)."""
-        return self._write(df, table, disposition, primary_key, None)
+        return self._write(batch, table, disposition, primary_key, None)
 
     def write_to_branch(
         self,
-        df: DataFrame,
+        batch: pa.Table | DataFrame,
         table: str,
         disposition: str,
         primary_key: tuple[str, ...] | list[str] = (),
@@ -608,25 +653,28 @@ class ParquetLake:
         branch forks at the current main snapshot on first contact;
         merge reads its base from the branch, so multiple staged batches
         compose before one audit + :meth:`fast_forward` publishes them."""
-        return self._write(df, table, disposition, primary_key, branch)
+        return self._write(batch, table, disposition, primary_key, branch)
 
-    def append(self, df: DataFrame, table: str) -> WriteReport:
-        """W1 on main: ``write(df, table, "append")``."""
-        return self.write(df, table, "append")
+    def append(self, batch: pa.Table | DataFrame, table: str) -> WriteReport:
+        """W1 on main: ``write(batch, table, "append")``."""
+        return self.write(batch, table, "append")
 
-    def replace(self, df: DataFrame, table: str) -> WriteReport:
-        """W2 on main: ``write(df, table, "replace")``."""
-        return self.write(df, table, "replace")
+    def replace(self, batch: pa.Table | DataFrame, table: str) -> WriteReport:
+        """W2 on main: ``write(batch, table, "replace")``."""
+        return self.write(batch, table, "replace")
 
     def merge(
-        self, df: DataFrame, table: str, primary_key: tuple[str, ...] | list[str]
+        self,
+        batch: pa.Table | DataFrame,
+        table: str,
+        primary_key: tuple[str, ...] | list[str],
     ) -> WriteReport:
-        """W3 on main: ``write(df, table, "merge", primary_key)``."""
-        return self.write(df, table, "merge", primary_key)
+        """W3 on main: ``write(batch, table, "merge", primary_key)``."""
+        return self.write(batch, table, "merge", primary_key)
 
     def _write(
         self,
-        df: DataFrame,
+        batch: pa.Table | DataFrame,
         table: str,
         disposition: str,
         primary_key: tuple[str, ...] | list[str],
@@ -650,15 +698,29 @@ class ParquetLake:
         - W4: merge with no PK, or PK columns the table lacks, warns and
           appends on every load, first contact included
           (salesforce_pipeline.py:131-138).
+
+        An Arrow batch that :meth:`_land` keeps on the driver is written
+        from the driver: append, replace, first-contact merge and W4
+        run no Spark job, and a merge into data runs only its
+        copy-on-write rewrite, with the key set deduplicated on the
+        driver. Its rows are ``num_rows`` and its cursor
+        :func:`_cursor`. A DataFrame (or an Arrow batch :meth:`_land`
+        sends to Spark) is written by Spark jobs.
         """
         if disposition not in ("append", "replace", "merge"):
             raise ValueError(f"unknown write disposition: {disposition}")
-        df, cursor = _observe_cursor(df)
-        df = self._prepare(table, df)
+        if isinstance(batch, pa.Table):
+            cursor = _cursor(batch)
+            batch = self._land(table, batch)
+        else:
+            cursor = None
+            batch = self._prepare(table, batch)
+        arrow = isinstance(batch, pa.Table)
         if ref is not None and ref not in self.branches(table):
             self.create_branch(table, ref)
         pk = list(primary_key)
-        fallback = falls_back_to_append(disposition, pk, df.columns)
+        columns = batch.column_names if arrow else batch.columns
+        fallback = falls_back_to_append(disposition, pk, columns)
         if fallback:
             logger.warning(
                 "merge disposition for %s without usable primary key %s: "
@@ -667,35 +729,41 @@ class ParquetLake:
                 pk,
             )
         if disposition == "replace":
-            name, rows = self._new_data_dir(table, df)
+            name, rows = self._new_data_dir(table, batch)
             self._commit(table, [name], ref)
         elif (
             disposition == "append"
             or fallback
             or not self._current_manifest(table, ref)
         ):
-            rows = self._append_or_skip(df, table, ref)
+            rows = self._append_or_skip(batch, table, ref)
         else:
-            # A full count, not isEmpty(): a limit-1 action would fill
-            # the cursor observation under the batch from a partial scan.
-            rows = df.count()
+            rows = batch.num_rows if arrow else batch.count()
             # An empty batch is a no-op: copy-on-write would rewrite the
             # whole table for an idle cursor poll.
-            if rows:
-                self._rewrite(table, ref, df.select(*pk).distinct(), df)
+            if rows and arrow:
+                # the key set is deduplicated on the driver; both sides
+                # enter Spark as LocalRelations
+                keys = batch.select(pk).group_by(pk).aggregate([])
+                batch = self.spark.createDataFrame(batch)
+                self._rewrite(table, ref, self.spark.createDataFrame(keys), batch)
+            elif rows:
+                self._rewrite(table, ref, batch.select(*pk).distinct(), batch)
         # rows_written = batch rows loaded (the reference's LoadInfo
         # semantics), not the copy-on-write rewrite size.
         return WriteReport(
-            table, disposition, rows, fallback_append=fallback, cursor=cursor()
+            table, disposition, rows, fallback_append=fallback, cursor=cursor
         )
 
-    def _append_or_skip(self, df: DataFrame, table: str, ref: str | None) -> int:
-        """Commit ``df`` as one more data dir on the head of ``ref``, or
+    def _append_or_skip(
+        self, batch: pa.Table | DataFrame, table: str, ref: str | None
+    ) -> int:
+        """Commit ``batch`` as one more data dir on the head of ``ref``, or
         nothing at all when it holds no rows: dlt never invokes the
         destination for a zero-item batch, so an idle incremental poll
         must not grow the snapshot chain (at scale, one spurious
         manifest per table per tick). Returns the rows written."""
-        name, rows = self._new_data_dir(table, df)
+        name, rows = self._new_data_dir(table, batch)
         if rows == 0:
             shutil.rmtree(self.root / table / name, ignore_errors=True)
         else:

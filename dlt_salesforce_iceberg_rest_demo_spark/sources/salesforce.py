@@ -18,15 +18,15 @@ Architecture differences (Spark-first, not a port):
 - Transport is an injectable protocol; production wires simple_salesforce
   (behind an import-try: not installed in this environment), tests use
   :class:`MockTransport`. The engine logic is identical either way.
-- Each extracted batch lands in the JVM once, as one Arrow table:
-  under `spark.sql.execution.arrow.localRelationThreshold` (48 MB by
-  default) it is a `LocalRelation`, above it a JVM-side RDD of Arrow
-  batches. No Python worker runs in either case, however often the
-  plan executes (a merge executes its batch more than once), and no
-  projection sits on top: datetime and date fields are cast by Arrow
-  (no `%Y-%m-%dT%H:%M:%S.%fZ` string round-trip), and the
-  pipeline's batch arrives with dlt's normalize already applied
-  (``read_object(..., load_id=)``).
+- Each extracted batch lands on the driver once, as one Arrow table:
+  datetime and date fields are cast by Arrow (no
+  `%Y-%m-%dT%H:%M:%S.%fZ` string round-trip), and the pipeline's batch
+  arrives with dlt's normalize already applied
+  (``read_object(..., load_id=)``). The lake writes it from the driver
+  (``sinks.dispositions``) as the reference's destination writes its
+  Arrow batches; a caller that wants a DataFrame lands it with
+  ``spark.createDataFrame(batch)``, a `LocalRelation` that no Python
+  worker ever executes.
 - Every reader pages through :func:`fetch_records`, the one Bulk scan
   with Standard fallback. At scale the single-generator extraction (the
   reference is one Python process pulling all pages) becomes the
@@ -44,7 +44,7 @@ from typing import Any, Protocol
 
 import pyarrow as pa
 from pyspark.errors import PySparkTypeError, PySparkValueError
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_type
 
@@ -380,50 +380,44 @@ def build_soql(
 # ---------------------------------------------------------------------------
 
 
-def _records_to_dataframe(
-    spark: SparkSession,
+def _records_to_table(
     records: Iterable[dict[str, Any]],
     meta: ObjectMeta,
     api_type: str,
     load_id: str | None = None,
     cursor: str | None = None,
-) -> DataFrame:
-    """Dict rows -> one Arrow table -> typed DataFrame over a bare
-    `LocalRelation` (or, above the local-relation threshold, a JVM-side
-    RDD of Arrow batches): no projection runs on top of it.
+) -> pa.Table:
+    """Dict rows -> one Arrow table, on the driver. Its Arrow types map
+    one to one onto the Spark types (``spark.createDataFrame(table)``
+    gives long, double, boolean, string, timestamp and date columns).
 
     The reference's `_process_record` (records.py:15-47) strips the
     `attributes` envelope and string-formats datetimes per row in Python.
-    Here: envelope keys simply never enter the projection, each projected
-    field becomes one Arrow column (typed by :func:`_landed`, datetimes
-    and dates by an Arrow cast of their wire form), and the table crosses
-    into the JVM once (see :func:`read_object`).
+    Here: envelope keys simply never enter the projection, and each
+    projected field becomes one Arrow column (typed by :func:`_landed`,
+    datetimes and dates by an Arrow cast of their wire form).
 
     With ``load_id`` the batch is built in its lake form, dlt's normalize
     stage done here (SURVEY §3.1 steps 3-4): names in :func:`snake_case`,
-    the ``cursor`` field (an API name) marked with :data:`CURSOR_HINT`,
-    and the lineage columns `_dlt_load_id` (``load_id``) and `_dlt_id`
-    (:func:`_row_ids`) appended. Without it the batch keeps the API
-    names.
+    the ``cursor`` field (an API name) marked with :data:`CURSOR_HINT`
+    in its Arrow field metadata, and the lineage columns `_dlt_load_id`
+    (``load_id``) and `_dlt_id` (:func:`_row_ids`) appended. Without it
+    the batch keeps the API names.
     """
     records = list(records)
     fields, arrays = [], []
     for f in meta.fields:
-        dtype, array = _landed(f, [r.get(f) for r in records], meta, api_type)
+        array = _landed(f, [r.get(f) for r in records], meta, api_type)
         name, metadata = f, None
         if load_id is not None:
             name = snake_case(f)
-            metadata = {CURSOR_HINT: True} if f == cursor else None
-        fields.append(T.StructField(name, dtype, True, metadata))
+            metadata = {CURSOR_HINT: "true"} if f == cursor else None
+        fields.append(pa.field(name, array.type, True, metadata))
         arrays.append(array)
     if load_id is not None:
-        fields += [
-            T.StructField("_dlt_load_id", T.StringType(), True),
-            T.StructField("_dlt_id", T.StringType(), True),
-        ]
+        fields += [pa.field("_dlt_load_id", pa.string()), pa.field("_dlt_id", pa.string())]
         arrays += [pa.repeat(load_id, len(records)), _row_ids(len(records))]
-    table = pa.Table.from_arrays(arrays, names=[f.name for f in fields])
-    return spark.createDataFrame(table, T.StructType(fields))
+    return pa.Table.from_arrays(arrays, schema=pa.schema(fields))
 
 
 def _row_ids(n: int) -> pa.Array:
@@ -439,8 +433,8 @@ _TIMESTAMP = pa.timestamp("us", tz="UTC")
 
 def _landed(
     name: str, values: list[Any], meta: ObjectMeta, api_type: str
-) -> tuple[T.DataType, pa.Array]:
-    """One field's Spark type and Arrow column. A datetime field's wire
+) -> pa.Array:
+    """One field's Arrow column. A datetime field's wire
     value is cast by Arrow: bulk epoch millis (checked to be ints by
     :func:`_column`) or a standard ISO string with its zone (`Z` or
     `+0000`; a string without one is refused, not read as local time).
@@ -451,19 +445,19 @@ def _landed(
     if name in meta.date_fields and api_type == "bulk":
         _, millis = _column(name, values, int)
         wire = pa.array(millis, pa.int64()).cast(pa.timestamp("ms", tz="UTC"))
-        return T.TimestampType(), _cast(name, wire, _TIMESTAMP, "datetime")
+        return _cast(name, wire, _TIMESTAMP, "datetime")
     if name in meta.date_fields:
         wire = pa.array(_column(name, values, str)[1], pa.string())
-        return T.TimestampType(), _cast(name, wire, _TIMESTAMP, "datetime")
+        return _cast(name, wire, _TIMESTAMP, "datetime")
     if meta.types.get(name) == "date":
         wire = pa.array(_column(name, values, str)[1], pa.string())
-        return T.DateType(), _cast(name, wire, pa.date32(), "date")
+        return _cast(name, wire, pa.date32(), "date")
     if all(v is None for v in values):
         # an empty first poll must not freeze a numeric field as string
         dtype = DESCRIBE_TYPES.get(meta.types.get(name), T.StringType())
-        return dtype, pa.nulls(len(values), to_arrow_type(dtype))
+        return pa.nulls(len(values), to_arrow_type(dtype))
     dtype, values = _column(name, values)
-    return dtype, pa.array(values, to_arrow_type(dtype))
+    return pa.array(values, to_arrow_type(dtype))
 
 
 def _cast(name: str, array: pa.Array, to: pa.DataType, what: str) -> pa.Array:
@@ -556,22 +550,24 @@ def read_object(
     replication_key: str | None = None,
     is_production: bool = True,
     load_id: str | None = None,
-) -> DataFrame:
+) -> pa.Table:
     """S1/S2: full read of one sObject through the Bulk API with Standard
     API fallback - the reference's `get_records` re-expressed
     (records.py:50-121). Driver-side paging like the reference; the
-    batch then lands in the JVM once, as one Arrow table with native
-    timestamps and dates: a `LocalRelation` under
-    `spark.sql.execution.arrow.localRelationThreshold`, a JVM-side RDD
-    of Arrow batches above it, and no Python tasks in either case.
+    batch lands on the driver as one Arrow table with native timestamps
+    and dates, the form the reference's destination writes
+    (``i_table.append(pa_table)``, salesforce_pipeline.py:176). It enters
+    Spark only where a caller asks for it: ``spark.createDataFrame(batch)``
+    is a `LocalRelation` (a JVM-side RDD of Arrow batches above
+    `spark.sql.execution.arrow.localRelationThreshold`) and runs no
+    Python task. ``spark`` is the session the caller writes with; the
+    read itself runs nothing in it.
     With ``load_id`` the batch lands normalized for the lake (snake_case
     names, lineage columns, the ``replication_key`` column marked as the
-    cursor; see :func:`_records_to_dataframe`)."""
+    cursor; see :func:`_records_to_table`)."""
     meta = object_meta(transport, sobject)
     soql = build_soql(
         sobject, meta.fields, replication_key, last_state, is_production
     )
     records, api_type = fetch_records(transport, sobject, soql)
-    return _records_to_dataframe(
-        spark, records, meta, api_type, load_id, replication_key
-    )
+    return _records_to_table(records, meta, api_type, load_id, replication_key)

@@ -1441,6 +1441,50 @@ class TestLocalRelationLanding:
         # _pq_search's query ids
         assert "LocalRelation" in self._leaves(fns["similarity_pq_topk"](spark, SF_DIR))
 
+        # the BPE merge list, and _containment_dense's block pairs
+        merges = text.bpe_train_merges_batched(docs, n_merges=2)
+        assert self._leaves(merges) == ["LocalRelation"]
+        assert merges.count() == 2
+        dense = dedup.containment_pairs(docs, strategy="dense")
+        assert "LocalRelation" in self._leaves(dense)
+
+    def test_index_builds_hand_the_lake_arrow(self, spark, tmp_path, monkeypatch):
+        """The IVF centroids and the PQ codebooks reach the lake as
+        driver-side Arrow tables, which it writes with no Spark job."""
+        import uuid
+
+        import pyarrow as pa
+
+        from dlt_salesforce_iceberg_rest_demo_spark.sinks.dispositions import ParquetLake
+        from dlt_salesforce_iceberg_rest_demo_spark.sources.parquet import load_table
+
+        sc = spark.sparkContext
+        replace, seen = ParquetLake.replace, {}
+
+        def replace_spy(self, batch, table):
+            group = f"replace-{uuid.uuid4().hex}"
+            sc.setJobGroup(group, table)
+            try:
+                return replace(self, batch, table)
+            finally:
+                sc._jsc.clearJobGroup()
+                sc._jsc.sc().listenerBus().waitUntilEmpty()
+                jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+                seen[table] = (isinstance(batch, pa.Table), jobs)
+
+        monkeypatch.setattr(ParquetLake, "replace", replace_spy)
+        emb = load_table(spark, SF_DIR, "embeddings")
+        lake = ParquetLake(spark, tmp_path / "lake")
+        centroids = similarity.ivf_build(emb, lake, "ivf", n_centroids=4, iters=1)
+        books = similarity.pq_build(emb, lake, "pq", m=8, n_codes=8, iters=1)
+        assert seen["ivf__centroids"] == (True, 0)
+        assert seen["pq__books"] == (True, 0)
+        assert lake.count("ivf__centroids") == len(centroids) * len(centroids[0])
+        assert lake.count("pq__books") == sum(len(c) for book in books for c in book)
+        assert dict(lake.read("ivf__centroids").dtypes) == {
+            "cluster": "bigint", "pos": "bigint", "val": "double",
+        }
+
     def test_empty_results_are_local_relations(self, spark, tmp_path):
         """The registry's hand-built empty results land as an empty Arrow
         table: a ``LocalRelation`` whose collect runs no Spark job."""

@@ -3,18 +3,26 @@ the end-to-end disposition tests SURVEY §5 calls for."""
 
 from __future__ import annotations
 
+import datetime
 import json
 import logging
 import re
+import uuid
 from pathlib import Path
 
+import pyarrow as pa
 import pytest
-from pyspark.sql import Row
+from pyspark.sql import DataFrame, Row
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 import dlt_salesforce_iceberg_rest_demo_spark as pkg
+from dlt_salesforce_iceberg_rest_demo_spark.normalize import CANONICAL_TS_FORMAT, CURSOR_HINT
 from dlt_salesforce_iceberg_rest_demo_spark.sinks import dispositions
 from dlt_salesforce_iceberg_rest_demo_spark.sinks.dispositions import ParquetLake
+from dlt_salesforce_iceberg_rest_demo_spark.sources.salesforce import read_object
+
+from .fixtures_salesforce import make_transport
 
 
 def make_lake(spark, tmp_path):
@@ -1181,3 +1189,138 @@ class TestCompactZorder:
             if xs:
                 spans.append((max(xs) - min(xs)) + (max(ys) - min(ys)))
         assert min(spans) < 30  # global span would be 15+15
+
+
+class TestArrowAndSparkWritersAgree:
+    """The same landed batch written as a driver-side Arrow table and as
+    ``spark.createDataFrame(batch)`` gives the same table: rows, schema
+    and report. The Arrow writer runs no Spark job except a merge's
+    copy-on-write rewrite, and reports the cursor the Spark expression
+    ``date_format(max(c), CANONICAL_TS_FORMAT)`` gives for its rows."""
+
+    @staticmethod
+    def landed(spark, sobject="Account", version=1, replication_key="LastModifiedDate", **kw):
+        return read_object(
+            spark,
+            make_transport(version),
+            sobject,
+            replication_key=replication_key,
+            load_id="L",
+            **kw,
+        )
+
+    @staticmethod
+    def jobs(spark, fn):
+        """``fn()``'s result and the number of Spark jobs it ran."""
+        sc = spark.sparkContext
+        group = f"arrow-writer-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "arrow writer")
+        try:
+            out = fn()
+        finally:
+            sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    @staticmethod
+    def spark_cursor(spark, batch):
+        """What Spark gives for the max of the batch's marked column."""
+        (column,) = [f.name for f in batch.schema if f.metadata]
+        return spark.createDataFrame(batch).select(
+            F.date_format(F.max(column), CANONICAL_TS_FORMAT)
+        ).first()[0]
+
+    APPEND, REPLACE = {"disposition": "append"}, {"disposition": "replace"}
+    MERGE = {"disposition": "merge", "primary_key": ("id",)}
+    W4 = {"disposition": "merge"}
+    WAP = {**MERGE, "branch": "wap"}
+    V1, V2 = {}, {"version": 2}
+    TASK = {"sobject": "Task", "replication_key": "SystemModstamp"}
+    NOTHING_NEW = {"last_state": "2099-01-01T00:00:00.000000Z"}
+    # each case's writes: (write kwargs, landed() kwargs, the most Spark
+    # jobs the Arrow writer may run); only a merge into data runs any
+    CASES = {
+        "append": [(APPEND, V1, 0), (APPEND, V2, 0)],
+        "replace": [(REPLACE, V1, 0), (REPLACE, V2, 0)],
+        "empty-replace": [(REPLACE, V1, 0), (REPLACE, NOTHING_NEW, 0)],
+        "first-contact-merge": [(MERGE, V1, 0)],
+        "merge-into-data": [(MERGE, V1, 0), (MERGE, V2, 2)],
+        "w4-fallback": [(W4, TASK, 0), (W4, TASK, 0)],
+        "wap-branch": [(WAP, V1, 0), (WAP, V2, 2)],
+    }
+
+    @pytest.mark.parametrize("case", list(CASES))
+    def test_both_writers_give_the_same_table(self, spark, tmp_path, case):
+        by_arrow = ParquetLake(spark, tmp_path / "arrow")
+        by_spark = ParquetLake(spark, tmp_path / "spark")
+        for write_kw, land_kw, max_jobs in self.CASES[case]:
+            method = "write_to_branch" if "branch" in write_kw else "write"
+            batch = self.landed(spark, **land_kw)
+            arrow_report, n_jobs = self.jobs(
+                spark, lambda: getattr(by_arrow, method)(batch, "t", **write_kw)
+            )
+            spark_report = getattr(by_spark, method)(
+                spark.createDataFrame(batch), "t", **write_kw
+            )
+            assert n_jobs <= max_jobs
+            assert (arrow_report.rows_written, arrow_report.fallback_append) == (
+                spark_report.rows_written,
+                spark_report.fallback_append,
+            )
+            assert arrow_report.rows_written == batch.num_rows
+            assert arrow_report.cursor == self.spark_cursor(spark, batch)
+            # the mark lives in the Arrow field metadata, which
+            # createDataFrame drops: the DataFrame writer reports none
+            assert spark_report.cursor is None
+        ref = "wap" if case == "wap-branch" else None
+        got, want = by_arrow.read("t", ref), by_spark.read("t", ref)
+        assert by_arrow.schema("t") == by_spark.schema("t")
+        assert got.schema == want.schema
+        assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+
+    def test_schema_drift_takes_the_spark_route(self, spark, tmp_path):
+        lake = ParquetLake(spark, tmp_path / "lake")
+        first = self.landed(spark)
+        lake.write(first, "t", "append")
+        # a batch that lost a column and carries one the table lacks
+        drifted = self.landed(spark, version=2).drop_columns(["industry"]).append_column(
+            "extra", pa.array([1, 2, 3], pa.int64())
+        )
+        assert isinstance(lake._land("t", drifted), DataFrame)
+        report = lake.write(drifted, "t", "merge", ("id",))
+        assert report.rows_written == 3
+        assert report.cursor == self.spark_cursor(spark, drifted)
+        rows = rows_by_id(lake, "t")
+        assert rows["001C"]["industry"] is None and "extra" not in rows["001C"]
+        assert lake.schema("t") == spark.createDataFrame(first).schema
+
+    def test_partitioned_table_takes_the_spark_route(self, spark, tmp_path):
+        lake = ParquetLake(spark, tmp_path / "lake")
+        batch = self.landed(spark, "Task", replication_key="SystemModstamp")
+        lake.create_table("t", spark.createDataFrame(batch).schema, partition_by=["subject"])
+        assert isinstance(lake._land("t", batch), DataFrame)
+        report = lake.write(batch, "t", "append")
+        assert (report.rows_written, report.cursor) == (2, self.spark_cursor(spark, batch))
+        assert sorted(p.name for p in (lake.root / "t").glob("data_*/subject=*")) == [
+            "subject=call",
+            "subject=email",
+        ]
+
+    @pytest.mark.parametrize(
+        "instants",
+        [
+            [datetime.datetime(2024, 1, 2, 3, 4, 5), datetime.datetime(2023, 6, 1)],
+            [datetime.datetime(2024, 1, 2, 3, 4, 5, 123456), None],
+            [datetime.datetime(999, 12, 31, 23, 59, 59, 10)],
+            [datetime.datetime(1969, 12, 31, 23, 59, 58, 500000)],
+            [None, None],
+        ],
+        ids=["trailing-zero-micros", "micros-and-null", "3-digit-year", "pre-epoch", "all-null"],
+    )
+    def test_driver_cursor_equals_date_format(self, spark, instants):
+        utc = datetime.timezone.utc
+        values = [t and t.replace(tzinfo=utc) for t in instants]
+        field = pa.field("c", pa.timestamp("us", tz="UTC"), metadata={CURSOR_HINT: "true"})
+        batch = pa.table([pa.array(values, field.type)], schema=pa.schema([field]))
+        assert dispositions._cursor(batch) == self.spark_cursor(spark, batch)
+        assert dispositions._cursor(batch.cast(pa.schema([field.remove_metadata()]))) is None

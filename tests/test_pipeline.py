@@ -7,6 +7,7 @@ import logging
 import os
 import threading
 
+import pyarrow as pa
 import pytest
 from pyspark.sql import types as T
 
@@ -175,25 +176,26 @@ class TestWriteAuditPublish:
 
 
 class TestCursorFromTheWrite:
-    """The cursor is the batch max the lake write observed; the state
-    store only moves once the write has returned (the cursor never
-    passes rows that were not written)."""
+    """The cursor is the batch max the lake write reads on the driver;
+    the state store only moves once the write has returned (the cursor
+    never passes rows that were not written)."""
 
     RESOURCES = ("account", "contact", "task")
 
     def test_incremental_run_issues_no_job_after_a_write(
         self, spark, tmp_path, monkeypatch
     ):
-        make_pipeline(spark, tmp_path, version=1).run(self.RESOURCES)
-        p = make_pipeline(spark, tmp_path, version=2)
         sc = spark.sparkContext
-        during, after = f"incremental-{tmp_path.name}", f"after-write-{tmp_path.name}"
+        first, during, after = (
+            f"{name}-{tmp_path.name}" for name in ("first-load", "incremental", "after-write")
+        )
         # Jobs a resource issues after its write returns land in `after`
         # until the next resource's extraction starts.
         read, write = pipeline_mod.read_object, ParquetLake.write
+        group = {"extract": first}
 
         def read_spy(*args, **kwargs):
-            sc.setJobGroup(during, "extract and write")
+            sc.setJobGroup(group["extract"], "extract and write")
             return read(*args, **kwargs)
 
         def write_spy(self, *args, **kwargs):
@@ -204,39 +206,32 @@ class TestCursorFromTheWrite:
         monkeypatch.setattr(pipeline_mod, "read_object", read_spy)
         monkeypatch.setattr(ParquetLake, "write", write_spy)
         try:
-            info = p.run(self.RESOURCES)
+            make_pipeline(spark, tmp_path, version=1).run(self.RESOURCES)
+            group["extract"] = during
+            info = make_pipeline(spark, tmp_path, version=2).run(self.RESOURCES)
         finally:
             sc._jsc.clearJobGroup()
         sc._jsc.sc().listenerBus().waitUntilEmpty()
         tracker = sc.statusTracker()
         assert set(info.cursors) == {"account"}  # task's poll found nothing new
         assert list(tracker.getJobIdsForGroup(after)) == []
-        # merge: count + keys broadcast + write; replace and append: the write
-        assert len(tracker.getJobIdsForGroup(during)) <= 7
+        # the first load into an empty lake is written from the driver
+        assert list(tracker.getJobIdsForGroup(first)) == []
+        # merge into data: the copy-on-write rewrite; replace: none
+        assert len(tracker.getJobIdsForGroup(during)) <= 2
 
     def test_failed_commit_leaves_the_cursor(self, spark, tmp_path, monkeypatch):
         p1 = make_pipeline(spark, tmp_path, version=1)
         p1.run(("account",))
         cursor0 = p1.state.get("account")
-        readers = []
-        observe = dispositions._observe_cursor
-
-        def observe_spy(df):
-            df, reader = observe(df)
-            readers.append(reader)
-            return df, reader
 
         def failing_commit(self, table, data_dirs, branch=None):
-            # the merge's count has already filled the observation
-            assert readers[-1]() > cursor0
             raise OSError("commit interrupted")
 
-        monkeypatch.setattr(dispositions, "_observe_cursor", observe_spy)
         monkeypatch.setattr(ParquetLake, "_commit", failing_commit)
         p2 = make_pipeline(spark, tmp_path, version=2)
         with pytest.raises(OSError, match="commit interrupted"):
             p2.run(("account",))
-        assert readers
         assert p2.state.get("account") == cursor0
 
     def test_cursor_is_the_batch_max_not_the_tables(self, spark, tmp_path):
@@ -256,31 +251,42 @@ class TestCursorFromTheWrite:
 
 class TestLandedBatchReachesTheLake:
     """The batch lands normalized (``read_object(..., load_id=)``): the
-    lake's write gets a bare ``LocalRelation``, and its schema alignment
-    returns the batch untouched."""
+    lake's write gets a driver-side Arrow table with the table's columns,
+    keeps it on the driver with no schema alignment, and a merge into
+    data hands its rewrite the batch as a bare ``LocalRelation``."""
 
     RESOURCES = ("account", "contact", "task")
 
     def test_write_gets_a_bare_local_relation(self, spark, tmp_path, monkeypatch):
-        read, write, prepare = pipeline_mod.read_object, ParquetLake.write, ParquetLake._prepare
-        reads, plans, untouched = [], [], []
+        read, write = pipeline_mod.read_object, ParquetLake.write
+        land, rewrite = ParquetLake._land, ParquetLake._rewrite
+        reads, batches, kept, incoming = [], [], [], []
 
         def read_spy(spark_, transport, sobject, **kwargs):
             reads.append(sobject)
             return read(spark_, transport, sobject, **kwargs)
 
-        def write_spy(self, df, *args, **kwargs):
-            plans.append(df._jdf.queryExecution().analyzed().getClass().getSimpleName())
-            return write(self, df, *args, **kwargs)
+        def write_spy(self, batch, *args, **kwargs):
+            batches.append(type(batch))
+            return write(self, batch, *args, **kwargs)
 
-        def prepare_spy(self, table, df):
-            out = prepare(self, table, df)
-            untouched.append(out is df)
+        def land_spy(self, table, batch):
+            out = land(self, table, batch)
+            kept.append(isinstance(out, pa.Table))
             return out
+
+        def rewrite_spy(self, table, ref, keys, rows):
+            incoming.append(rows._jdf.queryExecution().analyzed().getClass().getSimpleName())
+            return rewrite(self, table, ref, keys, rows)
+
+        def no_alignment(df, target):
+            raise AssertionError("a landed batch needs no alignment")
 
         monkeypatch.setattr(pipeline_mod, "read_object", read_spy)
         monkeypatch.setattr(ParquetLake, "write", write_spy)
-        monkeypatch.setattr(ParquetLake, "_prepare", prepare_spy)
+        monkeypatch.setattr(ParquetLake, "_land", land_spy)
+        monkeypatch.setattr(ParquetLake, "_rewrite", rewrite_spy)
+        monkeypatch.setattr(dispositions, "align_to_schema", no_alignment)
         # the pipeline reads each resource once per run, through its own
         # binding (in no set order: the resources load side by side)
         make_pipeline(spark, tmp_path, version=1).run(self.RESOURCES)  # creates
@@ -288,8 +294,9 @@ class TestLandedBatchReachesTheLake:
         reads.clear()
         make_pipeline(spark, tmp_path, version=2).run(self.RESOURCES)  # task idle
         assert sorted(reads) == ["Account", "Contact", "Task"]
-        assert plans == ["LocalRelation"] * 5
-        assert untouched == [True] * 5
+        assert batches == [pa.Table] * 5
+        assert kept == [True] * 5
+        assert incoming == ["LocalRelation"]  # account's merge into data
 
 
 class TestIdlePoll:
@@ -424,16 +431,18 @@ class TestAllNullFieldsTypedByDescribe:
         assert types["annual_revenue"] == T.DoubleType()
         assert types["number_of_employees"] == T.LongType()
 
-        prepare, untouched = ParquetLake._prepare, []
+        land, kept = ParquetLake._land, []
 
-        def prepare_spy(self, table, df):
-            out = prepare(self, table, df)
-            untouched.append(out is df)
+        def land_spy(self, table, batch):
+            out = land(self, table, batch)
+            kept.append(isinstance(out, pa.Table))
             return out
 
-        monkeypatch.setattr(ParquetLake, "_prepare", prepare_spy)
+        # the rows' batch has the empty poll's types: it stays on the
+        # driver, with no alignment
+        monkeypatch.setattr(ParquetLake, "_land", land_spy)
         make_pipeline(spark, tmp_path, version=1).run(("account",))
-        assert untouched == [True]
+        assert kept == [True]
         rows = account_rows(p)
         assert rows["001A"]["annual_revenue"] == 1_000_000.0
         assert rows["001A"]["number_of_employees"] == 50

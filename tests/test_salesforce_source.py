@@ -7,6 +7,7 @@ import ast
 import datetime
 from pathlib import Path
 
+import pyarrow as pa
 import pytest
 from pyspark.errors import PySparkException, PySparkTypeError
 from pyspark.sql import functions as F
@@ -19,7 +20,7 @@ from dlt_salesforce_iceberg_rest_demo_spark.sources.salesforce import (
     MockTransport,
     ObjectMeta,
     SalesforceAuth,
-    _records_to_dataframe,
+    _records_to_table,
     build_soql,
     object_meta,
     read_object,
@@ -70,7 +71,7 @@ class TestDescribe:
 
 class TestReadObject:
     def test_bulk_read_types_and_envelope(self, spark):
-        df = read_object(spark, make_transport(), "Account")
+        df = _df(spark, make_transport(), "Account")
         assert "attributes" not in df.columns  # P6 envelope strip
         assert "BillingAddress" not in df.columns
         rows = {r["Id"]: r for r in df.collect()}
@@ -83,9 +84,9 @@ class TestReadObject:
         assert dtypes["AnnualRevenue"] == "double"
 
     def test_standard_fallback_equals_bulk(self, spark):
-        bulk = read_object(spark, make_transport(), "Account")
+        bulk = _df(spark, make_transport(), "Account")
         t = make_transport(bulk_enabled=False)
-        standard = read_object(spark, t, "Account")
+        standard = _df(spark, t, "Account")
         # S2: FeatureNotEnabled falls back to query/query_more, identical rows
         assert sorted(map(tuple, bulk.collect())) == sorted(
             map(tuple, standard.collect())
@@ -98,7 +99,7 @@ class TestReadObject:
 
     def test_incremental_cursor_pushdown(self, spark):
         t = make_transport()
-        df = read_object(
+        df = _df(
             spark,
             t,
             "Account",
@@ -111,7 +112,7 @@ class TestReadObject:
 
     def test_distributed_read_matches_single(self, spark):
         # the partition-parallel read is the registrable Data Source
-        single = read_object(spark, make_transport(), "Account")
+        single = _df(spark, make_transport(), "Account")
         dist = _datasource(spark, make_transport(), numpartitions="8")
         assert dist.dtypes == single.dtypes
         assert sorted(dist.collect()) == sorted(single.collect())
@@ -120,7 +121,7 @@ class TestReadObject:
     def test_filtered_datasource_read_equals_incremental(self, spark, version, ids):
         # a cursor filter pushed into the Data Source's SOQL returns what
         # read_object's `cursor > state` predicate returns
-        single = read_object(
+        single = _df(
             spark,
             make_transport(version),
             "Account",
@@ -132,6 +133,12 @@ class TestReadObject:
         )
         assert sorted(r["Id"] for r in dist.collect()) == ids
         assert sorted(dist.collect()) == sorted(single.collect())
+
+
+def _df(spark, transport, sobject, **kw):
+    """``read_object``'s Arrow batch landed as a DataFrame, as API-form
+    callers land it."""
+    return spark.createDataFrame(read_object(spark, transport, sobject, **kw))
 
 
 def _datasource(spark, transport, **options):
@@ -212,7 +219,7 @@ class TestArrowLanding:
             {"attributes": {"type": "X"}, "Id": str(i), "V": v, "When": w}
             for i, (v, w) in enumerate(zip(values, when))
         ]
-        return _records_to_dataframe(spark, records, self.META, api_type)
+        return spark.createDataFrame(_records_to_table(records, self.META, api_type))
 
     @pytest.mark.parametrize("api_type", ["bulk", "standard"])
     @pytest.mark.parametrize(
@@ -246,7 +253,7 @@ class TestArrowLanding:
 
     @pytest.mark.parametrize("api_type", ["bulk", "standard"])
     def test_empty_result_keeps_typed_schema(self, spark, api_type):
-        df = _records_to_dataframe(spark, [], self.META, api_type)
+        df = spark.createDataFrame(_records_to_table([], self.META, api_type))
         assert df.dtypes == [("Id", "string"), ("V", "string"), ("When", "timestamp")]
         assert df.count() == 0
 
@@ -254,7 +261,7 @@ class TestArrowLanding:
     @pytest.mark.parametrize("bad", ["x", 1.5e12], ids=["text", "float"])
     def test_unparseable_datetime_raises(self, spark, api_type, bad):
         # never a silent NULL timestamp (a NULL cursor escapes the
-        # max-cursor observation): bulk raises while typing the column,
+        # batch's cursor max): bulk raises while typing the column,
         # standard when the parse runs
         when = [self.WHEN[api_type][0], bad]
         with pytest.raises(PySparkException, match="field When"):
@@ -267,9 +274,11 @@ class TestArrowLanding:
         assert got == self.WHEN_PARSED
 
     def test_read_object_plan_is_a_local_relation(self, spark):
-        # No LogicalRDD: nothing in the batch's plan runs a Python task.
-        df = read_object(spark, make_transport(), "Account")
-        assert _leaf_classes(df) == ["LocalRelation"]
+        # The batch is a driver-side Arrow table; landed in Spark it is a
+        # LocalRelation, and no LogicalRDD: nothing runs a Python task.
+        batch = read_object(spark, make_transport(), "Account")
+        assert isinstance(batch, pa.Table)
+        assert _leaf_classes(spark.createDataFrame(batch)) == ["LocalRelation"]
 
     @pytest.mark.parametrize("api_type", ["bulk", "standard"])
     def test_zoneless_iso_string_raises(self, spark, api_type):
@@ -282,8 +291,8 @@ class TestArrowLanding:
 
 class TestLandedBatch:
     """``read_object(..., load_id=)`` lands the batch in its lake form:
-    dlt's normalize stage applied inside the Arrow table, with nothing
-    left for a projection to do."""
+    one driver-side Arrow table with dlt's normalize stage applied, and
+    nothing left for a projection to do."""
 
     def land(self, spark, version=1, **kw):
         return read_object(
@@ -297,46 +306,60 @@ class TestLandedBatch:
 
     def test_names_are_snake_case_then_lineage(self, spark):
         meta = object_meta(make_transport(), "Account")
-        df = self.land(spark)
-        assert df.columns == [snake_case(c) for c in meta.fields] + [
+        batch = self.land(spark)
+        assert isinstance(batch, pa.Table)
+        assert batch.column_names == [snake_case(c) for c in meta.fields] + [
             "_dlt_load_id",
             "_dlt_id",
         ]
-        assert {"last_modified_date", "number_of_employees"} <= set(df.columns)
+        assert {"last_modified_date", "number_of_employees"} <= set(batch.column_names)
 
     def test_rows_and_types_equal_the_api_form(self, spark):
         api = read_object(spark, make_transport(), "Account")
-        df = self.land(spark).drop("_dlt_load_id", "_dlt_id")
-        assert df.dtypes == [(snake_case(c), t) for c, t in api.dtypes]
-        assert sorted(map(tuple, df.collect())) == sorted(map(tuple, api.collect()))
+        batch = self.land(spark).drop_columns(["_dlt_load_id", "_dlt_id"])
+        assert [(f.name, f.type) for f in batch.schema] == [
+            (snake_case(f.name), f.type) for f in api.schema
+        ]
+        assert batch.column("last_modified_date").type == pa.timestamp("us", tz="UTC")
+        assert batch.column("number_of_employees").type == pa.int64()
+        # the Spark types round-trip from the Arrow schema
+        df, api_df = spark.createDataFrame(batch), spark.createDataFrame(api)
+        assert df.dtypes == [(snake_case(c), t) for c, t in api_df.dtypes]
+        types = dict(df.dtypes)
+        assert (types["last_modified_date"], types["number_of_employees"]) == ("timestamp", "bigint")
+        assert types["annual_revenue"] == "double"
+        assert sorted(map(tuple, df.collect())) == sorted(map(tuple, api_df.collect()))
 
     def test_constant_load_id(self, spark):
-        assert {r["_dlt_load_id"] for r in self.land(spark, version=2).collect()} == {"L1"}
+        assert set(self.land(spark, version=2).column("_dlt_load_id").to_pylist()) == {"L1"}
 
     def test_one_unique_dlt_id_per_row_drawn_once(self, spark):
-        df = self.land(spark, version=2)
-        ids = [r["_dlt_id"] for r in df.collect()]
+        batch = self.land(spark, version=2)
+        ids = batch.column("_dlt_id").to_pylist()
         assert len(set(ids)) == len(ids) == 3
-        # every execution of the batch sees the same ids (a merge runs
-        # it more than once)
-        assert sorted(r["_dlt_id"] for r in df.collect()) == sorted(ids)
+        assert all(len(i) == 32 for i in ids)
+        # every execution of the landed batch sees the same ids (a merge
+        # runs it more than once)
+        df = spark.createDataFrame(batch)
+        for _ in range(2):
+            assert sorted(r["_dlt_id"] for r in df.collect()) == sorted(ids)
 
     def test_cursor_column_is_marked(self, spark):
-        marks = {f.name: f.metadata for f in self.land(spark).schema.fields if f.metadata}
-        assert marks == {"last_modified_date": {CURSOR_HINT: True}}
+        marks = {f.name: f.metadata for f in self.land(spark).schema if f.metadata}
+        assert marks == {"last_modified_date": {CURSOR_HINT.encode(): b"true"}}
         api = read_object(spark, make_transport(), "Account", replication_key="LastModifiedDate")
-        assert not any(f.metadata for f in api.schema.fields)
+        assert not any(f.metadata for f in api.schema)
 
     def test_plan_is_a_bare_local_relation(self, spark):
-        plan = self.land(spark)._jdf.queryExecution().analyzed()
+        plan = spark.createDataFrame(self.land(spark))._jdf.queryExecution().analyzed()
         assert plan.getClass().getSimpleName() == "LocalRelation"
 
     def test_empty_batch_keeps_the_lake_names(self, spark):
         # a field with no value is typed by its describe type
         full = self.land(spark)
         empty = self.land(spark, last_state="2099-01-01T00:00:00.000000Z")
-        assert empty.isEmpty()
-        assert empty.dtypes == full.dtypes
+        assert empty.num_rows == 0
+        assert empty.schema.equals(full.schema, check_metadata=True)
 
 
 class TestDateFieldsLand:
@@ -373,7 +396,7 @@ class TestDateFieldsLand:
         "sobject, field", [("Opportunity", "CloseDate"), ("Contact", "Birthdate")]
     )
     def test_read_object_equals_datasource(self, spark, bulk_enabled, sobject, field):
-        single = read_object(spark, self.transport(bulk_enabled), sobject)
+        single = _df(spark, self.transport(bulk_enabled), sobject)
         dist = _datasource(spark, self.transport(bulk_enabled), sobject=sobject)
         assert dict(single.dtypes)[field] == "date"
         assert single.dtypes == dist.dtypes
@@ -411,7 +434,7 @@ class TestIsoOffsets:
         )
 
     def test_both_readers_apply_the_offset(self, spark):
-        single = read_object(spark, self.transport(self.WIRE), "Account")
+        single = _df(spark, self.transport(self.WIRE), "Account")
         dist = _datasource(spark, self.transport(self.WIRE))
         instant = datetime.datetime(2024, 1, 15, 11, 34, 56)
         assert sorted(single.collect()) == sorted(dist.collect())

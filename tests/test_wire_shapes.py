@@ -235,7 +235,7 @@ class TestDescribeWireShape:
 class TestReadWirePayloads:
     def test_bulk_wire_read(self, spark):
         t = WireShapeTransport()
-        df = read_object(spark, t, "Contact")
+        df = spark.createDataFrame(read_object(spark, t, "Contact"))
         rows = {r.Id: r for r in df.collect()}
         assert set(rows) == {"0035e00000AAAAAAA1", "0035e00000AAAAAAA2"}
         # epoch-millis became native UTC timestamps
@@ -245,9 +245,9 @@ class TestReadWirePayloads:
         assert rows["0035e00000AAAAAAA2"].Email is None
 
     def test_standard_wire_read_equals_bulk(self, spark):
-        bulk = read_object(spark, WireShapeTransport(), "Contact")
-        standard = read_object(
-            spark, WireShapeTransport(bulk_enabled=False), "Contact"
+        bulk = spark.createDataFrame(read_object(spark, WireShapeTransport(), "Contact"))
+        standard = spark.createDataFrame(
+            read_object(spark, WireShapeTransport(bulk_enabled=False), "Contact")
         )
         # identical rows through either API: the reference's
         # normalization contract (records.py:32-45), now pinned against
@@ -260,7 +260,7 @@ class TestReadWirePayloads:
 
     def test_fallback_happened_after_bulk_attempt(self, spark):
         t = WireShapeTransport(bulk_enabled=False)
-        read_object(spark, t, "Contact").collect()
+        read_object(spark, t, "Contact")
         # one bulk attempt (raised), then the standard cursor ran
         assert len(t.queries_seen) == 2
         assert t.queries_seen[0] == t.queries_seen[1]
